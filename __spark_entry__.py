@@ -15,7 +15,11 @@ so value hashes match bit-for-bit regardless of partitioning.
 
 from __future__ import annotations
 
-from collections.abc import Callable
+import glob
+import json
+import os
+import re
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -30,6 +34,7 @@ from flink_helloworld_spark.functions import dsum
 from flink_helloworld_spark.sources.tables import load_tables
 
 DEC = "decimal(12,2)"  # inputs carry ≤2 decimals; products stay exact
+_HERE = os.path.dirname(os.path.abspath(__file__))
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -714,7 +719,7 @@ def _q_salted_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _q_grouping_sets_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # arbitrary GROUPING SETS (beyond cube/rollup): per-flag, per-status,
     # and grand-total rows in one pass, with grouping ids
     load_tables(spark, sf_dir).register_views()
@@ -3108,340 +3113,41 @@ def _q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return GRAPH.triangle_counts(edges)
 
 
-# Round-11 gate rotation (stalest-first contract): the driver's
-# correctness gate checks only the FIRST 50 entries of queries().
-# This round: ALL SEVEN r10-late queries that have never held an
-# official CORRECTNESS row (the r10 verdict's queue comment named
-# only 6 — epoch_materialize landed after it was written; the r10
-# judge flagged the omission and it is restored here), then the 20
-# queries whose newest official row is round 6 (semantic_dedup ..
-# vocab_coverage, alphabetical), then the 23 alphabetically-first
-# queries whose newest official row is round 7. 7 + 20 + 23 = 50.
-# After this round the newest-official-row histogram is r7:27 r8:50
-# r9:50 r10:50 r11:50 — no registry query's newest official row is
-# older than r7. Everything rotated OUT is re-verified locally this
-# round via tools/check_oracle.py (full-registry sweep) beside the
-# pytest run.
-#
-# ROUND-12 ROTATION QUEUE (computed at r11 close): the EIGHT r11-late
-# queries that will have never held an official row
-# (bm25_search_store, epoch_pack_stream, fuzzy_term_search_store,
-# fuzzy_term_search_symspell, ivf_member_manifest, phrase_search_slop,
-# phrase_search_store, phrase_search_store_scrubbed — all
-# oracle-green under this round's local sweeps) fill the r12 gate
-# FIRST, then the 27 remaining r7-stale rows (alphabetical tail after
-# similarity_ivf2_topk), then the 15 alphabetically-first r8 rows.
-# 8 + 27 + 15 = 50. After r12 no registry query's newest official row
-# is older than r8.
-_GATE_R11 = [
-    # --- the 7 never-official r10-late queries ---
-    "epoch_materialize",
-    "fuzzy_term_search_indexed",
-    "ivf_index_delete_query",
-    "mixture_reallocate",
-    "mixture_reallocate_saturated",
-    "phrase_search_indexed",
-    "positional_postings",
-    # --- the 20 r6-stale queries ---
-    "semantic_dedup",
-    "similarity_ivf_topk",
-    "similarity_ivfk_topk",
-    "similarity_ivfpq_topk",
-    "similarity_recall_curve",
-    "skew_report",
-    "span_coverage",
-    "split_by_cluster",
-    "split_holdout",
-    "stratified_sample",
-    "table_profile",
-    "text_diversity",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_pii_scrub",
-    "text_quality",
-    "text_repetition",
-    "text_token_stats",
-    "unpivot_metrics",
-    "vocab_coverage",
-    # --- the 23 alphabetically-first r7-stale queries ---
-    "bm25_search",
-    "bpe_token_fertility",
-    "bpe_train_merges",
-    "cep_pattern",
-    "changelog_materialize",
-    "cluster_balanced_sample",
-    "cms_heavy_hitters",
-    "decontaminate_semantic",
-    "dedup_clusters",
-    "dedup_embedding_gate_banded",
-    "dedup_embedding_gate_verified",
-    "distinct_users",
-    "domain_cap",
-    "embedding_gate_recall_curve",
-    "embedding_gate_verified_recall_curve",
-    "gapfill_locf",
-    "gopher_rules",
-    "hll_distinct_sketch",
-    "multimodal_png_decode",
-    "multimodal_ppm_decode",
-    "rollup_counts",
-    "scd2_intervals",
-    "similarity_ivf2_topk",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every registry query, stalest-first: the correctness gate checks
+    only the first 50 entries, so the queries whose newest official
+    ``CORRECTNESS_r{N}.json`` row is oldest are checked next."""
     reg = _registry()
-    assert len(_GATE_R11) == 50 and set(_GATE_R11) <= set(reg)
-    out = {k: reg[k] for k in _GATE_R11}
-    out.update((k, v) for k, v in reg.items() if k not in out)
-    return out
+    return {name: reg[name] for name in _stalest_first(reg)}
 
 
 def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    # one builder per query: ``_q_<name>`` implements query ``name``
     return {
-        # every implemented query, unordered — queries() applies the
-        # round's gate rotation (_GATE_R11) on top of this registry
-        "ivf_index_build": _q_ivf_index_build,
-        "similarity_ivf_indexed_topk": _q_similarity_ivf_indexed_topk,
-        "ivf_indexed_recall": _q_ivf_indexed_recall,
-        "dedup_embedding_gate_verified_sq": _q_dedup_embedding_gate_verified_sq,
-        "embedding_gate_verified_sq_recall_curve": _q_embedding_gate_verified_sq_recall_curve,
-        "max_spans": _q_max_spans,
-        "max_span_scrub": _q_max_span_scrub,
-        "dedup_clusters_auto": _q_dedup_clusters_auto,
-        "sq_reconstruction_error": _q_sq_reconstruction_error,
-        # r8 late additions — outside this round's (already exactly
-        # full) gate; verified via the local full-registry sweep, they
-        # rotate into the official gate FIRST next round
-        "similarity_ivf_append_topk": _q_similarity_ivf_append_topk,
-        "ivf_index_delete_query": _q_ivf_index_delete_query,
-        "similarity_ivf_indexed_sq_topk": _q_similarity_ivf_indexed_sq_topk,
-        "graph_pagerank": _q_graph_pagerank,
-        "graph_triangles": _q_graph_triangles,
-        "cdc_chunks": _q_cdc_chunks,
-        "cdc_chunk_dedup": _q_cdc_chunk_dedup,
-        "hybrid_search_rrf": _q_hybrid_search_rrf,
-        "graph_pagerank_personalized": _q_graph_pagerank_personalized,
-        "graph_components": _q_graph_components,
-        "kmv_set_ops": _q_kmv_set_ops,
-        "embedding_dim_ablation": _q_embedding_dim_ablation,
-        "graph_adamic_adar": _q_graph_adamic_adar,
-        "graph_pagerank_weighted": _q_graph_pagerank_weighted,
-        "corpus_drift_psi": _q_corpus_drift_psi,
-        "dedup_embedding_gate_banded": _q_dedup_embedding_gate_banded,
-        "embedding_gate_recall_curve": _q_embedding_gate_recall_curve,
-        "similarity_ivf2k_topk": _q_similarity_ivf2k_topk,
-        "dedup_embedding_gate_verified": _q_dedup_embedding_gate_verified,
-        "cluster_balanced_sample": _q_cluster_balanced_sample,
-        "embedding_gate_verified_recall_curve": _q_embedding_gate_verified_recall_curve,
-        "bm25_search": _q_bm25_search,
-        "cep_pattern": _q_cep_pattern,
-        "changelog_materialize": _q_changelog_materialize,
-        "cms_heavy_hitters": _q_cms_heavy_hitters,
-        "dedup_clusters": _q_dedup_clusters,
-        "distinct_users": _q_distinct_users,
-        "gapfill_locf": _q_gapfill_locf,
-        "hll_distinct_sketch": _q_hll_distinct_sketch,
-        "multimodal_ppm_decode": _q_multimodal_ppm_decode,
-        "rollup_counts": _q_rollup_counts,
-        "scd2_intervals": _q_scd2_intervals,
-        "sql_q10_returns": _q_sql_q10_returns,
-        "sql_q11_important_parts": _q_sql_q11_important_parts,
-        "sql_q12_late_lines": _q_sql_q12_late_lines,
-        "sql_q13_order_dist": _q_sql_q13_order_dist,
-        "sql_q14_promo": _q_sql_q14_promo,
-        "sql_q15_top_supplier": _q_sql_q15_top_supplier,
-        "sql_q16_supplier_cnt": _q_sql_q16_supplier_cnt,
-        "sql_q17_small_qty": _q_sql_q17_small_qty,
-        "sql_q18_large_orders": _q_sql_q18_large_orders,
-        "sql_q19_disjunct": _q_sql_q19_disjunct,
-        "sql_q20_dominant_supp": _q_sql_q20_dominant_supp,
-        "sql_q21_waiting_supp": _q_sql_q21_waiting_supp,
-        "sql_q22_idle_customers": _q_sql_q22_idle_customers,
-        "sql_q2_min_cost_supp": _q_sql_q2_min_cost_supp,
-        "sql_q3_shipping": _q_sql_q3_shipping,
-        "sql_q4_priority": _q_sql_q4_priority,
-        "sql_q6_forecast": _q_sql_q6_forecast,
-        "sql_q7_volume": _q_sql_q7_volume,
-        "sql_q8_market_share": _q_sql_q8_market_share,
-        "sql_q9_profit": _q_sql_q9_profit,
-        "term_postings": _q_term_postings,
-        "tfidf_top_terms": _q_tfidf_top_terms,
-        "window_topn": _q_window_topn,
-        "zorder_layout": _q_zorder_layout,
-        "hilbert_layout": _q_hilbert_layout,
-        "rate_anomaly": _q_rate_anomaly,
-        "epoch_repetition_plan": _q_epoch_repetition_plan,
-        "mixture_reallocate": _q_mixture_reallocate,
-        "mixture_reallocate_saturated": _q_mixture_reallocate_saturated,
-        "phrase_search_indexed": _q_phrase_search_indexed,
-        "fuzzy_term_search_indexed": _q_fuzzy_term_search_indexed,
-        "positional_postings": _q_positional_postings,
-        "epoch_materialize": _q_epoch_materialize,
-        "epoch_pack_stream": _q_epoch_pack_stream,
-        "phrase_search": _q_phrase_search,
-        "phrase_search_store": _q_phrase_search_store,
-        "fuzzy_term_search_store": _q_fuzzy_term_search_store,
-        "phrase_search_store_scrubbed": _q_phrase_search_store_scrubbed,
-        "bm25_search_store": _q_bm25_search_store,
-        "ivf_member_manifest": _q_ivf_member_manifest,
-        "phrase_search_slop": _q_phrase_search_slop,
-        "fuzzy_term_search_symspell": _q_fuzzy_term_search_symspell,
-        "fuzzy_term_search": _q_fuzzy_term_search,
-        "cms_join_size": _q_cms_join_size,
-        "similarity_ivf2_topk": _q_similarity_ivf2_topk,
-        "unigram_logppl": _q_unigram_logppl,
-        "gopher_rules": _q_gopher_rules,
-        "domain_cap": _q_domain_cap,
-        "decontaminate_semantic": _q_decontaminate_semantic,
-        "similarity_topk_vectorized": _q_similarity_topk_vectorized,
-        "bpe_train_merges": _q_bpe_train_merges,
-        "bpe_token_fertility": _q_bpe_token_fertility,
-        "multimodal_png_decode": _q_multimodal_png_decode,
-        # --- rotated out this round (r4 tail, r5, r6 official rows) ---
-        "bigram_logppl": _q_bigram_logppl,
-        "classifier_train": _q_classifier_train,
-        "classifier_score": _q_classifier_score,
-        "similarity_recall_curve": _q_similarity_recall_curve,
-        "dedup_embedding_gate": _q_dedup_embedding_gate,
-        "minhash_band_plan": _q_minhash_band_plan,
-        "multimodal_adpcm_decode": _q_multimodal_adpcm_decode,
-        "similarity_ivfk_topk": _q_similarity_ivfk_topk,
-        "dedup_soft_weights": _q_dedup_soft_weights,
-        "split_by_cluster": _q_split_by_cluster,
-        "dedup_ngram_jaccard": _q_dedup_ngram_jaccard,
-        "text_token_stats": _q_text_token_stats,
-        "text_quality": _q_text_quality,
-        "text_lang_id": _q_text_lang_id,
-        "text_fingerprint": _q_text_fingerprint,
-        "text_pii_scrub": _q_text_pii_scrub,
-        "text_repetition": _q_text_repetition,
-        "stratified_sample": _q_stratified_sample,
-        "split_holdout": _q_split_holdout,
-        "mixture_sample": _q_mixture_sample,
-        "histogram_quantiles": _q_histogram_quantiles,
-        "dedup_incremental": _q_dedup_incremental,
-        "rolling_median": _q_rolling_median,
-        "quality_checks": _q_quality_checks,
-        "pq_codes": _q_pq_codes,
-        "pretrain_prep": _q_pretrain_prep,
-        "grouping_sets_counts": _q_grouping_sets,
-        "unpivot_metrics": _q_unpivot_metrics,
-        "salted_enrich": _q_salted_enrich,
-        "event_transitions": _q_event_transitions,
-        "vocab_coverage": _q_vocab_coverage,
-        "bloom_membership": _q_bloom_membership,
-        "table_profile": _q_table_profile,
-        "multimodal_audio": _q_multimodal_audio,
-        "text_diversity": _q_text_diversity,
-        "skew_report": _q_skew_report,
-        "dedup_containment": _q_dedup_containment,
-        "chunk_documents": _q_chunk_documents,
-        "retention_cohorts": _q_retention_cohorts,
-        "pack_sequences": _q_pack_sequences,
-        "decontaminate": _q_decontaminate,
-        "similarity_ivf_topk": _q_similarity_ivf_topk,
-        "similarity_ivfpq_topk": _q_similarity_ivfpq_topk,
-        "embedding_kmeans": _q_embedding_kmeans,
-        "repeated_spans": _q_repeated_spans,
-        "span_coverage": _q_span_coverage,
-        "semantic_dedup": _q_semantic_dedup,
-        "lookup_enrich": _q_lookup_enrich,
-        "lookup_multi_get": _q_lookup_multi_get,
-        "range_join": _q_range_join,
-        "percentiles": _q_percentiles,
-        "cube_counts": _q_cube_counts,
-        "salted_sum": _q_salted_sum,
-        "dedup_lsh_commit": _q_dedup_lsh_commit,
-        "dedup_incremental_near": _q_dedup_incremental_near,
-        "mixture_temperature": _q_mixture_temperature,
-        "embedding_pca": _q_embedding_pca,
-        "char_entropy": _q_char_entropy,
-        "near_dedup_front": _q_near_dedup_front,
-        "bpe_segmentation": _q_bpe_segmentation,
-        "embedding_covariance": _q_embedding_covariance,
-        "minhash_estimate_audit": _q_minhash_estimate_audit,
-        "embedding_standardize": _q_embedding_standardize,
-        "dedup_sorted_neighborhood": _q_dedup_sorted_neighborhood,
-        "filter_agreement": _q_filter_agreement,
-        "corpus_manifest": _q_corpus_manifest,
-        "vocab_drift": _q_vocab_drift,
-        "snapshot_diff": _q_snapshot_diff,
-        "cohort_retention": _q_cohort_retention,
-        "textrank": _q_textrank,
-        "selection_prep": _q_selection_prep,
-        "weighted_reservoir": _q_weighted_reservoir,
-        "multimodal_avi_decode": _q_multimodal_avi_decode,
-        "multimodal_avi_frames": _q_multimodal_avi_frames,
-        "multimodal_mulaw_decode": _q_multimodal_mulaw_decode,
-        "kneser_ney_logppl": _q_kneser_ney_logppl,
-        "dsir_weights": _q_dsir_weights,
-        "dsir_select": _q_dsir_select,
-        "ppl_buckets": _q_ppl_buckets,
-        "training_order": _q_training_order,
-        "curriculum_order": _q_curriculum_order,
-        "multimodal_wav_pitch": _q_multimodal_wav_pitch,
-        "boilerplate_scrub": _q_boilerplate_scrub,
-        "filter_funnel": _q_filter_funnel,
-        "winnowing_fingerprint": _q_winnowing_fingerprint,
-        "winnowing_overlap": _q_winnowing_overlap,
-        "embedding_audit": _q_embedding_audit,
-        "dedup_cluster_prune": _q_dedup_cluster_prune,
-        "dedup_clusters_twostar": _q_dedup_clusters_twostar,
-        "contamination_report": _q_contamination_report,
-        "shard_manifest": _q_shard_manifest,
-        "mixture_plan": _q_mixture_plan,
-        "similarity_sq_topk": _q_similarity_sq_topk,
-        "multimodal_wav_decode": _q_multimodal_wav_decode,
-        "similarity_ann_recall": _q_similarity_ann_recall,
-        "similarity_ann_recall_sampled": _q_similarity_ann_recall_sampled,
-        "dedup_ngram_jaccard_capped": _q_dedup_ngram_jaccard_capped,
-        "json_extract": _q_json_extract,
-        "top_customers": _q_top_customers,
-        "dedup_exact": _q_dedup_exact,
-        "dedup_minhash_buckets": _q_dedup_minhash_buckets,
-        "dedup_minhash_pairs": _q_dedup_minhash_pairs,
-        "dedup_simhash": _q_dedup_simhash,
-        "funnel_conversion": _q_funnel_conversion,
-        "similarity_topk": _q_similarity_topk,
-        "similarity_lsh_topk": _q_similarity_lsh_topk,
-        "dedup_embedding_cosine": _q_dedup_embedding_cosine,
-        "corpus_clean": _q_corpus_clean,
-        "multimodal_decode": _q_multimodal_decode,
-        "multimodal_frame_sample": _q_multimodal_frame_sample,
-        "waybill_generator": _q_waybill_generator,
-        "waybill_cem_merge": _q_waybill_cem_merge,
-        "waybill_capstone": _q_waybill_capstone,
-        "product_revenue": _q_product_revenue,
-        "iterate_fixpoint": _q_iterate_fixpoint,
-        "stateful_filter": _q_stateful_filter,
-        "rolling_extrema": _q_rolling_extrema,
-        "global_window": _q_global_window,
-        "window_last_value": _q_window_last_value,
-        "point_lookup": _q_point_lookup,
-        "multi_get": _q_multi_get,
-        "term_count": _q_term_count,
-        "pivot_counts": _q_pivot_counts,
-        "hypertable_rollup": _q_hypertable_rollup,
-        "kmv_distinct_sketch": _q_kmv_distinct_sketch,
-        "sql_q5_revenue": _q_sql_q5_revenue,
-        "as_of_join": _q_as_of_join,
-        "wordcount": _q_wordcount,
-        "pricing_summary": _q_pricing_summary,
-        "denorm_wide": _q_denorm_wide,
-        "rolling_sum": _q_rolling_sum,
-        "rolling_fold": _q_rolling_fold,
-        "tumbling_daily": _q_tumbling_daily,
-        "sliding_hourly": _q_sliding_hourly,
-        "session_windows": _q_session_windows,
-        "count_windows": _q_count_windows,
-        "trigger_evictor": _q_trigger_evictor,
-        "window_join": _q_window_join,
-        "union_streams": _q_union_streams,
-        "merge_last_non_null": _q_merge_last_non_null,
-        "side_output_split": _q_side_output_split,
+        k[len("_q_"):]: fn
+        for k, fn in globals().items()
+        if k.startswith("_q_") and callable(fn)
     }
+
+
+def _stalest_first(names: Iterable[str], record_dir: str = _HERE) -> list[str]:
+    """``names`` ordered by the newest ``CORRECTNESS_r{N}.json`` round in
+    ``record_dir`` that holds a row for each: names with no row first,
+    ties by name. A missing or unreadable record holds no rows."""
+    newest: dict[str, int] = {}
+    for path in glob.glob(os.path.join(record_dir, "CORRECTNESS_r*.json")):
+        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
+        if m is None:
+            continue
+        try:
+            with open(path) as f:
+                rows = json.load(f)
+        except (OSError, ValueError):
+            continue
+        if isinstance(rows, dict):
+            for name in rows:
+                newest[name] = max(newest.get(name, -1), int(m.group(1)))
+    return sorted(names, key=lambda n: (newest.get(n, -1), n))
 
 
 # --------------------------------------------------------------------------

@@ -1,28 +1,27 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Coverage sweep: runs every ``queries()`` entry at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
 JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 "queries": {name: sec, ...}, "sf": ...}.
 
 Each query is forced with the noop sink (full computation, no driver
-collect). The set covers every operator family: relational agg, star
-denorm join, windows (tumbling/sliding/session/count), rolling,
-window-join, dedup (exact/minhash/simhash), similarity (LSH), text
-analysis, multimodal, capstone.
+collect) ``ITERS`` times in one warm session; the reported per-query
+number (and the total) is the median. A failing query is logged and
+named in ``failed``; the rest still run.
 
-Noise control (VERDICT r5 #3): one-shot timing showed ±40% run-to-run
-variance on this shared 32-thread JVM, which makes a 2x regression bar
-unfalsifiable. Each query therefore runs ``SPARK_GRAFT_BENCH_ITERS``
-(default 3) consecutive iterations; the REPORTED per-query number (and
-the total) is the MEDIAN, with min and the raw iteration list persisted
-to the committed ``bench_local_r{N}.json``. Any query whose median
-regresses >1.3x against the previous round's committed local record is
-named in the ``regressions_vs_prev`` field of the JSON line.
+This sweep shows that every query runs and roughly what it costs. It
+flags no regressions: a speed claim comes from the interleaved A/B of
+``perfbench/`` (see "A/B between a parent and a change" in its README).
+
+Settings: ``SPARK_GRAFT_SF_DIR`` (input tables), ``SPARK_GRAFT_BENCH_ONLY``
+(comma-separated query subset) and ``SPARK_GRAFT_BENCH_RECORD=1`` (also
+write the full record to ``bench_local_r{N}.json``).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import statistics
 import sys
 import time
 
@@ -32,124 +31,17 @@ import __spark_entry__ as entrymod  # noqa: E402
 from flink_helloworld_spark.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-HEADLINE = [
-    "wordcount",
-    "pricing_summary",
-    "denorm_wide",
-    "rolling_sum",
-    "tumbling_daily",
-    "sliding_hourly",
-    "session_windows",
-    "count_windows",
-    "window_join",
-    "merge_last_non_null",
-    "as_of_join",
-    "range_join",
-    "percentiles",
-    "top_customers",
-    "json_extract",
-    "dedup_exact",
-    "dedup_minhash_pairs",
-    "repeated_spans",
-    "span_coverage",
-    "dedup_simhash",
-    "text_quality",
-    "text_lang_id",
-    "similarity_lsh_topk",
-    "similarity_topk_vectorized",
-    "similarity_ivf_topk",
-    "similarity_ivfpq_topk",
-    "similarity_ivf2_topk",
-    "embedding_kmeans",
-    "semantic_dedup",
-    "corpus_clean",
-    "multimodal_decode",
-    "multimodal_ppm_decode",
-    "gopher_rules",
-    "domain_cap",
-    "decontaminate_semantic",
-    "unigram_logppl",
-    "bpe_train_merges",
-    "tfidf_top_terms",
-    "bm25_search",
-    "dedup_clusters",
-    "window_topn",
-    "scd2_intervals",
-    "waybill_capstone",
-    "hypertable_rollup",
-    "kmv_distinct_sketch",
-    "hll_distinct_sketch",
-    "cms_heavy_hitters",
-    "term_postings",
-    "zorder_layout",
-    "funnel_conversion",
-    "sql_q5_revenue",
-    "sql_q6_forecast",
-    "sql_q10_returns",
-    "sql_q18_large_orders",
-    "decontaminate",
-    "pack_sequences",
-    "mixture_sample",
-    "cep_pattern",
-    "gapfill_locf",
-    "histogram_quantiles",
-    "dedup_incremental",
-    "pq_codes",
-    "rolling_median",
-    "quality_checks",
-    "sql_q8_market_share",
-    "sql_q13_order_dist",
-    "sql_q17_small_qty",
-    "pretrain_prep",
-    "dedup_containment",
-    "table_profile",
-    "bloom_membership",
-    "vocab_coverage",
-    "retention_cohorts",
-    "sql_q19_disjunct",
-    "sql_q9_profit",
-    "sql_q21_waiting_supp",
-]
-# The bench covers the ENTIRE registry (VERDICT r3 #5: regressions in
-# non-headline queries were invisible). HEADLINE runs first in its
-# historical order so round-over-round comparisons stay aligned; every
-# remaining queries() entry is appended in registry order.
-
-# AUDIT-class queries (VERDICT r10 item 7): these are N²-by-contract
-# or composite build+maintain+query AUDITS — their cost is the
-# contract (an exact recall baseline, a full lifecycle replay), not an
-# operating path a deployment would run per request. The bench payload
-# tags them so the headline total and the regressions_vs_prev list can
-# be read per class: a slow audit is a thorough audit, a slow
-# OPERATING query is a regression.
-AUDIT_QUERIES = {
-    # exact-N² recall baselines / planted-mixture recall audits
-    "similarity_ann_recall",
-    "similarity_ann_recall_sampled",
-    "similarity_recall_curve",
-    "ivf_indexed_recall",
-    "embedding_gate_recall_curve",
-    "embedding_gate_verified_recall_curve",
-    "embedding_gate_verified_sq_recall_curve",
-    "embedding_dim_ablation",
-    # quantizer-error audit (reconstructs + re-scores the corpus)
-    "sq_reconstruction_error",
-    # composite lifecycle audits (build + maintain + query in one run
-    # by contract; the operating query path alone is the pure scan)
-    "ivf_index_delete_query",
-    # registry form runs audit=True (exact true-join side beside the
-    # sketch estimate; the operating form is sketch-only, plan-pinned)
-    "cms_join_size",
-}
+ITERS = 3
+# past this many seconds the remaining queries run once each, so a
+# slow sweep still yields a complete record
+DEADLINE_S = 1500
 
 
-def _warm_session(app_name: str = "fhs-bench"):
-    """Build (or rebuild) the bench session and pay the warmup costs —
-    JVM/codegen init + parquet footer reads for every table the headline
-    touches — so the first timed query after (re)start isn't charged
-    for either."""
-    spark = build_session(app_name=app_name)
+def _warm_session():
+    """Build the bench session and pay the warmup costs — JVM/codegen
+    init + parquet footer reads for every base table — so the first
+    timed query isn't charged for either."""
+    spark = build_session(app_name="fhs-bench")
     spark.range(1000).count()
     from flink_helloworld_spark.sources.tables import load_tables
 
@@ -166,85 +58,30 @@ def _warm_session(app_name: str = "fhs-bench"):
 
 
 def main() -> None:
-    spark = _warm_session()
-    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
-    try:  # replica dirs may not encode a numeric sf — never crash the
-        float(sf)  # payload assembly AFTER the timings ran (r12)
-    except ValueError:
-        sf = "-1"
     qs = entrymod.queries()
-    from flink_helloworld_spark.operators.dedup import release_shared_caches
-
-    # per-query error isolation: one broken query must never cost the
-    # round its entire bench record — log the error, keep timing the
-    # rest, and exit non-zero at the end if anything failed
-    iters = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_ITERS", "3")))
-    timings: dict[str, object] = {}
-    detail: dict[str, object] = {}
-    failed: list[str] = []
-    run_order = HEADLINE + [q for q in qs if q not in HEADLINE]
     only = {
         q for q in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "").split(",") if q
     }
-    if only:  # debugging aid: time a subset without editing the file
-        run_order = [q for q in run_order if q in only]
-    import statistics
+    run_order = [q for q in qs if q in only] if only else list(qs)
+    spark = _warm_session()
+    sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
+    try:  # replica dirs may not encode a numeric sf — never crash the
+        float(sf)  # payload assembly AFTER the timings ran
+    except ValueError:
+        sf = "-1"
+    from flink_helloworld_spark.operators.dedup import release_shared_caches
 
-    # soft deadline: if the multi-iteration sweep would overrun the
-    # driver's patience, degrade remaining queries to single-shot
-    # (median falls back to the one sample) instead of timing out the
-    # whole record
-    deadline = time.time() + float(
-        os.environ.get("SPARK_GRAFT_BENCH_DEADLINE_S", "1500")
-    )
-    # aging canary: one fixed cheap query re-timed every 30 positions.
-    # A long single-JVM sweep (181 queries x 3 iters) accumulates GC /
-    # code-cache / listener state that inflates LATE positions 2-3x vs
-    # a solo run (measured in round 6); the canary series separates
-    # "the session aged" from "this query regressed" when reading the
-    # regressions_vs_prev list.
-    canary: list[list[float]] = []
-    # second series (VERDICT r9 item 8): the tiny wordcount canary
-    # under-captures CODEGEN-heavy drift (JIT/code-cache aging shows
-    # up in big generated methods first) — hilbert_layout is the
-    # house codegen-heavy fixed query (staged bit-walk projections),
-    # so its tick lets normalization excuse what wordcount can't see.
-    canary_cg: list[list[float]] = []
-
-    def tick_canary(pos: int) -> None:
-        for series, qname in ((canary, "wordcount"),
-                              (canary_cg, "hilbert_layout")):
-            t0 = time.time()
-            try:
-                qs[qname](spark, SF_DIR).write.mode("overwrite").format(
-                    "noop"
-                ).save()
-                series.append([pos, round(time.time() - t0, 3)])
-            except Exception:  # noqa: BLE001
-                pass
-            finally:
-                release_shared_caches()
-
-    # OPTIONAL in-session-aging mitigation (default OFF = methodology
-    # unchanged): restart the SparkSession every N queries, re-paying
-    # the warmup each time, to bound the GC/code-cache/listener aging
-    # a 200+-query single JVM accrues. Exists so a drift investigation
-    # can A/B quantify aging (r9 saw 1.5-3.6x outliers on untouched
-    # sub-2s queries between two runs of the same commit) without
-    # changing the committed record's methodology.
-    restart_every = int(
-        os.environ.get("SPARK_GRAFT_BENCH_RESTART_EVERY", "0") or 0
-    )
-
-    for pos, name in enumerate(run_order):
-        if restart_every and pos and pos % restart_every == 0:
-            spark.stop()
-            spark = _warm_session(f"fhs-bench-{pos}")
-        if pos % 30 == 0:
-            tick_canary(pos)
+    # per-query error isolation: one broken query must never cost the
+    # run its entire record — log the error, keep timing the rest, and
+    # exit non-zero at the end if anything failed
+    timings: dict[str, object] = {}
+    detail: dict[str, object] = {}
+    failed: list[str] = []
+    deadline = time.time() + DEADLINE_S
+    for name in run_order:
         runs: list[float] = []
         err = None
-        n_iters = iters if time.time() < deadline else 1
+        n_iters = ITERS if time.time() < deadline else 1
         for _ in range(n_iters):
             t0 = time.time()
             try:
@@ -274,17 +111,6 @@ def main() -> None:
         sum(t if isinstance(t, float) else t["sec"] for t in timings.values()),
         3,
     )
-    # regression flagging vs the previous round's committed local record,
-    # CANARY-NORMALIZED on both sides (VERDICT r6 item 2): raw medians
-    # flagged 17 false positives in round 6, all session aging. Both
-    # records carry their own canary series + run positions, so each
-    # side's median is deflated by its local aging factor before the
-    # 1.3x comparison. (r5's file holds one-shot values; r6+ records are
-    # medians, so every comparison from r7 on is median-to-median.)
-    positions = {name: i for i, name in enumerate(run_order)}
-    regressions = _flag_regressions(
-        timings, positions, canary, _load_prev_record(), canary_cg=canary_cg
-    )
     payload = {
         "metric": "headline_queries_total",
         "value": total,
@@ -292,35 +118,17 @@ def main() -> None:
         "queries": timings,
         "n_queries": len(timings),
         "sf": float(sf),
-        "iters_per_query": iters,
+        "iters_per_query": ITERS,
         "failed": failed,
-        "regressions_vs_prev": regressions,
-        # the same flag list split by query CLASS (audit = N²/composite
-        # by contract; operating = everything a deployment runs per
-        # request): read operating flags as candidate regressions,
-        # audit flags as contract-cost drift
-        "regressions_operating": {
-            k: v for k, v in regressions.items() if k not in AUDIT_QUERIES
-        },
-        "regressions_audit": {
-            k: v for k, v in regressions.items() if k in AUDIT_QUERIES
-        },
-        "audit_queries": sorted(AUDIT_QUERIES & set(timings)),
-        "aging_canary": canary,  # [position, wordcount_sec] series
-        # [position, hilbert_layout_sec]: codegen-heavy twin series
-        "aging_canary_codegen": canary_cg,
     }
     print(json.dumps(payload))
-    # the driver's BENCH_r{N}.json captures only the stdout TAIL, which a
-    # full-registry line overflows (r4 lost the first 61 timings) — also
-    # write the complete record to a committed file, named for the round
-    # the driver is about to stamp (max existing BENCH_r{N} + 1).
-    # Opt-in via SPARK_GRAFT_BENCH_RECORD=1 (VERDICT r11 item 6): the
-    # committed bench_local_r*.json records are builder-authored A/B
-    # evidence; a driver (or any ad-hoc) invocation must not overwrite
-    # them or mint next-round files as a side effect of timing.
+    # a captured stdout tail can truncate a full-registry line, so the
+    # complete record (with per-iteration timings) can also go to a
+    # file named for the next round (max existing BENCH_r{N} + 1).
+    # Opt-in, and never for a subset run, so an ad-hoc timing run
+    # cannot overwrite a committed record.
     record = os.environ.get("SPARK_GRAFT_BENCH_RECORD", "") == "1"
-    if record and not only:  # a subset run must never clobber the record
+    if record and not only:
         try:
             here = os.path.dirname(os.path.abspath(__file__))
             n = _next_round(here)
@@ -349,186 +157,6 @@ def _next_round(here: str) -> int:
         if (m := re.search(r"BENCH_r(\d+)\.json$", p))
     ]
     return (max(rounds) + 1) if rounds else 0
-
-
-def _load_prev_record(here: str | None = None) -> dict:
-    """The FULL bench_local_r*.json record of the LAST DRIVER-STAMPED
-    round — the regression reference: per-query timings under
-    'detail'/'queries' (each in run order) plus its own 'aging_canary'
-    series.
-
-    VERDICT r7 item 2: the previous form grabbed the newest
-    bench_local_r*.json, which mid-round is THIS round's own earlier
-    run — so the committed ``regressions_vs_prev`` was a same-code
-    environment comparison instead of prev-round-vs-this-round.
-    Records from the current round (round >= ``_next_round``, i.e.
-    newer than the newest driver-stamped BENCH_r{N}.json) are now
-    excluded, so the baseline always means "vs last official round"
-    no matter how many times bench re-runs in-round."""
-    import glob
-    import re
-
-    if here is None:
-        here = os.path.dirname(os.path.abspath(__file__))
-    current = _next_round(here)
-    best, best_n = None, -1
-    for p in glob.glob(os.path.join(here, "bench_local_r*.json")):
-        m = re.search(r"bench_local_r(\d+)\.json$", p)
-        if m and best_n < int(m.group(1)) < current:
-            best, best_n = p, int(m.group(1))
-    if best is None:
-        return {}
-    try:
-        with open(best) as f:
-            rec = json.load(f)
-    except (OSError, ValueError):
-        return {}
-    return rec if isinstance(rec, dict) else {}
-
-
-def _post_warmup_ticks(canary: list) -> list:
-    """The canary series minus the POSITION-0 tick (first-query codegen
-    cost that applies to no other query) — keyed on the recorded
-    position value, not the list index, so a missing warmup tick (the
-    recorder swallows errors) cannot silently drop the first real
-    steady sample."""
-    return [
-        c
-        for c in canary
-        if isinstance(c, (list, tuple)) and len(c) == 2 and c[0] != 0
-    ]
-
-
-def _canary_factor(pos: int, canary: list) -> float:
-    """Session-aging multiplier at run position ``pos``: the POST-WARMUP
-    canary tick nearest to pos, divided by the canary's steady-state
-    value (median of post-warmup ticks). Clamped at >= 1.0 so
-    normalization can only EXCUSE aging inflation, never mask a real
-    regression; 1.0 when the series is too short to establish a steady
-    state."""
-    ticks = _post_warmup_ticks(canary)
-    steady = _canary_steady(canary)
-    if len(ticks) < 2 or steady <= 0:
-        return 1.0
-    nearest = min(ticks, key=lambda pc: abs(pc[0] - pos))
-    ratio = nearest[1] / steady
-    # dead-band: tick-to-tick jitter of a healthy session is a few
-    # percent; only a >=15% elevation is an AGING signal worth
-    # normalizing by (below that, normalize-by-noise would perturb
-    # every comparison)
-    return ratio if ratio >= 1.15 else 1.0
-
-
-def _flag_regressions(
-    timings: dict,
-    positions: dict,
-    canary: list,
-    prev_rec: dict,
-    threshold: float = 1.3,
-    canary_cg: list | None = None,
-) -> dict:
-    """Canary-normalized regression list: {name: [prev_median, cur_median,
-    normalized_ratio]}. A query is flagged only when BOTH the raw
-    median ratio AND the aging-normalized ratio exceed ``threshold`` —
-    normalization can only CLEAR a raw flag (the r6 failure mode it
-    exists for: late-session inflation), never create one (the first
-    r7 run proved the naive symmetric form manufactures regressions
-    whenever the PREVIOUS record's nearby canary tick was elevated —
-    early ticks carry residual warmup, and deflating prev by them made
-    queries that got FASTER look 1.5x slower). Skips queries whose
-    previous entry was a failure (its 'sec' is time-to-failure) and
-    sub-200ms baselines (pure noise)."""
-    prev_det = prev_rec.get("detail")
-    if not isinstance(prev_det, dict):
-        prev_det = prev_rec.get("queries", {})
-    if not prev_det:
-        return {}
-    prev_canary = prev_rec.get("aging_canary") or []
-    prev_canary_cg = prev_rec.get("aging_canary_codegen") or []
-    canary_cg = canary_cg or []
-    prev_pos = {name: i for i, name in enumerate(prev_det)}
-    # cross-round MACHINE drift: the canary is the same fixed query, so
-    # the ratio of steady levels measures how much slower this round's
-    # environment is than last round's (shared box — other tenants,
-    # thermal state). Clamped at >= 1.0: a faster machine must never
-    # hide a real regression, only a slower one may excuse inflation.
-    def _machine_drift(cur: list, prev: list) -> float:
-        cs, ps = _canary_steady(cur), _canary_steady(prev)
-        return cs / ps if cs > 0 and ps > 0 else 1.0
-
-    # take the LARGER drift of the two series (excuse-only direction:
-    # a codegen-heavy slowdown the wordcount canary can't see may
-    # still clear flags; both clamped >= 1.0 below). Old records
-    # without the codegen series contribute factor 1.0.
-    machine = max(
-        _machine_drift(canary, prev_canary),
-        _machine_drift(canary_cg, prev_canary_cg),
-    )
-    # dead-band at 1.07 (the steady level is a median of ~6 ticks, so
-    # its noise is ~1/sqrt(6) of the single-tick 15% band): drift below
-    # that is indistinguishable from between-session noise and must not
-    # soften the 1.3x bar; clamp >= 1.0 so a FASTER machine never hides
-    # a regression. Residual sensitivity gap is documented: a true 1.3-
-    # 1.4x regression coinciding with real >=7% machine drift is
-    # cleared — the price of not flagging machine drift as code.
-    machine = machine if machine >= 1.07 else 1.0
-    out: dict = {}
-    for name, sec in timings.items():
-        p = prev_det.get(name)
-        if isinstance(p, dict) and "err" in p:
-            continue
-        p_med = p.get("median", p.get("sec")) if isinstance(p, dict) else p
-        if not (isinstance(sec, float) and isinstance(p_med, (int, float))):
-            continue
-        if p_med <= 0.2:
-            continue
-        raw = sec / p_med
-        if raw <= threshold:
-            continue
-        # symmetric definitions only: when the PREVIOUS record lacks
-        # the codegen canary series, the current side must not use it
-        # either — otherwise cur_f can pick the larger codegen factor
-        # while prev_f is wordcount-only, deflating just the current
-        # timing and excusing a genuine regression for the one
-        # transition round. The codegen series still influences the
-        # cross-round `machine` factor, whose missing-baseline case
-        # already degrades to 1.0.
-        use_cg = bool(prev_canary_cg) and bool(canary_cg)
-        cur_f = max(
-            _canary_factor(positions.get(name, 0), canary),
-            _canary_factor(positions.get(name, 0), canary_cg)
-            if use_cg
-            else 0.0,
-        )
-        prev_f = max(
-            _canary_factor(prev_pos.get(name, 0), prev_canary),
-            _canary_factor(prev_pos.get(name, 0), prev_canary_cg)
-            if use_cg
-            else 0.0,
-        )
-        cur_n = sec / cur_f
-        prev_n = p_med / prev_f
-        norm = cur_n / prev_n if prev_n > 0 else raw
-        # flag-clearing direction ONLY: the effective ratio is the
-        # smaller of raw and within-run-normalized, deflated by the
-        # cross-round machine factor — an elevated prev-side tick or a
-        # faster prev machine can never inflate a flag
-        eff = min(raw, norm) / machine
-        if eff > threshold:
-            out[name] = [p_med, sec, round(eff, 2)]
-    return out
-
-
-def _canary_steady(canary: list) -> float:
-    """Steady-state canary level: median of post-warmup ticks (the same
-    series `_canary_factor` normalizes within-run positions by); 0.0
-    when the series is too short."""
-    import statistics
-
-    ticks = _post_warmup_ticks(canary)
-    if len(ticks) < 2:
-        return 0.0
-    return float(statistics.median(c for _, c in ticks))
 
 
 if __name__ == "__main__":

@@ -119,15 +119,6 @@ def minhash_signature_from_hashes(hm: Column, num_hashes: int = 12) -> Column:
     )
 
 
-def minhash_signature(text: Column, num_hashes: int = 12, shingle_n: int = 3) -> Column:
-    """MinHash signature of a text column (shingle → base hash → affine
-    permutation minima)."""
-    sh = shingles(text, shingle_n)
-    return minhash_signature_from_hashes(
-        F.transform(sh, shingle_base_hash), num_hashes
-    )
-
-
 def lsh_band_keys(sig: Column, bands: int, rows: int) -> list[Column]:
     """Band the signature: band key = md5 of the band's joined rows.
     Docs agreeing on any full band collide into the same bucket."""

@@ -456,15 +456,6 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     return width, height, channels
 
 
-def _real_decoder_available() -> bool:
-    try:  # pragma: no cover - container has no PIL
-        import PIL.Image  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
 def decode_image_features(media: DataFrame) -> DataFrame:
     """Arrow-batched decode stage: (doc_id, payload) → image features.
 
@@ -569,7 +560,7 @@ def decode_audio_features(media: DataFrame, window_ms: int = 250) -> DataFrame:
     ``mapInPandas``, partition-preserving, no shuffle. Emits per-clip
     stats plus the window count a framing stage would explode to
     (``ceil(duration / window)`` — the audio analog of frame_sample)."""
-    use_real = _real_audio_decoder_available()  # NOT the image (PIL) probe
+    use_real = _real_audio_decoder_available()
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

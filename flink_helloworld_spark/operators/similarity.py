@@ -1654,23 +1654,23 @@ def ivf2_cosine_topk(
 ) -> DataFrame:
     """TWO-LEVEL (hierarchical) IVF top-k — the shape ``ivf_cosine_topk``'s
     docstring promises for extreme scale, implemented: when the cell-cap
-    rule makes C = N/64 too large to collect/broadcast as flat centroid
-    metadata, interpose S = ⌈√C⌉ super-centroids. Only the S-row
-    super table is ever collected (S ~ √(N/64): ~4e4 at 1e11 vectors —
-    always driver-safe); the C-row centroid table stays DISTRIBUTED and
-    reaches vectors through a super-cell-keyed grouped BLAS stage:
+    rule makes C = N/64 large, interpose S = ⌈√C⌉ super-centroids:
 
       1. super-centroids = md5-rank sample of the centroids (seed
-         ``super:``), broadcast;
-      2. centroids assign to their nearest super-cell (BLAS vs the
-         broadcast supers) — a DataFrame, never collected;
-      3. vectors probe their ``n_super_probe`` nearest super-cells
-         (BLAS vs the same broadcast supers);
-      4. per super-cell, one grouped-BLAS stage scores the vectors
-         probing it against the centroids inside it → each vector's
-         ``n_probe`` nearest reachable cells;
+         ``super:``);
+      2. centroids assign to their nearest super-cell;
+      3. vectors probe their ``n_super_probe`` nearest super-cells;
+      4. among the centroids inside those super-cells, each vector
+         keeps its ``n_probe`` nearest cells;
       5. per cell, the same grouped-BLAS scan as flat IVF scores
          members against probing queries → global top-k.
+
+    Steps 2-4 run against the FROZEN quantizer: the driver collects the
+    full C-row centroid table and the S-row super table
+    (``_frozen_quantizer``, the same tables ``collect_ivf_quantizer``
+    returns for an index), broadcasts them, and routes each vector in
+    one ``mapInPandas``. That costs O(C·dim) driver memory; no size cap
+    is asserted on it.
 
     Every ranking orders by cosine ROUNDED to ``round_dp`` with id
     tiebreaks — the engine's BLAS/oracle parity contract — and the whole
@@ -1712,9 +1712,8 @@ def ivf2k_cosine_topk(
     round_dp: int = 6,
 ) -> DataFrame:
     """Two-level IVF with LLOYD-REFINED quantizers at BOTH levels
-    (VERDICT r6 item 5): ``ivf2_cosine_topk``'s hierarchical shape —
-    only the ~√C-row super table is ever collected, the C-row centroid
-    table stays distributed — but cells come from
+    (VERDICT r6 item 5): ``ivf2_cosine_topk``'s hierarchical shape and
+    frozen-quantizer routing, but cells come from
     ``clustering.kmeans_centroids`` over the corpus and super-cells from
     ``kmeans_centroids`` over the CENTROID table (each: md5-rank seeds
     'km:', then ``n_iter`` Lloyd steps), instead of raw md5 samples.
@@ -1792,11 +1791,14 @@ def _route_cells(
     n_probe: int,
     round_dp: int = 6,
 ) -> DataFrame:
-    """The two-level cell ROUTING shared by the fused scan
-    (``_ivf2_scan``), the index builder (member lists, ``n_probe=1``)
-    and the indexed query path (probes): each vector's ``n_probe``
-    nearest cells among the cells homed in its ``n_super_probe``
-    nearest super-cells, as ``(id, centroid_id, _crn)``.
+    """Distributed reference kernel for two-level cell routing: each
+    vector's ``n_probe`` nearest cells among the cells homed in its
+    ``n_super_probe`` nearest super-cells, as ``(id, centroid_id,
+    _crn)``. No production path calls it: live routing runs against
+    the frozen quantizer (``route_frozen_np`` via ``_ivf2_scan``,
+    ``build_ivf_index``, ``ivf_index_append`` and the indexed probes).
+    The frozen-routing parity tests replay this pipeline and require
+    byte-identical cells.
 
     ``cent_home`` is ``(cent_id, super_id, cvec)`` — the C-row centroid
     table stays DISTRIBUTED; only the ≤√C-row ``sup`` table is ever
@@ -1880,9 +1882,8 @@ def _ivf2_scan(
     """Stages (2)-(5) of the two-level IVF, shared by every quantizer
     build (md5-seed ``ivf2_cosine_topk``, Lloyd-refined
     ``ivf2k_cosine_topk``): centroid→super home assignment, vector→super
-    probing (both BLAS against the broadcast ≤√C-row super table), the
-    super-cell-keyed grouped-BLAS candidate-cell stage, and the per-cell
-    scan. ``cent`` stays distributed throughout."""
+    probing and the candidate-cell choice, all against the collected
+    frozen quantizer (``_frozen_quantizer``), then the per-cell scan."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import Window

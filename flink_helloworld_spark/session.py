@@ -75,9 +75,3 @@ def build_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
-
-
-def get_spark() -> SparkSession:
-    """Active session if any, else a new one with engine defaults."""
-    active = SparkSession.getActiveSession()
-    return active if active is not None else build_session()

@@ -137,11 +137,6 @@ def read_script_stream(spark: SparkSession, workdir: str) -> DataFrame:
     )
 
 
-def drop_wm_rows(df: DataFrame, key_col: str = "k") -> DataFrame:
-    """Remove watermark-driver rows (after ``withWatermark`` is applied)."""
-    return df.where(F.col(key_col) != WM_KEY)
-
-
 def run_available_now(stream: DataFrame, query_name: str, output_mode: str = "append"):
     """Run a streaming DataFrame to completion on the available script
     files (one batch per file) into an in-memory table; returns rows.

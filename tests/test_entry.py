@@ -29,3 +29,37 @@ def test_every_query_has_oracle_and_runs(spark, sf_dir):
     # every registered query has a SQL oracle unless it is in the
     # explicitly-documented iterative rows-only set
     assert set(missing) <= ROWS_ONLY_OK, missing
+
+
+def test_stalest_first_orders_by_newest_official_row(tmp_path):
+    import json
+
+    def record(n, names):
+        rows = {name: {"hash_match": True} for name in names}
+        (tmp_path / f"CORRECTNESS_r{n:02d}.json").write_text(json.dumps(rows))
+
+    record(1, ["old", "fresh", "tie_b", "tie_a"])
+    record(2, ["fresh"])
+    record(3, ["fresh"])
+    (tmp_path / "CORRECTNESS_r04.json").write_text("{not json")  # holds no rows
+    names = ["fresh", "tie_b", "old", "never_z", "tie_a", "never_a"]
+    assert entrymod._stalest_first(names, str(tmp_path)) == [
+        "never_a", "never_z", "old", "tie_a", "tie_b", "fresh",
+    ]
+    assert entrymod._stalest_first(names, str(tmp_path / "missing")) == sorted(names)
+
+
+NEVER_OFFICIAL = {
+    "bm25_search_store", "epoch_pack_stream", "fuzzy_term_search_store",
+    "fuzzy_term_search_symspell", "ivf_member_manifest", "phrase_search_slop",
+    "phrase_search_store", "phrase_search_store_scrubbed",
+}
+
+
+def test_gate_slice_holds_the_never_official_queries():
+    # the correctness gate checks the first 50 of queries(); with the committed
+    # CORRECTNESS_r*.json records these are the stalest, so every query
+    # that never held an official row is among them
+    qs = list(entrymod.queries())
+    assert len(qs) == len(entrymod.oracle_sql())
+    assert NEVER_OFFICIAL <= set(qs[:50])

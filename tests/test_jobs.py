@@ -789,6 +789,24 @@ def test_job_builders_auto_size_stateful_partitions(spark):
         spark.conf.set("spark.sql.shuffle.partitions", prev)
 
 
+def test_suggest_stateful_partitions_sqrt_law():
+    """The auto-sizer must reproduce BOTH round-6 hand-found optima —
+    ~8 partitions at 1,250 input rows/trigger and ~32 at 12,500 — which
+    a linear rows/N rule cannot (it gives the same answer for both up
+    to rounding). n* = sqrt(rows x c_row/c_fixed)."""
+    from flink_helloworld_spark.streaming import suggest_stateful_partitions
+
+    assert suggest_stateful_partitions(1250) == 8
+    n10 = suggest_stateful_partitions(12500)
+    assert 20 <= n10 <= 32
+    # floor and cap behavior
+    assert suggest_stateful_partitions(0) == 2
+    assert suggest_stateful_partitions(10) == 2
+    assert suggest_stateful_partitions(12500, cap=16) == 16
+    # monotone in rows
+    assert suggest_stateful_partitions(125000) > n10
+
+
 # --- KMV set algebra -----------------------------------------------------------
 
 

@@ -119,6 +119,16 @@ def test_csv_and_jsonl_sources(spark, tmp_path):
     assert {r.id: r.v for r in rows} == {1: 2.5, 2: -1.0}
 
 
+def test_read_text_one_row_per_line(spark, tmp_path):
+    from flink_helloworld_spark.sources.tables import read_text
+
+    src = tmp_path / "in.txt"
+    src.write_text("hello flink\n\nhello spark\n")
+    df = read_text(spark, str(src))
+    assert df.columns == ["value"]
+    assert [r.value for r in df.collect()] == ["hello flink", "", "hello spark"]
+
+
 def test_apply_changelog_tombstones_and_reinserts(spark):
     from flink_helloworld_spark.operators.relational import apply_changelog
 

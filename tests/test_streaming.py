@@ -355,6 +355,21 @@ def test_partitioned_lake_sink(spark):
     assert any(d.startswith("k=") for d in os.listdir(out_dir))  # hive dirs
 
 
+def test_console_sink_named_by_label(spark):
+    from flink_helloworld_spark.streaming.sinks import console_sink
+
+    workdir = tempfile.mkdtemp(prefix="console-src-")
+    write_script([Step("a", 1, 1000), Step("b", 2, 2000)], workdir)
+    stream = read_script_stream(spark, workdir).select("k", "v")
+    q = console_sink(stream, label="k1_print").trigger(availableNow=True).start()
+    try:
+        assert q.awaitTermination(120)
+        assert q.name == "k1_print"
+        assert sum(p["numInputRows"] for p in q.recentProgress) == 2
+    finally:
+        q.stop()
+
+
 @pytest.mark.slow
 def test_co_flat_map_state_ttl_expires(spark):
     """T8 state TTL: with a processing-time TTL, idle keys are dropped —
