@@ -23,8 +23,6 @@ float mean and give up bit-reproducibility — documented tradeoff).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -128,7 +126,7 @@ def kmeans_assign(
     )
 
 
-_KMEANS_LOCAL_MAX = int(os.environ.get("SPARK_GRAFT_KMEANS_LOCAL_MAX", "32768"))
+_KMEANS_LOCAL_MAX = 32768
 
 
 def _kmeans_centroids_local(rows, k: int, n_iter: int):
@@ -206,7 +204,7 @@ def kmeans_centroids(
     construction the chained-CTE oracle (`_kmeans_ctes`) replays.
 
     SIZE-GATED LOCAL PATH (r11 optimization): when the training input
-    fits under ``local_max_rows`` (default ``SPARK_GRAFT_KMEANS_LOCAL_MAX``
+    fits under ``local_max_rows`` (default ``_KMEANS_LOCAL_MAX``
     = 32768; the probe is one bounded ``limit(cap+1)`` collect), the
     whole loop runs driver-side via ``_kmeans_centroids_local`` —
     bit-identical by construction and by test — instead of paying
@@ -499,7 +497,14 @@ def embedding_covariance(
                 P = C[:, iu_a] * C[:, iu_b]
                 # exact nano-lattice integers: sign·floor(|p|·1e9+0.5)
                 # IS _r9(p)·1e9 with no re-multiplication error; chunk
-                # sums stay exact in float64 (≤1024·1e11 ≪ 2^53)
+                # sums stay exact in float64 (≤1024·1e11 ≪ 2^53) only
+                # while |p| ≤ 100 — NaN fails the test too
+                if not (np.abs(P) <= 100.0).all():
+                    raise ValueError(
+                        "embedding_covariance: a centered product is "
+                        "non-finite or above 100 in magnitude, outside "
+                        "the exact nano-lattice range"
+                    )
                 nano = np.sign(P) * np.floor(np.abs(P) * 1e9 + 0.5)
                 acc += nano.sum(axis=0).astype(np.int64)
                 seen = True

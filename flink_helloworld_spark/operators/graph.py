@@ -233,16 +233,10 @@ def pagerank(
     queries CONCURRENTLY on the same SparkSession while it executes
     (Spark confs are session-scoped, not plan-scoped).
     """
-    import os
-
     spark = edges.sparkSession
-    # r12 (VERDICT r11 item 7): the AQE-off + right-sized-partitions
-    # pinning below is a MEASURED posture (sf0.1: ~1.5x each; re-measured
-    # at the 10x volume replica this round — numbers in
-    # OPTIMIZATION_r12.md). Env-disableable so a deployment at a scale
-    # where AQE's per-stage replanning pays for itself can flip it
-    # without code.
-    pin_confs = os.environ.get("SPARK_GRAFT_PAGERANK_PIN", "1") == "1"
+    # the AQE-off + right-sized-partitions pinning below is a MEASURED
+    # posture: ~1.5x each at sf0.1, 1.42x at the ~sf1 volume replica
+    # (OPTIMIZATION_r12.md)
     edges = edges.persist()  # derivation (joins/distinct) runs ONCE
     # weighted mode: d = Σ out-weights, contribution r·w/d (mass flows
     # proportionally to edge strength); unweighted keeps the original
@@ -267,8 +261,7 @@ def pagerank(
     # eagerly inside this function, so restore-in-finally is airtight.
     aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
     sp_prev = spark.conf.get("spark.sql.shuffle.partitions")
-    if pin_confs:
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
         n_nodes = deg.count()  # bounded: one scalar to the driver
         # right-size the per-round shuffles to the RANK VECTOR, not the
@@ -282,8 +275,7 @@ def pagerank(
         except (TypeError, ValueError):
             sp_cap = 200
         n_parts = min(sp_cap, max(1, -(-n_nodes // 2000)))
-        if pin_confs:
-            spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
+        spark.conf.set("spark.sql.shuffle.partitions", str(n_parts))
         # materialize the adjacency UNDER the right-sized conf before
         # the loop: every broadcast build between checkpoints re-reads
         # it, and an unmaterialized adj would re-execute its join at

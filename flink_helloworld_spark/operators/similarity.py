@@ -17,13 +17,20 @@ to the DuckDB oracle's indexed ``list_sum`` formulation.
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_helloworld_spark.functions import md5_prefix_long, seed_topk
 from flink_helloworld_spark.operators._numeric import (
     pack_scaled_int,
     round_half_away,
 )
+
+# Driver budget for one collected centroid / codebook table, in float64
+# values (rows × dim): 2^26 values = 512 MiB, under both Spark's default
+# 1 GiB ``spark.driver.maxResultSize`` and the 8g default driver heap.
+_COLLECT_MAX_VALUES = 1 << 26
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -38,6 +45,140 @@ def _norm(a: Column) -> Column:
     return F.sqrt(_dot(a, a))
 
 
+def _cosine(a: Column, b: Column) -> Column:
+    """Cosine of two array columns as sequential folds; NULL when either
+    is a zero vector."""
+    return _dot(a, b) / F.nullif(_norm(a) * _norm(b), F.lit(0.0))
+
+
+def _unit_rows(mat) -> np.ndarray:
+    """L2-normalize the rows of ``mat``; a zero row's norm is forced to
+    +inf, so it stays all-zero and scores cosine 0.0 against anything
+    (the oracle yields NULL there — zero vectors never match)."""
+    mat = np.asarray(mat, dtype=np.float64)
+    norms = np.linalg.norm(mat, axis=1)
+    norms[norms == 0.0] = np.inf
+    return mat / norms[:, None]
+
+
+def _nearest(q_unit, c_unit, n: int, round_dp: int) -> np.ndarray:
+    """Column indices of each row's ``n`` nearest rows of ``c_unit`` by
+    cosine ROUNDED to ``round_dp``; the stable sort keeps ascending
+    column order on ties, so id-sorted candidates break ties by lowest
+    id (the oracle's rule)."""
+    sims = round_half_away(q_unit @ c_unit.T, round_dp)
+    return np.argsort(-sims, axis=1, kind="stable")[:, :n]
+
+
+def _score_pairs(q_ids, q_mat, m_ids, m_mat, round_dp: int):
+    """The per-cell scan kernel: rounded cosines of every (query,
+    member) pair whose ids differ (self excluded), as parallel arrays
+    ``(query_idx, member_idx, cosine)``. Raw rows in; one BLAS product
+    per call. Pass the same array as both sides for an all-pairs block."""
+    q_unit = _unit_rows(q_mat)
+    m_unit = q_unit if m_mat is q_mat else _unit_rows(m_mat)
+    sims = round_half_away(q_unit @ m_unit.T, round_dp)
+    qi, mi = np.nonzero(q_ids[:, None] != m_ids[None, :])
+    return qi, mi, sims[qi, mi]
+
+
+def _row_topk(sims: np.ndarray, col_ids: np.ndarray, k: int):
+    """Per-row top-``k`` of a score block by (score desc, column id
+    asc), dropping ``-inf`` (excluded self) entries: parallel arrays
+    ``(row_idx, col_idx, rank)`` in row-major order, rank 1-based."""
+    take = min(k, sims.shape[1])
+    keys = (np.broadcast_to(col_ids, sims.shape), -sims)
+    order = np.lexsort(keys, axis=1)[:, :take]
+    ri, pos = np.nonzero(np.isfinite(np.take_along_axis(sims, order, axis=1)))
+    return ri, order[ri, pos], pos + 1
+
+
+def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """Global top-k over scored candidate pairs ``(query_id,
+    neighbor_id, cosine)`` by (cosine desc, neighbor id) — a
+    partitioned window, never a global sort."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id")
+    )
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "rank", "neighbor_id", "cosine")
+    )
+
+
+def _collect_table(df: DataFrame, what: str):
+    """Collect a small ``(id, vec, ...)`` table (centroids, supers, a
+    codebook) to the driver, sorted by ascending id — the deterministic
+    tie order every ranking here relies on. Returns ``(ids, mat, rows)``
+    with ``mat`` the raw float64 vectors and ``rows`` the id-sorted Rows
+    (for any extra columns). Raises ``ValueError`` when the table holds
+    more than ``_COLLECT_MAX_VALUES`` vector values, before any NumPy
+    copy or broadcast of it is built."""
+    rows = df.collect()
+    n_values = sum(len(r[1]) for r in rows)
+    if n_values > _COLLECT_MAX_VALUES:
+        raise ValueError(
+            f"{what}: {len(rows)} rows hold {n_values} vector values, over "
+            f"the driver collect budget _COLLECT_MAX_VALUES = "
+            f"{_COLLECT_MAX_VALUES}"
+        )
+    rows.sort(key=lambda r: r[0])
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
+    return ids, mat, rows
+
+
+def _md5_sample(v: DataFrame, n: int, salt: str = "") -> DataFrame:
+    """The ``n`` rows of ``v`` with the lowest md5(``salt`` || id) rank
+    (``seed_topk``; ``_rn`` = 1..n) — the fitted-state-free seed every
+    centroid, codebook and training sample here is drawn with."""
+    key = F.col("id").cast("string")
+    if salt:
+        key = F.concat(F.lit(salt), key)
+    return seed_topk(v.withColumn("_h", md5_prefix_long(key)), n)
+
+
+def _md5_centroids(v: DataFrame, n: int, salt: str = "") -> DataFrame:
+    """``_md5_sample`` of ``(id, vec)`` as a ``(centroid_id, cvec)``
+    centroid table."""
+    return _md5_sample(v, n, salt).select(
+        F.col("id").alias("centroid_id"), F.col("vec").alias("cvec")
+    )
+
+
+def _recall_tally(tagged: DataFrame, exact: DataFrame, *keys: str) -> DataFrame:
+    """Recall of ANN arms against exact top-k pairs: ``tagged`` holds
+    ``(*keys, query_id, neighbor_id)`` rows, ``exact`` the ground-truth
+    ``(query_id, neighbor_id)`` pairs. One row per arm: ``(*keys,
+    n_hits, n_ann, n_exact, recall)`` with recall = hits / n_exact —
+    one membership hash join, one small agg, and the total as a
+    broadcast 1-row aggregate (never an eager count)."""
+    hits = (
+        tagged.join(
+            exact.withColumn("_hit", F.lit(1)), ["query_id", "neighbor_id"], "left"
+        )
+        .groupBy(*keys)
+        .agg(
+            F.count(F.lit(1)).alias("n_ann"),
+            F.sum(F.coalesce("_hit", F.lit(0))).cast("long").alias("n_hits"),
+        )
+    )
+    tot = exact.groupBy().agg(F.count(F.lit(1)).alias("n_exact"))
+    return hits.crossJoin(F.broadcast(tot)).select(
+        *keys,
+        "n_hits",
+        "n_ann",
+        "n_exact",
+        (
+            F.col("n_hits").cast("double")
+            / F.nullif(F.col("n_exact").cast("double"), F.lit(0.0))
+        ).alias("recall"),
+    )
+
+
 def cosine_topk(
     emb: DataFrame,
     k: int = 5,
@@ -46,8 +187,6 @@ def cosine_topk(
 ) -> DataFrame:
     """Exact top-k cosine neighbors per vector (excluding self), ranked
     by (similarity desc, neighbor id) for deterministic ties."""
-    from pyspark.sql import Window
-
     v = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     pairs = (
         v.alias("q")
@@ -55,112 +194,10 @@ def cosine_topk(
         .select(
             F.col("q.id").alias("query_id"),
             F.col("c.id").alias("neighbor_id"),
-            (
-                _dot(F.col("q.vec"), F.col("c.vec"))
-                / F.nullif(_norm(F.col("q.vec")) * _norm(F.col("c.vec")), F.lit(0.0))
-            ).alias("cosine"),
+            _cosine(F.col("q.vec"), F.col("c.vec")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
-
-
-def cosine_topk_broadcast_index(
-    emb: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    max_index_rows: int = 1_000_000,
-) -> DataFrame:
-    """Vectorized exact top-k: Arrow-batched ``mapInPandas`` computing
-    query-block × index matrix products in NumPy (BLAS) — the fast path
-    when per-pair column expressions would be CPU-bound.
-
-    The index (all vectors, L2-normalized) is broadcast to executors —
-    the same memory contract as a broadcast join: index must fit per
-    executor (up to ~millions of rows × dims). Beyond that, shard the
-    index via ``lsh_cosine_topk`` buckets or an IVF partitioner and run
-    this kernel per shard. Queries stream through in Arrow batches, so
-    the scan side scales with partitions.
-
-    Values differ from ``cosine_topk`` only in float summation order
-    (BLAS vs sequential) — rankings agree except on ~1e-15 ties, so this
-    variant is verified against the exact baseline in tests rather than
-    the SQL oracle.
-
-    GUARD: this is the one function in the package that collects the
-    FULL table it is given — safe only at verification scales. Above
-    ``max_index_rows`` it raises instead of OOMing the driver (VERDICT
-    r8 item 7: the sharded kernel ``cosine_topk_exact_sharded`` is the
-    registry/production path; raise the cap explicitly only when the
-    fit-per-executor contract above genuinely holds).
-    """
-    import numpy as np
-    import pandas as pd
-
-    n = emb.count()  # one scalar; cheap next to the collect it guards
-    if n > max_index_rows:
-        raise ValueError(
-            f"cosine_topk_broadcast_index collects the full index "
-            f"({n} rows > {max_index_rows}): this baseline is for "
-            "verification scales — use cosine_topk_exact_sharded (or "
-            "an IVF/LSH bucketed variant) for large corpora"
-        )
-    index_rows = emb.select(id_col, vec_col).collect()  # index build step
-    ids = np.array([r[0] for r in index_rows], dtype=np.int64)
-    mat = np.array([r[1] for r in index_rows], dtype=np.float64)
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0.0] = np.inf  # zero vectors never match
-    mat_n = mat / norms[:, None]
-    spark = emb.sparkSession
-    b_ids = spark.sparkContext.broadcast(ids)
-    b_mat = spark.sparkContext.broadcast(mat_n)
-
-    def topk(batches):
-        idx_ids, idx_mat = b_ids.value, b_mat.value
-        for pdf in batches:
-            q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q = np.array(list(pdf[vec_col]), dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1)
-            qn[qn == 0.0] = np.inf
-            sims = (q / qn[:, None]) @ idx_mat.T  # one BLAS call per batch
-            out = {"query_id": [], "rank": [], "neighbor_id": [], "cosine": []}
-            for row_i, qid in enumerate(q_ids):
-                s = sims[row_i]
-                self_mask = idx_ids == qid
-                s = np.where(self_mask, -np.inf, s)
-                # top-k by (sim desc, id asc): lexsort on (-sim, id);
-                # drop the -inf self entry when k >= index size (same
-                # guard as cosine_topk_exact_sharded)
-                order = np.lexsort((idx_ids, -s))[:k]
-                order = order[np.isfinite(s[order])]
-                out["query_id"].extend([qid] * len(order))
-                out["rank"].extend(range(1, len(order) + 1))
-                out["neighbor_id"].extend(idx_ids[order])
-                out["cosine"].extend(s[order])
-            yield pd.DataFrame(out)
-
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("rank", IntegerType()),
-            StructField("neighbor_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-    return emb.select(id_col, vec_col).mapInPandas(topk, schema)
+    return _rank_topk(pairs, k)
 
 
 def cosine_topk_exact_sharded(
@@ -199,7 +236,6 @@ def cosine_topk_exact_sharded(
     only scalar that touches the driver."""
     import math
 
-    import numpy as np
     import pandas as pd
 
     if q_shards is None or c_shards is None:
@@ -208,14 +244,6 @@ def cosine_topk_exact_sharded(
         c_shards = c_shards or auto
     if queries_df is None:
         queries_df = emb
-
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     # queries_df restricts the QUERY side only (recall audits at scale
     # sample their query set; candidates stay the full corpus) — the
@@ -251,53 +279,26 @@ def cosine_topk_exact_sharded(
     )
     tagged = q_rep.unionByName(c_rep)
 
-    block_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
+    block_schema = "query_id long, neighbor_id long, cosine double"
 
     def per_block(pdf: pd.DataFrame) -> pd.DataFrame:
         q = pdf[pdf["is_q"]]
         c = pdf[~pdf["is_q"]]
         if len(q) == 0 or len(c) == 0:
-            return pd.DataFrame(columns=list(block_schema.fieldNames()))
+            return pd.DataFrame(columns=["query_id", "neighbor_id", "cosine"])
         q_ids = q["id"].to_numpy(dtype=np.int64)
         c_ids = c["id"].to_numpy(dtype=np.int64)
-        q_mat = np.array(list(q["vec"]), dtype=np.float64)
-        c_mat = np.array(list(c["vec"]), dtype=np.float64)
-        qn = np.linalg.norm(q_mat, axis=1)
-        cn = np.linalg.norm(c_mat, axis=1)
-        qn[qn == 0.0] = np.inf
-        cn[cn == 0.0] = np.inf
         sims = round_half_away(
-            (q_mat / qn[:, None]) @ (c_mat / cn[:, None]).T, round_dp
+            _unit_rows(list(q["vec"])) @ _unit_rows(list(c["vec"])).T, round_dp
         )
         sims[q_ids[:, None] == c_ids[None, :]] = -np.inf  # exclude self
-        take = min(k, sims.shape[1])
-        out = {"query_id": [], "neighbor_id": [], "cosine": []}
-        for row_i in range(len(q_ids)):
-            s = sims[row_i]
-            order = np.lexsort((c_ids, -s))[:take]
-            order = order[np.isfinite(s[order])]
-            out["query_id"].extend([q_ids[row_i]] * len(order))
-            out["neighbor_id"].extend(c_ids[order])
-            out["cosine"].extend(s[order])
-        return pd.DataFrame(out, columns=list(block_schema.fieldNames()))
-
-    from pyspark.sql import Window
+        ri, ci, _ = _row_topk(sims, c_ids, k)
+        return pd.DataFrame(
+            {"query_id": q_ids[ri], "neighbor_id": c_ids[ci], "cosine": sims[ri, ci]}
+        )
 
     block_top = tagged.groupBy("qs", "cs").applyInPandas(per_block, block_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        block_top.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _rank_topk(block_top, k)
 
 
 def cosine_topk_vectorized_sharded(
@@ -327,16 +328,7 @@ def cosine_topk_vectorized_sharded(
     +inf), mirroring the oracle's NULL-cosine exclusion as long as the
     corpus has no all-zero embeddings (the testdata has none).
     """
-    import numpy as np
     import pandas as pd
-
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     v = emb.select(
         F.col(id_col).alias("id"),
@@ -344,37 +336,24 @@ def cosine_topk_vectorized_sharded(
         hyperplane_bucket(F.col(vec_col), planes, dims).alias("bucket"),
     )
 
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("rank", IntegerType()),
-            StructField("neighbor_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["vec"]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = np.inf  # zero vectors never match
-        mat_n = mat / norms[:, None]
+        mat_n = _unit_rows(list(pdf["vec"]))
         sims = round_half_away(mat_n @ mat_n.T, round_dp)  # one BLAS call per bucket
         np.fill_diagonal(sims, -np.inf)  # exclude self
-        out = {"query_id": [], "rank": [], "neighbor_id": [], "cosine": []}
-        n = len(ids)
-        take = min(k, n - 1)
-        if take > 0:
-            for row_i in range(n):
-                s = sims[row_i]
-                order = np.lexsort((ids, -s))[:take]
-                out["query_id"].extend([ids[row_i]] * take)
-                out["rank"].extend(range(1, take + 1))
-                out["neighbor_id"].extend(ids[order])
-                out["cosine"].extend(s[order])
-        return pd.DataFrame(out, columns=list(schema.fieldNames()))
+        ri, ci, rank = _row_topk(sims, ids, k)
+        return pd.DataFrame(
+            {
+                "query_id": ids[ri],
+                "rank": rank.astype(np.int32),
+                "neighbor_id": ids[ci],
+                "cosine": sims[ri, ci],
+            }
+        )
 
-    return v.groupBy("bucket").applyInPandas(per_bucket, schema)
+    return v.groupBy("bucket").applyInPandas(
+        per_bucket, "query_id long, rank int, neighbor_id long, cosine double"
+    )
 
 
 def hyperplane_bucket(
@@ -442,37 +421,18 @@ def embedding_near_dup_pairs(
     duplicate-dense replica; this form is ~linear). Cosines are rounded
     to 6 dp before the threshold test and in the output, so BLAS
     summation order agrees with the sequential oracle."""
-    import numpy as np
     import pandas as pd
-
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     v = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
         hyperplane_bucket(F.col(vec_col), planes, dims).alias("bucket"),
     )
-    schema = StructType(
-        [
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
     def per_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["id"].to_numpy(dtype=np.int64)
         order = np.argsort(ids)  # ascending → upper triangle is id_a < id_b
         ids = ids[order]
-        mat = np.array(list(pdf["vec"].iloc[order]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = np.inf  # zero vectors never match (oracle: NULL)
-        mat_n = mat / norms[:, None]
+        mat_n = _unit_rows(list(pdf["vec"].iloc[order]))
         sims = round_half_away(mat_n @ mat_n.T, 6)
         ia, ib = np.triu_indices(len(ids), 1)
         keep = sims[ia, ib] >= threshold
@@ -480,7 +440,9 @@ def embedding_near_dup_pairs(
             {"id_a": ids[ia[keep]], "id_b": ids[ib[keep]], "cosine": sims[ia, ib][keep]}
         )
 
-    return v.groupBy("bucket").applyInPandas(per_bucket, schema)
+    return v.groupBy("bucket").applyInPandas(
+        per_bucket, "id_a long, id_b long, cosine double"
+    )
 
 
 def embedding_first_arrival(
@@ -714,27 +676,9 @@ def embedding_first_arrival_verified(
         .where(F.col(id_col) != F.col("owner_id"))
         .select(id_col, "band_id", "owner_id")
     )
-    v = emb.select(F.col(id_col), F.col(vec_col).alias("_v"))
-    owner_src = (
-        sq_reconstruct(emb, dims=dims, id_col=id_col, vec_col=vec_col)
-        if sq
-        else emb
-    )
-    o = owner_src.select(
-        F.col(id_col).alias("owner_id"), F.col(vec_col).alias("_ov")
-    )
-    cos = F.round(
-        _dot(F.col("_v"), F.col("_ov"))
-        / F.nullif(_norm(F.col("_v")) * _norm(F.col("_ov")), F.lit(0.0)),
-        round_dp,
-    )
     verified = (
-        collisions.join(v, id_col)
-        .join(o, "owner_id")
-        .select(
-            id_col,
-            (cos >= threshold).alias("_hit"),
-        )
+        _with_owner_cosine(collisions, emb, sq, dims, id_col, vec_col, round_dp)
+        .select(id_col, (F.col("_cos") >= threshold).alias("_hit"))
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_collisions"),
@@ -750,6 +694,30 @@ def embedding_first_arrival_verified(
             F.coalesce("n_verified", F.lit(0)).alias("n_verified"),
             (F.coalesce("n_verified", F.lit(0)) == 0).alias("kept"),
         )
+    )
+
+
+def _with_owner_cosine(
+    pairs: DataFrame,
+    emb: DataFrame,
+    sq: bool,
+    dims: int,
+    id_col: str,
+    vec_col: str,
+    round_dp: int,
+) -> DataFrame:
+    """``pairs`` (carrying ``id_col`` and ``owner_id``) joined by id to
+    both vectors — the owner's SQ8 reconstruction when ``sq`` — plus
+    their cosine rounded to ``round_dp`` as ``_cos``."""
+    v = emb.select(F.col(id_col), F.col(vec_col).alias("_v"))
+    owner_src = (
+        sq_reconstruct(emb, dims=dims, id_col=id_col, vec_col=vec_col) if sq else emb
+    )
+    o = owner_src.select(F.col(id_col).alias("owner_id"), F.col(vec_col).alias("_ov"))
+    return (
+        pairs.join(v, id_col)
+        .join(o, "owner_id")
+        .withColumn("_cos", F.round(_cosine(F.col("_v"), F.col("_ov")), round_dp))
     )
 
 
@@ -789,120 +757,26 @@ def embedding_gate_verified_recall_curve(
     (owner rows verify trivially false). Everything is column
     expressions over id-keyed joins; nothing quadratic, nothing Python.
     """
-    from pyspark.sql import Window
-
-    from flink_helloworld_spark.operators._cache import share
-
-    if sample_mod is not None:
-        emb = emb.where(F.col(id_col) % sample_mod == 0)
-    planted = share(
-        planted_embeddings(
-            emb, n_clusters=n_clusters, dims=dims, id_col=id_col, vec_col=vec_col
-        )
+    planted, masked, truth = _gate_sweep_inputs(
+        emb, planes_sweep, max(bands_sweep), n_clusters, dims, sample_mod,
+        id_col, vec_col,
     )
-    max_b, max_p = max(bands_sweep), max(planes_sweep)
-    inc = share(
-        embedding_band_incidence(
-            planted, planes=max_p, bands=max_b, dims=dims,
-            id_col=id_col, vec_col=vec_col,
-        )
-    )
-    truth = planted.select(
-        F.col(id_col),
-        (
-            F.col(id_col)
-            > F.min(id_col).over(Window.partitionBy("cluster_id"))
-        ).alias("is_dup"),
-    )
-    masked = None
-    for p in planes_sweep:
-        m = inc.select(
-            id_col,
-            F.lit(p).cast("int").alias("planes"),
-            "band_id",
-            (F.col("bucket") % (2 ** p)).alias("mb"),
-        )
-        masked = m if masked is None else masked.unionByName(m)
     owners = masked.groupBy("planes", "band_id", "mb").agg(
         F.min(id_col).alias("owner_id")
     )
-    v = planted.select(F.col(id_col), F.col(vec_col).alias("_v"))
-    owner_src = (
-        sq_reconstruct(planted, dims=dims, id_col=id_col, vec_col=vec_col)
-        if sq
-        else planted
-    )
-    o = owner_src.select(
-        F.col(id_col).alias("owner_id"), F.col(vec_col).alias("_ov")
-    )
-    cos = F.round(
-        _dot(F.col("_v"), F.col("_ov"))
-        / F.nullif(_norm(F.col("_v")) * _norm(F.col("_ov")), F.lit(0.0)),
-        round_dp,
-    )
-    flags = (
-        masked.join(owners, ["planes", "band_id", "mb"])
-        .join(v, id_col)
-        .join(o, "owner_id")
-        .select(
-            id_col,
-            "planes",
-            "band_id",
-            ((F.col(id_col) != F.col("owner_id")) & (cos >= threshold)).alias(
-                "verified"
-            ),
-        )
-    )
-    per_vec = flags.groupBy(id_col, "planes").agg(
-        *[
-            F.max(
-                F.when(
-                    F.col("band_id") < k, F.col("verified").cast("int")
-                ).otherwise(F.lit(0))
-            ).alias(f"_drop_{k}")
-            for k in bands_sweep
-        ]
-    )
-    stacked = per_vec.join(truth, id_col).select(
+    flags = _with_owner_cosine(
+        masked.join(owners, ["planes", "band_id", "mb"]),
+        planted, sq, dims, id_col, vec_col, round_dp,
+    ).select(
+        id_col,
         "planes",
-        "is_dup",
-        F.expr(
-            f"stack({len(bands_sweep)}, "
-            + ", ".join(f"CAST({k} AS INT), _drop_{k}" for k in bands_sweep)
-            + ") AS (bands, _di)"
+        "band_id",
+        ((F.col(id_col) != F.col("owner_id")) & (F.col("_cos") >= threshold)).alias(
+            "verified"
         ),
     )
-    return (
-        stacked.groupBy("bands", "planes")
-        .agg(
-            F.count(F.lit(1)).alias("n_vectors"),
-            F.sum(F.col("is_dup").cast("long")).alias("n_true_dup"),
-            F.sum(
-                (F.col("_di") == 1).cast("long") * F.col("is_dup").cast("long")
-            ).alias("n_dropped_dup"),
-            F.sum(
-                (F.col("_di") == 1).cast("long") * (~F.col("is_dup")).cast("long")
-            ).alias("n_dropped_first"),
-        )
-        .select(
-            "bands",
-            "planes",
-            "n_vectors",
-            "n_true_dup",
-            "n_dropped_dup",
-            "n_dropped_first",
-            (
-                F.col("n_dropped_dup").cast("double")
-                / F.nullif(F.col("n_true_dup").cast("double"), F.lit(0.0))
-            ).alias("recall"),
-            (
-                F.col("n_dropped_first").cast("double")
-                / F.nullif(
-                    (F.col("n_vectors") - F.col("n_true_dup")).cast("double"),
-                    F.lit(0.0),
-                )
-            ).alias("false_drop_rate"),
-        )
+    return _gate_sweep_tally(
+        flags, F.col("verified"), truth, bands_sweep, "false_drop_rate", id_col
     )
 
 
@@ -942,6 +816,43 @@ def embedding_gate_recall_curve(
     deterministic corpus sample ``id % sample_mod == 0``, which keeps
     the planted mixture's shape while shrinking every arm linearly.
     """
+    planted, masked, truth = _gate_sweep_inputs(
+        emb, planes_sweep, max(bands_sweep), n_clusters, dims, sample_mod,
+        id_col, vec_col,
+    )
+    firsts = masked.groupBy("planes", "band_id", "mb").agg(
+        F.min(id_col).alias("first_id")
+    )
+    flags = masked.join(firsts, ["planes", "band_id", "mb"]).select(
+        id_col,
+        "planes",
+        "band_id",
+        (F.col(id_col) == F.col("first_id")).alias("is_first"),
+    )
+    return _gate_sweep_tally(
+        flags, ~F.col("is_first"), truth, bands_sweep, "false_collision_rate",
+        id_col,
+    )
+
+
+def _gate_sweep_inputs(
+    emb: DataFrame,
+    planes_sweep: tuple[int, ...],
+    max_bands: int,
+    n_clusters: int,
+    dims: int,
+    sample_mod: int | None,
+    id_col: str,
+    vec_col: str,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Shared front of the gate recall sweeps: the persisted planted
+    table, ONE persisted incidence at (``max_bands``, max planes) masked
+    to every planes arm as ``(id, planes, band_id, mb)`` — unioned
+    BEFORE aggregating so the whole sweep is one pipeline keyed by
+    (planes, band, bucket) instead of a per-arm stage cascade (measured
+    7.3s → stage-count-bound on tiny data) — and the truth ``(id,
+    is_dup)``: a vector is a true near-dup iff a lower id shares its
+    planted cluster."""
     from pyspark.sql import Window
 
     from flink_helloworld_spark.operators._cache import share
@@ -953,10 +864,9 @@ def embedding_gate_recall_curve(
             emb, n_clusters=n_clusters, dims=dims, id_col=id_col, vec_col=vec_col
         )
     )
-    max_b, max_p = max(bands_sweep), max(planes_sweep)
     inc = share(
         embedding_band_incidence(
-            planted, planes=max_p, bands=max_b, dims=dims,
+            planted, planes=max(planes_sweep), bands=max_bands, dims=dims,
             id_col=id_col, vec_col=vec_col,
         )
     )
@@ -967,11 +877,6 @@ def embedding_gate_recall_curve(
             > F.min(id_col).over(Window.partitionBy("cluster_id"))
         ).alias("is_dup"),
     )
-
-    # every planes arm is a bit-mask of the SAME bucket — union the
-    # masked arms BEFORE aggregating so the whole sweep is one 5-stage
-    # pipeline keyed by (planes, band, bucket) instead of a per-arm
-    # stage cascade (measured 7.3s → stage-count-bound on tiny data)
     masked = None
     for p in planes_sweep:
         m = inc.select(
@@ -981,23 +886,28 @@ def embedding_gate_recall_curve(
             (F.col("bucket") % (2 ** p)).alias("mb"),
         )
         masked = m if masked is None else masked.unionByName(m)
-    firsts = masked.groupBy("planes", "band_id", "mb").agg(
-        F.min(id_col).alias("first_id")
-    )
-    flags = masked.join(firsts, ["planes", "band_id", "mb"]).select(
-        id_col,
-        "planes",
-        "band_id",
-        (F.col(id_col) == F.col("first_id")).alias("is_first"),
-    )
-    # every bands arm from ONE per-(vector, planes) agg: dropped_k =
-    # any non-first band among the first k
+    return planted, masked, truth
+
+
+def _gate_sweep_tally(
+    flags: DataFrame,
+    drop: Column,
+    truth: DataFrame,
+    bands_sweep: tuple[int, ...],
+    rate_name: str,
+    id_col: str,
+) -> DataFrame:
+    """Shared tail of the gate recall sweeps: ``flags`` holds one row
+    per (vector, planes arm, band) and ``drop`` says whether that band
+    drops the vector. Every bands arm comes from ONE per-(vector,
+    planes) agg (dropped_k = any dropping band among the first k),
+    stack-unpivoted and tallied per (bands, planes) against ``truth``:
+    recall = dropped true-dups / true-dups, ``rate_name`` = dropped
+    cluster-firsts / cluster-firsts."""
     per_vec = flags.groupBy(id_col, "planes").agg(
         *[
             F.max(
-                F.when(
-                    F.col("band_id") < k, (~F.col("is_first")).cast("int")
-                ).otherwise(F.lit(0))
+                F.when(F.col("band_id") < k, drop.cast("int")).otherwise(F.lit(0))
             ).alias(f"_drop_{k}")
             for k in bands_sweep
         ]
@@ -1040,7 +950,7 @@ def embedding_gate_recall_curve(
                     (F.col("n_vectors") - F.col("n_true_dup")).cast("double"),
                     F.lit(0.0),
                 )
-            ).alias("false_collision_rate"),
+            ).alias(rate_name),
         )
     )
 
@@ -1087,32 +997,22 @@ def _assign_cells_blas(
     centroids swap the flat scan for a hierarchical quantizer
     (super-cells first); the output contract here is unchanged by that.
     """
-    import numpy as np
     import pandas as pd
 
-    cent_rows = cent.select("centroid_id", "cvec").collect()
-    cids = np.array([r[0] for r in cent_rows], dtype=np.int64)
-    cmat = np.array([r[1] for r in cent_rows], dtype=np.float64)
-    order = np.argsort(cids)  # ascending id = deterministic tie order
-    cids, cmat = cids[order], cmat[order]
-    norms = np.linalg.norm(cmat, axis=1)
-    norms[norms == 0.0] = np.inf
-    cmat_n = cmat / norms[:, None]
+    cids, cmat, _ = _collect_table(
+        cent.select("centroid_id", "cvec"), "centroid table"
+    )
     spark = v.sparkSession
     b_cids = spark.sparkContext.broadcast(cids)
-    b_cmat = spark.sparkContext.broadcast(cmat_n)
+    b_cmat = spark.sparkContext.broadcast(_unit_rows(cmat))
 
     def assign(batches):
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             ids = pdf["id"].to_numpy(dtype=np.int64)
-            q = np.array(list(pdf["vec"]), dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1)
-            qn[qn == 0.0] = np.inf
-            sims = round_half_away((q / qn[:, None]) @ b_cmat.value.T, round_dp)
-            # stable argsort on -sims: ties keep ascending centroid id
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :n_probe]
+            q = _unit_rows(list(pdf["vec"]))
+            top = _nearest(q, b_cmat.value, n_probe, round_dp)
             n = top.shape[1]
             yield pd.DataFrame(
                 {
@@ -1157,29 +1057,10 @@ def ivf_cosine_topk(
     ranking order by cosine ROUNDED to ``round_dp`` with id tiebreaks,
     so BLAS vs sequential summation order cannot flip near-ties; the
     DuckDB oracle replays the identical construction."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from flink_helloworld_spark.functions import md5_prefix_long, seed_topk
-
-    from ._cache import share
-
-    round_dp = 6
     v = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     if n_centroids is None:
         n_centroids = _auto_centroids(emb)
-    cent = seed_topk(
-        v.withColumn("_h", md5_prefix_long(F.col("id").cast("string"))), n_centroids
-    ).select(F.col("id").alias("centroid_id"), F.col("vec").alias("cvec"))
-    return _ivf_scan(v, cent, k, n_probe, round_dp)
+    return _ivf_scan(v, _md5_centroids(v, n_centroids), k, n_probe)
 
 
 def _ivf_scan(
@@ -1190,60 +1071,43 @@ def _ivf_scan(
     `ivfk_cosine_topk`): rounded-cosine assignment (`_assign_cells_blas`)
     feeds both cell membership (_crn == 1) and probing (_crn <= n_probe),
     persisted once; each cell scores as one Arrow/BLAS matrix product."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     from ._cache import share
 
     # assignment feeds BOTH roles of the per-cell scan — persist it once
     ranked = share(
         _assign_cells_blas(v, cent, n_probe, round_dp).join(v, on="id")
     )
+    return _rank_topk(_scan_cells(ranked, round_dp), k)
 
-    schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
+
+def _scan_cells(
+    ranked: DataFrame, round_dp: int = 6, probe_rank: bool = False
+) -> DataFrame:
+    """Per-cell scan of routed rows ``(id, centroid_id, _crn, vec)``,
+    grouped by cell: every row probes its cell, the ``_crn == 1`` rows
+    are its members, and ``_score_pairs`` scores them in one BLAS
+    product. Emits ``(query_id, neighbor_id, cosine)``, plus the probe
+    rank as ``probe_rank`` when asked (the fused recall sweep masks
+    arms by it)."""
+    import pandas as pd
+
+    schema = "query_id long, neighbor_id long, cosine double"
+    if probe_rank:
+        schema += ", probe_rank int"
 
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        # rows of one cell: _crn==1 → members (index side); every row is
-        # a probing query. One BLAS product scores all pairs at once.
         ids = pdf["id"].to_numpy(dtype=np.int64)
         mat = np.array(list(pdf["vec"]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = np.inf
-        mat_n = mat / norms[:, None]
-        member = (pdf["_crn"].to_numpy() == 1)
-        m_ids, m_mat = ids[member], mat_n[member]
-        if len(m_ids) == 0:
-            return pd.DataFrame({c.name: [] for c in schema.fields})
-        sims = round_half_away(mat_n @ m_mat.T, round_dp)
-        q_idx, n_idx = np.nonzero(ids[:, None] != m_ids[None, :])
-        return pd.DataFrame(
-            {
-                "query_id": ids[q_idx],
-                "neighbor_id": m_ids[n_idx],
-                "cosine": sims[q_idx, n_idx],
-            }
-        )
+        crn = pdf["_crn"].to_numpy()
+        member = crn == 1
+        m_ids = ids[member]
+        qi, mi, cos = _score_pairs(ids, mat, m_ids, mat[member], round_dp)
+        out = {"query_id": ids[qi], "neighbor_id": m_ids[mi], "cosine": cos}
+        if probe_rank:
+            out["probe_rank"] = crn[qi].astype(np.int32)
+        return pd.DataFrame(out)
 
-    pairs = ranked.groupBy("centroid_id").applyInPandas(per_cell, schema)
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return ranked.groupBy("centroid_id").applyInPandas(per_cell, schema)
 
 
 def ivfk_cosine_topk(
@@ -1299,14 +1163,9 @@ def _pq_codes_dtab_blas(
 
     Returns ``(id, code_0..code_{m-1}, dtab)``.
     """
-    import numpy as np
     import pandas as pd
 
-    rows = cbook.collect()
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cmat = np.array([r["cbvec"] for r in rows], dtype=np.float64)
-    order = np.argsort(cids)
-    cids, cmat = cids[order], cmat[order]
+    cids, cmat, _ = _collect_table(cbook.select("cid", "cbvec"), "PQ codebook")
     spark = v.sparkSession
     bc = spark.sparkContext.broadcast((cids, cmat))
 
@@ -1375,8 +1234,6 @@ def ivfpq_topk(
     """
     from pyspark.sql import Window
 
-    from flink_helloworld_spark.functions import md5_prefix_long, seed_topk
-
     from ._cache import share
 
     sub = dims // m
@@ -1390,21 +1247,16 @@ def ivfpq_topk(
     # as ivf_cosine_topk (rounded-cosine ranking, md5-rank centroids) ---
     if n_centroids is None:
         n_centroids = _auto_centroids(emb)
-    cent = seed_topk(
-        v.withColumn("_h", md5_prefix_long(F.col("id").cast("string"))), n_centroids
-    ).select(F.col("id").alias("centroid_id"), F.col("vec").alias("cvec"))
+    cent = _md5_centroids(v, n_centroids)
     # assignment feeds cells AND probes — persist it once
     ranked = share(_assign_cells_blas(v, cent, n_probe, round_dp))
     cells = ranked.where(F.col("_crn") == 1).select("id", "centroid_id")
     probes = ranked.select(F.col("id").alias("query_id"), "centroid_id")
 
     # --- PQ codebook (seed 'pq:') + per-vector codes, as in pq_assign ---
-    cbook = seed_topk(
-        v.withColumn(
-            "_h", md5_prefix_long(F.concat(F.lit("pq:"), F.col("id").cast("string")))
-        ),
-        ksub,
-    ).select((F.col("_rn") - 1).alias("cid"), F.col("vec").alias("cbvec"))
+    cbook = _md5_sample(v, ksub, "pq:").select(
+        (F.col("_rn") - 1).alias("cid"), F.col("vec").alias("cbvec")
+    )
 
     # codes + ADC table fused in one BLAS stage (same packed-min and
     # layout contracts as the former pair of N×ksub zip_with cross joins)
@@ -1465,14 +1317,7 @@ def ivfpq_topk(
             ).alias("cosine"),
         )
     )
-    w_final = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        rr.withColumn("rank", F.row_number().over(w_final))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _rank_topk(rr, k)
 
 
 def lsh_cosine_topk(
@@ -1488,8 +1333,6 @@ def lsh_cosine_topk(
     At scale the self-join key is the bucket id (2^planes buckets), so
     compared pairs drop by ~2^planes vs brute force; recall is tunable
     via `planes` (fewer planes → bigger buckets → higher recall)."""
-    from pyspark.sql import Window
-
     v = emb.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),
@@ -1504,18 +1347,10 @@ def lsh_cosine_topk(
         .select(
             F.col("q.id").alias("query_id"),
             F.col("c.id").alias("neighbor_id"),
-            (
-                _dot(F.col("q.vec"), F.col("c.vec"))
-                / F.nullif(_norm(F.col("q.vec")) * _norm(F.col("c.vec")), F.lit(0.0))
-            ).alias("cosine"),
+            _cosine(F.col("q.vec"), F.col("c.vec")).alias("cosine"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("neighbor_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
+    return _rank_topk(pairs, k)
 
 
 def pq_assign(
@@ -1544,11 +1379,8 @@ def pq_assign(
     the embedding column beyond its own scan.
     """
     sub = dims // m
-    from flink_helloworld_spark.functions import md5_prefix_long, seed_topk
-
     v = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    md5_rank = md5_prefix_long(F.col("id").cast("string"))
-    cent = seed_topk(v.withColumn("_h", md5_rank), ksub).select(
+    cent = _md5_sample(v, ksub).select(
         (F.col("_rn") - 1).alias("cid"), F.col("vec").alias("cbvec")
     )
     # same BLAS kernel as ivfpq's code stage (identical packed-min
@@ -1582,42 +1414,13 @@ def semantic_decontaminate(
     Returns ``(vec_id, max_bench_cosine, is_contaminated)`` for every
     corpus vector NOT itself in the benchmark sample.
     """
-    import numpy as np
     import pandas as pd
 
-    from pyspark.sql.types import (
-        BooleanType,
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    from flink_helloworld_spark.functions import md5_prefix_long, seed_topk
-
     v = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    bench = seed_topk(
-        v.withColumn(
-            "_h", md5_prefix_long(F.concat(F.lit("bench:"), F.col("id").cast("string")))
-        ),
-        n_benchmark,
-    ).select("id", "vec")
-    bench_rows = bench.collect()  # benchmark = small broadcast metadata
-    b_ids = {r["id"] for r in bench_rows}
-    bmat = np.array([r["vec"] for r in bench_rows], dtype=np.float64)
-    norms = np.linalg.norm(bmat, axis=1)
-    norms[norms == 0.0] = np.inf
-    bmat_n = bmat / norms[:, None]
-    spark = emb.sparkSession
-    bc = spark.sparkContext.broadcast((b_ids, bmat_n))
-
-    schema = StructType(
-        [
-            StructField(id_col, LongType()),
-            StructField("max_bench_cosine", DoubleType()),
-            StructField("is_contaminated", BooleanType()),
-        ]
-    )
+    bench = _md5_sample(v, n_benchmark, "bench:").select("id", "vec")
+    # benchmark = small broadcast metadata
+    ids, bmat, _ = _collect_table(bench, "benchmark table")
+    bc = emb.sparkSession.sparkContext.broadcast((set(ids.tolist()), _unit_rows(bmat)))
 
     def score(batches):
         bench_ids, bench_mat = bc.value
@@ -1626,11 +1429,8 @@ def semantic_decontaminate(
             pdf = pdf[mask]
             if len(pdf) == 0:
                 continue
-            q = np.array(list(pdf["vec"]), dtype=np.float64)
-            qn = np.linalg.norm(q, axis=1)
-            qn[qn == 0.0] = np.inf
-            sims = round_half_away((q / qn[:, None]) @ bench_mat.T, round_dp)
-            mx = sims.max(axis=1)
+            q = _unit_rows(list(pdf["vec"]))
+            mx = round_half_away(q @ bench_mat.T, round_dp).max(axis=1)
             yield pd.DataFrame(
                 {
                     id_col: pdf["id"].to_numpy(dtype=np.int64),
@@ -1639,7 +1439,9 @@ def semantic_decontaminate(
                 }
             )
 
-    return v.mapInPandas(score, schema)
+    return v.mapInPandas(
+        score, f"{id_col} long, max_bench_cosine double, is_contaminated boolean"
+    )
 
 
 def ivf2_cosine_topk(
@@ -1678,26 +1480,58 @@ def ivf2_cosine_topk(
     replays it exactly. Recall is the standard hierarchical trade: a
     vector only reaches cells inside its probed super-cells.
     """
-    from flink_helloworld_spark.functions import md5_prefix_long, seed_topk
-
     v = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     if n_centroids is None:
         n_centroids = _auto_centroids(emb)
+    cent = _md5_centroids(v, n_centroids)
+    sup = _md5_centroids(
+        cent.select(F.col("centroid_id").alias("id"), F.col("cvec").alias("vec")),
+        _n_super(n_centroids),
+        "super:",
+    )
+    return _ivf2_scan(v, cent, sup, k, n_probe, n_super_probe, round_dp)
+
+
+def _n_super(n_centroids: int) -> int:
+    """Super-cell count of the two-level IVF: S = max(4, ⌈√C⌉)."""
     import math
 
-    n_super = max(4, math.ceil(math.sqrt(n_centroids)))
-    cent = seed_topk(
-        v.withColumn("_h", md5_prefix_long(F.col("id").cast("string"))), n_centroids
-    ).select(F.col("id").alias("centroid_id"), F.col("vec").alias("cvec"))
-    sup = seed_topk(
-        cent.select(
-            F.col("centroid_id").alias("id"), F.col("cvec").alias("vec")
-        ).withColumn(
-            "_h", md5_prefix_long(F.concat(F.lit("super:"), F.col("id").cast("string")))
-        ),
-        n_super,
-    ).select(F.col("id").alias("centroid_id"), F.col("vec").alias("cvec"))
-    return _ivf2_scan(v, cent, sup, k, n_probe, n_super_probe, round_dp)
+    return max(4, math.ceil(math.sqrt(n_centroids)))
+
+
+def _train_two_level(
+    v: DataFrame, n_centroids: int, n_iter: int, train_floor: int = 2048
+) -> tuple[DataFrame, DataFrame]:
+    """Two-level Lloyd quantizer trained on a sample: cells are
+    ``kmeans_centroids`` over the md5-rank sample (seed 'kmt:') of
+    max(``train_floor``, 8·C) rows of ``v`` = ``(id, vec)``, supers are
+    ``kmeans_centroids`` over the cells. Returns ``(cent, sup)``, both
+    ``(centroid_id, cvec)`` and persisted."""
+    from flink_helloworld_spark.operators.clustering import kmeans_centroids
+
+    from ._cache import share
+
+    # share(): every Lloyd iteration re-scans its input (seed collect +
+    # assignment), and the trainset is an orderBy+limit over the corpus
+    # — uncached it re-ran per iteration (profiled 3× at 10× volume)
+    trainset = share(
+        _md5_sample(v, max(train_floor, 8 * n_centroids), "kmt:").select("id", "vec")
+    )
+    # share(): the refined centroid table's lineage is a Lloyd pass over
+    # the sample; the scan consumes it from FOUR places (super-level
+    # kmeans collects, cent_home assignment, the member side, and sup's
+    # own lineage) — uncached it re-ran per consumer, 16.6s -> ~3s
+    cent = share(
+        kmeans_centroids(
+            trainset, n_centroids, n_iter, id_col="id", vec_col="vec"
+        ).select(F.col("cid").alias("centroid_id"), F.col("cvec"))
+    )
+    sup = share(
+        kmeans_centroids(
+            cent, _n_super(n_centroids), n_iter, id_col="centroid_id", vec_col="cvec"
+        ).select(F.col("cid").alias("centroid_id"), F.col("cvec"))
+    )
+    return cent, sup
 
 
 def ivf2k_cosine_topk(
@@ -1740,46 +1574,10 @@ def ivf2k_cosine_topk(
     two chained `_kmeans_ctes` replays (sample → cells, cells → supers)
     feeding the ivf2 scoring tail.
     """
-    import math
-
-    from flink_helloworld_spark.functions import md5_prefix_long, seed_topk
-    from flink_helloworld_spark.operators.clustering import kmeans_centroids
-
-    from ._cache import share
-
     v = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     if n_centroids is None:
         n_centroids = _auto_centroids(emb)
-    n_super = max(4, math.ceil(math.sqrt(n_centroids)))
-    train_rows = max(2048, 8 * n_centroids)
-    # share(): every Lloyd iteration re-scans its input (seed collect +
-    # assignment), and the trainset is an orderBy+limit over the corpus
-    # — uncached it re-ran per iteration (profiled 3× at 10× volume)
-    trainset = share(
-        seed_topk(
-            v.withColumn(
-                "_h",
-                md5_prefix_long(
-                    F.concat(F.lit("kmt:"), F.col("id").cast("string"))
-                ),
-            ),
-            train_rows,
-        ).select("id", "vec")
-    )
-    # share(): the refined centroid table's lineage is a Lloyd pass over
-    # the sample; the scan consumes it from FOUR places (super-level
-    # kmeans collects, cent_home assignment, the member side, and sup's
-    # own lineage) — uncached it re-ran per consumer, 16.6s -> ~3s
-    cent = share(
-        kmeans_centroids(
-            trainset, n_centroids, n_iter, id_col="id", vec_col="vec"
-        ).select(F.col("cid").alias("centroid_id"), F.col("cvec"))
-    )
-    sup = share(
-        kmeans_centroids(
-            cent, n_super, n_iter, id_col="centroid_id", vec_col="cvec"
-        ).select(F.col("cid").alias("centroid_id"), F.col("cvec"))
-    )
+    cent, sup = _train_two_level(v, n_centroids, n_iter)
     return _ivf2_scan(v, cent, sup, k, n_probe, n_super_probe, round_dp)
 
 
@@ -1806,7 +1604,6 @@ def _route_cells(
     runs as ONE grouped-BLAS stage keyed by super-cell; every ranking
     orders by cosine ROUNDED to ``round_dp`` with centroid-id tiebreaks
     (the engine's BLAS/oracle parity contract)."""
-    import numpy as np
     import pandas as pd
     from pyspark.sql import Window
     from pyspark.sql.types import (
@@ -1843,10 +1640,7 @@ def _route_cells(
         if not is_i.any() or is_i.all():
             return pd.DataFrame({f.name: [] for f in pair_schema.fields})
         ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["vec"]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = np.inf
-        mat_n = mat / norms[:, None]
+        mat_n = _unit_rows(list(pdf["vec"]))
         q_ids, q_mat = ids[~is_i], mat_n[~is_i]
         c_ids, c_mat = ids[is_i], mat_n[is_i]
         sims = round_half_away(q_mat @ c_mat.T, round_dp)
@@ -1884,16 +1678,6 @@ def _ivf2_scan(
     ``ivf2k_cosine_topk``): centroid→super home assignment, vector→super
     probing and the candidate-cell choice, all against the collected
     frozen quantizer (``_frozen_quantizer``), then the per-cell scan."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
     # (2)-(4) as ONE frozen-quantizer pass (r12, guide §2.4/§8): the
     # cell→super home assignment runs driver-side over the collected
     # bounded quantizer (the same C-row collect `_assign_cells_blas`
@@ -1905,51 +1689,7 @@ def _ivf2_scan(
     ranked = _route_probes_frozen(v, quant, n_super_probe, n_probe, round_dp)
 
     # (5) per-cell scan — identical to flat IVF's scoring stage
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["vec"]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = np.inf
-        mat_n = mat / norms[:, None]
-        member = (pdf["_crn"].to_numpy() == 1)
-        m_ids, m_mat = ids[member], mat_n[member]
-        if len(m_ids) == 0:
-            return pd.DataFrame({f.name: [] for f in out_schema.fields})
-        sims = round_half_away(mat_n @ m_mat.T, round_dp)
-        q_idx, n_idx = np.nonzero(ids[:, None] != m_ids[None, :])
-        return pd.DataFrame(
-            {
-                "query_id": ids[q_idx],
-                "neighbor_id": m_ids[n_idx],
-                "cosine": sims[q_idx, n_idx],
-            }
-        )
-
-    pairs = ranked.groupBy("centroid_id").applyInPandas(per_cell, out_schema)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
-
-
-# The routed posting table is the one build output every consumer
-# rescans (delete/compact reference it ~12x in one composite plan);
-# persisting it for intra-plan reuse is the artifact-materialization
-# shape a deployment has anyway. Module flag so the A/B harness can
-# toggle it without editing code.
-_SHARE_POSTINGS = True
+    return _rank_topk(_scan_cells(ranked, round_dp), k)
 
 
 def build_ivf_index(
@@ -1970,10 +1710,10 @@ def build_ivf_index(
     ``dedup.incremental_near_dedup`` ships for its LSH index). This is
     the build half; ``ivf_index_query`` is the pure scan half.
 
-    Construction is byte-identical to ``ivf2k_cosine_topk``'s two-level
-    Lloyd-refined quantizer (train-on-sample 'kmt:' seed, max(
+    Construction is ``ivf2k_cosine_topk``'s two-level Lloyd-refined
+    quantizer (``_train_two_level``: train-on-sample 'kmt:' seed, max(
     ``train_floor``, 8·C) rows; cells over the sample, supers over the
-    cells; only the ≤√C-row super table is ever collected), so
+    cells), so
     ``ivf_index_query(index, postings, emb)`` at equal probes returns
     EXACTLY ``ivf2k_cosine_topk(emb)`` — parity-pinned, which is also
     why the recall table is unchanged at equal probes by construction.
@@ -1989,44 +1729,19 @@ def build_ivf_index(
         (rank-1 of the same routing the fused scan uses).
 
     Scale shape: two sample-bounded Lloyd trainings (8C² ≪ N·C), one
-    grouped-BLAS routing pass over the corpus, zero driver state beyond
-    the √C-row super collect. The postings carry the member VECTORS —
+    ``mapInPandas`` routing pass over the corpus. The driver collects
+    the full quantizer — C cells + √C supers (``_frozen_quantizer``),
+    O(C·dim) memory, capped by ``_COLLECT_MAX_VALUES`` per table —
+    and broadcasts it. The postings carry the member VECTORS —
     at 100 TB swap ``mvec`` for SQ/PQ codes (``sq_quantize`` /
     ``_pq_codes_dtab_blas`` are the in-repo encoders) without touching
     the routing."""
-    import math
-
-    from flink_helloworld_spark.functions import md5_prefix_long, seed_topk
-    from flink_helloworld_spark.operators.clustering import kmeans_centroids
-
     from ._cache import share
 
     v = emb.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     if n_centroids is None:
         n_centroids = _auto_centroids(emb)
-    n_super = max(4, math.ceil(math.sqrt(n_centroids)))
-    train_rows = max(train_floor, 8 * n_centroids)
-    trainset = share(
-        seed_topk(
-            v.withColumn(
-                "_h",
-                md5_prefix_long(
-                    F.concat(F.lit("kmt:"), F.col("id").cast("string"))
-                ),
-            ),
-            train_rows,
-        ).select("id", "vec")
-    )
-    cent = share(
-        kmeans_centroids(
-            trainset, n_centroids, n_iter, id_col="id", vec_col="vec"
-        ).select(F.col("cid").alias("centroid_id"), F.col("cvec"))
-    )
-    sup = share(
-        kmeans_centroids(
-            cent, n_super, n_iter, id_col="centroid_id", vec_col="cvec"
-        ).select(F.col("cid").alias("centroid_id"), F.col("cvec"))
-    )
+    cent, sup = _train_two_level(v, n_centroids, n_iter, train_floor)
     # Frozen-quantizer routing (r12, guide §2.4/§8): the quantizer is
     # bounded index metadata (C cells + ceil(sqrt C) supers — the very
     # collect `_assign_cells_blas` already performs on the centroid
@@ -2059,9 +1774,9 @@ def build_ivf_index(
             "cvec",
         )
     )
-    postings = _route_frozen_postings(v, quant, n_super_probe, round_dp)
-    if _SHARE_POSTINGS:
-        postings = share(postings)
+    # the routed posting table is the one build output every consumer
+    # rescans (delete/compact reference it ~12x in one composite plan)
+    postings = share(_route_frozen_postings(v, quant, n_super_probe, round_dp))
     return index, postings
 
 
@@ -2370,24 +2085,13 @@ def sq_encode_postings(
     ``sq_decode_postings``; the query path is then asymmetric
     (full-precision queries vs reconstructed members), the
     ``sq_cosine_topk`` contract inside the IVF scan."""
-    v = F.col("mvec").cast("array<double>")
-    stats = postings.agg(
-        F.array(*[F.min(v[i]) for i in range(dims)]).alias("mn"),
-        F.array(*[F.max(v[i]) for i in range(dims)]).alias("mx"),
-    ).select(
-        "mn",
-        F.expr("transform(mx, (x, i) -> (x - mn[i]) / 255.0D)").alias("scale"),
-    )
+    stats = _sq_stats(postings, "mvec", dims)
     coded = postings.crossJoin(F.broadcast(stats)).select(
         "centroid_id",
         "member_id",
-        F.expr(
-            """transform(cast(mvec as array<double>), (x, i) ->
-                 CASE WHEN scale[i] <= 0.0D THEN 0
-                      ELSE CAST(least(255.0D, greatest(0.0D,
-                             round((x - mn[i]) / scale[i], 0))) AS INT)
-                 END)"""
-        ).alias("codes"),
+        F.expr(f"transform(cast(mvec as array<double>), (x, i) -> {_SQ_CODE})").alias(
+            "codes"
+        ),
     )
     return coded, stats
 
@@ -2399,12 +2103,7 @@ def sq_decode_postings(coded: DataFrame, stats: DataFrame) -> DataFrame:
     quantizer stats, evaluated inside the scan tasks (the ADC shape:
     reconstruction cost rides the query, memory rides the codes)."""
     return coded.crossJoin(F.broadcast(stats)).select(
-        "centroid_id",
-        "member_id",
-        F.expr(
-            "transform(codes, (c, i) ->"
-            " mn[i] + CAST(c AS DOUBLE) * scale[i])"
-        ).alias("mvec"),
+        "centroid_id", "member_id", F.expr(_SQ_DECODE).alias("mvec")
     )
 
 
@@ -2413,111 +2112,62 @@ def collect_ivf_quantizer(index: DataFrame) -> dict:
     into plain numpy arrays so a Python worker can route vectors with
     zero Spark plans per batch — what the streaming ingest operator
     (``streaming_ivf_ingest``) broadcasts. Bounded collect BY the
-    artifact's construction: C cells + ceil(sqrt(C)) supers, the same
-    index-metadata contract under which ``_assign_cells_blas`` collects
-    the flat centroid table (and the PQ path its ADC table).
+    artifact's construction: C cells + ceil(sqrt(C)) supers, each table
+    checked against ``_COLLECT_MAX_VALUES`` by ``_collect_table``.
 
     Returns ``{sup_ids, sup_nmat, cell_ids, cell_nmat, cell_super}``
     with both id arrays SORTED ASCENDING and the matrices L2-normalized
     (zero-norm rows zeroed) — the exact preconditions the batch
     routing's stable-argsort tie-break (lowest id wins) relies on."""
-    import numpy as np
-
-    def _pull(rows):
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-        order = np.argsort(ids)
-        ids, mat = ids[order], mat[order]
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = np.inf
-        return ids, mat / norms[:, None], order
-
-    sup_rows = index.where(F.col("level") == 2).select(
-        "centroid_id", "cvec"
-    ).collect()
-    cell_rows = index.where(F.col("level") == 1).select(
-        "centroid_id", "cvec", "super_id"
-    ).collect()
-    sup_ids, sup_nmat, _ = _pull(sup_rows)
-    cell_ids, cell_nmat, order = _pull(cell_rows)
-    cell_super = np.array(
-        [cell_rows[i][2] for i in order], dtype=np.int64
+    sup_ids, sup_mat, _ = _collect_table(
+        index.where(F.col("level") == 2).select("centroid_id", "cvec"),
+        "IVF index super table",
+    )
+    cell_ids, cell_mat, cell_rows = _collect_table(
+        index.where(F.col("level") == 1).select("centroid_id", "cvec", "super_id"),
+        "IVF index cell table",
     )
     return {
         "sup_ids": sup_ids,
-        "sup_nmat": sup_nmat,
+        "sup_nmat": _unit_rows(sup_mat),
         "cell_ids": cell_ids,
-        "cell_nmat": cell_nmat,
-        "cell_super": cell_super,
+        "cell_nmat": _unit_rows(cell_mat),
+        "cell_super": np.array([r[2] for r in cell_rows], dtype=np.int64),
     }
 
 
 def route_frozen_np(mat, quant: dict, n_super_probe: int = 2,
                     round_dp: int = 6):
-    """NumPy twin of ``_route_cells`` at ``n_probe=1`` against a FROZEN
-    collected quantizer: for each row of ``mat`` (raw, un-normalized
-    vectors) return its single home cell id, or -1 when none of its
-    probed supers homes any cell (the batch path drops such rows the
-    same way — ``per_super`` emits nothing for cell-less supers).
-
-    Parity contract (test-pinned row-for-row against the DataFrame
-    path): rounded-cosine scoring via the shared ``round_half_away``,
-    super ranking by stable argsort over ascending super ids, cell
-    ranking by (rounded cosine DESC, cell id ASC) across the UNION of
-    cells homed in all probed supers — byte-identical routing to
-    ``ivf_index_append``, which is what makes the streaming ingest's
-    posting set equal the batch append under any micro-batch split.
-
-    Cost shape: queries are grouped by their probed-super SET, one BLAS
-    product per distinct set against only those supers' cells — the
-    same grouped-BLAS bound as the batch stage, minus its shuffle."""
-    import numpy as np
-
-    q = np.asarray(mat, dtype=np.float64)
-    qn = np.linalg.norm(q, axis=1)
-    qn[qn == 0.0] = np.inf
-    q = q / qn[:, None]
-    sims_s = round_half_away(q @ quant["sup_nmat"].T, round_dp)
-    n_probe = min(n_super_probe, len(quant["sup_ids"]))
-    top = np.argsort(-sims_s, axis=1, kind="stable")[:, :n_probe]
-    probed = np.sort(quant["sup_ids"][top], axis=1)
-    out = np.full(len(q), -1, dtype=np.int64)
-    combos, inv = np.unique(probed, axis=0, return_inverse=True)
-    for ci in range(len(combos)):
-        sel = inv == ci
-        cand = np.isin(quant["cell_super"], combos[ci])
-        if not cand.any():
-            continue
-        c_ids = quant["cell_ids"][cand]  # ascending (collect contract)
-        sims = round_half_away(
-            q[sel] @ quant["cell_nmat"][cand].T, round_dp
-        )
-        # argmax returns the FIRST max -> lowest cell id on ties,
-        # matching the batch window's (csim DESC, centroid_id ASC)
-        out[sel] = c_ids[np.argmax(sims, axis=1)]
+    """Rank 1 of ``route_frozen_topn`` per row of ``mat``: its single
+    home cell id, or -1 when none of its probed supers homes any cell
+    (the batch ``_route_cells`` drops such rows the same way). This is
+    the routing ``ivf_index_append`` and the streaming ingest share,
+    which is what makes the streaming posting set equal the batch
+    append under any micro-batch split (test-pinned row-for-row)."""
+    ridx, cells, _ = route_frozen_topn(mat, quant, n_super_probe, 1, round_dp)
+    out = np.full(len(mat), -1, dtype=np.int64)
+    out[ridx] = cells
     return out
 
 
 def route_frozen_topn(mat, quant: dict, n_super_probe: int = 2,
                       n_probe: int = 1, round_dp: int = 6):
-    """Top-``n_probe`` generalization of ``route_frozen_np``: for each
-    row of ``mat`` return its ``n_probe`` best cells over the union of
-    cells homed in its ``n_super_probe`` nearest supers, as three
-    parallel arrays ``(row_idx, cell_id, crn)`` with ``crn`` = 1-based
-    rank. Twin of the batch ``_route_cells`` window's
-    (rounded csim DESC, centroid_id ASC) row_number — stable argsort
-    over ascending cell ids reproduces the tie order; rows whose probed
-    supers home no cell emit nothing, exactly as ``per_super`` does
-    (parity test-pinned)."""
-    import numpy as np
+    """NumPy twin of ``_route_cells`` against a FROZEN collected
+    quantizer: for each row of ``mat`` (raw vectors) return its
+    ``n_probe`` best cells over the union of cells homed in its
+    ``n_super_probe`` nearest supers, as three parallel arrays
+    ``(row_idx, cell_id, crn)`` with ``crn`` = 1-based rank. Twin of the
+    batch window's (rounded csim DESC, centroid_id ASC) row_number —
+    stable argsort over ascending ids reproduces the tie order; rows
+    whose probed supers home no cell emit nothing, exactly as
+    ``per_super`` does (parity test-pinned).
 
-    q = np.asarray(mat, dtype=np.float64)
-    qn = np.linalg.norm(q, axis=1)
-    qn[qn == 0.0] = np.inf
-    q = q / qn[:, None]
-    sims_s = round_half_away(q @ quant["sup_nmat"].T, round_dp)
+    Cost shape: rows are grouped by their probed-super SET, one BLAS
+    product per distinct set against only those supers' cells — the
+    same grouped-BLAS bound as the batch stage, minus its shuffle."""
+    q = _unit_rows(mat)
     nsp = min(n_super_probe, len(quant["sup_ids"]))
-    top = np.argsort(-sims_s, axis=1, kind="stable")[:, :nsp]
+    top = _nearest(q, quant["sup_nmat"], nsp, round_dp)
     probed = np.sort(quant["sup_ids"][top], axis=1)
     rows_out, cells_out, crn_out = [], [], []
     combos, inv = np.unique(probed, axis=0, return_inverse=True)
@@ -2527,9 +2177,8 @@ def route_frozen_topn(mat, quant: dict, n_super_probe: int = 2,
         if not cand.any():
             continue
         c_ids = quant["cell_ids"][cand]  # ascending (collect contract)
-        sims = round_half_away(q[sel] @ quant["cell_nmat"][cand].T, round_dp)
         n = min(int(n_probe), len(c_ids))
-        topc = np.argsort(-sims, axis=1, kind="stable")[:, :n]
+        topc = _nearest(q[sel], quant["cell_nmat"][cand], n, round_dp)
         rows_out.append(np.repeat(sel, n))
         cells_out.append(c_ids[topc].ravel())
         crn_out.append(np.tile(np.arange(1, n + 1, dtype=np.int64), len(sel)))
@@ -2554,7 +2203,6 @@ def _route_probes_frozen(
     window, and no vector join-back (the query payload rides its own
     batch). Replaces the distributed probe pipeline in the fused and
     indexed scans (r12, guide §2.4/§8)."""
-    import numpy as np
     import pandas as pd
 
     vec_t = v.schema["vec"].dataType.simpleString()
@@ -2590,25 +2238,16 @@ def _frozen_quantizer(cent: DataFrame, sup: DataFrame, round_dp: int = 6) -> dic
     identical stable-argsort rounded-cosine BLAS ``_assign_cells_blas``
     runs at ``n_probe=1`` (ascending-id tie order, zero-norm rows
     zeroed). Bounded by the index-metadata contract: C + ceil(sqrt C)
-    rows — the same collect ``_assign_cells_blas`` already performs on
-    the centroid table every call."""
-    import numpy as np
-
-    def _pull(rows):
-        ids = np.array([r[0] for r in rows], dtype=np.int64)
-        mat = np.array([list(r[1]) for r in rows], dtype=np.float64)
-        order = np.argsort(ids)
-        ids, mat = ids[order], mat[order]
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = np.inf
-        return ids, mat / norms[:, None]
-
-    sup_ids, sup_nmat = _pull(sup.select("centroid_id", "cvec").collect())
-    cell_ids, cell_nmat = _pull(cent.select("centroid_id", "cvec").collect())
-    sims = round_half_away(cell_nmat @ sup_nmat.T, round_dp)
-    # stable argsort on -sims: ties keep ascending super id — the
-    # _assign_cells_blas kernel's exact top-1 contract
-    top = np.argsort(-sims, axis=1, kind="stable")[:, 0]
+    rows, each table checked against ``_COLLECT_MAX_VALUES``."""
+    sup_ids, sup_mat, _ = _collect_table(
+        sup.select("centroid_id", "cvec"), "super-centroid table"
+    )
+    cell_ids, cell_mat, _ = _collect_table(
+        cent.select("centroid_id", "cvec"), "centroid table"
+    )
+    sup_nmat, cell_nmat = _unit_rows(sup_mat), _unit_rows(cell_mat)
+    # ties keep ascending super id — the _assign_cells_blas top-1 rule
+    top = _nearest(cell_nmat, sup_nmat, 1, round_dp)[:, 0]
     return {
         "sup_ids": sup_ids,
         "sup_nmat": sup_nmat,
@@ -2631,7 +2270,6 @@ def _route_frozen_postings(
     decide with broadcast metadata, move heavy bytes once). Rows whose
     probed supers home no cell route to -1 and drop, exactly as the
     batch path drops them."""
-    import numpy as np
     import pandas as pd
 
     vec_t = v.schema["vec"].dataType.simpleString()
@@ -2703,21 +2341,6 @@ def ivf_index_query(
     ).transform(lambda pairs: _rank_topk(pairs, k))
 
 
-def _rank_topk(pairs: DataFrame, k: int) -> DataFrame:
-    """Global top-k over scored candidate pairs — partitioned window,
-    never a global sort."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id")
-    )
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
-
-
 def _indexed_pairs(
     index: DataFrame,
     postings: DataFrame,
@@ -2733,15 +2356,7 @@ def _indexed_pairs(
     Factored from ``ivf_index_query`` so the recall-curve sweep can
     score ONCE at max(n_probe) and mask arms by ``_crn`` (the fused
     knob-sweep pattern of ``ann_recall_curve``)."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     q = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     # probe routing against the collected artifact quantizer (stored
@@ -2767,39 +2382,33 @@ def _indexed_pairs(
         )
     )
 
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("_crn", IntegerType()),
-            StructField("neighbor_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
     def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         is_i = (pdf["role"] == "I").to_numpy()
-        if not is_i.any() or is_i.all():
-            return pd.DataFrame({f.name: [] for f in out_schema.fields})
         ids = pdf["id"].to_numpy(dtype=np.int64)
         mat = np.array(list(pdf["vec"]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = np.inf
-        mat_n = mat / norms[:, None]
-        q_ids, q_mat = ids[~is_i], mat_n[~is_i]
+        q_ids, m_ids = ids[~is_i], ids[is_i]
+        qi, mi, cos = _score_pairs(q_ids, mat[~is_i], m_ids, mat[is_i], round_dp)
         q_crn = pdf["_crn"].to_numpy()[~is_i]
-        m_ids, m_mat = ids[is_i], mat_n[is_i]
-        sims = round_half_away(q_mat @ m_mat.T, round_dp)
-        q_idx, n_idx = np.nonzero(q_ids[:, None] != m_ids[None, :])
-        return pd.DataFrame(
-            {
-                "query_id": q_ids[q_idx],
-                "_crn": q_crn[q_idx].astype(np.int32),
-                "neighbor_id": m_ids[n_idx],
-                "cosine": sims[q_idx, n_idx],
-            }
-        )
+        return _indexed_frame(q_ids[qi], q_crn[qi], m_ids[mi], cos)
 
-    return mixed.groupBy("centroid_id").applyInPandas(per_cell, out_schema)
+    return mixed.groupBy("centroid_id").applyInPandas(per_cell, _INDEXED_SCHEMA)
+
+
+_INDEXED_SCHEMA = "query_id long, _crn int, neighbor_id long, cosine double"
+
+
+def _indexed_frame(query_id, crn, neighbor_id, cosine):
+    """One ``_INDEXED_SCHEMA`` result frame of the indexed cell scan."""
+    import pandas as pd
+
+    return pd.DataFrame(
+        {
+            "query_id": query_id,
+            "_crn": crn.astype(np.int32),
+            "neighbor_id": neighbor_id,
+            "cosine": cosine,
+        }
+    )
 
 
 def _indexed_pairs_cogroup(
@@ -2818,15 +2427,7 @@ def _indexed_pairs_cogroup(
     bucketed-by-``centroid_id`` artifact satisfies WITHOUT an exchange
     (the union form re-shuffles the corpus on every query). The shape
     a lake deployment runs."""
-    import numpy as np
     import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
     q = queries.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
     # same frozen-quantizer probe routing as `_indexed_pairs` (r12)
@@ -2834,44 +2435,25 @@ def _indexed_pairs_cogroup(
         q, collect_ivf_quantizer(index), n_super_probe, n_probe, round_dp
     )
 
-    out_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("_crn", IntegerType()),
-            StructField("neighbor_id", LongType()),
-            StructField("cosine", DoubleType()),
-        ]
-    )
-
     def per_cell(key, probe_pdf: pd.DataFrame, member_pdf: pd.DataFrame):
         if not len(probe_pdf) or not len(member_pdf):
-            return pd.DataFrame({f.name: [] for f in out_schema.fields})
-
-        def normed(mat):
-            n = np.linalg.norm(mat, axis=1)
-            n[n == 0.0] = np.inf
-            return mat / n[:, None]
-
+            return pd.DataFrame(columns=["query_id", "_crn", "neighbor_id", "cosine"])
         q_ids = probe_pdf["id"].to_numpy(dtype=np.int64)
-        q_crn = probe_pdf["_crn"].to_numpy()
-        q_mat = normed(np.array(list(probe_pdf["vec"]), dtype=np.float64))
         m_ids = member_pdf["member_id"].to_numpy(dtype=np.int64)
-        m_mat = normed(np.array(list(member_pdf["mvec"]), dtype=np.float64))
-        sims = round_half_away(q_mat @ m_mat.T, round_dp)
-        qi, ni = np.nonzero(q_ids[:, None] != m_ids[None, :])
-        return pd.DataFrame(
-            {
-                "query_id": q_ids[qi],
-                "_crn": q_crn[qi].astype(np.int32),
-                "neighbor_id": m_ids[ni],
-                "cosine": sims[qi, ni],
-            }
+        qi, mi, cos = _score_pairs(
+            q_ids,
+            np.array(list(probe_pdf["vec"]), dtype=np.float64),
+            m_ids,
+            np.array(list(member_pdf["mvec"]), dtype=np.float64),
+            round_dp,
         )
+        q_crn = probe_pdf["_crn"].to_numpy()
+        return _indexed_frame(q_ids[qi], q_crn[qi], m_ids[mi], cos)
 
     return (
         probes.groupBy("centroid_id")
         .cogroup(postings.groupBy("centroid_id"))
-        .applyInPandas(per_cell, out_schema)
+        .applyInPandas(per_cell, _INDEXED_SCHEMA)
     )
 
 
@@ -2974,28 +2556,7 @@ def ivf_indexed_recall_curve(
             F.lit(np_).cast("int").alias("n_probe"), "query_id", "neighbor_id"
         )
         tagged = arm if tagged is None else tagged.unionByName(arm)
-    hits = (
-        tagged.join(
-            exact.withColumn("_hit", F.lit(1)), ["query_id", "neighbor_id"],
-            "left",
-        )
-        .groupBy("n_probe")
-        .agg(
-            F.count(F.lit(1)).alias("n_ann"),
-            F.sum(F.coalesce("_hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-    )
-    tot = exact.groupBy().agg(F.count(F.lit(1)).alias("n_exact"))
-    return hits.crossJoin(F.broadcast(tot)).select(
-        "n_probe",
-        "n_hits",
-        "n_ann",
-        "n_exact",
-        (
-            F.col("n_hits").cast("double")
-            / F.nullif(F.col("n_exact").cast("double"), F.lit(0.0))
-        ).alias("recall"),
-    )
+    return _recall_tally(tagged, exact, "n_probe")
 
 
 def ann_recall_at_k(
@@ -3064,27 +2625,7 @@ def ann_recall_at_k(
         if sample_mod is not None:
             t = t.where(F.col("query_id") % sample_mod == 0)
         tagged = t if tagged is None else tagged.unionByName(t)
-    hits = (
-        tagged.join(
-            exact.withColumn("_hit", F.lit(1)), ["query_id", "neighbor_id"], "left"
-        )
-        .groupBy("variant")
-        .agg(
-            F.count(F.lit(1)).alias("n_ann"),
-            F.sum(F.coalesce("_hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-    )
-    tot = exact.groupBy().agg(F.count(F.lit(1)).alias("n_exact"))
-    return hits.crossJoin(F.broadcast(tot)).select(
-        "variant",
-        "n_hits",
-        "n_ann",
-        "n_exact",
-        (
-            F.col("n_hits").cast("double")
-            / F.nullif(F.col("n_exact").cast("double"), F.lit(0.0))
-        ).alias("recall"),
-    )
+    return _recall_tally(tagged, exact, "variant")
 
 
 def planted_embeddings(
@@ -3202,62 +2743,22 @@ def ann_recall_curve(
     # probe list is the same stable rounded-cosine ranking, membership
     # (_crn == 1) is probe-depth-independent, and a neighbor lives in
     # exactly one cell so no pair can arrive twice.
-    import numpy as np
     import pandas as pd
-    from pyspark.sql import Window
-
-    from flink_helloworld_spark.functions import md5_prefix_long, seed_topk
 
     round_dp = 6
-    max_probe = max(n_probes)
     v = planted.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    cent = seed_topk(
-        v.withColumn("_h", md5_prefix_long(F.col("id").cast("string"))),
-        _auto_centroids(planted),
-    ).select(F.col("id").alias("centroid_id"), F.col("vec").alias("cvec"))
-    ranked = share(_assign_cells_blas(v, cent, max_probe, round_dp).join(v, on="id"))
-
-    pair_schema = "query_id long, neighbor_id long, cosine double, probe_rank int"
-
-    def per_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy(dtype=np.int64)
-        mat = np.array(list(pdf["vec"]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = np.inf
-        mat_n = mat / norms[:, None]
-        crn = pdf["_crn"].to_numpy()
-        member = crn == 1
-        m_ids, m_mat = ids[member], mat_n[member]
-        if len(m_ids) == 0:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor_id": [], "cosine": [], "probe_rank": []}
-            )
-        sims = round_half_away(mat_n @ m_mat.T, round_dp)
-        q_idx, n_idx = np.nonzero(ids[:, None] != m_ids[None, :])
-        return pd.DataFrame(
-            {
-                "query_id": ids[q_idx],
-                "neighbor_id": m_ids[n_idx],
-                "cosine": sims[q_idx, n_idx],
-                "probe_rank": crn[q_idx].astype(np.int32),
-            }
-        )
-
-    ivf_pairs = share(ranked.groupBy("centroid_id").applyInPandas(per_cell, pair_schema))
+    cent = _md5_centroids(v, _auto_centroids(planted))
+    ranked = share(
+        _assign_cells_blas(v, cent, max(n_probes), round_dp).join(v, on="id")
+    )
+    ivf_pairs = share(_scan_cells(ranked, round_dp, probe_rank=True))
 
     def topk_tag(pairs: DataFrame, variant: str, knob: int) -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("neighbor_id")
-        )
-        return (
-            pairs.withColumn("_rk", F.row_number().over(w))
-            .where(F.col("_rk") <= k)
-            .select(
-                F.lit(variant).alias("variant"),
-                F.lit(knob).cast("int").alias("knob"),
-                "query_id",
-                "neighbor_id",
-            )
+        return _rank_topk(pairs, k).select(
+            F.lit(variant).alias("variant"),
+            F.lit(knob).cast("int").alias("knob"),
+            "query_id",
+            "neighbor_id",
         )
 
     tagged = None
@@ -3292,16 +2793,12 @@ def ann_recall_curve(
         ids = pdf["id"].to_numpy(dtype=np.int64)
         bits = pdf["bits"].to_numpy(dtype=np.int64)
         mat = np.array(list(pdf["vec"]), dtype=np.float64)
-        norms = np.linalg.norm(mat, axis=1)
-        norms[norms == 0.0] = np.inf
-        mat_n = mat / norms[:, None]
-        sims = round_half_away(mat_n @ mat_n.T, round_dp)
-        qi, ci = np.nonzero(ids[:, None] != ids[None, :])
+        qi, ci, cos = _score_pairs(ids, mat, ids, mat, round_dp)
         return pd.DataFrame(
             {
                 "query_id": ids[qi],
                 "neighbor_id": ids[ci],
-                "cosine": sims[qi, ci],
+                "cosine": cos,
                 "xorb": bits[qi] ^ bits[ci],
             }
         )
@@ -3316,31 +2813,31 @@ def ann_recall_curve(
             lsh_pairs.where(F.col("xorb") % (1 << planes) == 0), "lsh", planes
         )
         tagged = tagged.unionByName(t)
-    hits = (
-        tagged.join(
-            exact.withColumn("_hit", F.lit(1)), ["query_id", "neighbor_id"], "left"
-        )
-        .groupBy("variant", "knob")
-        .agg(
-            F.count(F.lit(1)).alias("n_ann"),
-            F.sum(F.coalesce("_hit", F.lit(0))).cast("long").alias("n_hits"),
-        )
-    )
-    tot = exact.groupBy().agg(F.count(F.lit(1)).alias("n_exact"))
-    return hits.crossJoin(F.broadcast(tot)).select(
-        "variant",
-        "knob",
-        "n_hits",
-        "n_ann",
-        "n_exact",
-        (
-            F.col("n_hits").cast("double")
-            / F.nullif(F.col("n_exact").cast("double"), F.lit(0.0))
-        ).alias("recall"),
-    )
+    return _recall_tally(tagged, exact, "variant", "knob")
 
 
 # --- int8 scalar quantization (SQ8) ----------------------------------------
+
+# SQ8 code of element ``x`` at index ``i`` against the ``mn``/``scale``
+# quantizer arrays in scope, and the inverse over a ``codes`` column.
+_SQ_CODE = """CASE WHEN scale[i] <= 0.0D THEN 0
+    ELSE CAST(least(255.0D, greatest(0.0D, round((x - mn[i]) / scale[i], 0))) AS INT)
+    END"""
+_SQ_DECODE = "transform(codes, (c, i) -> mn[i] + CAST(c AS DOUBLE) * scale[i])"
+
+
+def _sq_stats(df: DataFrame, vec_col: str, dims: int) -> DataFrame:
+    """The ONE-row SQ8 quantizer ``(mn, scale)`` of ``vec_col``:
+    per-dimension min and (max - min) / 255, as one map-side-combinable
+    aggregate."""
+    v = F.col(vec_col).cast("array<double>")
+    return df.agg(
+        F.array(*[F.min(v[i]) for i in range(dims)]).alias("mn"),
+        F.array(*[F.max(v[i]) for i in range(dims)]).alias("mx"),
+    ).select(
+        "mn",
+        F.expr("transform(mx, (x, i) -> (x - mn[i]) / 255.0D)").alias("scale"),
+    )
 
 
 def sq_quantize(
@@ -3368,22 +2865,11 @@ def sq_quantize(
     coding is a pure per-row projection (whole-stage codegen, no
     shuffle, no Python).
     """
-    v = F.col(vec_col).cast("array<double>")
-    stats = emb.agg(
-        F.array(*[F.min(v[i]) for i in range(dims)]).alias("mn"),
-        F.array(*[F.max(v[i]) for i in range(dims)]).alias("mx"),
-    ).select(
-        "mn",
-        F.expr("transform(mx, (x, i) -> (x - mn[i]) / 255.0D)").alias("scale"),
-    )
+    stats = _sq_stats(emb, vec_col, dims)
     return emb.crossJoin(F.broadcast(stats)).select(
         F.col(id_col).alias("id"),
         F.expr(
-            f"""transform(cast({vec_col} as array<double>), (x, i) ->
-                  CASE WHEN scale[i] <= 0.0D THEN 0
-                       ELSE CAST(least(255.0D, greatest(0.0D,
-                              round((x - mn[i]) / scale[i], 0))) AS INT)
-                  END)"""
+            f"transform(cast({vec_col} as array<double>), (x, i) -> {_SQ_CODE})"
         ).alias("codes"),
         "mn",
         "scale",
@@ -3404,13 +2890,7 @@ def sq_reconstruct(
     streaming gate holds) under the exact oracle-replayable
     construction. Shuffle-free projection, codegen-side."""
     coded = sq_quantize(emb, dims=dims, id_col=id_col, vec_col=vec_col)
-    return coded.select(
-        F.col("id").alias(id_col),
-        F.expr(
-            "transform(codes, (c, i) ->"
-            " mn[i] + CAST(c AS DOUBLE) * scale[i])"
-        ).alias(vec_col),
-    )
+    return coded.select(F.col("id").alias(id_col), F.expr(_SQ_DECODE).alias(vec_col))
 
 
 def sq_cosine_topk(
@@ -3492,26 +2972,13 @@ def sq_reconstruction_error(
     reconstruction is computed beside the original in the same row),
     nothing driver-side."""
     v = F.col(vec_col).cast("array<double>")
-    stats = emb.agg(
-        F.array(*[F.min(v[i]) for i in range(dims)]).alias("mn"),
-        F.array(*[F.max(v[i]) for i in range(dims)]).alias("mx"),
-    ).select(
-        "mn",
-        F.expr("transform(mx, (x, i) -> (x - mn[i]) / 255.0D)").alias("scale"),
-    )
+    stats = _sq_stats(emb, vec_col, dims)
     recon = F.expr(
         f"""transform(cast({vec_col} as array<double>), (x, i) ->
-              mn[i] + CAST(CASE WHEN scale[i] <= 0.0D THEN 0
-                   ELSE CAST(least(255.0D, greatest(0.0D,
-                          round((x - mn[i]) / scale[i], 0))) AS INT)
-              END AS DOUBLE) * scale[i])"""
+              mn[i] + CAST({_SQ_CODE} AS DOUBLE) * scale[i])"""
     )
     per = emb.crossJoin(F.broadcast(stats)).select(
-        F.round(
-            _dot(v, recon)
-            / F.nullif(_norm(v) * _norm(recon), F.lit(0.0)),
-            9,
-        )
+        F.round(_cosine(v, recon), 9)
         .cast("decimal(28,9)")
         .alias("_c"),
         F.round(
@@ -3651,30 +3118,4 @@ def dim_ablation_recall(
             F.lit(int(d)).alias("dims"), "query_id", "neighbor_id"
         )
         arms = arm if arms is None else arms.unionByName(arm)
-
-    e = exact.withColumnRenamed("neighbor_id", "_en").withColumnRenamed(
-        "query_id", "_eq"
-    )
-    joined = arms.join(
-        e,
-        (F.col("query_id") == F.col("_eq"))
-        & (F.col("neighbor_id") == F.col("_en")),
-        "left",
-    )
-    hits = joined.groupBy("dims").agg(
-        F.count(F.lit(1)).alias("n_ann"),
-        F.sum(
-            F.when(F.col("_eq").isNotNull(), 1).otherwise(0)
-        ).cast("bigint").alias("n_hits"),
-    )
-    tot = exact.agg(F.count(F.lit(1)).alias("n_exact"))
-    return hits.crossJoin(F.broadcast(tot)).select(
-        "dims",
-        "n_hits",
-        "n_ann",
-        "n_exact",
-        (
-            F.col("n_hits").cast("double")
-            / F.nullif(F.col("n_exact").cast("double"), F.lit(0.0))
-        ).alias("recall"),
-    )
+    return _recall_tally(arms, exact, "dims")

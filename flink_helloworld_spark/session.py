@@ -18,7 +18,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+DEFAULT_SHUFFLE_PARTITIONS = 32
 
 
 def build_session(
@@ -48,12 +48,9 @@ def build_session(
         # (denorm_wide, sql_q9_profit, dedup_sorted_neighborhood,
         # sql_q18, sql_q21 — interleaved, 3-pair medians) measured SHJ
         # never faster and 8% slower on the biggest join, so the
-        # default reverts to Spark's spill-robust SMJ. Env-overridable
-        # for deployments that have measured otherwise.
-        .config(
-            "spark.sql.join.preferSortMergeJoin",
-            os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true"),
-        )
+        # default reverts to Spark's spill-robust SMJ (``extra_conf``
+        # overrides it for deployments that have measured otherwise).
+        .config("spark.sql.join.preferSortMergeJoin", "true")
         .config("spark.sql.session.timeZone", "UTC")
         # Parquet scans: vectorized reader + pushdown are defaults; pin them
         # so the plan contract (PushedFilters / ReadSchema) is stable.

@@ -63,3 +63,26 @@ def test_gate_slice_holds_the_never_official_queries():
     qs = list(entrymod.queries())
     assert len(qs) == len(entrymod.oracle_sql())
     assert NEVER_OFFICIAL <= set(qs[:50])
+
+
+def test_check_oracle_rejects_unknown_query_names(monkeypatch, capsys):
+    # a misspelled name used to be skipped silently ("0 failures / 1
+    # checked", exit 0); it must fail before any session starts
+    import importlib.util
+    import pathlib
+    import sys
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "tools" / "check_oracle.py"
+    spec = importlib.util.spec_from_file_location("check_oracle", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def no_session(**_):
+        raise AssertionError("session built before the names were checked")
+
+    monkeypatch.setattr(mod, "build_session", no_session)
+    monkeypatch.setattr(
+        sys, "argv", ["check_oracle.py", "unused_sf_dir", "wordcount", "wordcuont"]
+    )
+    assert mod.main() == 2
+    assert capsys.readouterr().out.strip() == "unknown query names: wordcuont"

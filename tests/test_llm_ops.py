@@ -235,25 +235,6 @@ def test_exact_sharded_topk_degenerate_shards(spark):
         assert got[(0, 1)] == 1 and got[(0, 2)] == 2
 
 
-def test_vectorized_topk_matches_exact(spark, sf_dir):
-    from flink_helloworld_spark.sources.tables import load_tables
-
-    emb = load_tables(spark, sf_dir).embeddings
-    exact = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in S.cosine_topk(emb, k=3).collect()
-    }
-    fast = {
-        (r.query_id, r.rank): (r.neighbor_id, r.cosine)
-        for r in S.cosine_topk_broadcast_index(emb, k=3).collect()
-    }
-    assert set(exact) == set(fast)
-    agree = sum(1 for key in exact if exact[key][0] == fast[key][0])
-    assert agree / len(exact) > 0.99  # only ~1e-15 float ties may differ
-    for key in exact:
-        assert abs(exact[key][1] - fast[key][1]) < 1e-9
-
-
 def test_ivf_topk_structure_and_determinism(spark, sf_dir):
     """IVF ANN: ranks contiguous from 1, neighbors distinct per query,
     cosines in range, and the whole thing reproducible (deterministic
@@ -2841,24 +2822,23 @@ def test_route_frozen_np_matches_batch_append_routing(spark):
     assert (all_probe >= 0).all()
 
 
-def test_broadcast_index_guard_refuses_oversized_collect(spark):
-    """The one full-table collect in the package is now safe by
-    construction (VERDICT r8 item 7): above max_index_rows the
-    tests-only broadcast baseline raises with a pointer to the sharded
-    kernel instead of OOMing a driver on a 100 TB corpus."""
+def test_centroid_collect_over_budget_raises(spark, monkeypatch):
+    """Every centroid-table collect goes through one helper with a
+    rows × dim budget: over it, the collect raises a ValueError naming
+    the table instead of building and broadcasting the matrix. A
+    32-row planted corpus has 16 cells × 64 dims = 1024 values."""
     import pytest
 
     emb = _ids_only_emb(spark, 32)
     planted = S.planted_embeddings(emb).select("vec_id", "embedding")
-    with pytest.raises(ValueError, match="cosine_topk_exact_sharded"):
-        S.cosine_topk_broadcast_index(planted, k=3, max_index_rows=10)
-    # at or under the cap the baseline still runs
-    assert (
-        S.cosine_topk_broadcast_index(
-            planted, k=3, max_index_rows=32
-        ).count()
-        > 0
-    )
+    index, _ = S.build_ivf_index(planted)
+    monkeypatch.setattr(S, "_COLLECT_MAX_VALUES", 16 * 64 - 1)
+    with pytest.raises(ValueError, match="cell table.*_COLLECT_MAX_VALUES = 1023"):
+        S.collect_ivf_quantizer(index)
+    with pytest.raises(ValueError, match="centroid table"):
+        S.ivf_cosine_topk(planted, k=3)
+    monkeypatch.setattr(S, "_COLLECT_MAX_VALUES", 16 * 64)
+    assert len(S.collect_ivf_quantizer(index)["cell_ids"]) == 16
 
 
 def test_epoch_repetition_plan_decay_and_fresh_branches(spark):

@@ -669,6 +669,20 @@ def test_embedding_covariance_matches_numpy(spark):
         assert abs(cv - ref[a, b]) < 1e-6
 
 
+def test_embedding_covariance_rejects_nan_and_oversized(spark):
+    """The nano-lattice partial sums are exact only for finite centered
+    products with |p| <= 100: a NaN embedding, or one far off the mean,
+    raises instead of casting garbage into ``cov``."""
+    from flink_helloworld_spark.operators.clustering import embedding_covariance
+
+    for bad in (float("nan"), 1e3):
+        rows = [(i, [float(i % 3), 1.0, 2.0 * i]) for i in range(6)]
+        rows[2] = (2, [bad, 1.0, 4.0])
+        emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+        with pytest.raises(Exception, match="exact nano-lattice range"):
+            embedding_covariance(emb, dim=3).collect()
+
+
 def test_embedding_standardize_zero_mean_unit_var(spark):
     """z-scores have ~0 mean and ~1 variance per dimension; a constant
     dimension standardizes to 0.0 instead of NULL/inf."""

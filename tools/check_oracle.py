@@ -7,6 +7,9 @@ with 1e-9 rel tolerance reported separately so we can see how tight we
 are).
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
+
+A query name missing from ``queries()`` is an error (exit 2), checked
+before any session starts.
 """
 
 from __future__ import annotations
@@ -14,12 +17,13 @@ from __future__ import annotations
 import sys
 import time
 import traceback
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from flink_helloworld_spark.schemas import TESTDATA_TABLES  # noqa: E402
@@ -68,13 +72,17 @@ def compare(name: str, spark_pdf: pd.DataFrame, oracle_pdf: pd.DataFrame) -> str
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        print(f"unknown query names: {', '.join(unknown)}")
+        return 2
     spark = build_session(shuffle_partitions=8)
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
         )
-    qs, oracles = entrymod.queries(), entrymod.oracle_sql()
     failures = 0
     for qname, fn in qs.items():
         if only and qname not in only:
