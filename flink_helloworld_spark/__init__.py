@@ -7,7 +7,8 @@ the reference stream-processing repo (NobodyzHome/flink-helloworld, a Flink
 - DataFrame / Spark SQL for all relational, windowed, and join semantics
   (Catalyst handles optimization; we declare logical plans only).
 - Structured Streaming for the unbounded-stream surface (watermarks,
-  event-time windows, stateful operators via ``applyInPandasWithState``).
+  event-time windows, keyed-state operators via
+  ``transformWithStateInPandas``).
 - LLM-data-pipeline operators (dedup, similarity search, multimodal
   columns, text analysis) designed for 100 TB scale: keyed state only,
   broadcastable dims, no driver-side collection.

@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from flink_helloworld_spark.functions import dsum, epoch_millis
+from flink_helloworld_spark.functions import dsum, epoch_millis, md5_prefix_long
 
 HASH_SPACE = float(1 << 60)  # 15 hex chars of md5
 
@@ -52,10 +52,6 @@ def hypertable_rollup(
     return out
 
 
-def _h60(col: Column) -> Column:
-    return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
 def _kmv_sketch(df: DataFrame, group: str, value: str, k: int) -> DataFrame:
     """THE sketch definition — (group, h) rows holding each group's k
     smallest distinct 60-bit md5 hashes. Single source of truth shared
@@ -66,7 +62,9 @@ def _kmv_sketch(df: DataFrame, group: str, value: str, k: int) -> DataFrame:
     # hash would also sort below every real hash and poison rank 1
     hashed = (
         df.where(F.col(value).isNotNull())
-        .select(F.col(group), _h60(F.col(value).cast("string")).alias("h"))
+        .select(
+            F.col(group), md5_prefix_long(F.col(value).cast("string")).alias("h")
+        )
         .distinct()
     )
     w = Window.partitionBy(group).orderBy("h")

@@ -1,8 +1,11 @@
 """Custom stateful streaming operators (SURVEY.md §4 "needs custom work").
 
-Everything here runs on ``applyInPandasWithState``: Arrow-batched, keyed,
-partition-parallel, state spillable via the RocksDB state store — the
-idiomatic Spark substitute for Flink's keyed-state operator API.
+Keyed state runs on ``transformWithStateInPandas`` (``tws.py``): typed
+Value/List/Map state, processing-time TTL, timers, and operators that
+chain across re-keys in one query — Spark's counterpart of Flink's
+keyed-state and timer API. Arrow-batched, partition-parallel, state in
+the RocksDB store. A few single-stage operators (count windows, late-row
+side output, CEP, the filter funnel) still use ``applyInPandasWithState``.
 """
 
 from flink_helloworld_spark.streaming._util import (  # noqa: F401

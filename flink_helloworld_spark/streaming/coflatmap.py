@@ -6,24 +6,20 @@ StateTest.java:250-303,639-872, func/flat/FlatMapTest.java:22-96): one
 side carries a dimension row stored in per-key state; the other side's
 rows buffer until the dimension arrives, then flush as joined output.
 
-Spark has no two-input stateful operator, so this is the tag-union
-pattern: add a ``_side`` discriminator, union the schemas
-(outer-nullable), group by the join key, and run one
-``applyInPandasWithState`` function holding {dimension, buffer} state per
-key. State is JSON-encoded in a two-field struct — simple, schema-stable,
-and bounded by a configurable buffer cap (100 TB discipline: no unbounded
-per-key state).
+Spark has no two-input stateful operator, so the streams are tag-unioned
+(a side discriminator, outer-nullable schemas) and grouped by the join
+key into one stateful operator holding {dimension, buffer} per key.
+``co_flat_map_join`` is the one-dimension case of
+``tws.chain_stateful_join``: the same kernel fuses any number of
+same-key dimension stages, and because transformWithState operators
+chain, a stage keyed differently (the reference capstone's order-id
+branch feeding its waybill-keyed chain) runs in the same query
+(``tws.capstone_single_query``) — no durable hop at the re-key seam.
 
-Chaining: Spark rejects multiple ``applyInPandasWithState`` operators in
-one streaming query ("Multiple applyInPandasWithStates are not
-supported"). Consecutive stages that SHARE the grouping key need no
-second operator at all — ``streaming/chain.py`` fuses them into one
-``applyInPandasWithState`` (the reference's waybill-keyed stage chain,
-StateTest.java:639-872, runs as a single query that way). Only a re-key
-between stateful stages (its order-id keyed branch) still stages through
-a durable parquet/Kafka hop — the same place Flink inserts a network
-shuffle. The transformWithState API (streaming/tws.py) lifts the
-restriction entirely on Spark 4 clusters with protobuf available.
+This module also holds the typed state codec the join state goes
+through: per-key state is a JSON string, and ``_enc``/``_dec`` tag
+timestamps, dates, decimals, bytes, lists and maps so every value comes
+back as its original type.
 """
 
 from __future__ import annotations
@@ -31,25 +27,12 @@ from __future__ import annotations
 import base64
 import datetime
 import decimal
-import json
-from collections.abc import Iterator
 from typing import Any
 
 import numpy as np
 import pandas as pd
 
-from flink_helloworld_spark.streaming._util import concat_chunks
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StringType, StructField, StructType
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("dim_json", StringType()),
-        StructField("buf_json", StringType()),
-    ]
-)
 
 
 def _enc(v: Any) -> Any:
@@ -99,32 +82,6 @@ def _dec(v: Any) -> Any:
     return v
 
 
-def encode_record(d: dict | None) -> str | None:
-    return None if d is None else json.dumps({k: _enc(v) for k, v in d.items()})
-
-
-def decode_record(s: str | None) -> dict | None:
-    return None if s is None else {k: _dec(v) for k, v in json.loads(s).items()}
-
-
-def encode_records(rows: list[dict]) -> str:
-    return json.dumps([{k: _enc(v) for k, v in d.items()} for d in rows])
-
-
-def decode_records(s: str | None) -> list[dict]:
-    return [] if not s else [{k: _dec(v) for k, v in d.items()} for d in json.loads(s)]
-
-LEFT, RIGHT = "L", "R"
-
-
-def tag_union(left: DataFrame, right: DataFrame) -> DataFrame:
-    """Union two differently-shaped streams into one schema-tagged stream
-    (missing columns become nulls). The reference's ``connect`` analog."""
-    lt = left.withColumn("_side", F.lit(LEFT))
-    rt = right.withColumn("_side", F.lit(RIGHT))
-    return lt.unionByName(rt, allowMissingColumns=True)
-
-
 def co_flat_map_join(
     left: DataFrame,
     right: DataFrame,
@@ -141,66 +98,17 @@ def co_flat_map_join(
     Semantics (reference StateTest.java:700-762): dimension rows overwrite
     per-key ValueState; fact rows either join immediately (dimension
     already known) or buffer in state and flush the moment the dimension
-    arrives. Output = fact columns + dimension columns, one row per fact.
+    arrives. Output = key + fact columns + dimension columns, one row per
+    fact.
 
     - ``seq_col`` (monotonic per key) restores arrival order inside a
       micro-batch, making emission deterministic.
-    - ``max_buffer`` caps per-key buffered facts (oldest dropped) —
-    - ``state_ttl_ms`` sets a processing-time timeout that clears idle
+    - ``max_buffer`` caps per-key buffered facts (oldest dropped).
+    - ``state_ttl_ms`` sets a processing-time state TTL that clears idle
       keys (reference state TTL, StateTest.java:904-932 / T8).
     """
-    out_fields = (
-        [StructField(key, left.schema[key].dataType)]
-        + [StructField(c, left.schema[c].dataType) for c in left_cols]
-        + [StructField(c, right.schema[c].dataType) for c in right_cols]
-    )
-    out_schema = StructType(out_fields)
-    tagged = tag_union(
-        left.select(key, seq_col, *left_cols), right.select(key, seq_col, *right_cols)
-    )
+    from flink_helloworld_spark.streaming.tws import chain_stateful_join
 
-    def fn(
-        key_tuple: Any, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=[f.name for f in out_fields])
-            return
-        dim_json, buf_json = state.get if state.exists else (None, None)
-        dim: dict | None = decode_record(dim_json)
-        buf: list[dict] = decode_records(buf_json)
-        out_rows: list[dict] = []
-
-        def emit(fact: dict) -> None:
-            row = {key: key_tuple[0]}
-            row.update({c: fact.get(c) for c in left_cols})
-            row.update({c: (dim or {}).get(c) for c in right_cols})
-            out_rows.append(row)
-
-        batch = concat_chunks(batches)
-        if batch is not None:
-            for rec in batch.sort_values(seq_col).to_dict("records"):
-                if rec["_side"] == RIGHT:
-                    dim = {c: rec[c] for c in right_cols}
-                    for fact in buf:  # flush everything buffered
-                        emit(fact)
-                    buf = []
-                else:
-                    fact = {c: rec[c] for c in left_cols}
-                    if dim is not None:
-                        emit(fact)
-                    else:  # buffer until dimension arrives, oldest evicted
-                        buf = (buf + [fact])[-max_buffer:]
-        state.update((encode_record(dim), encode_records(buf)))
-        if state_ttl_ms is not None:
-            state.setTimeoutDuration(state_ttl_ms)
-        yield pd.DataFrame(out_rows, columns=[f.name for f in out_fields])
-
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if state_ttl_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return tagged.groupBy(key).applyInPandasWithState(
-        fn, out_schema, STATE_SCHEMA, "append", timeout
+    return chain_stateful_join(
+        left, [(right, right_cols)], key, left_cols, seq_col, max_buffer, state_ttl_ms
     )

@@ -198,78 +198,6 @@ def streaming_window_topn_job(
     return agg_sink, topn_sink, query
 
 
-def streaming_kmv_distinct_job(
-    stream: DataFrame,
-    group: str,
-    value: str,
-    k: int = 64,
-) -> DataFrame:
-    """Streaming KMV distinct-count: per group, maintain the k smallest
-    distinct md5 hashes ACROSS micro-batches and emit the refreshed
-    sketch each batch the group is touched (update semantics).
-
-    This is the streaming twin of ``operators/rollups.kmv_distinct`` and
-    demonstrates why KMV (unlike engine-private approx_count_distinct
-    state) is the 100 TB streaming sketch: state is an O(k) integer set,
-    merging is "union, keep k smallest" — associative and replayable, so
-    a restart from checkpoint or a late batch reaches the same sketch.
-    Emitted estimates are IDENTICAL to recomputing the batch operator
-    over all data seen so far (asserted in tests).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from flink_helloworld_spark.operators.rollups import HASH_SPACE
-
-    key_type = stream.schema[group].dataType
-    out_schema = StructType(
-        [
-            StructField(group, key_type),
-            StructField("kth_min", LongType()),
-            StructField("n_kept", LongType()),
-            StructField("distinct_estimate", DoubleType()),
-        ]
-    )
-    state_schema = StructType([StructField("hashes", StringType())])
-
-    def fn(kk, batches, state: GroupState):
-        # state = the k smallest distinct hashes seen so far; merge is
-        # "union, keep k smallest" (fn only fires for keys with input)
-        seen: set[int] = (
-            {int(x) for x in state.get[0].split(",") if x}
-            if state.exists
-            else set()
-        )
-        for pdf in batches:
-            seen.update(int(h) for h in pdf["_h"])
-        kept = sorted(seen)[:k]
-        state.update((",".join(str(x) for x in kept),))
-        n = len(kept)
-        est = float(n) if n < k else (k - 1) / (kept[-1] / HASH_SPACE)
-        yield pd.DataFrame(
-            [{group: kk[0], "kth_min": kept[-1], "n_kept": n, "distinct_estimate": est}]
-        )
-
-    from flink_helloworld_spark.functions import md5_prefix_long
-
-    # nulls carry no distinct value (COUNT DISTINCT semantics) — and
-    # md5(NULL) would reach the state fn as NaN; same rule as the batch
-    # twin, so streaming-equals-batch still holds
-    hashed = stream.where(F.col(value).isNotNull()).select(
-        F.col(group), md5_prefix_long(F.col(value).cast("string")).alias("_h")
-    )
-    return hashed.groupBy(group).applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
 def streaming_ingest_job(
     stream: DataFrame,
     sink_path: str,
@@ -443,70 +371,30 @@ def streaming_shard_manifest_job(
     fingerprint is a BIT_XOR — all associative + commutative, so state
     is FIVE scalars per shard and the streaming manifest after any batch
     sequence equals the batch operator over everything ingested so far
-    (asserted bit-identical in tests). A restart replays to the same
-    values from the checkpoint; a backfill engine can verify shard by
-    shard without reading documents.
+    (asserted bit-identical in tests). The batch hash recipe
+    (``layout.shard_tagged``) feeds the one manifest fold,
+    ``tws.ManifestProcessor``. A restart replays to the same values
+    from the checkpoint; a backfill engine can verify shard by shard
+    without reading documents.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import IntegerType, LongType, StructField, StructType
-
-    out_schema = StructType(
-        [
-            StructField("shard_id", IntegerType()),
-            StructField("n_docs", LongType()),
-            StructField("total_tokens", LongType()),
-            StructField("min_id", LongType()),
-            StructField("max_id", LongType()),
-            StructField("fingerprint", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n_docs", LongType()),
-            StructField("total_tokens", LongType()),
-            StructField("min_id", LongType()),
-            StructField("max_id", LongType()),
-            StructField("fingerprint", LongType()),
-        ]
-    )
-
-    def fn(key, batches, state: GroupState):
-        n, tok, lo, hi, fp = (
-            state.get if state.exists else (0, 0, None, None, 0)
-        )
-        for pdf in batches:
-            # null tolerance mirrors the batch aggregate EXACTLY:
-            # count(*) counts every row, sum/min/max/bit_xor SKIP nulls
-            # (pandas renders a null in these long columns as NaN)
-            n += len(pdf)
-            tok += int(pdf["_tok"].dropna().sum())
-            ids = pdf["_id"].dropna()
-            if len(ids):
-                bmin, bmax = int(ids.min()), int(ids.max())
-                lo = bmin if lo is None else min(lo, bmin)
-                hi = bmax if hi is None else max(hi, bmax)
-            for h in pdf["_fp"].dropna():
-                fp ^= int(h)
-        state.update((n, tok, lo, hi, fp))
-        yield pd.DataFrame(
-            [
-                {
-                    "shard_id": key[0],
-                    "n_docs": n,
-                    "total_tokens": tok,
-                    "min_id": lo,
-                    "max_id": hi,
-                    "fingerprint": fp,
-                }
-            ]
-        )
-
     from flink_helloworld_spark.operators.layout import shard_tagged
+    from flink_helloworld_spark.streaming.tws import (
+        MANIFEST_OUTPUT,
+        ManifestProcessor,
+    )
 
-    tagged = shard_tagged(stream, shards, text_col=text_col, id_col=id_col)
-    return tagged.groupBy("shard_id").applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    # the transformWithState worker renames leading-underscore columns
+    tagged = shard_tagged(stream, shards, text_col=text_col, id_col=id_col).select(
+        "shard_id",
+        F.col("_id").alias("doc_id"),
+        F.col("_tok").alias("tok"),
+        F.col("_fp").alias("fp"),
+    )
+    return tagged.groupBy("shard_id").transformWithStateInPandas(
+        ManifestProcessor(),
+        outputStructType=MANIFEST_OUTPUT,
+        outputMode="update",
+        timeMode="none",
     )
 
 
@@ -595,38 +483,4 @@ def streaming_filter_funnel_job(
 
     return contrib.groupBy("stage", "rule").applyInPandasWithState(
         fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
-    )
-
-
-def streaming_corpus_manifest_job(
-    stream: DataFrame,
-    shards: int = 16,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """The streaming twin of ``dedup.corpus_to_manifest``'s closing
-    chain, ONE query with TWO chained transformWithState operators
-    across the re-key seam (content_hash → shard_id) — the
-    capstone_single_query topology trick. Stateless Gopher-core gate →
-    first-arrival content dedup → incremental per-shard manifest; the
-    manifest after any batch sequence equals the batch
-    ``layout.shard_manifest`` over the gate+dedup survivors
-    bit-for-bit (t: test_jobs).
-
-    Document TEXT never leaves its scan partition: the manifest inputs
-    (shard_id, tok, fp) are computed in the stateless projection before
-    either shuffle, so both stateful exchanges carry four integers per
-    doc. State: one long per distinct content + five longs per shard —
-    pair the dedup state with TTL where the re-ingest horizon allows.
-
-    (An applyInPandasWithState manifest downstream of a dedup operator
-    is NOT used here: two stateful operators only compose reliably on
-    the transformWithState API — the dedup+apply form silently loses
-    late batches to watermark holds.)"""
-    from flink_helloworld_spark.streaming.tws import (
-        streaming_corpus_manifest_tws,
-    )
-
-    return streaming_corpus_manifest_tws(
-        stream, shards=shards, text_col=text_col, id_col=id_col
     )

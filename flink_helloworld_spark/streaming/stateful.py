@@ -1,11 +1,9 @@
-"""Per-event stateful operators: exact rolling aggregation, count
-windows, count-trigger/evictor windows (SURVEY.md §4 custom work 1 & 3).
+"""Per-event stateful count windows (SURVEY.md §4 custom work 1 & 3).
 
 These reproduce the reference's *per-record emission* semantics that
-Spark's update-mode aggregation only approximates per micro-batch:
+Spark's update-mode aggregation only approximates per micro-batch (the
+exact rolling sum, ``KeyedStream.sum``, is ``tws.rolling_sum_stream``):
 
-- ``rolling_sum_stream``: ``KeyedStream.sum`` (HelloWorldFlinkTest.java:45,
-  78-79) — one output row per input row carrying the running total.
 - ``count_window_stream``: ``countWindow(n)`` (HelloWorldFlinkTest.java:98)
   — fire a sum every n rows per key; partials never fire.
 - ``count_trigger_evictor_stream``: GlobalWindows + CountTrigger(every) +
@@ -33,40 +31,6 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
-
-
-def rolling_sum_stream(
-    df: DataFrame, key: str, value: str, seq_col: str, out_value: str = "running_total"
-) -> DataFrame:
-    """Exact per-event rolling sum: emits every input row with the
-    running per-key total at that point (arrival order = seq_col)."""
-    key_type = df.schema[key].dataType
-    out_schema = StructType(
-        [
-            StructField(key, key_type),
-            StructField(seq_col, df.schema[seq_col].dataType),
-            StructField(value, DoubleType()),
-            StructField(out_value, DoubleType()),
-        ]
-    )
-    state_schema = StructType([StructField("total", DoubleType())])
-
-    def fn(k: Any, batches: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (total,) = state.get if state.exists else (0.0,)
-        rows = []
-        batch = concat_chunks(batches)
-        if batch is not None:
-            for rec in batch.sort_values(seq_col).to_dict("records"):
-                total = round(total + rec[value], 9)
-                rows.append(
-                    {key: k[0], seq_col: rec[seq_col], value: rec[value], out_value: total}
-                )
-        state.update((total,))
-        yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
-
-    return df.select(key, seq_col, value).groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
 
 
 def count_window_stream(

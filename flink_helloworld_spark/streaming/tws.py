@@ -1,27 +1,29 @@
-"""transformWithStateInPandas upgrade path (SURVEY §7 stage 4).
+"""Keyed stateful streaming operators on ``transformWithStateInPandas``.
 
-Spark 4's ``transformWithStateInPandas`` supersedes
-``applyInPandasWithState`` with typed state handles (ValueState /
-ListState / MapState — the same vocabulary as the reference's Flink
-state, StateTest.java), native TTL per state, and timers. The engine's
-custom operators live on ``applyInPandasWithState`` (stable since 3.4);
-this module carries the forward port of the core pattern so migration
-is a swap, not a rewrite.
+Spark 4's ``transformWithStateInPandas`` gives typed state handles
+(ValueState / ListState / MapState — the vocabulary of the reference's
+Flink keyed state, StateTest.java), per-state TTL and timers. Unlike
+``applyInPandasWithState``, these operators chain: stateful operators
+with different grouping keys run in ONE streaming query, with a plain
+shuffle at each re-key seam, like Flink's keyBy between operators. Every
+keyed-state join, running total, sketch and gate of the engine lives
+here, once; only the single-stage count windows, late-row side output,
+CEP and filter-funnel operators stay on ``applyInPandasWithState``.
 
-Runtime requirement: the transformWithState Python worker speaks
-protobuf to the JVM (``google.protobuf`` import at query start).
-``session.build_session`` calls ``_vendor.ensure_protobuf()`` pre-JVM,
-which prefers an installed protobuf and falls back to the vendored
-pure-Python runtime — so this module works out of the box here; tests
-still skip gracefully if neither copy imports.
+Runtime requirement: the Python worker speaks protobuf to the JVM, and
+the state store must be RocksDB. ``session.build_session`` vendors
+protobuf pre-JVM (``_vendor.ensure_protobuf()``) and sets the RocksDB
+provider, so every session it builds runs these operators.
 """
 
 from __future__ import annotations
 
+import json
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
     StatefulProcessorHandle,
@@ -37,31 +39,26 @@ from pyspark.sql.types import (
     StructType,
 )
 
-ROLLING_OUTPUT = StructType(
-    [
-        StructField("k", StringType()),
-        StructField("seq", LongType()),
-        StructField("v", DoubleType()),
-        StructField("running_total", DoubleType()),
-    ]
-)
+from flink_helloworld_spark.functions import md5_prefix_long
+from flink_helloworld_spark.streaming._util import concat_chunks as _concat_chunks
+from flink_helloworld_spark.streaming.coflatmap import _dec, _enc
 
-from flink_helloworld_spark.streaming._util import (  # noqa: E402
-    concat_chunks as _concat_chunks,
-)
 
-_STATE_SCHEMA = StructType([StructField("total", DoubleType())])
+def _time_mode(ttl_ms: int | None) -> str:
+    """State TTL is measured in processing time; Spark rejects a TTL
+    state on an operator started with ``timeMode="none"``."""
+    return "none" if ttl_ms is None else "processingTime"
 
 
 class RollingSumProcessor(StatefulProcessor):
-    """Per-event rolling sum on typed ValueState — the
-    ``rolling_sum_stream`` semantics (reference KeyedStream.sum,
-    HelloWorldFlinkTest.java:45) on the new API. A TTL would be
-    ``state_ttl_duration_ms`` on ``getValueState`` (reference state TTL,
-    StateTest.java:904-932)."""
+    """Per-event rolling sum (reference KeyedStream.sum,
+    HelloWorldFlinkTest.java:45) on typed ValueState: one output row per
+    input row carrying the key's running total, in ``seq`` order."""
 
     def init(self, handle: StatefulProcessorHandle) -> None:
-        self._total = handle.getValueState("total", _STATE_SCHEMA)
+        self._total = handle.getValueState(
+            "total", StructType([StructField("total", DoubleType())])
+        )
 
     def handleInputRows(
         self, key, rows: Iterator[pd.DataFrame], timerValues
@@ -79,43 +76,66 @@ class RollingSumProcessor(StatefulProcessor):
                     {"k": key[0], "seq": rec["seq"], "v": rec["v"], "running_total": total}
                 )
         self._total.update((total,))
-        yield pd.DataFrame(out, columns=[f.name for f in ROLLING_OUTPUT.fields])
+        yield pd.DataFrame(out, columns=["k", "seq", "v", "running_total"])
 
     def close(self) -> None:
         pass
 
 
-def rolling_sum_tws(stream: DataFrame, key: str = "k") -> DataFrame:
-    """Rolling per-event sum via transformWithStateInPandas."""
+def rolling_sum_stream(
+    df: DataFrame, key: str, value: str, seq_col: str, out_value: str = "running_total"
+) -> DataFrame:
+    """Exact per-event rolling sum: emits every input row with the
+    running per-key total at that point (arrival order = ``seq_col``).
+    Output: ``key``, ``seq_col``, ``value`` (double), ``out_value``."""
+    out_schema = StructType(
+        [
+            StructField("k", df.schema[key].dataType),
+            StructField("seq", df.schema[seq_col].dataType),
+            StructField("v", DoubleType()),
+            StructField("running_total", DoubleType()),
+        ]
+    )
+    # fixed internal names: the processor's columns never collide with
+    # the caller's, and none starts with "_" (the worker-side serializer
+    # renames such columns positionally)
     return (
-        stream.selectExpr(f"{key} AS k", "seq", "CAST(v AS DOUBLE) AS v")
+        df.select(
+            F.col(key).alias("k"),
+            F.col(seq_col).alias("seq"),
+            F.col(value).cast("double").alias("v"),
+        )
         .groupBy("k")
         .transformWithStateInPandas(
             RollingSumProcessor(),
-            outputStructType=ROLLING_OUTPUT,
+            outputStructType=out_schema,
             outputMode="append",
             timeMode="none",
+        )
+        .select(
+            F.col("k").alias(key),
+            F.col("seq").alias(seq_col),
+            F.col("v").alias(value),
+            F.col("running_total").alias(out_value),
         )
     )
 
 
 # --------------------------------------------------------------------------
-# Cross-key stateful chaining: the reference's 4-stage capstone in ONE query
+# Buffer-until-dimension joins, chained per key and across re-keys
 # --------------------------------------------------------------------------
 
 
 class ChainJoinProcessor(StatefulProcessor):
-    """The fused buffer-until-dim chain of ``chain.chain_stateful_join``
-    (reference StateTest.java:639-872 semantics) on typed
-    transformWithState state. Unlike ``applyInPandasWithState`` — which
-    Spark caps at one per query — transformWithState operators CHAIN:
-    two of these with DIFFERENT grouping keys run in a single streaming
-    query, which is exactly the re-key seam Flink's capstone topology has
-    (order-id keyed join feeding the waybill-keyed join) and that the
-    durable-hop workaround previously staged through.
+    """N buffer-until-dimension join stages fused per key (reference
+    StateTest.java:639-872). Stage i: a dim row overwrites stage i's dim
+    and flushes stage i's buffer onward; a record reaching stage i joins
+    immediately if the dim is known, else buffers (oldest evicted at
+    ``max_buffer``). A record emits once it has passed EVERY stage.
 
-    State: one JSON blob per key — ``[{dim, buf}, ...]`` per stage, the
-    same typed codec as coflatmap (timestamps/decimals round-trip).
+    State: one JSON string per key — ``[{dim, buf}, ...]`` per stage,
+    through the typed ``coflatmap`` codec (timestamps/decimals
+    round-trip across micro-batches); ``ttl_ms`` expires idle keys.
     """
 
     def __init__(
@@ -138,30 +158,14 @@ class ChainJoinProcessor(StatefulProcessor):
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         schema = StructType([StructField("stages_json", StringType())])
-        if self._ttl_ms is not None:
-            self._state = handle.getValueState("chain", schema, self._ttl_ms)
-        else:
-            self._state = handle.getValueState("chain", schema)
+        self._state = handle.getValueState("chain", schema, self._ttl_ms)
 
     def handleInputRows(
         self, key, rows: Iterator[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
-        import json
-
-        from flink_helloworld_spark.streaming.coflatmap import _dec, _enc
-
         n = len(self._dim_cols)
         if self._state.exists():
-            raw = json.loads(self._state.get()[0])
-            stages = [
-                {
-                    "dim": None
-                    if s["dim"] is None
-                    else {k: _dec(v) for k, v in s["dim"].items()},
-                    "buf": [{k: _dec(v) for k, v in r.items()} for r in s["buf"]],
-                }
-                for s in raw
-            ]
+            stages = _dec(json.loads(self._state.get()[0]))
         else:
             stages = [{"dim": None, "buf": []} for _ in range(n)]
         out_rows: list[dict] = []
@@ -204,30 +208,14 @@ class ChainJoinProcessor(StatefulProcessor):
                     flushed, stages[i]["buf"] = stages[i]["buf"], []
                     for r in flushed:
                         cascade(r, i)
-        self._state.update(
-            (
-                json.dumps(
-                    [
-                        {
-                            "dim": None
-                            if s["dim"] is None
-                            else {k: _enc(v) for k, v in s["dim"].items()},
-                            "buf": [
-                                {k: _enc(v) for k, v in r.items()} for r in s["buf"]
-                            ],
-                        }
-                        for s in stages
-                    ]
-                ),
-            )
-        )
+        self._state.update((json.dumps(_enc(stages)),))
         yield pd.DataFrame(out_rows, columns=self._out_names)
 
     def close(self) -> None:
         pass
 
 
-def chain_stateful_join_tws(
+def chain_stateful_join(
     facts: DataFrame,
     dims: list[tuple[DataFrame, list[str]]],
     key: str,
@@ -236,10 +224,14 @@ def chain_stateful_join_tws(
     max_buffer: int = 10_000,
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
-    """``chain.chain_stateful_join`` on transformWithStateInPandas —
-    same semantics, but composable across re-keys in one query."""
-    from pyspark.sql import functions as F
-
+    """N chained buffer-until-dim joins, all keyed by ``key``, in ONE
+    stateful operator (``ChainJoinProcessor``). Output = key + fact_cols
+    + each stage's dim cols, one row per fully-joined fact. ``seq_col``
+    (monotonic per key) restores arrival order inside a micro-batch, so
+    emission is deterministic; ``state_ttl_ms`` clears idle keys after a
+    processing-time TTL (reference state TTL, StateTest.java:904-932).
+    The result is itself a stream, so a stage keyed differently can
+    consume it in the same query (``capstone_single_query``)."""
     n = len(dims)
     dim_cols = [cols for _, cols in dims]
     out_fields = (
@@ -251,7 +243,6 @@ def chain_stateful_join_tws(
             for c in dim_cols[i]
         ]
     )
-    out_schema = StructType(out_fields)
     # seq_col may double as a carried fact column (stage outputs feeding a
     # later re-keyed stage keep their seq) — don't select it twice. The
     # plumbing columns avoid leading underscores: the worker-side
@@ -284,9 +275,9 @@ def chain_stateful_join_tws(
     )
     return tagged.groupBy(key).transformWithStateInPandas(
         proc,
-        outputStructType=out_schema,
+        outputStructType=StructType(out_fields),
         outputMode="append",
-        timeMode="none",
+        timeMode=_time_mode(state_ttl_ms),
     )
 
 
@@ -307,9 +298,7 @@ def capstone_single_query(
     in the same query because transformWithState chains; the seam is a
     plain shuffle, exactly like Flink's keyBy between operators.
     """
-    from pyspark.sql import functions as F
-
-    stage_a = chain_stateful_join_tws(
+    stage_a = chain_stateful_join(
         facts=links.select("order_id", seq_col, "waybill_code"),
         dims=[(orders.select("order_id", seq_col, "create_time"), ["create_time"])],
         key="order_id",
@@ -321,7 +310,7 @@ def capstone_single_query(
         F.col("order_id").alias("order_code"),
         F.col("create_time").alias("order_create_date"),
     )
-    return chain_stateful_join_tws(
+    return chain_stateful_join(
         facts=route.select("waybill_code", seq_col, "package_code"),
         dims=[
             (
@@ -460,8 +449,6 @@ def session_flush_tws(
     of each burst of events separated by ≥ ``gap_ms``, emitted when the
     event-time watermark passes last_event + gap. ``ts_col`` must be a
     TIMESTAMP column; the watermark is applied here."""
-    from pyspark.sql import functions as F
-
     src = stream.withWatermark(ts_col, watermark_delay).select(
         F.col(key).alias("k"),
         F.unix_millis(F.col(ts_col)).alias("ts_ms"),
@@ -539,8 +526,6 @@ def streaming_domain_cap(
 ) -> DataFrame:
     """Arrival-order per-domain cap over an unbounded stream; see
     DomainCapProcessor for the batch-vs-streaming semantic difference."""
-    from pyspark.sql import functions as F
-
     src = stream.select(
         F.col(domain_col).alias("source"),
         F.col(id_col).alias("doc_id"),
@@ -658,8 +643,6 @@ def streaming_weighted_reservoir(
     """Per-stratum A-ES weighted reservoir over an unbounded stream;
     rows with weight <= 0 are excluded (never sampleable), keys come
     from the SHARED batch column expression so parity is bit-exact."""
-    from pyspark.sql import functions as F
-
     from flink_helloworld_spark.operators.sampling import reservoir_key
 
     w = F.col(weight_col).cast("double")
@@ -751,7 +734,8 @@ class ManifestProcessor(StatefulProcessor):
     """Incremental per-shard manifest on typed state: five scalars per
     shard (adds, min/max, XOR — all associative+commutative), re-emitted
     whenever the shard is touched; after any batch sequence the values
-    equal the batch ``layout.shard_manifest`` over everything kept."""
+    equal the batch ``layout.shard_manifest`` over everything kept.
+    Input rows: (shard_id, doc_id, tok, fp)."""
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self._m = handle.getValueState("m", _MANIFEST_STATE)
@@ -764,13 +748,18 @@ class ManifestProcessor(StatefulProcessor):
         )
         batch = _concat_chunks(rows)
         if batch is not None and len(batch):
-            for rec in batch.to_dict("records"):
-                n += 1
-                tok += int(rec["tok"])
-                d = int(rec["doc_id"])
-                lo = d if lo is None else min(lo, d)
-                hi = d if hi is None else max(hi, d)
-                fp ^= int(rec["fp"])
+            # the batch aggregate's null rules: count(*) counts every
+            # row, sum/min/max/bit_xor skip nulls (pandas renders a null
+            # in these long columns as NaN)
+            n += len(batch)
+            tok += int(batch["tok"].dropna().sum())
+            ids = batch["doc_id"].dropna()
+            if len(ids):
+                bmin, bmax = int(ids.min()), int(ids.max())
+                lo = bmin if lo is None else min(lo, bmin)
+                hi = bmax if hi is None else max(hi, bmax)
+            for h in batch["fp"].dropna():
+                fp ^= int(h)
             self._m.update((n, tok, lo, hi, fp))
         yield pd.DataFrame(
             [
@@ -807,9 +796,6 @@ def streaming_corpus_manifest_tws(
     never leaves its scan partition — both stateful exchanges carry four
     integers per doc. State: one long per distinct content + five longs
     per shard."""
-    from pyspark.sql import functions as F
-
-    from flink_helloworld_spark.functions import md5_prefix_long
     from flink_helloworld_spark.operators.text import _words
 
     ws = _words(F.col(text_col))
@@ -893,12 +879,7 @@ class BucketClaimProcessor(StatefulProcessor):
         # TTL bounds the dedup horizon: an expired bucket claim forgets
         # its first arrival, so a later near-dup is admitted again —
         # the state-size/recall dial an unbounded 100 TB ingest turns
-        if self._ttl_ms is not None:
-            self._first = handle.getValueState(
-                "first", _LSH_CLAIM_STATE, self._ttl_ms
-            )
-        else:
-            self._first = handle.getValueState("first", _LSH_CLAIM_STATE)
+        self._first = handle.getValueState("first", _LSH_CLAIM_STATE, self._ttl_ms)
 
     def handleInputRows(
         self, key, rows: Iterator[pd.DataFrame], timerValues
@@ -1008,8 +989,6 @@ def streaming_lsh_dedup(
     single-pass first-arrival contract — pair-verified Jaccard dedup
     (`minhash_dedup_pairs`) stays batch.
     """
-    from pyspark.sql import functions as F
-
     from flink_helloworld_spark.operators.dedup import (
         lsh_band_keys,
         minhash_signature_from_hashes,
@@ -1070,8 +1049,7 @@ def streaming_lsh_dedup(
         BucketClaimProcessor([f.name for f in claim_out.fields], state_ttl_ms),
         outputStructType=claim_out,
         outputMode="append",
-        # TTL states are only assignable under a time mode
-        timeMode="none" if state_ttl_ms is None else "processingTime",
+        timeMode=_time_mode(state_ttl_ms),
     )
     verdicts = claims.groupBy("doc_id").transformWithStateInPandas(
         DocVerdictProcessor(bands, [f.name for f in verdict_out.fields]),
@@ -1116,8 +1094,6 @@ def streaming_embedding_dedup(
     claimed (≤ 2^planes entries — bounded by construction, no TTL
     required; ``state_ttl_ms`` still composes for horizon semantics
     consistent with the text gate)."""
-    from pyspark.sql import functions as F
-
     from flink_helloworld_spark.operators.similarity import hyperplane_bucket
 
     out = StructType(
@@ -1135,7 +1111,7 @@ def streaming_embedding_dedup(
         BucketClaimProcessor([f.name for f in out.fields], state_ttl_ms),
         outputStructType=out,
         outputMode="append",
-        timeMode="none" if state_ttl_ms is None else "processingTime",
+        timeMode=_time_mode(state_ttl_ms),
     )
     return claims.select(
         F.col("doc_id").alias(id_col),
@@ -1178,8 +1154,6 @@ def streaming_embedding_dedup_banded(
     ``state_ttl_ms`` bounds the dedup horizon exactly as in
     ``streaming_lsh_dedup``.
     """
-    from pyspark.sql import functions as F
-
     from flink_helloworld_spark.operators.similarity import hyperplane_bucket
 
     incidence = stream.select(
@@ -1208,7 +1182,7 @@ def streaming_embedding_dedup_banded(
         ),
         outputStructType=_LSH_CLAIM_OUT,
         outputMode="append",
-        timeMode="none" if state_ttl_ms is None else "processingTime",
+        timeMode=_time_mode(state_ttl_ms),
     )
     verdicts = claims.groupBy("doc_id").transformWithStateInPandas(
         DocVerdictProcessor(
@@ -1294,10 +1268,7 @@ class VerifiedBucketClaimProcessor(StatefulProcessor):
             else StructField("owner_vec", ArrayType(DoubleType()))
         )
         schema = StructType([StructField("owner_id", LongType()), vec_field])
-        if self._ttl_ms is not None:
-            self._owner = handle.getValueState("owner", schema, self._ttl_ms)
-        else:
-            self._owner = handle.getValueState("owner", schema)
+        self._owner = handle.getValueState("owner", schema, self._ttl_ms)
 
     def _encode(self, vec) -> bytes:
         """SQ8-encode one vector to ``dims`` bytes — sq_quantize's
@@ -1437,8 +1408,6 @@ def streaming_embedding_dedup_verified(
     batch twin = n_bands − n_first (parity-pinned under id-monotone
     arrival, the in-order contract of every gate here).
     """
-    from pyspark.sql import functions as F
-
     from flink_helloworld_spark.operators.similarity import hyperplane_bucket
 
     incidence = stream.select(
@@ -1474,7 +1443,7 @@ def streaming_embedding_dedup_verified(
         ),
         outputStructType=_LSH_CLAIM_OUT,
         outputMode="append",
-        timeMode="none" if state_ttl_ms is None else "processingTime",
+        timeMode=_time_mode(state_ttl_ms),
     )
     verdicts = claims.groupBy("doc_id").transformWithStateInPandas(
         DocVerdictProcessor(
@@ -1514,8 +1483,6 @@ def streaming_near_dedup_front(
     Output is doc-for-doc the sequential composition of the three batch
     rules under the in-order contract (t: test_streaming_properties).
     """
-    from pyspark.sql import functions as F
-
     from flink_helloworld_spark.operators.text import _words
 
     ws = _words(F.col(text_col))
@@ -1660,8 +1627,6 @@ def streaming_heavy_hitters(
     instead of probabilistic ones, and O(n_buckets × capacity) state
     instead of a second pass.
     """
-    from pyspark.sql import functions as F
-
     # null items carry no count (COUNT semantics, same as the KMV twin's
     # isNotNull gate) — letting them through would inflate n_seen while
     # value_counts() drops NaN, breaking the exact-under-capacity contract
@@ -1706,8 +1671,9 @@ class KmvDistinctProcessor(StatefulProcessor):
     full batch parity, the reservoir-twin contract.
 
     The upstream column expression computes the SAME md5-derived 60-bit
-    hash as the batch operator (``rollups._h60``), so estimates (the
-    (k-1)/(kth_min/2^60) estimator, exact below k) agree exactly.
+    hash as the batch operator (``functions.md5_prefix_long``), so
+    estimates (the (k-1)/(kth_min/2^60) estimator, exact below k) agree
+    exactly.
 
     Emission: each batch re-emits the key's current sketch summary
     stamped with n_seen; consumers take the max-n_seen row per key.
@@ -1776,13 +1742,9 @@ def streaming_kmv_distinct(
     under-k exactness) with O(k) state per key. The windowless
     approx-COUNT-DISTINCT a live ingest dashboard needs without holding
     the value set."""
-    from pyspark.sql import functions as F
-
-    from flink_helloworld_spark.operators.rollups import _h60
-
     src = stream.where(F.col(value_col).isNotNull()).select(
         F.col(group_col).cast("string").alias("k"),
-        _h60(F.col(value_col).cast("string")).alias("h"),
+        md5_prefix_long(F.col(value_col).cast("string")).alias("h"),
     )
     return src.groupBy("k").transformWithStateInPandas(
         KmvDistinctProcessor(k),
@@ -1825,14 +1787,9 @@ class PostingAppendProcessor(StatefulProcessor):
         self._ttl_ms = ttl_ms
 
     def init(self, handle: StatefulProcessorHandle) -> None:
-        if self._ttl_ms is not None:
-            self._seen = handle.getMapState(
-                "members", _IVF_MEMBER_KEY, _IVF_MEMBER_VAL, self._ttl_ms
-            )
-        else:
-            self._seen = handle.getMapState(
-                "members", _IVF_MEMBER_KEY, _IVF_MEMBER_VAL
-            )
+        self._seen = handle.getMapState(
+            "members", _IVF_MEMBER_KEY, _IVF_MEMBER_VAL, self._ttl_ms
+        )
 
     def handleInputRows(
         self, key, rows: Iterator[pd.DataFrame], timerValues
@@ -1890,8 +1847,6 @@ def streaming_ivf_ingest(
     posting rows; MapState holds one long key per distinct posted
     member — flat under redelivery, linear in distinct ingest."""
     import numpy as np
-    from pyspark.sql import functions as F
-
     from flink_helloworld_spark.operators.similarity import (
         collect_ivf_quantizer,
         route_frozen_np,
@@ -1928,7 +1883,7 @@ def streaming_ivf_ingest(
         PostingAppendProcessor(state_ttl_ms),
         outputStructType=IVF_POSTING_OUTPUT,
         outputMode="append",
-        timeMode="none" if state_ttl_ms is None else "processingTime",
+        timeMode=_time_mode(state_ttl_ms),
     )
 
 
@@ -1970,8 +1925,6 @@ def streaming_ivf_delete(
     deleted member forever (``state_ttl_ms`` bounds the horizon; a
     post-expiry re-delete re-emits a tombstone, and compaction folds
     duplicates away)."""
-    from pyspark.sql import functions as F
-
     from flink_helloworld_spark.operators.similarity import live_postings
 
     mvec_t = postings.schema["mvec"].dataType
@@ -1993,7 +1946,7 @@ def streaming_ivf_delete(
         PostingAppendProcessor(state_ttl_ms),
         outputStructType=IVF_POSTING_OUTPUT,
         outputMode="append",
-        timeMode="none" if state_ttl_ms is None else "processingTime",
+        timeMode=_time_mode(state_ttl_ms),
     )
 
 
@@ -2031,12 +1984,7 @@ class DocFirstArrivalProcessor(StatefulProcessor):
         self._ttl_ms = ttl_ms
 
     def init(self, handle: StatefulProcessorHandle) -> None:
-        if self._ttl_ms is not None:
-            self._seen = handle.getValueState(
-                "seen", _DOC_SEEN_STATE, self._ttl_ms
-            )
-        else:
-            self._seen = handle.getValueState("seen", _DOC_SEEN_STATE)
+        self._seen = handle.getValueState("seen", _DOC_SEEN_STATE, self._ttl_ms)
 
     def handleInputRows(
         self, key, rows: Iterator[pd.DataFrame], timerValues
@@ -2088,8 +2036,6 @@ def streaming_postings_ingest(
     consumer composes with no other change. State: one flag per
     distinct doc (TTL-bounded); the postings themselves ride the
     emitted rows, never state."""
-    from pyspark.sql import functions as F
-
     src = stream.select(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).cast("string").alias("text"),
@@ -2098,7 +2044,7 @@ def streaming_postings_ingest(
         DocFirstArrivalProcessor("postings", state_ttl_ms),
         outputStructType=TEXT_POSTING_OUTPUT,
         outputMode="append",
-        timeMode="none" if state_ttl_ms is None else "processingTime",
+        timeMode=_time_mode(state_ttl_ms),
     )
 
 
@@ -2114,14 +2060,12 @@ def streaming_postings_delete(
     exactly-once here is a SIZE guarantee (the side table stays
     delta-sized under redelivery), not a correctness requirement —
     the same division of labor as the ivf tombstone/compaction pair."""
-    from pyspark.sql import functions as F
-
     src = stream.select(F.col(id_col).cast("long").alias("doc_id"))
     return src.groupBy("doc_id").transformWithStateInPandas(
         DocFirstArrivalProcessor("delete", state_ttl_ms),
         outputStructType=TEXT_DELETE_OUTPUT,
         outputMode="append",
-        timeMode="none" if state_ttl_ms is None else "processingTime",
+        timeMode=_time_mode(state_ttl_ms),
     )
 
 
@@ -2343,8 +2287,6 @@ def streaming_rate_anomaly(
     beyond the ``max_gap_buckets`` dense-fill horizon — split with
     ``out.where("channel = 'main'")`` / ``.where("channel != 'main'")``
     exactly like the window family's sideOutputLateData."""
-    from pyspark.sql import functions as F
-
     from flink_helloworld_spark.functions import epoch_millis
 
     tsm = epoch_millis(time_col)

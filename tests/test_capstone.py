@@ -189,13 +189,13 @@ def test_streaming_capstone_two_fused_stateful_stages_one_query(spark):
     """The reference's single-job multi-stage topology
     (StateTest.java:639-872) without the parquet hop: route-link facts
     chain through TWO buffer-until-dim stages (CEM dim, then order dim)
-    fused into ONE applyInPandasWithState — one streaming query, no
+    fused into ONE transformWithState operator — one streaming query, no
     intermediate sink, typed (timestamp) dim state crossing batches."""
     import pandas as pd
     import shutil
 
     from flink_helloworld_spark.plans import explain_str
-    from flink_helloworld_spark.streaming.chain import chain_stateful_join
+    from flink_helloworld_spark.streaming.tws import chain_stateful_join
 
     workdir = tempfile.mkdtemp(prefix="chain-")
     shutil.rmtree(workdir, ignore_errors=True)
@@ -247,7 +247,7 @@ def test_streaming_capstone_two_fused_stateful_stages_one_query(spark):
     )
     # ONE stateful operator in the whole query — fused, not staged
     plan = explain_str(chained, "simple")
-    assert plan.count("FlatMapGroupsInPandasWithState") == 1
+    assert plan.count("TransformWithStateIn") == 1
     rows = run_available_now(chained, "chain_capstone")
     got = sorted(
         (r.package_code, r.site_name, r.order_code, r.order_create_date) for r in rows
@@ -266,13 +266,13 @@ def test_streaming_capstone_full_topology_minimum_queries(spark):
     branch (keyed by order_id — the one place Flink itself re-keys) runs
     as its own stateful query into a durable hop; everything keyed by
     waybill_code (CEM dim + route facts + order-branch result) runs as
-    ONE fused applyInPandasWithState via chain_stateful_join. Two
+    ONE fused stateful operator via chain_stateful_join. Two
     queries total, one stateful operator each."""
     import shutil
 
     import pandas as pd
 
-    from flink_helloworld_spark.streaming.chain import chain_stateful_join
+    from flink_helloworld_spark.streaming.tws import chain_stateful_join
 
     n = 10
 
@@ -390,10 +390,10 @@ def test_streaming_capstone_full_topology_minimum_queries(spark):
 
 def test_streaming_capstone_two_stages_via_parquet_hop(spark):
     """Multi-stage stateful streaming (the 4-stage reference capstone
-    shape): Spark forbids two applyInPandasWithState ops in one query,
-    so stage 1 (route ⋈ CEM) lands in a parquet hop that stage 2
-    (⋈ order branch) streams from — the documented staging pattern,
-    exercised end-to-end."""
+    shape) staged through a durable hop: stage 1 (route ⋈ CEM) lands in
+    a parquet hop that stage 2 (⋈ order branch) streams from as a
+    second query — the staging pattern for stages run as separate
+    jobs, exercised end-to-end."""
     n = 10
     import pandas as pd
 

@@ -191,7 +191,7 @@ def test_streaming_kmv_matches_batch_recompute(spark):
     batches must equal the batch operator recomputed over ALL rows —
     bit-identical kth_min and estimate, not approximately."""
     from flink_helloworld_spark.operators.rollups import kmv_distinct
-    from flink_helloworld_spark.streaming.jobs import streaming_kmv_distinct_job
+    from flink_helloworld_spark.streaming.tws import streaming_kmv_distinct
 
     workdir = tempfile.mkdtemp(prefix="kmv-stream-")
     batches = [
@@ -212,14 +212,18 @@ def test_streaming_kmv_matches_batch_recompute(spark):
         .parquet(workdir)
     )
     out = run_available_now(
-        streaming_kmv_distinct_job(stream, "event_type", "user_id", k=16),
+        streaming_kmv_distinct(stream, "event_type", "user_id", k=16),
         "kmv_stream",
-        output_mode="update",
     )
-    # update mode: last emission per key is the final sketch
-    final = {}
+    # each touched batch re-emits the sketch: the max-n_seen row per key
+    # is the final one
+    latest = {}
     for r in out:
-        final[r.event_type] = (r.kth_min, r.n_kept, r.distinct_estimate)
+        if r.k not in latest or r.n_seen > latest[r.k].n_seen:
+            latest[r.k] = r
+    final = {
+        k: (r.kth_min, r.n_kept, r.distinct_estimate) for k, r in latest.items()
+    }
     all_rows = [r for b in batches for r in b]
     batch_df = spark.createDataFrame(all_rows, "event_type string, user_id string")
     expect = {
@@ -635,8 +639,8 @@ def test_streaming_corpus_manifest_matches_batch_survivor_manifest(spark):
     if not ensure_protobuf():
         pytest.skip("protobuf unavailable")
     from flink_helloworld_spark.operators.layout import shard_manifest
-    from flink_helloworld_spark.streaming.jobs import (
-        streaming_corpus_manifest_job,
+    from flink_helloworld_spark.streaming.tws import (
+        streaming_corpus_manifest_tws,
     )
 
     # mean word length must sit in the Gopher band [3, 10]
@@ -660,7 +664,7 @@ def test_streaming_corpus_manifest_matches_batch_survivor_manifest(spark):
         .parquet(workdir)
     )
     out = run_available_now(
-        streaming_corpus_manifest_job(stream, shards=4),
+        streaming_corpus_manifest_tws(stream, shards=4),
         "cm_stream",
     )
     final = {}
@@ -693,8 +697,8 @@ def test_streaming_corpus_manifest_recovers_both_states_from_checkpoint(spark):
     if not ensure_protobuf():
         pytest.skip("protobuf unavailable")
     from flink_helloworld_spark.operators.layout import shard_manifest
-    from flink_helloworld_spark.streaming.jobs import (
-        streaming_corpus_manifest_job,
+    from flink_helloworld_spark.streaming.tws import (
+        streaming_corpus_manifest_tws,
     )
 
     good = "alpha bravo charlie delta echo foxtrot golf hotel india"
@@ -712,7 +716,7 @@ def test_streaming_corpus_manifest_recovers_both_states_from_checkpoint(spark):
             workdir
         )
         q = (
-            streaming_corpus_manifest_job(stream, shards=4)
+            streaming_corpus_manifest_tws(stream, shards=4)
             .writeStream.format("parquet")
             .option("path", out_dir)
             .outputMode("append")

@@ -142,17 +142,15 @@ def test_as_of_join_inner_drops_unmatched(spark):
 
 
 def test_transform_with_state_rolling_sum(spark):
-    """The applyInPandasWithState → transformWithStateInPandas port
-    produces identical per-event rolling sums."""
-    # transformWithStateInPandas needs protobuf at runtime (absent in
-    # this container) — the module is the documented upgrade path and
-    # this test runs wherever protobuf exists
+    """The transformWithStateInPandas rolling sum emits one running total
+    per input row, in seq order, across one-row micro-batches."""
+    # the transformWithState worker needs protobuf at runtime
     pytest.importorskip("google.protobuf")
     import os, time
     import pandas as pd
 
     from flink_helloworld_spark.streaming.replay import run_available_now
-    from flink_helloworld_spark.streaming.tws import rolling_sum_tws
+    from flink_helloworld_spark.streaming.tws import rolling_sum_stream
 
     workdir = tempfile.mkdtemp(prefix="tws-")
     rows = [("a", 0, 10.0), ("a", 1, 5.0), ("b", 2, 7.0), ("a", 3, 1.0)]
@@ -166,7 +164,7 @@ def test_transform_with_state_rolling_sum(spark):
         .option("maxFilesPerTrigger", "1")
         .parquet(workdir)
     )
-    out = run_available_now(rolling_sum_tws(stream), "tws_rolling")
+    out = run_available_now(rolling_sum_stream(stream, "k", "v", "seq"), "tws_rolling")
     got = sorted((r.k, r.running_total) for r in out)
     assert got == [("a", 10.0), ("a", 15.0), ("a", 16.0), ("b", 7.0)]
 

@@ -25,6 +25,7 @@ from flink_helloworld_spark.streaming.replay import (
     run_available_now,
     write_script,
 )
+from flink_helloworld_spark.streaming.tws import rolling_sum_stream
 
 # EventTimeTest.java:187-210 — tumbling 3 s, no allowed lateness
 LATE_SCRIPT = [
@@ -119,7 +120,7 @@ def test_rolling_sum_stream_per_event_emission(spark):
     script = [Step("a", 10, 1000), Step("a", 5, 2000), Step("b", 7, 1500), Step("a", 1, 3000)]
     rows = _replay(
         spark, script, "rolling_stream",
-        lambda s: ST.rolling_sum_stream(s.drop("event_time"), "k", "v", "seq"),
+        lambda s: rolling_sum_stream(s.drop("event_time"), "k", "v", "seq"),
     )
     got = sorted((r.k, r.running_total) for r in rows)
     assert got == [("a", 10.0), ("a", 15.0), ("a", 16.0), ("b", 7.0)]
@@ -217,19 +218,19 @@ def test_lookup_enrich_stream_static(spark, sf_dir):
 
 def test_state_codec_round_trips_types():
     """ADVICE r1: dim and buffer share one type-aware codec — typed values
-    must come back as their original types, not strings."""
+    must come back as their original types, not strings. Round-trips go
+    through JSON text, as the chain-join state does."""
     import datetime
+    import json
     from decimal import Decimal
 
     import numpy as np
     import pandas as pd
 
-    from flink_helloworld_spark.streaming.coflatmap import (
-        decode_record,
-        decode_records,
-        encode_record,
-        encode_records,
-    )
+    from flink_helloworld_spark.streaming.coflatmap import _dec, _enc
+
+    def round_trip(v):
+        return _dec(json.loads(json.dumps(_enc(v))))
 
     rec = {
         "ts": pd.Timestamp("2024-03-01 12:30:45.123456"),
@@ -244,7 +245,7 @@ def test_state_codec_round_trips_types():
         "none": None,
         "nat": pd.NaT,
     }
-    out = decode_record(encode_record(rec))
+    out = round_trip(rec)
     assert out["ts"] == rec["ts"] and isinstance(out["ts"], pd.Timestamp)
     assert out["date"] == rec["date"] and isinstance(out["date"], datetime.date)
     assert out["dec"] == rec["dec"] and isinstance(out["dec"], Decimal)
@@ -253,8 +254,8 @@ def test_state_codec_round_trips_types():
     assert out["m"] == {"fee": Decimal("0.5")}
     assert out["s"] == "plain" and out["i"] == 7 and out["f"] == 1.5
     assert out["none"] is None and out["nat"] is None  # NaT → null
-    assert decode_record(None) is None
-    assert decode_records(encode_records([rec]))[0]["dec"] == Decimal("12.34")
+    assert round_trip(None) is None
+    assert round_trip([rec])[0]["dec"] == Decimal("12.34")
 
 
 def test_co_flat_map_join_typed_columns_cross_batches(spark):

@@ -339,7 +339,7 @@ def test_rolling_sum_correct_across_arrow_chunk_splits(spark):
     ``arrow.maxRecordsPerBatch`` forced to 4, a single key's 24-row
     micro-batch arrives as SIX chunks; out-of-seq rows across chunk
     boundaries must still produce the exact in-seq running totals."""
-    from flink_helloworld_spark.streaming.stateful import rolling_sum_stream
+    from flink_helloworld_spark.streaming.tws import rolling_sum_stream
 
     rng = random.Random(99)
     vals = [float(rng.randint(1, 50)) for _ in range(24)]
@@ -381,7 +381,7 @@ def test_tws_state_resumes_from_checkpoint_across_restarts(spark):
 
     if not ensure_protobuf():
         _pytest.skip("protobuf unavailable")
-    from flink_helloworld_spark.streaming.tws import rolling_sum_tws
+    from flink_helloworld_spark.streaming.tws import rolling_sum_stream
 
     workdir = tempfile.mkdtemp(prefix="tws-resume-in-")
     out_dir = tempfile.mkdtemp(prefix="tws-resume-out-")
@@ -397,7 +397,7 @@ def test_tws_state_resumes_from_checkpoint_across_restarts(spark):
             workdir
         )
         q = (
-            rolling_sum_tws(raw)
+            rolling_sum_stream(raw, "k", "v", "seq")
             .writeStream.format("parquet")
             .option("path", out_dir)
             .outputMode("append")

@@ -101,13 +101,13 @@ def run_variant(name: str) -> None:
     if name == "stateless":
         from pyspark.sql import functions as F
 
-        from flink_helloworld_spark.operators.rollups import _h60
+        from flink_helloworld_spark.functions import md5_prefix_long
 
         # same projection the TWS path computes upstream, then an
         # Arrow mapInPandas stage so a Python worker runs per task -
         # but no state store and no TWS runner
         src = raw.select(
-            F.col("g").alias("k"), _h60(F.col("val")).alias("h")
+            F.col("g").alias("k"), md5_prefix_long(F.col("val")).alias("h")
         )
 
         def ident(batches):
