@@ -32,7 +32,7 @@ from ._cache import _SHARED_CACHES, release_shared_caches, share  # noqa: F401
 # the ENGINE-WIDE tokenization contract lives in text._words; dedup
 # signatures, classifier features, and text stats are oracle-pinned to
 # agree, so there is exactly one definition to change
-from flink_helloworld_spark.operators.text import _words  # noqa: E402,F401
+from flink_helloworld_spark.operators.text import _words, gopher_core_gate  # noqa: E402,F401
 
 
 def shingles(text: Column, n: int = 3) -> Column:
@@ -586,12 +586,7 @@ def near_dedup_front(
     """
     from pyspark.sql import Window
 
-    ws = _words(F.col(text_col))
-    n_words = F.size(ws)
-    mean_wlen = (F.length(text_col) - (n_words - 1)).cast("double") / F.nullif(
-        n_words.cast("double"), F.lit(0.0)
-    )
-    gated = docs.where((n_words >= 5) & (mean_wlen >= 3.0) & (mean_wlen <= 10.0))
+    gated = docs.where(gopher_core_gate(F.col(text_col)))
     verdicts = lsh_first_arrival(
         gated, text_col, num_hashes, bands, shingle_n
     ).where(F.col("kept"))

@@ -74,18 +74,15 @@ def zorder_layout_stats(
     )
 
 
-def shard_tagged(
-    docs: DataFrame,
-    shards: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def shard_tag_columns(
+    shards: int, text_col: str = "text", id_col: str = "doc_id"
+) -> list[Column]:
     """The ONE definition of the manifest hash recipe, shared by the
-    batch operator and its streaming twin (their contract is a
+    batch operator and its streaming twins (their contract is a
     bit-identical manifest, so the shard key, token rule, and
-    fingerprint input must never drift apart): (shard_id, _id, _tok,
-    _fp) per document, where shard_id = md5('shard:'||id) mod shards
-    and _fp = 60-bit md5 of 'id:text'."""
+    fingerprint input must never drift apart): (shard_id, doc_id, tok,
+    fp) per document, where shard_id = md5('shard:'||id) mod shards and
+    fp = 60-bit md5 of 'id:text'."""
     from flink_helloworld_spark.functions import md5_prefix_long
     from flink_helloworld_spark.operators.text import _words
 
@@ -98,12 +95,12 @@ def shard_tagged(
     doc_fp = md5_prefix_long(
         F.concat(F.col(id_col).cast("string"), F.lit(":"), F.col(text_col))
     )
-    return docs.select(
+    return [
         sid.alias("shard_id"),
-        F.col(id_col).alias("_id"),
-        F.size(_words(F.col(text_col))).cast("long").alias("_tok"),
-        doc_fp.alias("_fp"),
-    )
+        F.col(id_col).alias("doc_id"),
+        F.size(_words(F.col(text_col))).cast("long").alias("tok"),
+        doc_fp.alias("fp"),
+    ]
 
 
 def training_order(
@@ -179,14 +176,14 @@ def shard_manifest(
     fingerprint).
     """
     return (
-        shard_tagged(docs, shards, text_col=text_col, id_col=id_col)
+        docs.select(*shard_tag_columns(shards, text_col, id_col))
         .groupBy("shard_id")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
-            F.sum("_tok").alias("total_tokens"),
-            F.min("_id").alias("min_id"),
-            F.max("_id").alias("max_id"),
-            F.bit_xor("_fp").alias("fingerprint"),
+            F.sum("tok").alias("total_tokens"),
+            F.min("doc_id").alias("min_id"),
+            F.max("doc_id").alias("max_id"),
+            F.bit_xor("fp").alias("fingerprint"),
         )
     )
 

@@ -32,6 +32,18 @@ def _words(text: Column) -> Column:
     return F.filter(F.split(text, " "), lambda w: w != "")
 
 
+def gopher_core_gate(text: Column) -> Column:
+    """The cheap core of ``gopher_rules`` as one predicate: at least 5
+    words and a mean word length in [3, 10]. The ONE definition of the
+    stateless quality gate the streaming ingest fronts run before any
+    state is paid, and of their batch twin's gate."""
+    n_words = F.size(_words(text))
+    mean_wlen = (F.length(text) - (n_words - 1)).cast("double") / F.nullif(
+        n_words.cast("double"), F.lit(0.0)
+    )
+    return (n_words >= 5) & (mean_wlen >= 3.0) & (mean_wlen <= 10.0)
+
+
 def token_stats(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Token counting: whitespace tokens + BPE-ish regex pieces + chars."""
     ws = _words(F.col(text_col))

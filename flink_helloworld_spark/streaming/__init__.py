@@ -4,8 +4,9 @@ Keyed state runs on ``transformWithStateInPandas`` (``tws.py``): typed
 Value/List/Map state, processing-time TTL, timers, and operators that
 chain across re-keys in one query — Spark's counterpart of Flink's
 keyed-state and timer API. Arrow-batched, partition-parallel, state in
-the RocksDB store. A few single-stage operators (count windows, late-row
-side output, CEP, the filter funnel) still use ``applyInPandasWithState``.
+the RocksDB store. It is the only keyed-state API: every per-record
+fold (rolling sum, count windows, late-row side output, CEP, domain
+cap) is a step function on the one kernel, ``tws.FoldProcessor``.
 """
 
 from flink_helloworld_spark.streaming._util import (  # noqa: F401

@@ -71,10 +71,10 @@ def apply_stateful_partitions(
 
 def concat_chunks(batches: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
     """Merge a per-key Arrow chunk iterator into ONE frame so callers
-    sort the whole micro-batch once. applyInPandasWithState and
-    transformWithState hand a key's rows as multiple pdfs whenever they
-    exceed ``spark.sql.execution.arrow.maxRecordsPerBatch`` (default
-    10k); sorting each chunk independently would leave cross-chunk order
+    sort the whole micro-batch once. transformWithState hands a key's
+    rows as multiple pdfs whenever they exceed
+    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (default 10k);
+    sorting each chunk independently would leave cross-chunk order
     partitioning-dependent — exactly what the seq/ts columns exist to
     prevent. Returns None for an empty iterator."""
     chunks = [pdf for pdf in batches if len(pdf)]

@@ -22,16 +22,16 @@ matches at end of input, as the golden replays do for watermarks.
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
-from flink_helloworld_spark.streaming._util import concat_chunks
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
+
+from flink_helloworld_spark.streaming.tws import fold_by_key
+
+# one pending A: its id/ms, plus b/bt once its first B has been seen and
+# the entry awaits ms-close confirmation (null until then)
+_PENDING = StructType([StructField(n, LongType()) for n in ("a", "at", "b", "bt")])
+_STATE = StructType([StructField("pending", ArrayType(_PENDING))])
 
 
 def followed_by_within_stream(
@@ -49,91 +49,49 @@ def followed_by_within_stream(
     ``id_col`` (unique, orders same-ms events), ``tsm_col`` (event time
     ms), ``type_col``. Emits (key, a_id, b_id, a_ts_ms, b_ts_ms, lag_ms)
     per match, in arrival order."""
-    key_type = df.schema[key].dataType
+    longs = ("a_id", "b_id", "a_ts_ms", "b_ts_ms", "lag_ms")
     out_schema = StructType(
-        [
-            StructField(key, key_type),
-            StructField("a_id", LongType()),
-            StructField("b_id", LongType()),
-            StructField("a_ts_ms", LongType()),
-            StructField("b_ts_ms", LongType()),
-            StructField("lag_ms", LongType()),
-        ]
+        [StructField("key", df.schema[key].dataType)]
+        + [StructField(n, LongType()) for n in longs]
     )
-    # pending A entries as JSON: [{a, at, b, bt}] — b/bt set once the
-    # first B has been seen and the entry awaits ms-close confirmation
-    state_schema = StructType([StructField("buf", StringType())])
 
-    def fn(
-        k: Any, batches: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        pending: list[dict] = (
-            json.loads(state.get[0]) if state.exists else []
-        )
-        out: list[dict] = []
+    def step(state, k, rec):
+        tsm, etype, eid = rec["tsm"], rec["type"], rec["id"]
+        # emit B-bound entries whose ms group has closed un-blocked, and
+        # expire unbound As whose window has passed (no future event at
+        # tsm >= now can match them) — this is what keeps state
+        # O(pending patterns) instead of O(stream)
+        out, pending = [], []
+        for a, at, b, bt in state[0]:
+            if bt is None and tsm - at > within_ms:
+                continue
+            if bt is not None and tsm > bt:
+                out.append((k, a, b, at, bt, bt - at))
+            else:
+                pending.append((a, at, b, bt))
+        if not_between is not None and etype == not_between:
+            # kills unresolved As AND same-ms B-bound entries — every
+            # surviving bound entry has bt == tsm (events arrive in ts
+            # order and earlier-bt entries were just emitted)
+            pending = []
+        elif etype == second:
+            # every unbound A left is inside the window (the loop above
+            # expired the rest), so this B binds it
+            pending = [
+                (a, at, eid, tsm) if bt is None else (a, at, b, bt)
+                for a, at, b, bt in pending
+            ]
+        if etype == first:
+            pending.append((eid, tsm, None, None))
+        return (pending,), out
 
-        def finalize_closed(now_tsm: int) -> None:
-            # emit B-bound entries whose ms group has closed un-blocked,
-            # and expire unbound As whose window has passed (no future
-            # event at tsm >= now can match them) — this is what keeps
-            # state O(pending patterns) instead of O(stream)
-            still = []
-            for e in pending:
-                if e.get("bt") is None and now_tsm - e["at"] > within_ms:
-                    continue
-                if e.get("bt") is not None and now_tsm > e["bt"]:
-                    out.append(
-                        {
-                            key: k[0],
-                            "a_id": e["a"],
-                            "b_id": e["b"],
-                            "a_ts_ms": e["at"],
-                            "b_ts_ms": e["bt"],
-                            "lag_ms": e["bt"] - e["at"],
-                        }
-                    )
-                else:
-                    still.append(e)
-            pending[:] = still
-
-        batch = concat_chunks(batches)
-        if batch is not None:
-            for rec in batch.sort_values([tsm_col, id_col]).to_dict("records"):
-                tsm, etype = int(rec[tsm_col]), rec[type_col]
-                finalize_closed(tsm)
-                if not_between is not None and etype == not_between:
-                    # kills unresolved As AND same-ms B-bound entries —
-                    # after finalize_closed(tsm), every surviving bound
-                    # entry has bt == tsm (events arrive in ts order and
-                    # earlier-bt entries were just emitted), so the kill
-                    # is a full clear
-                    pending.clear()
-                elif etype == second:
-                    nxt = []
-                    for e in pending:
-                        if e.get("bt") is None:
-                            if tsm - e["at"] <= within_ms:
-                                e["b"], e["bt"] = int(rec[id_col]), tsm
-                                nxt.append(e)
-                            # first B out of window: A can never match
-                        else:
-                            nxt.append(e)
-                    pending[:] = nxt
-                if etype == first:
-                    pending.append({"a": int(rec[id_col]), "at": tsm})
-        if pending:
-            state.update((json.dumps(pending),))
-        elif state.exists:
-            # drop the key's state slot entirely once nothing is pending:
-            # state stays O(keys with open patterns), not O(keys ever
-            # seen) — the bounded-state discipline the docstring promises
-            state.remove()
-        yield pd.DataFrame(out, columns=[f.name for f in out_schema.fields])
-
-    return (
-        df.select(key, id_col, tsm_col, type_col)
-        .groupBy(key)
-        .applyInPandasWithState(
-            fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-        )
+    # fixed internal names: the processor never sees a caller's "_"-led name
+    src = df.select(
+        F.col(key).alias("key"),
+        F.col(id_col).cast("long").alias("id"),
+        F.col(tsm_col).cast("long").alias("tsm"),
+        F.col(type_col).alias("type"),
     )
+    return fold_by_key(
+        src, "key", _STATE, ([],), ["tsm", "id"], step, out_schema
+    ).withColumnRenamed("key", key)

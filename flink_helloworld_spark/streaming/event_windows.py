@@ -18,15 +18,8 @@ Maps the reference's event-time machinery onto Structured Streaming:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
-from flink_helloworld_spark.streaming._util import concat_chunks
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     BooleanType,
     LongType,
@@ -36,6 +29,7 @@ from pyspark.sql.types import (
 )
 
 from flink_helloworld_spark.streaming.replay import WM_KEY
+from flink_helloworld_spark.streaming.tws import fold_by_key
 
 
 def tumbling_sum_stream(
@@ -155,29 +149,12 @@ def late_rows_stream(script_stream: DataFrame, window_ms: int, lateness_ms: int 
     a global pass-through, parallelism 1 like Flink's watermark tracking;
     real pipelines use Spark's own per-partition watermark instead)."""
 
-    def fn(key: Any, batches: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        (max_wm,) = state.get if state.exists else (-1,)
-        rows = []
-        batch = concat_chunks(batches)
-        if batch is not None:
-            for rec in batch.sort_values("seq").to_dict("records"):
-                if rec["k"] == WM_KEY:
-                    max_wm = max(max_wm, rec["event_ts_ms"])
-                    continue
-                w_end = (rec["event_ts_ms"] // window_ms + 1) * window_ms
-                rows.append(
-                    {
-                        "k": rec["k"],
-                        "v": rec["v"],
-                        "event_ts_ms": rec["event_ts_ms"],
-                        "is_late": w_end + lateness_ms <= max_wm,
-                    }
-                )
-        state.update((max_wm,))
-        yield pd.DataFrame(rows, columns=[f.name for f in LATE_SCHEMA.fields])
+    def step(state, _, rec):
+        if rec["k"] == WM_KEY:
+            return (max(state[0], rec["event_ts_ms"]),), []
+        w_end = (rec["event_ts_ms"] // window_ms + 1) * window_ms
+        late = w_end + lateness_ms <= state[0]
+        return state, [(rec["k"], rec["v"], rec["event_ts_ms"], late)]
 
-    return (
-        script_stream.withColumn("_g", F.lit(1))
-        .groupBy("_g")
-        .applyInPandasWithState(fn, LATE_SCHEMA, _LATE_STATE, "append", GroupStateTimeout.NoTimeout)
-    )
+    src = script_stream.select(F.lit(1).alias("g"), "k", "v", "event_ts_ms", "seq")
+    return fold_by_key(src, "g", _LATE_STATE, (-1,), "seq", step, LATE_SCHEMA)

@@ -306,20 +306,12 @@ def streaming_pretrain_front(
     callers route kept=true to the lake sink and the rest to an audit
     topic.
     """
-    from flink_helloworld_spark.operators.dedup import _words
+    from flink_helloworld_spark.operators.text import gopher_core_gate
     from flink_helloworld_spark.streaming.tws import streaming_domain_cap
 
-    # inline the cheap core of text.gopher_rules (word count + mean word
-    # length) — the batch op's full flag set stays a batch projection
-    ws = _words(F.col(text_col))
-    n_words = F.size(ws)
-    n_chars = F.length(text_col)
-    mean_wlen = (n_chars - (n_words - 1)).cast("double") / F.nullif(
-        n_words.cast("double"), F.lit(0.0)
-    )
-    gated = stream.where(
-        (n_words >= 5) & (mean_wlen >= 3.0) & (mean_wlen <= 10.0)
-    )
+    # the cheap core of text.gopher_rules — the batch op's full flag set
+    # stays a batch projection
+    gated = stream.where(gopher_core_gate(F.col(text_col)))
     if classifier_weights is not None:
         from flink_helloworld_spark.operators.classifier import (
             attach_quality_score,
@@ -372,24 +364,18 @@ def streaming_shard_manifest_job(
     is FIVE scalars per shard and the streaming manifest after any batch
     sequence equals the batch operator over everything ingested so far
     (asserted bit-identical in tests). The batch hash recipe
-    (``layout.shard_tagged``) feeds the one manifest fold,
+    (``layout.shard_tag_columns``) feeds the one manifest fold,
     ``tws.ManifestProcessor``. A restart replays to the same values
     from the checkpoint; a backfill engine can verify shard by shard
     without reading documents.
     """
-    from flink_helloworld_spark.operators.layout import shard_tagged
+    from flink_helloworld_spark.operators.layout import shard_tag_columns
     from flink_helloworld_spark.streaming.tws import (
         MANIFEST_OUTPUT,
         ManifestProcessor,
     )
 
-    # the transformWithState worker renames leading-underscore columns
-    tagged = shard_tagged(stream, shards, text_col=text_col, id_col=id_col).select(
-        "shard_id",
-        F.col("_id").alias("doc_id"),
-        F.col("_tok").alias("tok"),
-        F.col("_fp").alias("fp"),
-    )
+    tagged = stream.select(*shard_tag_columns(shards, text_col, id_col))
     return tagged.groupBy("shard_id").transformWithStateInPandas(
         ManifestProcessor(),
         outputStructType=MANIFEST_OUTPUT,
@@ -409,21 +395,12 @@ def streaming_filter_funnel_job(
 
     The funnel's algebra is purely additive (per document, each rule
     contributes 0/1 to its marginal-fail and cumulative-pass counters),
-    so state is THREE scalars per rule and the streaming funnel after
+    so it is a plain streaming aggregate — three counters per rule, no
+    Python worker — run in update mode, and the streaming funnel after
     any batch sequence equals the batch operator over everything
     ingested (asserted bit-identical in tests). The gopher projection
     itself is stateless and runs before any state is paid.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from flink_helloworld_spark.operators.text import (
         GOPHER_RULE_ORDER,
         gopher_rules,
@@ -445,42 +422,8 @@ def streaming_filter_funnel_job(
     contrib = flags.select(F.explode(F.array(*entries)).alias("s")).select(
         "s.*"
     )
-    out_schema = StructType(
-        [
-            StructField("stage", IntegerType()),
-            StructField("rule", StringType()),
-            StructField("n_docs", LongType()),
-            StructField("n_fail_alone", LongType()),
-            StructField("n_pass_cum", LongType()),
-        ]
-    )
-    state_schema = StructType(
-        [
-            StructField("n_docs", LongType()),
-            StructField("n_fail_alone", LongType()),
-            StructField("n_pass_cum", LongType()),
-        ]
-    )
-
-    def fn(key, batches, state: GroupState):
-        n, f, c = state.get if state.exists else (0, 0, 0)
-        for pdf in batches:
-            n += len(pdf)
-            f += int(pdf["fail"].sum())
-            c += int(pdf["cum"].sum())
-        state.update((n, f, c))
-        yield pd.DataFrame(
-            [
-                {
-                    "stage": key[0],
-                    "rule": key[1],
-                    "n_docs": n,
-                    "n_fail_alone": f,
-                    "n_pass_cum": c,
-                }
-            ]
-        )
-
-    return contrib.groupBy("stage", "rule").applyInPandasWithState(
-        fn, out_schema, state_schema, "update", GroupStateTimeout.NoTimeout
+    return contrib.groupBy("stage", "rule").agg(
+        F.count(F.lit(1)).alias("n_docs"),
+        F.sum("fail").alias("n_fail_alone"),
+        F.sum("cum").alias("n_pass_cum"),
     )

@@ -9,28 +9,24 @@ exact rolling sum, ``KeyedStream.sum``, is ``tws.rolling_sum_stream``):
 - ``count_trigger_evictor_stream``: GlobalWindows + CountTrigger(every) +
   CountEvictor(keep) (WindowTest.java:84).
 
-State per key is O(1) floats/counters (or O(keep) for the evictor) —
-bounded by construction, RocksDB-backed, TTL-able.
+Both are step functions on the one keyed fold, ``tws.value_fold``
+(transformWithState, typed ValueState). State per key is O(1)
+floats/counters (or O(keep) for the evictor) — bounded by construction,
+RocksDB-backed.
 """
 
 from __future__ import annotations
 
-import json
-from collections.abc import Iterator
-from typing import Any
-
-import pandas as pd
-
-from flink_helloworld_spark.streaming._util import concat_chunks
 from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
+    ArrayType,
     DoubleType,
     LongType,
-    StringType,
     StructField,
     StructType,
 )
+
+from flink_helloworld_spark.streaming.tws import value_fold
 
 
 def count_window_stream(
@@ -39,33 +35,27 @@ def count_window_stream(
     """Keyed count window: every n-th row per key fires the sum of the
     last n values; partial windows never fire
     (HelloWorldFlinkTest.java:99-103)."""
-    out_schema = StructType(
+    state_schema = StructType(
         [
-            StructField(key, df.schema[key].dataType),
-            StructField("bucket", LongType()),
-            StructField("window_sum", DoubleType()),
+            StructField("cnt", LongType()),
+            StructField("acc", DoubleType()),
+            StructField("fired", LongType()),
         ]
     )
-    state_schema = StructType(
-        [StructField("cnt", LongType()), StructField("acc", DoubleType()), StructField("fired", LongType())]
-    )
 
-    def fn(k: Any, batches: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        cnt, acc, fired = state.get if state.exists else (0, 0.0, 0)
-        rows = []
-        batch = concat_chunks(batches)
-        if batch is not None:
-            for rec in batch.sort_values(seq_col).to_dict("records"):
-                cnt += 1
-                acc = round(acc + rec[value], 9)
-                if cnt == n:
-                    rows.append({key: k[0], "bucket": fired, "window_sum": acc})
-                    cnt, acc, fired = 0, 0.0, fired + 1
-        state.update((cnt, acc, fired))
-        yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+    def step(state, k, rec):
+        cnt, acc, fired = state
+        cnt, acc = cnt + 1, round(acc + rec["v"], 9)
+        if cnt < n:
+            return (cnt, acc, fired), []
+        return (0, 0.0, fired + 1), [(k, fired, acc)]
 
-    return df.select(key, seq_col, value).groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    out_fields = [
+        StructField("bucket", LongType()),
+        StructField("window_sum", DoubleType()),
+    ]
+    return value_fold(
+        df, key, value, seq_col, state_schema, (0, 0.0, 0), step, out_fields
     )
 
 
@@ -76,33 +66,22 @@ def count_trigger_evictor_stream(
     `every`-th element per key, emit the sum of the trailing `keep`
     elements (WindowTest.java:84,181-186 — the evictor forces buffering,
     but only `keep` elements, so state stays O(keep))."""
-    out_schema = StructType(
+    state_schema = StructType(
         [
-            StructField(key, df.schema[key].dataType),
-            StructField("fire_seq", LongType()),
-            StructField("fired_sum", DoubleType()),
+            StructField("seen", LongType()),
+            StructField("tail", ArrayType(DoubleType())),
         ]
     )
-    state_schema = StructType(
-        [StructField("seen", LongType()), StructField("tail_json", StringType())]
-    )
 
-    def fn(k: Any, batches: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
-        seen, tail_json = state.get if state.exists else (0, "[]")
-        tail: list[float] = json.loads(tail_json)
-        rows = []
-        batch = concat_chunks(batches)
-        if batch is not None:
-            for rec in batch.sort_values(seq_col).to_dict("records"):
-                seen += 1
-                tail = (tail + [rec[value]])[-keep:]
-                if seen % every == 0:
-                    rows.append(
-                        {key: k[0], "fire_seq": seen, "fired_sum": round(sum(tail), 9)}
-                    )
-        state.update((seen, json.dumps(tail)))
-        yield pd.DataFrame(rows, columns=[f.name for f in out_schema.fields])
+    def step(state, k, rec):
+        seen, tail = state[0] + 1, [*state[1], rec["v"]][-keep:]
+        fired = [(k, seen, round(sum(tail), 9))] if seen % every == 0 else []
+        return (seen, tail), fired
 
-    return df.select(key, seq_col, value).groupBy(key).applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
+    out_fields = [
+        StructField("fire_seq", LongType()),
+        StructField("fired_sum", DoubleType()),
+    ]
+    return value_fold(
+        df, key, value, seq_col, state_schema, (0, []), step, out_fields
     )

@@ -2,13 +2,13 @@
 
 Spark 4's ``transformWithStateInPandas`` gives typed state handles
 (ValueState / ListState / MapState — the vocabulary of the reference's
-Flink keyed state, StateTest.java), per-state TTL and timers. Unlike
-``applyInPandasWithState``, these operators chain: stateful operators
-with different grouping keys run in ONE streaming query, with a plain
-shuffle at each re-key seam, like Flink's keyBy between operators. Every
-keyed-state join, running total, sketch and gate of the engine lives
-here, once; only the single-stage count windows, late-row side output,
-CEP and filter-funnel operators stay on ``applyInPandasWithState``.
+Flink keyed state, StateTest.java), per-state TTL and timers, and its
+operators chain: stateful operators with different grouping keys run in
+ONE streaming query, with a plain shuffle at each re-key seam, like
+Flink's keyBy between operators. It is the engine's one keyed-state
+API. Every keyed-state join, sketch and gate lives here, once, and
+every per-record fold — here and in ``stateful``, ``event_windows`` and
+``cep`` — is a step function on one kernel, ``FoldProcessor``.
 
 Runtime requirement: the Python worker speaks protobuf to the JVM, and
 the state store must be RocksDB. ``session.build_session`` vendors
@@ -19,7 +19,8 @@ provider, so every session it builds runs these operators.
 from __future__ import annotations
 
 import json
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -50,75 +51,126 @@ def _time_mode(ttl_ms: int | None) -> str:
     return "none" if ttl_ms is None else "processingTime"
 
 
-class RollingSumProcessor(StatefulProcessor):
-    """Per-event rolling sum (reference KeyedStream.sum,
-    HelloWorldFlinkTest.java:45) on typed ValueState: one output row per
-    input row carrying the key's running total, in ``seq`` order."""
+FoldStep = Callable[[tuple, Any, dict], tuple[tuple, list[tuple]]]
+
+
+class FoldProcessor(StatefulProcessor):
+    """The one per-record keyed fold. Each key's micro-batch rows, merged
+    across Arrow chunks and sorted by ``order``, pass one record at a
+    time through ``step(state, key, rec) -> (state, out_rows)``; the
+    state tuple (typed by ``state_schema``) lives in one ValueState
+    between batches. An absent state reads as ``initial``, so a key that
+    folds back to ``initial`` has its slot cleared rather than stored:
+    state is O(keys away from the start), e.g. CEP keys with open
+    patterns. ``out_rows`` are tuples in ``columns`` order."""
+
+    def __init__(
+        self,
+        state_schema: StructType,
+        initial: tuple,
+        order: str | list[str],
+        step: FoldStep,
+        columns: list[str],
+    ) -> None:
+        self._schema = state_schema
+        self._initial = initial
+        self._order = order
+        self._step = step
+        self._columns = columns
 
     def init(self, handle: StatefulProcessorHandle) -> None:
-        self._total = handle.getValueState(
-            "total", StructType([StructField("total", DoubleType())])
-        )
+        self._state = handle.getValueState("state", self._schema)
 
     def handleInputRows(
         self, key, rows: Iterator[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
-        (total,) = self._total.get() if self._total.exists() else (0.0,)
-        out = []
-        # Concatenate ALL Arrow chunks before sorting: a key whose batch
-        # exceeds arrow.maxRecordsPerBatch arrives as multiple pdfs, and
-        # per-chunk sorts would make ordering partitioning-dependent.
+        stored = self._state.get()
+        state = self._initial if stored is None else stored
+        out: list[tuple] = []
+        # one sort over ALL Arrow chunks: a key whose batch exceeds
+        # arrow.maxRecordsPerBatch arrives as several pdfs, and per-chunk
+        # sorts would make the fold order partitioning-dependent
         batch = _concat_chunks(rows)
         if batch is not None:
-            for rec in batch.sort_values("seq").to_dict("records"):
-                total = round(total + rec["v"], 9)
-                out.append(
-                    {"k": key[0], "seq": rec["seq"], "v": rec["v"], "running_total": total}
-                )
-        self._total.update((total,))
-        yield pd.DataFrame(out, columns=["k", "seq", "v", "running_total"])
+            for rec in batch.sort_values(self._order).to_dict("records"):
+                state, emitted = self._step(state, key[0], rec)
+                out.extend(emitted)
+        if state != self._initial:
+            self._state.update(state)
+        elif stored is not None:
+            self._state.clear()
+        yield pd.DataFrame(out, columns=self._columns)
 
     def close(self) -> None:
         pass
 
 
+def fold_by_key(
+    src: DataFrame,
+    key: str,
+    state_schema: StructType,
+    initial: tuple,
+    order: str | list[str],
+    step: FoldStep,
+    out_schema: StructType,
+) -> DataFrame:
+    """Group ``src`` by ``key`` and run ``step`` over every record on
+    ``FoldProcessor``. No column reaching the processor may start with
+    "_": the worker-side serializer renames such columns positionally."""
+    return src.groupBy(key).transformWithStateInPandas(
+        FoldProcessor(state_schema, initial, order, step, out_schema.fieldNames()),
+        outputStructType=out_schema,
+        outputMode="append",
+        timeMode="none",
+    )
+
+
+def value_fold(
+    df: DataFrame,
+    key: str,
+    value: str,
+    seq_col: str,
+    state_schema: StructType,
+    initial: tuple,
+    step: FoldStep,
+    out_fields: list[StructField],
+) -> DataFrame:
+    """``fold_by_key`` over (``key``, ``seq_col``, ``value`` as double)
+    in ``seq_col`` order: the rolling sum and the count windows. The
+    processor sees the fixed names k/seq/v, renamed back to the caller's
+    on the way out; output is ``key`` then ``out_fields``."""
+    src = df.select(
+        F.col(key).alias("k"),
+        F.col(seq_col).alias("seq"),
+        F.col(value).cast("double").alias("v"),
+    )
+    out_schema = StructType([StructField("k", df.schema[key].dataType), *out_fields])
+    return fold_by_key(
+        src, "k", state_schema, initial, "seq", step, out_schema
+    ).withColumnsRenamed({"k": key, "seq": seq_col, "v": value})
+
+
 def rolling_sum_stream(
     df: DataFrame, key: str, value: str, seq_col: str, out_value: str = "running_total"
 ) -> DataFrame:
-    """Exact per-event rolling sum: emits every input row with the
-    running per-key total at that point (arrival order = ``seq_col``).
+    """Exact per-event rolling sum (reference KeyedStream.sum,
+    HelloWorldFlinkTest.java:45): emits every input row with the running
+    per-key total at that point (arrival order = ``seq_col``).
     Output: ``key``, ``seq_col``, ``value`` (double), ``out_value``."""
-    out_schema = StructType(
-        [
-            StructField("k", df.schema[key].dataType),
-            StructField("seq", df.schema[seq_col].dataType),
-            StructField("v", DoubleType()),
-            StructField("running_total", DoubleType()),
-        ]
-    )
-    # fixed internal names: the processor's columns never collide with
-    # the caller's, and none starts with "_" (the worker-side serializer
-    # renames such columns positionally)
-    return (
-        df.select(
-            F.col(key).alias("k"),
-            F.col(seq_col).alias("seq"),
-            F.col(value).cast("double").alias("v"),
-        )
-        .groupBy("k")
-        .transformWithStateInPandas(
-            RollingSumProcessor(),
-            outputStructType=out_schema,
-            outputMode="append",
-            timeMode="none",
-        )
-        .select(
-            F.col("k").alias(key),
-            F.col("seq").alias(seq_col),
-            F.col("v").alias(value),
-            F.col("running_total").alias(out_value),
-        )
-    )
+
+    def step(state, k, rec):
+        total = round(state[0] + rec["v"], 9)
+        return (total,), [(k, rec["seq"], rec["v"], total)]
+
+    out_fields = [
+        StructField("seq", df.schema[seq_col].dataType),
+        StructField("v", DoubleType()),
+        StructField("running_total", DoubleType()),
+    ]
+    state_schema = StructType([StructField("total", DoubleType())])
+    return value_fold(
+        df, key, value, seq_col, state_schema, (0.0,), step, out_fields
+    ).withColumnRenamed("running_total", out_value)
 
 
 # --------------------------------------------------------------------------
@@ -479,44 +531,6 @@ DOMAIN_CAP_OUTPUT = StructType(
 _COUNT_STATE = StructType([StructField("n", LongType())])
 
 
-class DomainCapProcessor(StatefulProcessor):
-    """Streaming twin of ``sampling.domain_cap``: an unbounded ingest
-    can't rank a domain by md5 (the set is never complete), so the
-    streaming semantics are FIRST-ARRIVED-KEPT — one ValueState counter
-    per domain, every doc emitted with its arrival rank and a kept flag.
-    State is one long per domain: bounded by domain cardinality, not
-    corpus size."""
-
-    def __init__(self, cap: int) -> None:
-        self._cap = cap
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._n = handle.getValueState("n", _COUNT_STATE)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        (n,) = self._n.get() if self._n.exists() else (0,)
-        out = []
-        batch = _concat_chunks(rows)
-        if batch is not None:
-            for rec in batch.sort_values("seq").to_dict("records"):
-                n += 1
-                out.append(
-                    {
-                        "doc_id": rec["doc_id"],
-                        "source": key[0],
-                        "domain_rank": n,
-                        "kept": n <= self._cap,
-                    }
-                )
-        self._n.update((n,))
-        yield pd.DataFrame(out, columns=[f.name for f in DOMAIN_CAP_OUTPUT.fields])
-
-    def close(self) -> None:
-        pass
-
-
 def streaming_domain_cap(
     stream: DataFrame,
     cap: int,
@@ -524,19 +538,23 @@ def streaming_domain_cap(
     id_col: str = "doc_id",
     seq_col: str = "seq",
 ) -> DataFrame:
-    """Arrival-order per-domain cap over an unbounded stream; see
-    DomainCapProcessor for the batch-vs-streaming semantic difference."""
+    """Streaming twin of ``sampling.domain_cap``: an unbounded ingest
+    can't rank a domain by md5 (the set is never complete), so the
+    streaming semantics are FIRST-ARRIVED-KEPT — one counter per domain,
+    every doc emitted with its arrival rank and a kept flag. State is
+    one long per domain: bounded by domain cardinality, not corpus
+    size."""
+
+    def step(state, source, rec):
+        n = state[0] + 1
+        return (n,), [(rec["doc_id"], source, n, n <= cap)]
+
     src = stream.select(
         F.col(domain_col).alias("source"),
         F.col(id_col).alias("doc_id"),
         F.col(seq_col).alias("seq"),
     )
-    return src.groupBy("source").transformWithStateInPandas(
-        DomainCapProcessor(cap),
-        outputStructType=DOMAIN_CAP_OUTPUT,
-        outputMode="append",
-        timeMode="none",
-    )
+    return fold_by_key(src, "source", _COUNT_STATE, (0,), "seq", step, DOMAIN_CAP_OUTPUT)
 
 
 # --------------------------------------------------------------------------
@@ -796,32 +814,12 @@ def streaming_corpus_manifest_tws(
     never leaves its scan partition — both stateful exchanges carry four
     integers per doc. State: one long per distinct content + five longs
     per shard."""
-    from flink_helloworld_spark.operators.text import _words
+    from flink_helloworld_spark.operators.layout import shard_tag_columns
+    from flink_helloworld_spark.operators.text import gopher_core_gate
 
-    ws = _words(F.col(text_col))
-    n_words = F.size(ws)
-    n_chars = F.length(text_col)
-    mean_wlen = (n_chars - (n_words - 1)).cast("double") / F.nullif(
-        n_words.cast("double"), F.lit(0.0)
-    )
-    gated = stream.where(
-        (n_words >= 5) & (mean_wlen >= 3.0) & (mean_wlen <= 10.0)
-    )
-    tagged = gated.select(
+    tagged = stream.where(gopher_core_gate(F.col(text_col))).select(
         F.md5(F.col(text_col)).alias("content_hash"),
-        (
-            md5_prefix_long(
-                F.concat(F.lit("shard:"), F.col(id_col).cast("string"))
-            )
-            % shards
-        )
-        .cast("int")
-        .alias("shard_id"),
-        F.col(id_col).alias("doc_id"),
-        F.size(_words(F.col(text_col))).cast("long").alias("tok"),
-        md5_prefix_long(
-            F.concat(F.col(id_col).cast("string"), F.lit(":"), F.col(text_col))
-        ).alias("fp"),
+        *shard_tag_columns(shards, text_col, id_col),
     )
     deduped = tagged.groupBy("content_hash").transformWithStateInPandas(
         ContentDedupProcessor(),
@@ -1483,16 +1481,9 @@ def streaming_near_dedup_front(
     Output is doc-for-doc the sequential composition of the three batch
     rules under the in-order contract (t: test_streaming_properties).
     """
-    from flink_helloworld_spark.operators.text import _words
+    from flink_helloworld_spark.operators.text import gopher_core_gate
 
-    ws = _words(F.col(text_col))
-    n_words = F.size(ws)
-    mean_wlen = (F.length(text_col) - (n_words - 1)).cast("double") / F.nullif(
-        n_words.cast("double"), F.lit(0.0)
-    )
-    gated = stream.where(
-        (n_words >= 5) & (mean_wlen >= 3.0) & (mean_wlen <= 10.0)
-    )
+    gated = stream.where(gopher_core_gate(F.col(text_col)))
     verdicts = streaming_lsh_dedup(
         gated,
         text_col=text_col,

@@ -23,6 +23,7 @@ from flink_helloworld_spark.streaming.replay import (
     Step,
     read_script_stream,
     run_available_now,
+    write_batch_files,
     write_script,
 )
 from flink_helloworld_spark.streaming.tws import rolling_sum_stream
@@ -429,14 +430,43 @@ def test_co_flat_map_state_ttl_expires(spark):
     assert [(r.amount, r.dim_name) for r in second] == [(10, "dim-one")]
 
 
+# the input of test_followed_by_within_stream_expires_unmatchable_as
+CEP_EXPIRY_BATCHES = [
+    [(1, 1, 1000, "A")],
+    [(2, 1, 50_000, "view")],   # advances time past the window
+    [(3, 1, 51_000, "B")],      # too late: A must already be gone
+    [(4, 1, 99_000_000, "flush")],
+]
+
+
+def _cep_matches(spark, batches, workdir):
+    """A → B within 5 s, no C between, over (event_id, user_id, tsm,
+    event_type) rows written one file (= one micro-batch) per batch."""
+    from flink_helloworld_spark.streaming.cep import followed_by_within_stream
+
+    write_batch_files(
+        [
+            [dict(zip(("event_id", "user_id", "tsm", "event_type"), r)) for r in rows]
+            for rows in batches
+        ],
+        workdir,
+    )
+    stream = (
+        spark.readStream.schema(
+            "event_id long, user_id long, tsm long, event_type string"
+        )
+        .option("maxFilesPerTrigger", 1)
+        .parquet(workdir)
+    )
+    return followed_by_within_stream(
+        stream, "user_id", "event_id", "tsm", "event_type",
+        first="A", second="B", within_ms=5000, not_between="C",
+    )
+
+
 def test_followed_by_within_stream_matches_batch_semantics(spark):
     """Streaming CEP: match across batch boundary, C-block, same-ms C
     ties, window expiry — mirrors the batch operator's rules."""
-    import os
-    import time as _time
-
-    from flink_helloworld_spark.streaming.cep import followed_by_within_stream
-
     workdir = tempfile.mkdtemp(prefix="cep-stream-")
     batches = [
         # batch 0: u1 A@1000; u2 A@1000 then C@1500 (killed)
@@ -452,25 +482,8 @@ def test_followed_by_within_stream_matches_batch_semantics(spark):
         [(98, 1, 10_000_000, "flush"), (96, 2, 10_000_000, "flush"),
          (97, 3, 10_000_000, "flush"), (95, 4, 10_000_000, "flush")],
     ]
-    t0 = _time.time() - 40
-    for i, rows in enumerate(batches):
-        path = os.path.join(workdir, f"b{i:02d}.parquet")
-        pd.DataFrame(
-            rows, columns=["event_id", "user_id", "tsm", "event_type"]
-        ).to_parquet(path, index=False)
-        os.utime(path, (t0 + i, t0 + i))
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, tsm long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(workdir)
-    )
     out = run_available_now(
-        followed_by_within_stream(
-            stream, "user_id", "event_id", "tsm", "event_type",
-            first="A", second="B", within_ms=5000, not_between="C",
-        ),
+        _cep_matches(spark, batches, workdir),
         "cep_stream",
     )
     matches = {(r.user_id, r.a_id, r.b_id, r.lag_ms) for r in out}
@@ -480,40 +493,26 @@ def test_followed_by_within_stream_matches_batch_semantics(spark):
 def test_followed_by_within_stream_expires_unmatchable_as(spark):
     """State bound: an A whose window passed with no B/C is dropped from
     state (and never matches a too-late B)."""
-    import os
-    import time as _time
-
-    from flink_helloworld_spark.streaming.cep import followed_by_within_stream
-
-    workdir = tempfile.mkdtemp(prefix="cep-expire-")
-    batches = [
-        [(1, 1, 1000, "A")],
-        [(2, 1, 50_000, "view")],   # advances time past the window
-        [(3, 1, 51_000, "B")],      # too late: A must already be gone
-        [(4, 1, 99_000_000, "flush")],
-    ]
-    t0 = _time.time() - 40
-    for i, rows in enumerate(batches):
-        path = os.path.join(workdir, f"b{i:02d}.parquet")
-        pd.DataFrame(
-            rows, columns=["event_id", "user_id", "tsm", "event_type"]
-        ).to_parquet(path, index=False)
-        os.utime(path, (t0 + i, t0 + i))
-    stream = (
-        spark.readStream.schema(
-            "event_id long, user_id long, tsm long, event_type string"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(workdir)
-    )
     out = run_available_now(
-        followed_by_within_stream(
-            stream, "user_id", "event_id", "tsm", "event_type",
-            first="A", second="B", within_ms=5000, not_between="C",
-        ),
+        _cep_matches(spark, CEP_EXPIRY_BATCHES, tempfile.mkdtemp(prefix="cep-expire-")),
         "cep_expire",
     )
     assert out == []
+
+
+def test_followed_by_within_stream_state_empties_when_nothing_pends(spark):
+    """Bounded state, measured: after the expiry script no A is pending,
+    so the key's state slot is cleared — zero state rows, not one row
+    holding an empty pattern list."""
+    q = (
+        _cep_matches(spark, CEP_EXPIRY_BATCHES, tempfile.mkdtemp(prefix="cep-state-"))
+        .writeStream.format("memory")
+        .queryName("cep_state_rows")
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(300)
+    assert q.lastProgress["stateOperators"][0]["numRowsTotal"] == 0
 
 
 def test_stream_stream_left_outer_join_emits_unmatched(spark):

@@ -25,6 +25,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from flink_helloworld_spark.streaming import event_windows as EW
+from flink_helloworld_spark.streaming import stateful as ST
 from flink_helloworld_spark.streaming.coflatmap import co_flat_map_join
 from flink_helloworld_spark.streaming.replay import (
     Step,
@@ -32,6 +33,7 @@ from flink_helloworld_spark.streaming.replay import (
     run_available_now,
     write_script,
 )
+from flink_helloworld_spark.streaming.tws import rolling_sum_stream
 
 WINDOW_MS = 3000
 
@@ -334,13 +336,61 @@ def test_session_event_at_exact_gap_starts_new_session(spark):
     ]
 
 
-def test_rolling_sum_correct_across_arrow_chunk_splits(spark):
+def _rolling_model(vals):
+    total, out = 0.0, []
+    for i, v in enumerate(vals):
+        total = round(total + v, 9)
+        out.append((i, total))
+    return out
+
+
+def _count_window_model(vals, n=5):
+    out, acc = [], 0.0
+    for i, v in enumerate(vals):
+        acc = round(acc + v, 9)
+        if (i + 1) % n == 0:
+            out.append((i // n, acc))
+            acc = 0.0
+    return out
+
+
+def _evictor_model(vals, every=3, keep=5):
+    return [
+        (i, round(sum(vals[max(0, i - keep) : i]), 9))
+        for i in range(every, len(vals) + 1, every)
+    ]
+
+
+# (operator over (k, _seq, v), output row -> tuple, sequential model)
+CHUNK_FOLDS = {
+    "rolling_sum": (
+        lambda raw: rolling_sum_stream(raw, "k", "v", "_seq"),
+        lambda r: (r._seq, r.running_total),
+        _rolling_model,
+    ),
+    "count_window": (
+        lambda raw: ST.count_window_stream(raw, "k", "v", "_seq", n=5),
+        lambda r: (r.bucket, r.window_sum),
+        _count_window_model,
+    ),
+    "count_trigger_evictor": (
+        lambda raw: ST.count_trigger_evictor_stream(
+            raw, "k", "v", "_seq", every=3, keep=5
+        ),
+        lambda r: (r.fire_seq, r.fired_sum),
+        _evictor_model,
+    ),
+}
+
+
+@pytest.mark.parametrize("fold", list(CHUNK_FOLDS))
+def test_value_fold_correct_across_arrow_chunk_splits(spark, fold):
     """Regression for the per-chunk-sort hazard (ADVICE r3): with
     ``arrow.maxRecordsPerBatch`` forced to 4, a single key's 24-row
     micro-batch arrives as SIX chunks; out-of-seq rows across chunk
-    boundaries must still produce the exact in-seq running totals."""
-    from flink_helloworld_spark.streaming.tws import rolling_sum_stream
-
+    boundaries must still produce the exact in-seq outputs of the
+    rolling sum and both count windows."""
+    build, as_tuple, model = CHUNK_FOLDS[fold]
     rng = random.Random(99)
     vals = [float(rng.randint(1, 50)) for _ in range(24)]
     rows = [{"k": "only", "_seq": i, "v": v} for i, v in enumerate(vals)]
@@ -356,14 +406,10 @@ def test_rolling_sum_correct_across_arrow_chunk_splits(spark):
             .option("maxFilesPerTrigger", "1")
             .parquet(workdir)
         )
-        out = rolling_sum_stream(raw, "k", "v", "_seq")
-        got = {r._seq: r.running_total for r in run_available_now(out, "chunk_prop")}
+        out = run_available_now(build(raw), f"chunk_prop_{fold}")
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-    total = 0.0
-    for i, v in enumerate(vals):
-        total = round(total + v, 9)
-        assert got[i] == total
+    assert sorted(as_tuple(r) for r in out) == model(vals)
 
 
 def test_tws_state_resumes_from_checkpoint_across_restarts(spark):
