@@ -426,6 +426,14 @@ def _centered_exploded(emb: DataFrame, id_col: str, vec_col: str):
     return centered, n_rows
 
 
+# int64 bound of the per-task nano accumulator: a 1024-row chunk adds at
+# most 1024 * 1e11 (|p| <= 100 on the 1e9 lattice) = 1.024e14 to a cell,
+# and 2^63 / 1.024e14 ~= 90,000 chunks (~92M rows), so `partials` emits its
+# sums as a partial row set and restarts every 65,536 chunks; the
+# DECIMAL(38,0) fold sums any number of partials exactly
+_NANO_FLUSH_CHUNKS = 65_536
+
+
 def embedding_covariance(
     emb: DataFrame,
     id_col: str = "vec_id",
@@ -486,8 +494,18 @@ def embedding_covariance(
     def partials(batches):
         d = len(b_mu.value)
         iu_a, iu_b = np.triu_indices(d)
+
+        def partial(acc):
+            return pd.DataFrame(
+                {
+                    "pos_a": iu_a.astype(np.int32),
+                    "pos_b": iu_b.astype(np.int32),
+                    "nano": acc,
+                }
+            )
+
         acc = np.zeros(len(iu_a), dtype=np.int64)
-        seen = False
+        chunks = 0
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -507,15 +525,13 @@ def embedding_covariance(
                     )
                 nano = np.sign(P) * np.floor(np.abs(P) * 1e9 + 0.5)
                 acc += nano.sum(axis=0).astype(np.int64)
-                seen = True
-        if seen:
-            yield pd.DataFrame(
-                {
-                    "pos_a": iu_a.astype(np.int32),
-                    "pos_b": iu_b.astype(np.int32),
-                    "nano": acc,
-                }
-            )
+                chunks += 1
+                if chunks == _NANO_FLUSH_CHUNKS:
+                    yield partial(acc)
+                    acc = np.zeros(len(iu_a), dtype=np.int64)
+                    chunks = 0
+        if chunks:
+            yield partial(acc)
 
     parts = v.select("_pvec").mapInPandas(
         partials, "pos_a int, pos_b int, nano long"

@@ -683,6 +683,28 @@ def test_embedding_covariance_rejects_nan_and_oversized(spark):
             embedding_covariance(emb, dim=3).collect()
 
 
+def test_embedding_covariance_partial_flush_is_bit_identical(spark, monkeypatch):
+    """Emitting the int64 nano accumulator after every 1024-row chunk
+    (the overflow guard fires every 65,536 chunks by default) gives the
+    bit-identical covariance: the DECIMAL(38,0) fold sums any number of
+    partials exactly."""
+    import numpy as np
+
+    from flink_helloworld_spark.operators import clustering
+
+    rng = np.random.default_rng(5)
+    x = rng.standard_normal((3000, 8))
+    emb = spark.createDataFrame(
+        [(i, [float(v) for v in x[i]]) for i in range(3000)],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)  # one task, three chunks
+    once = sorted(clustering.embedding_covariance(emb, dim=8).collect())
+    monkeypatch.setattr(clustering, "_NANO_FLUSH_CHUNKS", 1)
+    per_chunk = sorted(clustering.embedding_covariance(emb, dim=8).collect())
+    assert len(once) == 8 * 9 // 2
+    assert per_chunk == once
+
+
 def test_embedding_standardize_zero_mean_unit_var(spark):
     """z-scores have ~0 mean and ~1 variance per dimension; a constant
     dimension standardizes to 0.0 instead of NULL/inf."""

@@ -19,7 +19,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BIG = os.environ.get("SPARK_GRAFT_BIG_DIR", "/tmp/sf0.1-10x")

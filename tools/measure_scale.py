@@ -9,16 +9,15 @@ Usage: python tools/measure_scale.py q1 q2 ...
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod  # noqa: E402
 from flink_helloworld_spark.operators.dedup import release_shared_caches  # noqa: E402
 from flink_helloworld_spark.session import build_session  # noqa: E402
-
-import os
 
 BASE = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 BIG = os.environ.get("SPARK_GRAFT_BIG_DIR", "/tmp/sf0.1-10x")

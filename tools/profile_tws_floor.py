@@ -20,6 +20,16 @@ the state-store provider are executor-env/static confs). Output: one
 JSON line per variant with median warm-trigger phase timings (ms) and
 the worker-launch count.
 
+Correction (2026-10-18): the Round 9 reading (SCALE_NOTES) that the
+~434 ms unit is a state-store session cost and "NOT Python worker
+launch" missed a per-task worker cost. Every Python task re-read Spark's
+``pyspark.zip`` index about 12 times (``importlib.invalidate_caches()``
+in ``setup_spark_files``, eager on Python 3.11), ~0.2 s a task whether
+the worker was reused or not. ``session.build_session`` now forks
+workers from ``flink_helloworld_spark._worker_daemon``, which skips that
+re-read, so re-run this tool before reading its split as state-store
+cost.
+
 Usage: python tools/profile_tws_floor.py [variant ...]
 """
 
@@ -33,7 +43,7 @@ import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_FILES = 8
 ROWS_PER_FILE = 40
