@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-from flink_helloworld_spark.streaming.tws import fold_by_key
+from flink_helloworld_spark.streaming.tws import each_record, fold_by_key
 
 # one pending A: its id/ms, plus b/bt once its first B has been seen and
 # the entry awaits ms-close confirmation (null until then)
@@ -93,5 +93,5 @@ def followed_by_within_stream(
         F.col(type_col).alias("type"),
     )
     return fold_by_key(
-        src, "key", _STATE, ([],), ["tsm", "id"], step, out_schema
+        src, "key", _STATE, ([],), each_record(["tsm", "id"], step), out_schema
     ).withColumnRenamed("key", key)

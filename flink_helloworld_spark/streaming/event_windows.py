@@ -29,7 +29,7 @@ from pyspark.sql.types import (
 )
 
 from flink_helloworld_spark.streaming.replay import WM_KEY
-from flink_helloworld_spark.streaming.tws import fold_by_key
+from flink_helloworld_spark.streaming.tws import each_record, fold_by_key
 
 
 def tumbling_sum_stream(
@@ -157,4 +157,6 @@ def late_rows_stream(script_stream: DataFrame, window_ms: int, lateness_ms: int 
         return state, [(rec["k"], rec["v"], rec["event_ts_ms"], late)]
 
     src = script_stream.select(F.lit(1).alias("g"), "k", "v", "event_ts_ms", "seq")
-    return fold_by_key(src, "g", _LATE_STATE, (-1,), "seq", step, LATE_SCHEMA)
+    return fold_by_key(
+        src, "g", _LATE_STATE, (-1,), each_record("seq", step), LATE_SCHEMA
+    )

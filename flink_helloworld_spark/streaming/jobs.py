@@ -365,23 +365,16 @@ def streaming_shard_manifest_job(
     sequence equals the batch operator over everything ingested so far
     (asserted bit-identical in tests). The batch hash recipe
     (``layout.shard_tag_columns``) feeds the one manifest fold,
-    ``tws.ManifestProcessor``. A restart replays to the same values
-    from the checkpoint; a backfill engine can verify shard by shard
-    without reading documents.
+    ``tws.shard_manifest_fold`` (a step on the one keyed-state kernel,
+    ``tws.fold_by_key``), here in update mode. A restart replays to the
+    same values from the checkpoint; a backfill engine can verify shard
+    by shard without reading documents.
     """
     from flink_helloworld_spark.operators.layout import shard_tag_columns
-    from flink_helloworld_spark.streaming.tws import (
-        MANIFEST_OUTPUT,
-        ManifestProcessor,
-    )
+    from flink_helloworld_spark.streaming.tws import shard_manifest_fold
 
     tagged = stream.select(*shard_tag_columns(shards, text_col, id_col))
-    return tagged.groupBy("shard_id").transformWithStateInPandas(
-        ManifestProcessor(),
-        outputStructType=MANIFEST_OUTPUT,
-        outputMode="update",
-        timeMode="none",
-    )
+    return shard_manifest_fold(tagged, output_mode="update")
 
 
 def streaming_filter_funnel_job(

@@ -6,9 +6,16 @@ Flink keyed state, StateTest.java), per-state TTL and timers, and its
 operators chain: stateful operators with different grouping keys run in
 ONE streaming query, with a plain shuffle at each re-key seam, like
 Flink's keyBy between operators. It is the engine's one keyed-state
-API. Every keyed-state join, sketch and gate lives here, once, and
-every per-record fold — here and in ``stateful``, ``event_windows`` and
-``cep`` — is a step function on one kernel, ``FoldProcessor``.
+API, and every single-state keyed operator — here and in ``stateful``,
+``event_windows`` and ``cep`` — is a step function on one kernel,
+``FoldProcessor`` (``fold_by_key``): one typed ValueState tuple per key
+(list-shaped state is an array field of it), read once per key and
+micro-batch, folded by ``step(state, key, batch)`` and written back
+under one rule. Per-record folds go through the ``each_record``
+adapter. Two processors stay hand-written because they need a state
+primitive the kernel does not have: ``SessionFlushProcessor`` arms
+event-time timers, and ``PostingAppendProcessor`` keeps MapState for
+O(1) per-member membership (an array field would make it O(members)).
 
 Runtime requirement: the Python worker speaks protobuf to the JVM, and
 the state store must be RocksDB. ``session.build_session`` vendors
@@ -18,6 +25,7 @@ provider, so every session it builds runs these operators.
 
 from __future__ import annotations
 
+import functools
 import json
 from collections.abc import Callable, Iterator
 from typing import Any
@@ -31,6 +39,7 @@ from pyspark.sql.streaming.stateful_processor import (
 )
 from pyspark.sql.types import (
     ArrayType,
+    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -47,54 +56,57 @@ from flink_helloworld_spark.streaming.coflatmap import _dec, _enc
 
 def _time_mode(ttl_ms: int | None) -> str:
     """State TTL is measured in processing time; Spark rejects a TTL
-    state on an operator started with ``timeMode="none"``."""
+    state on an operator started with ``timeMode="none"``. A
+    processing-time operator asks for another micro-batch on every
+    trigger, so a TTL'd query never ends by itself under
+    ``trigger(availableNow=True)``: stop it once its input is drained."""
     return "none" if ttl_ms is None else "processingTime"
 
 
-FoldStep = Callable[[tuple, Any, dict], tuple[tuple, list[tuple]]]
+Step = Callable[[tuple, Any, pd.DataFrame], tuple[tuple, Any]]
+RecordStep = Callable[[tuple, Any, dict], tuple[tuple, list[tuple]]]
 
 
 class FoldProcessor(StatefulProcessor):
-    """The one per-record keyed fold. Each key's micro-batch rows, merged
-    across Arrow chunks and sorted by ``order``, pass one record at a
-    time through ``step(state, key, rec) -> (state, out_rows)``; the
-    state tuple (typed by ``state_schema``) lives in one ValueState
-    between batches. An absent state reads as ``initial``, so a key that
-    folds back to ``initial`` has its slot cleared rather than stored:
-    state is O(keys away from the start), e.g. CEP keys with open
-    patterns. ``out_rows`` are tuples in ``columns`` order."""
+    """The one keyed-state kernel. Each key's micro-batch rows, merged
+    across Arrow chunks into one frame, pass through
+    ``step(state, key, batch) -> (state, out)`` once; ``key`` is the
+    first grouping value and ``out`` is a row list (tuples or dicts) or
+    a frame, emitted in ``columns`` order. The state tuple (typed by
+    ``state_schema``, with arrays for list-shaped state) lives in one
+    ValueState between batches, read once per key and batch. An absent
+    (or TTL-expired) state reads as ``initial``; a state away from
+    ``initial`` is written back on every touch, which refreshes its
+    ``ttl_ms``, and a key that folds back to ``initial`` has its stored
+    slot cleared rather than rewritten: state is O(keys away from the
+    start), e.g. CEP keys with open patterns."""
 
     def __init__(
         self,
         state_schema: StructType,
         initial: tuple,
-        order: str | list[str],
-        step: FoldStep,
+        step: Step,
         columns: list[str],
+        ttl_ms: int | None = None,
     ) -> None:
         self._schema = state_schema
         self._initial = initial
-        self._order = order
         self._step = step
         self._columns = columns
+        self._ttl_ms = ttl_ms
 
     def init(self, handle: StatefulProcessorHandle) -> None:
-        self._state = handle.getValueState("state", self._schema)
+        self._state = handle.getValueState("state", self._schema, self._ttl_ms)
 
     def handleInputRows(
         self, key, rows: Iterator[pd.DataFrame], timerValues
     ) -> Iterator[pd.DataFrame]:
         stored = self._state.get()
         state = self._initial if stored is None else stored
-        out: list[tuple] = []
-        # one sort over ALL Arrow chunks: a key whose batch exceeds
-        # arrow.maxRecordsPerBatch arrives as several pdfs, and per-chunk
-        # sorts would make the fold order partitioning-dependent
+        out: Any = []
         batch = _concat_chunks(rows)
         if batch is not None:
-            for rec in batch.sort_values(self._order).to_dict("records"):
-                state, emitted = self._step(state, key[0], rec)
-                out.extend(emitted)
+            state, out = self._step(state, key[0], batch)
         if state != self._initial:
             self._state.update(state)
         elif stored is not None:
@@ -105,23 +117,42 @@ class FoldProcessor(StatefulProcessor):
         pass
 
 
+def each_record(order: str | list[str], step: RecordStep) -> Step:
+    """Adapt a per-record fold to the kernel: one sort of the key's whole
+    batch by ``order`` (per-chunk sorts would make the fold order
+    partitioning-dependent), then ``step(state, key, rec) -> (state,
+    rows)`` one record at a time."""
+
+    def batch_step(state, key, batch):
+        out: list[tuple] = []
+        for rec in batch.sort_values(order).to_dict("records"):
+            state, emitted = step(state, key, rec)
+            out.extend(emitted)
+        return state, out
+
+    return batch_step
+
+
 def fold_by_key(
     src: DataFrame,
-    key: str,
+    key: str | list[str],
     state_schema: StructType,
     initial: tuple,
-    order: str | list[str],
-    step: FoldStep,
+    step: Step,
     out_schema: StructType,
+    ttl_ms: int | None = None,
+    output_mode: str = "append",
 ) -> DataFrame:
-    """Group ``src`` by ``key`` and run ``step`` over every record on
-    ``FoldProcessor``. No column reaching the processor may start with
-    "_": the worker-side serializer renames such columns positionally."""
-    return src.groupBy(key).transformWithStateInPandas(
-        FoldProcessor(state_schema, initial, order, step, out_schema.fieldNames()),
+    """Group ``src`` by ``key`` and run ``step`` over each key's batch on
+    ``FoldProcessor``; ``ttl_ms`` expires idle keys in processing time.
+    No column reaching the processor may start with "_": the
+    worker-side serializer renames such columns positionally."""
+    keys = [key] if isinstance(key, str) else key
+    return src.groupBy(*keys).transformWithStateInPandas(
+        FoldProcessor(state_schema, initial, step, out_schema.fieldNames(), ttl_ms),
         outputStructType=out_schema,
-        outputMode="append",
-        timeMode="none",
+        outputMode=output_mode,
+        timeMode=_time_mode(ttl_ms),
     )
 
 
@@ -132,7 +163,7 @@ def value_fold(
     seq_col: str,
     state_schema: StructType,
     initial: tuple,
-    step: FoldStep,
+    step: RecordStep,
     out_fields: list[StructField],
 ) -> DataFrame:
     """``fold_by_key`` over (``key``, ``seq_col``, ``value`` as double)
@@ -146,7 +177,7 @@ def value_fold(
     )
     out_schema = StructType([StructField("k", df.schema[key].dataType), *out_fields])
     return fold_by_key(
-        src, "k", state_schema, initial, "seq", step, out_schema
+        src, "k", state_schema, initial, each_record("seq", step), out_schema
     ).withColumnsRenamed({"k": key, "seq": seq_col, "v": value})
 
 
@@ -178,48 +209,29 @@ def rolling_sum_stream(
 # --------------------------------------------------------------------------
 
 
-class ChainJoinProcessor(StatefulProcessor):
+_CHAIN_STATE = StructType([StructField("stages_json", StringType())])
+
+
+def _chain_step(
+    key: str,
+    fact_cols: list[str],
+    dim_cols: list[list[str]],
+    seq_col: str,
+    max_buffer: int,
+) -> Step:
     """N buffer-until-dimension join stages fused per key (reference
     StateTest.java:639-872). Stage i: a dim row overwrites stage i's dim
     and flushes stage i's buffer onward; a record reaching stage i joins
     immediately if the dim is known, else buffers (oldest evicted at
     ``max_buffer``). A record emits once it has passed EVERY stage.
 
-    State: one JSON string per key — ``[{dim, buf}, ...]`` per stage,
+    State: one JSON string per key, ``[{dim, buf}, ...]`` per stage,
     through the typed ``coflatmap`` codec (timestamps/decimals
-    round-trip across micro-batches); ``ttl_ms`` expires idle keys.
-    """
+    round-trip across micro-batches)."""
+    n = len(dim_cols)
 
-    def __init__(
-        self,
-        key: str,
-        fact_cols: list[str],
-        dim_cols: list[list[str]],
-        out_names: list[str],
-        seq_col: str,
-        max_buffer: int,
-        ttl_ms: int | None,
-    ) -> None:
-        self._key = key
-        self._fact_cols = fact_cols
-        self._dim_cols = dim_cols
-        self._out_names = out_names
-        self._seq_col = seq_col
-        self._max_buffer = max_buffer
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        schema = StructType([StructField("stages_json", StringType())])
-        self._state = handle.getValueState("chain", schema, self._ttl_ms)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        n = len(self._dim_cols)
-        if self._state.exists():
-            stages = _dec(json.loads(self._state.get()[0]))
-        else:
-            stages = [{"dim": None, "buf": []} for _ in range(n)]
+    def step(state, _k, batch):
+        stages = _dec(json.loads(state[0]))
         out_rows: list[dict] = []
 
         def cascade(rec: dict, i: int) -> None:
@@ -229,7 +241,7 @@ class ChainJoinProcessor(StatefulProcessor):
                     # (buf + [rec])[-cap:] holds the cap for every value,
                     # including max_buffer=1 where buf[-0:] would be the
                     # whole list
-                    stages[i]["buf"] = (stages[i]["buf"] + [rec])[-self._max_buffer:]
+                    stages[i]["buf"] = (stages[i]["buf"] + [rec])[-max_buffer:]
                     return
                 rec = {**rec, **dim}
                 i += 1
@@ -239,32 +251,28 @@ class ChainJoinProcessor(StatefulProcessor):
         # renames columns that start with "_" to positional names — so the
         # plumbing columns travel as chain_seq/chain_side, and a seq_col
         # carried through as a fact column is read back from chain_seq
-        batch = _concat_chunks(rows)
-        if batch is not None:
-            for rec in batch.sort_values("chain_seq").to_dict("records"):
-                side = rec["chain_side"]
-                if side == "F":
-                    cascade(
-                        {
-                            self._key: rec[self._key],
-                            **{
-                                c: (rec["chain_seq"] if c == self._seq_col else rec[c])
-                                for c in self._fact_cols
-                            },
+        for rec in batch.sort_values("chain_seq").to_dict("records"):
+            side = rec["chain_side"]
+            if side == "F":
+                cascade(
+                    {
+                        key: rec[key],
+                        **{
+                            c: (rec["chain_seq"] if c == seq_col else rec[c])
+                            for c in fact_cols
                         },
-                        0,
-                    )
-                else:
-                    i = int(side[1:])
-                    stages[i]["dim"] = {c: rec[c] for c in self._dim_cols[i]}
-                    flushed, stages[i]["buf"] = stages[i]["buf"], []
-                    for r in flushed:
-                        cascade(r, i)
-        self._state.update((json.dumps(_enc(stages)),))
-        yield pd.DataFrame(out_rows, columns=self._out_names)
+                    },
+                    0,
+                )
+            else:
+                i = int(side[1:])
+                stages[i]["dim"] = {c: rec[c] for c in dim_cols[i]}
+                flushed, stages[i]["buf"] = stages[i]["buf"], []
+                for r in flushed:
+                    cascade(r, i)
+        return (json.dumps(_enc(stages)),), out_rows
 
-    def close(self) -> None:
-        pass
+    return step
 
 
 def chain_stateful_join(
@@ -277,7 +285,7 @@ def chain_stateful_join(
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """N chained buffer-until-dim joins, all keyed by ``key``, in ONE
-    stateful operator (``ChainJoinProcessor``). Output = key + fact_cols
+    stateful operator (``_chain_step`` on ``fold_by_key``). Output = key + fact_cols
     + each stage's dim cols, one row per fully-joined fact. ``seq_col``
     (monotonic per key) restores arrival order inside a micro-batch, so
     emission is deterministic; ``state_ttl_ms`` clears idle keys after a
@@ -316,20 +324,15 @@ def chain_stateful_join(
             ),
             allowMissingColumns=True,
         )
-    proc = ChainJoinProcessor(
-        key=key,
-        fact_cols=fact_cols,
-        dim_cols=dim_cols,
-        out_names=[f.name for f in out_fields],
-        seq_col=seq_col,
-        max_buffer=max_buffer,
+    empty = (json.dumps(_enc([{"dim": None, "buf": []} for _ in range(n)])),)
+    return fold_by_key(
+        tagged,
+        key,
+        _CHAIN_STATE,
+        empty,
+        _chain_step(key, fact_cols, dim_cols, seq_col, max_buffer),
+        StructType(out_fields),
         ttl_ms=state_ttl_ms,
-    )
-    return tagged.groupBy(key).transformWithStateInPandas(
-        proc,
-        outputStructType=StructType(out_fields),
-        outputMode="append",
-        timeMode=_time_mode(state_ttl_ms),
     )
 
 
@@ -554,7 +557,9 @@ def streaming_domain_cap(
         F.col(id_col).alias("doc_id"),
         F.col(seq_col).alias("seq"),
     )
-    return fold_by_key(src, "source", _COUNT_STATE, (0,), "seq", step, DOMAIN_CAP_OUTPUT)
+    return fold_by_key(
+        src, "source", _COUNT_STATE, (0,), each_record("seq", step), DOMAIN_CAP_OUTPUT
+    )
 
 
 # --------------------------------------------------------------------------
@@ -572,16 +577,26 @@ RESERVOIR_OUTPUT = StructType(
     ]
 )
 
-_RES_ROW_STATE = StructType(
+_RESERVOIR_STATE = StructType(
     [
-        StructField("res_key", DoubleType()),
-        StructField("doc_id", LongType()),
-        StructField("weight", LongType()),
+        StructField("n_seen", LongType()),
+        StructField(
+            "res",
+            ArrayType(
+                StructType(
+                    [
+                        StructField("res_key", DoubleType()),
+                        StructField("doc_id", LongType()),
+                        StructField("weight", LongType()),
+                    ]
+                )
+            ),
+        ),
     ]
 )
 
 
-class WeightedReservoirProcessor(StatefulProcessor):
+def _reservoir_step(k: int) -> Step:
     """Streaming twin of ``sampling.weighted_reservoir_sample`` —
     Efraimidis-Spirakis reservoir sampling in the setting it was
     INVENTED for (an unbounded stream you see once). Because each row's
@@ -591,63 +606,28 @@ class WeightedReservoirProcessor(StatefulProcessor):
     the batch operator over the same rows — unlike the arrival-order
     domain cap, this twin's contract is full batch parity.
 
-    State per stratum: a ListState of at most k (res_key, doc_id,
-    weight) rows + one n_seen counter — O(k) per domain, never
+    State per stratum: n_seen and an array of at most k (res_key,
+    doc_id, weight) structs — O(k) per domain, never
     corpus-proportional. Each batch re-emits the stratum's CURRENT
     reservoir stamped with n_seen, so consumers take the max-n_seen
-    emission per stratum as the live sample.
-    """
+    emission per stratum as the live sample."""
 
-    def __init__(self, k: int) -> None:
-        self._k = k
+    def step(state, source, batch):
+        n = state[0] + len(batch)
+        cur = [tuple(r) for r in state[1]] + list(
+            zip(
+                map(float, batch["res_key"]),
+                map(int, batch["doc_id"]),
+                map(int, batch["weight"]),
+            )
+        )
+        # k smallest (key, doc_id) survive — same total order as the
+        # batch rank window
+        cur = sorted(cur, key=lambda t: (t[0], t[1]))[:k]
+        out = [(source, d, w, rk, i + 1, n) for i, (rk, d, w) in enumerate(cur)]
+        return (n, cur), out
 
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._res = handle.getListState("res", _RES_ROW_STATE)
-        self._n = handle.getValueState("n", _COUNT_STATE)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        cur: list[tuple[float, int, int]] = [
-            (r[0], r[1], r[2]) for r in self._res.get()
-        ]
-        (n,) = self._n.get() if self._n.exists() else (0,)
-        batch = _concat_chunks(rows)
-        changed = False
-        if batch is not None and len(batch):
-            for rec in batch.to_dict("records"):
-                n += 1
-                cur.append(
-                    (
-                        float(rec["res_key"]),
-                        int(rec["doc_id"]),
-                        int(rec["weight"]),
-                    )
-                )
-                changed = True
-            # k smallest (key, doc_id) survive — same total order as the
-            # batch rank window
-            cur.sort(key=lambda t: (t[0], t[1]))
-            cur = cur[: self._k]
-        if changed:
-            self._res.clear()
-            self._res.appendList(cur)
-            self._n.update((n,))
-        out = [
-            {
-                "source": key[0],
-                "doc_id": d,
-                "weight": w,
-                "res_key": rk,
-                "res_rank": i + 1,
-                "n_seen": n,
-            }
-            for i, (rk, d, w) in enumerate(cur)
-        ]
-        yield pd.DataFrame(out, columns=[f.name for f in RESERVOIR_OUTPUT.fields])
-
-    def close(self) -> None:
-        pass
+    return step
 
 
 def streaming_weighted_reservoir(
@@ -670,11 +650,8 @@ def streaming_weighted_reservoir(
         F.col(weight_col).cast("long").alias("weight"),
         reservoir_key(id_col, weight_col, salt).alias("res_key"),
     )
-    return src.groupBy("source").transformWithStateInPandas(
-        WeightedReservoirProcessor(k),
-        outputStructType=RESERVOIR_OUTPUT,
-        outputMode="append",
-        timeMode="none",
+    return fold_by_key(
+        src, "source", _RESERVOIR_STATE, (0, []), _reservoir_step(k), RESERVOIR_OUTPUT
     )
 
 
@@ -715,86 +692,51 @@ _MANIFEST_STATE = StructType(
 )
 
 
-class ContentDedupProcessor(StatefulProcessor):
+def _first_content(state, _h, batch):
     """First-arrival exact dedup keyed on the content hash: one long of
-    ValueState per distinct content ever seen (the watermarkless TWS
-    form — pair with TTL where the horizon is bounded). Within a batch,
-    ties break on doc_id, so replay is deterministic."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._seen = handle.getValueState("seen", _SEEN_STATE)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = _concat_chunks(rows)
-        out = []
-        if not self._seen.exists() and batch is not None and len(batch):
-            rec = (
-                batch.sort_values("doc_id").iloc[0].to_dict()
-            )
-            out.append(
-                {
-                    "shard_id": int(rec["shard_id"]),
-                    "doc_id": int(rec["doc_id"]),
-                    "tok": int(rec["tok"]),
-                    "fp": int(rec["fp"]),
-                }
-            )
-            self._seen.update((1,))
-        yield pd.DataFrame(out, columns=[f.name for f in _DEDUP_PASS.fields])
-
-    def close(self) -> None:
-        pass
+    state per distinct content ever seen (the watermarkless form — pair
+    with TTL where the horizon is bounded). Within a batch, ties break
+    on doc_id, so replay is deterministic."""
+    if state[0]:
+        return state, []
+    rec = batch.sort_values("doc_id").iloc[0]
+    return (1,), [tuple(int(rec[c]) for c in _DEDUP_PASS.fieldNames())]
 
 
-class ManifestProcessor(StatefulProcessor):
-    """Incremental per-shard manifest on typed state: five scalars per
-    shard (adds, min/max, XOR — all associative+commutative), re-emitted
-    whenever the shard is touched; after any batch sequence the values
-    equal the batch ``layout.shard_manifest`` over everything kept.
-    Input rows: (shard_id, doc_id, tok, fp)."""
+def _manifest_step(state, shard_id, batch):
+    """Incremental per-shard manifest: five scalars per shard (adds,
+    min/max, XOR — all associative+commutative), re-emitted whenever the
+    shard is touched; after any batch sequence the values equal the
+    batch ``layout.shard_manifest`` over everything kept. Input rows:
+    (shard_id, doc_id, tok, fp)."""
+    n, tok, lo, hi, fp = state
+    # the batch aggregate's null rules: count(*) counts every row,
+    # sum/min/max/bit_xor skip nulls (pandas renders a null in these
+    # long columns as NaN)
+    n += len(batch)
+    tok += int(batch["tok"].dropna().sum())
+    ids = batch["doc_id"].dropna()
+    if len(ids):
+        bmin, bmax = int(ids.min()), int(ids.max())
+        lo = bmin if lo is None else min(lo, bmin)
+        hi = bmax if hi is None else max(hi, bmax)
+    for h in batch["fp"].dropna():
+        fp ^= int(h)
+    return (n, tok, lo, hi, fp), [(shard_id, n, tok, lo, hi, fp)]
 
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._m = handle.getValueState("m", _MANIFEST_STATE)
 
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        n, tok, lo, hi, fp = (
-            self._m.get() if self._m.exists() else (0, 0, None, None, 0)
-        )
-        batch = _concat_chunks(rows)
-        if batch is not None and len(batch):
-            # the batch aggregate's null rules: count(*) counts every
-            # row, sum/min/max/bit_xor skip nulls (pandas renders a null
-            # in these long columns as NaN)
-            n += len(batch)
-            tok += int(batch["tok"].dropna().sum())
-            ids = batch["doc_id"].dropna()
-            if len(ids):
-                bmin, bmax = int(ids.min()), int(ids.max())
-                lo = bmin if lo is None else min(lo, bmin)
-                hi = bmax if hi is None else max(hi, bmax)
-            for h in batch["fp"].dropna():
-                fp ^= int(h)
-            self._m.update((n, tok, lo, hi, fp))
-        yield pd.DataFrame(
-            [
-                {
-                    "shard_id": key[0],
-                    "n_docs": n,
-                    "total_tokens": tok,
-                    "min_id": lo,
-                    "max_id": hi,
-                    "fingerprint": fp,
-                }
-            ],
-            columns=[f.name for f in MANIFEST_OUTPUT.fields],
-        )
-
-    def close(self) -> None:
-        pass
+def shard_manifest_fold(tagged: DataFrame, output_mode: str = "append") -> DataFrame:
+    """The one manifest fold over ``layout.shard_tag_columns`` rows,
+    keyed by shard_id (``_manifest_step``)."""
+    return fold_by_key(
+        tagged,
+        "shard_id",
+        _MANIFEST_STATE,
+        (0, 0, None, None, 0),
+        _manifest_step,
+        MANIFEST_OUTPUT,
+        output_mode=output_mode,
+    )
 
 
 def streaming_corpus_manifest_tws(
@@ -821,18 +763,10 @@ def streaming_corpus_manifest_tws(
         F.md5(F.col(text_col)).alias("content_hash"),
         *shard_tag_columns(shards, text_col, id_col),
     )
-    deduped = tagged.groupBy("content_hash").transformWithStateInPandas(
-        ContentDedupProcessor(),
-        outputStructType=_DEDUP_PASS,
-        outputMode="append",
-        timeMode="none",
+    deduped = fold_by_key(
+        tagged, "content_hash", _SEEN_STATE, (0,), _first_content, _DEDUP_PASS
     )
-    return deduped.groupBy("shard_id").transformWithStateInPandas(
-        ManifestProcessor(),
-        outputStructType=MANIFEST_OUTPUT,
-        outputMode="append",
-        timeMode="none",
-    )
+    return shard_manifest_fold(deduped)
 
 
 # --- streaming LSH near-dup gate --------------------------------------------
@@ -854,104 +788,52 @@ LSH_VERDICT_OUTPUT = StructType(
 )
 
 
-class BucketClaimProcessor(StatefulProcessor):
+def _claim_step(state, _bucket, batch):
     """Per-LSH-bucket first-claim state: ONE long per bucket ever touched
     (the earliest claimant), independent of how many docs hash there.
     Emits (doc_id, is_first[, carry...]) per arrival. In-order contract:
     with doc_id monotone in arrival order (the batch twin's rule), the
     running min equals the true first arrival; the min() form also keeps
     replayed / reordered batches convergent to the batch
-    `dedup.lsh_first_arrival` verdict."""
-
-    def __init__(
-        self,
-        out_fields: list[str] | None = None,
-        ttl_ms: int | None = None,
-    ) -> None:
-        self._out_fields = out_fields or [
-            f.name for f in _LSH_CLAIM_OUT.fields
-        ]
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        # TTL bounds the dedup horizon: an expired bucket claim forgets
-        # its first arrival, so a later near-dup is admitted again —
-        # the state-size/recall dial an unbounded 100 TB ingest turns
-        self._first = handle.getValueState("first", _LSH_CLAIM_STATE, self._ttl_ms)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = _concat_chunks(rows)
-        if batch is None or not len(batch):
-            yield pd.DataFrame(columns=self._out_fields)
-            return
-        first = self._first.get()[0] if self._first.exists() else None
-        m = int(batch["doc_id"].min())
-        first = m if first is None else min(first, m)
-        self._first.update((first,))
-        out = pd.DataFrame(
-            {
-                "doc_id": batch["doc_id"].astype("int64"),
-                "is_first": batch["doc_id"].astype("int64") == first,
-            }
-        )
-        for c in self._out_fields[2:]:
-            out[c] = batch[c].values
-        yield out[self._out_fields]
-
-    def close(self) -> None:
-        pass
+    `dedup.lsh_first_arrival` verdict. Under a TTL an expired claim
+    forgets its first arrival, so a later near-dup is admitted again —
+    the state-size/recall dial an unbounded 100 TB ingest turns."""
+    ids = batch["doc_id"].astype("int64")
+    m = int(ids.min())
+    first = m if state[0] is None else min(state[0], m)
+    return (first,), batch.assign(doc_id=ids, is_first=ids == first)
 
 
-class DocVerdictProcessor(StatefulProcessor):
+def _claim(
+    src: DataFrame, keys: list[str], out: StructType, ttl_ms: int | None
+) -> DataFrame:
+    return fold_by_key(src, keys, _LSH_CLAIM_STATE, (None,), _claim_step, out, ttl_ms)
+
+
+def _verdict_step(bands: int, carry: list[str]) -> Step:
     """Collects the per-band first-claim votes back on the doc key and
     emits ONE verdict row once all `bands` votes are in (they travel in
     the same micro-batch — one input row fans out to `bands` claim rows
-    — so state here is transient; the accumulator only persists if a
-    future engine splits a doc's claim rows across batches). Carry
-    columns (identical on every claim row of a doc) pass through from
-    the first row seen."""
+    — so the accumulator is only stored if a future engine splits a
+    doc's claim rows across batches). Carry columns (identical on every
+    claim row of a doc) pass through from the first row seen."""
 
-    def __init__(self, bands: int, out_fields: list[str] | None = None) -> None:
-        self._bands = bands
-        self._out_fields = out_fields or [
-            f.name for f in LSH_VERDICT_OUTPUT.fields
-        ]
+    def step(state, doc_id, batch):
+        n_seen = state[0] + len(batch)
+        n_first = state[1] + int(batch["is_first"].sum())
+        if n_seen < bands:
+            return (n_seen, n_first), []
+        row = (int(doc_id), n_seen, n_first, n_seen == n_first)
+        return (0, 0), [row + tuple(batch[c].iloc[0] for c in carry)]
 
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._acc = handle.getValueState("acc", _LSH_VERDICT_STATE)
+    return step
 
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        n_seen, n_first = self._acc.get() if self._acc.exists() else (0, 0)
-        batch = _concat_chunks(rows)
-        carry: dict = {}
-        if batch is not None and len(batch):
-            n_seen += int(len(batch))
-            n_first += int(batch["is_first"].sum())
-            carry = {c: batch[c].iloc[0] for c in self._out_fields[4:]}
-        if n_seen >= self._bands:
-            self._acc.clear()
-            yield pd.DataFrame(
-                [
-                    {
-                        "doc_id": int(key[0]),
-                        "n_bands": n_seen,
-                        "n_first": n_first,
-                        "kept": n_seen == n_first,
-                        **carry,
-                    }
-                ],
-                columns=self._out_fields,
-            )
-        else:
-            self._acc.update((n_seen, n_first))
-            yield pd.DataFrame(columns=self._out_fields)
 
-    def close(self) -> None:
-        pass
+def _verdicts(claims: DataFrame, bands: int, out: StructType) -> DataFrame:
+    carry = out.fieldNames()[len(LSH_VERDICT_OUTPUT.fields):]
+    return fold_by_key(
+        claims, "doc_id", _LSH_VERDICT_STATE, (0, 0), _verdict_step(bands, carry), out
+    )
 
 
 def streaming_lsh_dedup(
@@ -1043,19 +925,8 @@ def streaming_lsh_dedup(
         F.col("bk.band_key").alias("band_key"),
         *carry,
     )
-    claims = buckets.groupBy("band_id", "band_key").transformWithStateInPandas(
-        BucketClaimProcessor([f.name for f in claim_out.fields], state_ttl_ms),
-        outputStructType=claim_out,
-        outputMode="append",
-        timeMode=_time_mode(state_ttl_ms),
-    )
-    verdicts = claims.groupBy("doc_id").transformWithStateInPandas(
-        DocVerdictProcessor(bands, [f.name for f in verdict_out.fields]),
-        outputStructType=verdict_out,
-        outputMode="append",
-        timeMode="none",
-    )
-    return verdicts.unionByName(short)
+    claims = _claim(buckets, ["band_id", "band_key"], claim_out, state_ttl_ms)
+    return _verdicts(claims, bands, verdict_out).unionByName(short)
 
 
 def streaming_embedding_dedup(
@@ -1105,12 +976,7 @@ def streaming_embedding_dedup(
         F.col(id_col).cast("long").alias("doc_id"),
         hyperplane_bucket(F.col(vec_col), planes, dims).alias("bucket"),
     )
-    claims = b.groupBy("bucket").transformWithStateInPandas(
-        BucketClaimProcessor([f.name for f in out.fields], state_ttl_ms),
-        outputStructType=out,
-        outputMode="append",
-        timeMode=_time_mode(state_ttl_ms),
-    )
+    claims = _claim(b, ["bucket"], out, state_ttl_ms)
     return claims.select(
         F.col("doc_id").alias(id_col),
         "bucket",
@@ -1138,8 +1004,8 @@ def streaming_embedding_dedup_banded(
 
     Topology: the same two chained transformWithState operators across
     the re-key seam as the text gate — (band, bucket) claims → per-doc
-    verdict — reusing ``BucketClaimProcessor`` / ``DocVerdictProcessor``
-    verbatim (the processors only see ``doc_id``).
+    verdict — reusing the claim and verdict steps verbatim (the steps
+    only see ``doc_id``).
 
     Scale contract: all band buckets are computed in the STATELESS
     projection, so the embedding never crosses an exchange — the claim
@@ -1174,35 +1040,25 @@ def streaming_embedding_dedup_banded(
         F.col("bb.band_id").alias("band_id"),
         F.col("bb.bucket").alias("bucket"),
     )
-    claims = incidence.groupBy("band_id", "bucket").transformWithStateInPandas(
-        BucketClaimProcessor(
-            [f.name for f in _LSH_CLAIM_OUT.fields], state_ttl_ms
-        ),
-        outputStructType=_LSH_CLAIM_OUT,
-        outputMode="append",
-        timeMode=_time_mode(state_ttl_ms),
-    )
-    verdicts = claims.groupBy("doc_id").transformWithStateInPandas(
-        DocVerdictProcessor(
-            bands, [f.name for f in LSH_VERDICT_OUTPUT.fields]
-        ),
-        outputStructType=LSH_VERDICT_OUTPUT,
-        outputMode="append",
-        timeMode="none",
-    )
-    return verdicts.select(
+    claims = _claim(incidence, ["band_id", "bucket"], _LSH_CLAIM_OUT, state_ttl_ms)
+    return _verdicts(claims, bands, LSH_VERDICT_OUTPUT).select(
         F.col("doc_id").alias(id_col), "n_bands", "n_first", "kept"
     )
 
 
-class VerifiedBucketClaimProcessor(StatefulProcessor):
+def _verified_claim_step(
+    threshold: float,
+    dims: int,
+    sq_mn: list[float] | None,
+    sq_scale: list[float] | None,
+) -> Step:
     """Per-(band, bucket) OWNER state for the VERIFIED gate: the lowest
     arrival's id AND vector (the state-size trade the unverified gates
     avoid — ~dims doubles per claimed bucket instead of one long). A
     non-owner arrival is a verified collision iff its rounded cosine
     against the owner is >= threshold; it is emitted as
-    ``is_first = NOT verified`` so the standard ``DocVerdictProcessor``
-    (kept iff 'first' on every band) composes unchanged downstream.
+    ``is_first = NOT verified`` so the standard verdict step (kept iff
+    'first' on every band) composes unchanged downstream.
 
     With ``sq_mn``/``sq_scale`` (offline-trained per-dimension SQ8
     params — the FAISS scalar-quantizer-training shape; VERDICT r7
@@ -1210,12 +1066,9 @@ class VerifiedBucketClaimProcessor(StatefulProcessor):
     instead of ``dims`` float64s (~8× smaller), and the cosine runs
     against the RECONSTRUCTED owner — the exact contract the batch
     twin's ``sq=True`` form replays with corpus-trained stats.
-    ``ttl_ms`` bounds the dedup horizon like every other gate here
-    (ADVICE r7: the verified gate holds the heaviest per-bucket state,
-    so it is the one MOST in need of a bounded horizon).
 
-    Malformed vectors (null or wrong length — ADVICE r7) no longer
-    kill the query: they are unverifiable, so they are forgiven
+    Malformed vectors (null or wrong length — ADVICE r7) do not kill
+    the query: they are unverifiable, so they are forgiven
     (``is_first = True``), matching the batch twin where a null vector
     yields a null cosine that never passes the threshold. A malformed
     FIRST arrival still claims its bucket (again like the batch twin's
@@ -1227,138 +1080,69 @@ class VerifiedBucketClaimProcessor(StatefulProcessor):
     rows are processed in id order so the batch's own minimum claims
     before later rows verify against it — doc-for-doc the batch
     ``embedding_first_arrival_verified`` verdict (parity-pinned)."""
+    import numpy as np
 
-    def __init__(
-        self,
-        threshold: float,
-        dims: int,
-        out_fields: list[str] | None = None,
-        round_dp: int = 6,
-        sq_mn: list[float] | None = None,
-        sq_scale: list[float] | None = None,
-        ttl_ms: int | None = None,
-    ) -> None:
-        self._threshold = threshold
-        self._dims = dims
-        self._round_dp = round_dp
-        self._out_fields = out_fields or [
-            f.name for f in _LSH_CLAIM_OUT.fields
-        ]
-        if (sq_mn is None) != (sq_scale is None):
-            raise ValueError("sq_mn and sq_scale must be given together")
-        if sq_mn is not None and (
-            len(sq_mn) != dims or len(sq_scale) != dims
-        ):
-            raise ValueError(
-                f"SQ params must have {dims} entries, got "
-                f"{len(sq_mn)}/{len(sq_scale)}"
-            )
-        self._sq_mn = list(sq_mn) if sq_mn is not None else None
-        self._sq_scale = list(sq_scale) if sq_scale is not None else None
-        self._ttl_ms = ttl_ms
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        from pyspark.sql.types import ArrayType, BinaryType
-
-        vec_field = (
-            StructField("owner_codes", BinaryType())
-            if self._sq_mn is not None
-            else StructField("owner_vec", ArrayType(DoubleType()))
+    if (sq_mn is None) != (sq_scale is None):
+        raise ValueError("sq_mn and sq_scale must be given together")
+    if sq_mn is not None and (len(sq_mn) != dims or len(sq_scale) != dims):
+        raise ValueError(
+            f"SQ params must have {dims} entries, got {len(sq_mn)}/{len(sq_scale)}"
         )
-        schema = StructType([StructField("owner_id", LongType()), vec_field])
-        self._owner = handle.getValueState("owner", schema, self._ttl_ms)
+    sq = sq_mn is not None
+    if sq:
+        mn, scale = np.asarray(sq_mn, np.float64), np.asarray(sq_scale, np.float64)
 
-    def _encode(self, vec) -> bytes:
+    def encode(vec) -> bytes:
         """SQ8-encode one vector to ``dims`` bytes — sq_quantize's
         formula (half-away rounding, clamp to [0, 255], constant dims
         code to 0)."""
-        import numpy as np
-
-        x = np.asarray(vec, dtype=np.float64)
-        mn = np.asarray(self._sq_mn)
-        scale = np.asarray(self._sq_scale)
         with np.errstate(divide="ignore", invalid="ignore"):
-            raw = (x - mn) / scale
+            raw = (np.asarray(vec, dtype=np.float64) - mn) / scale
         raw = np.floor(np.abs(raw) + 0.5) * np.sign(raw)  # half-away
         codes = np.clip(raw, 0.0, 255.0)
         codes[scale <= 0.0] = 0.0
         return bytes(codes.astype(np.uint8))
 
-    def _decode(self, codes: bytes):
-        import numpy as np
-
-        c = np.frombuffer(codes, dtype=np.uint8).astype(np.float64)
-        return np.asarray(self._sq_mn) + c * np.asarray(self._sq_scale)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
-        batch = _concat_chunks(rows)
-        if batch is None or not len(batch):
-            yield pd.DataFrame(columns=self._out_fields)
-            return
+    def step(state, _bucket, batch):
         batch = batch.sort_values("doc_id", kind="mergesort")
         ids = batch["doc_id"].to_numpy(dtype="int64")
         # tolerate null / ragged embeddings instead of crashing the
         # whole streaming query: invalid rows are unverifiable
         vecs = list(batch["vec"])
-        valid = np.array(
-            [v is not None and len(v) == self._dims for v in vecs]
-        )
-        mat = np.zeros((len(vecs), self._dims), dtype=np.float64)
+        valid = np.array([v is not None and len(v) == dims for v in vecs])
+        mat = np.zeros((len(vecs), dims), dtype=np.float64)
         for i, v in enumerate(vecs):
             if valid[i]:
                 mat[i] = np.asarray(v, dtype=np.float64)
-        if self._owner.exists():
-            owner_id, stored = self._owner.get()
-            if stored is not None and len(stored):
-                owner_vec = (
-                    self._decode(stored)
-                    if self._sq_mn is not None
-                    else np.asarray(stored, dtype=np.float64)
-                )
-            else:
-                owner_vec = None  # malformed first arrival claimed it
-        else:
+        owner_id, stored = state
+        if owner_id is None:
             owner_id = int(ids[0])
-            if valid[0]:
-                owner_vec = mat[0]
-                stored = (
-                    self._encode(vecs[0])
-                    if self._sq_mn is not None
-                    else [float(x) for x in owner_vec]
-                )
-                # under SQ the stored side is what later arrivals
-                # compare against — reconstruct it for THIS batch too
-                if self._sq_mn is not None:
-                    owner_vec = self._decode(stored)
+            if not valid[0]:
+                stored = b"" if sq else []
+            elif sq:
+                stored = encode(vecs[0])
             else:
-                owner_vec = None
-                stored = b"" if self._sq_mn is not None else []
-            self._owner.update((owner_id, stored))
-        non_owner = ids != owner_id
-        if owner_vec is None:
-            verified = np.zeros(len(ids), dtype=bool)
+                stored = [float(x) for x in mat[0]]
+        if stored is None or not len(stored):
+            verified = np.zeros(len(ids), dtype=bool)  # malformed owner
         else:
-            # rounded cosine vs the ONE owner — half-away rounding, the
-            # engine's BLAS/oracle parity contract
-            on = float(np.linalg.norm(owner_vec))
-            norms = np.linalg.norm(mat, axis=1)
-            denom = norms * on
+            # under SQ the stored side is what every arrival compares
+            # against: the reconstructed owner
+            owner_vec = (
+                mn + np.frombuffer(stored, dtype=np.uint8) * scale
+                if sq
+                else np.asarray(stored, dtype=np.float64)
+            )
+            # 6-dp rounded cosine vs the ONE owner — half-away rounding,
+            # the engine's BLAS/oracle parity contract
+            denom = np.linalg.norm(mat, axis=1) * float(np.linalg.norm(owner_vec))
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = mat @ owner_vec / denom
-            q = 10 ** self._round_dp
-            cos = np.floor(np.abs(cos) * q + 0.5) / q * np.sign(cos)
-            verified = non_owner & valid & (denom > 0) & (cos >= self._threshold)
-        yield pd.DataFrame(
-            {"doc_id": ids, "is_first": ~verified},
-            columns=self._out_fields,
-        )
+            cos = np.floor(np.abs(cos) * 10**6 + 0.5) / 10**6 * np.sign(cos)
+            verified = (ids != owner_id) & valid & (denom > 0) & (cos >= threshold)
+        return (owner_id, stored), pd.DataFrame({"doc_id": ids, "is_first": ~verified})
 
-    def close(self) -> None:
-        pass
+    return step
 
 
 def streaming_embedding_dedup_verified(
@@ -1391,7 +1175,7 @@ def streaming_embedding_dedup_verified(
     per band (verification needs it), so the claim shuffle carries
     (long, int, long, ``dims``×double) rows. The verdict seam and
     output contract are the standard two-operator topology —
-    ``DocVerdictProcessor`` composes unchanged because
+    the verdict step composes unchanged because
     ``is_first := NOT verified-collision`` maps the verified rule onto
     the kept-iff-first-everywhere contract.
 
@@ -1430,27 +1214,20 @@ def streaming_embedding_dedup_verified(
         F.col("bb.band_id").alias("band_id"),
         F.col("bb.bucket").alias("bucket"),
     )
-    claims = incidence.groupBy("band_id", "bucket").transformWithStateInPandas(
-        VerifiedBucketClaimProcessor(
-            threshold,
-            dims,
-            [f.name for f in _LSH_CLAIM_OUT.fields],
-            sq_mn=sq_mn,
-            sq_scale=sq_scale,
-            ttl_ms=state_ttl_ms,
-        ),
-        outputStructType=_LSH_CLAIM_OUT,
-        outputMode="append",
-        timeMode=_time_mode(state_ttl_ms),
+    owner = StructField(
+        "owner",
+        BinaryType() if sq_mn is not None else ArrayType(DoubleType()),
     )
-    verdicts = claims.groupBy("doc_id").transformWithStateInPandas(
-        DocVerdictProcessor(
-            bands, [f.name for f in LSH_VERDICT_OUTPUT.fields]
-        ),
-        outputStructType=LSH_VERDICT_OUTPUT,
-        outputMode="append",
-        timeMode="none",
+    claims = fold_by_key(
+        incidence,
+        ["band_id", "bucket"],
+        StructType([StructField("owner_id", LongType()), owner]),
+        (None, None),
+        _verified_claim_step(threshold, dims, sq_mn, sq_scale),
+        _LSH_CLAIM_OUT,
+        state_ttl_ms,
     )
+    verdicts = _verdicts(claims, bands, LSH_VERDICT_OUTPUT)
     return verdicts.select(
         F.col("doc_id").alias(id_col), "n_bands", "n_first", "kept"
     )
@@ -1515,15 +1292,26 @@ HEAVY_HITTERS_OUTPUT = StructType(
     ]
 )
 
-_HH_ROW_STATE = StructType(
-    [StructField("item", StringType()), StructField("weight", LongType())]
-)
-_HH_META_STATE = StructType(
-    [StructField("n_seen", LongType()), StructField("err_total", LongType())]
+_HH_STATE = StructType(
+    [
+        StructField("n_seen", LongType()),
+        StructField("err_total", LongType()),
+        StructField(
+            "items",
+            ArrayType(
+                StructType(
+                    [
+                        StructField("item", StringType()),
+                        StructField("weight", LongType()),
+                    ]
+                )
+            ),
+        ),
+    ]
 )
 
 
-class HeavyHittersProcessor(StatefulProcessor):
+def misra_gries_step(state, bucket, batch, capacity: int):
     """Misra-Gries frequent-items sketch over an unbounded stream —
     bounded state (≤ ``capacity`` counters per bucket) with the classic
     deterministic guarantees, NOT a sampling estimate:
@@ -1543,65 +1331,29 @@ class HeavyHittersProcessor(StatefulProcessor):
     ANY arrival order / micro-batch split (the exact weights, like any
     MG summary, are split-dependent; the bounds are not).
 
-    Emission contract = WeightedReservoirProcessor's: every batch
-    re-emits the bucket's CURRENT tracked set stamped with ``n_seen``;
-    consumers read the max-``n_seen`` emission per bucket.
+    Emission contract = the weighted reservoir's: every batch re-emits
+    the bucket's CURRENT tracked set stamped with ``n_seen``; consumers
+    read the max-``n_seen`` emission per bucket.
 
-    State is O(capacity) rows per bucket FOREVER — the entire point of
-    a frequent-items sketch at 100 TB: 1024 buckets × 256 counters ≈
-    8 MB of state for exact-bounded top talkers over any volume.
-    """
-
-    def __init__(self, capacity: int) -> None:
-        self._cap = int(capacity)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._items = handle.getListState("items", _HH_ROW_STATE)
-        self._meta = handle.getValueState("meta", _HH_META_STATE)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        weights: dict[str, int] = {r[0]: int(r[1]) for r in self._items.get()}
-        n_seen, err_total = (
-            self._meta.get() if self._meta.exists() else (0, 0)
-        )
-        batch = _concat_chunks(rows)
-        if batch is not None and len(batch):
-            n_seen += int(len(batch))
-            for item, cnt in batch["item"].value_counts().items():
-                weights[item] = weights.get(item, 0) + int(cnt)
-            if len(weights) > self._cap:
-                # (cap+1)-th largest weight is the decrement (ties on
-                # weight broken by item so the step is deterministic)
-                ordered = sorted(
-                    weights.items(), key=lambda kv: (-kv[1], kv[0])
-                )
-                d = ordered[self._cap][1]
-                weights = {k: v - d for k, v in ordered if v - d > 0}
-                err_total += d
-            self._items.clear()
-            if weights:
-                self._items.appendList(
-                    [(k, v) for k, v in sorted(weights.items())]
-                )
-            self._meta.update((n_seen, err_total))
-        out = [
-            {
-                "bucket": int(key[0]),
-                "item": item,
-                "weight": w,
-                "err_total": err_total,
-                "n_seen": n_seen,
-            }
-            for item, w in sorted(weights.items())
-        ]
-        yield pd.DataFrame(
-            out, columns=[f.name for f in HEAVY_HITTERS_OUTPUT.fields]
-        )
-
-    def close(self) -> None:
-        pass
+    State is O(capacity) (item, weight) structs per bucket FOREVER — the
+    entire point of a frequent-items sketch at 100 TB: 1024 buckets ×
+    256 counters ≈ 8 MB of state for exact-bounded top talkers over any
+    volume."""
+    n_seen, err_total, items = state
+    weights = dict(items)
+    for item, cnt in batch["item"].value_counts().items():
+        weights[item] = weights.get(item, 0) + int(cnt)
+    if len(weights) > capacity:
+        # (cap+1)-th largest weight is the decrement (ties on weight
+        # broken by item so the step is deterministic)
+        ordered = sorted(weights.items(), key=lambda kv: (-kv[1], kv[0]))
+        d = ordered[capacity][1]
+        weights = {k: v - d for k, v in ordered if v - d > 0}
+        err_total += d
+    items = sorted(weights.items())
+    n_seen += len(batch)
+    out = [(int(bucket), item, w, err_total, n_seen) for item, w in items]
+    return (n_seen, err_total, items), out
 
 
 def streaming_heavy_hitters(
@@ -1627,12 +1379,8 @@ def streaming_heavy_hitters(
         .alias("bucket"),
         F.col(item_col).cast("string").alias("item"),
     )
-    return src.groupBy("bucket").transformWithStateInPandas(
-        HeavyHittersProcessor(capacity),
-        outputStructType=HEAVY_HITTERS_OUTPUT,
-        outputMode="append",
-        timeMode="none",
-    )
+    step = functools.partial(misra_gries_step, capacity=int(capacity))
+    return fold_by_key(src, "bucket", _HH_STATE, (0, 0, []), step, HEAVY_HITTERS_OUTPUT)
 
 
 # --------------------------------------------------------------------------
@@ -1649,10 +1397,12 @@ KMV_OUTPUT = StructType(
     ]
 )
 
-_KMV_ROW_STATE = StructType([StructField("h", LongType())])
+_KMV_STATE = StructType(
+    [StructField("n_seen", LongType()), StructField("mins", ArrayType(LongType()))]
+)
 
 
-class KmvDistinctProcessor(StatefulProcessor):
+def _kmv_step(k: int) -> Step:
     """Per-key K-Minimum-Values distinct-count sketch over an unbounded
     stream — O(k) state per key forever, and (unlike the MG heavy-hitter
     or the arrival-order domain cap) a sketch whose value is
@@ -1667,59 +1417,24 @@ class KmvDistinctProcessor(StatefulProcessor):
     exactly.
 
     Emission: each batch re-emits the key's current sketch summary
-    stamped with n_seen; consumers take the max-n_seen row per key.
-    """
+    stamped with n_seen; consumers take the max-n_seen row per key."""
 
-    def __init__(self, k: int) -> None:
-        self._k = int(k)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._mins = handle.getListState("mins", _KMV_ROW_STATE)
-        self._n = handle.getValueState("n", _COUNT_STATE)
-
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        cur = sorted(int(r[0]) for r in self._mins.get())
-        (n_seen,) = self._n.get() if self._n.exists() else (0,)
-        batch = _concat_chunks(rows)
-        if batch is not None and len(batch):
-            n_seen += int(len(batch))
-            merged = sorted(set(cur) | set(int(h) for h in batch["h"]))
-            cur = merged[: self._k]
-            self._mins.clear()
-            if cur:
-                self._mins.appendList([(h,) for h in cur])
-            self._n.update((n_seen,))
-        if cur:
-            kth = cur[-1]
-            n_kept = len(cur)
-            if n_kept < self._k:
-                est = float(n_kept)
-            elif kth == 0:
-                # ~2^-60 event; the batch twin's SQL division yields
-                # Infinity rather than raising — match it instead of
-                # killing the streaming query with ZeroDivisionError
-                est = float("inf")
-            else:
-                est = float(self._k - 1) / (float(kth) / float(1 << 60))
+    def step(state, key, batch):
+        n_seen = state[0] + len(batch)
+        cur = sorted(set(state[1]) | set(map(int, batch["h"])))[:k]
+        kth, n_kept = cur[-1], len(cur)
+        if n_kept < k:
+            est = float(n_kept)
+        elif kth == 0:
+            # ~2^-60 event; the batch twin's SQL division yields
+            # Infinity rather than raising — match it instead of
+            # killing the streaming query with ZeroDivisionError
+            est = float("inf")
         else:
-            kth, n_kept, est = 0, 0, 0.0
-        yield pd.DataFrame(
-            [
-                {
-                    "k": key[0],
-                    "kth_min": kth,
-                    "n_kept": n_kept,
-                    "distinct_estimate": est,
-                    "n_seen": n_seen,
-                }
-            ],
-            columns=[f.name for f in KMV_OUTPUT.fields],
-        )
+            est = float(k - 1) / (float(kth) / float(1 << 60))
+        return (n_seen, cur), [(key, kth, n_kept, est, n_seen)]
 
-    def close(self) -> None:
-        pass
+    return step
 
 
 def streaming_kmv_distinct(
@@ -1737,12 +1452,7 @@ def streaming_kmv_distinct(
         F.col(group_col).cast("string").alias("k"),
         md5_prefix_long(F.col(value_col).cast("string")).alias("h"),
     )
-    return src.groupBy("k").transformWithStateInPandas(
-        KmvDistinctProcessor(k),
-        outputStructType=KMV_OUTPUT,
-        outputMode="append",
-        timeMode="none",
-    )
+    return fold_by_key(src, "k", _KMV_STATE, (0, []), _kmv_step(int(k)), KMV_OUTPUT)
 
 
 IVF_POSTING_OUTPUT = StructType(
@@ -1763,7 +1473,7 @@ class PostingAppendProcessor(StatefulProcessor):
     item 2): keyed by ``centroid_id``, MapState holds one entry per
     member ever posted to this cell, and an arrival is emitted as a NEW
     posting row iff its ``member_id`` has not posted here before —
-    first-arrival commit, the ``BucketClaimProcessor`` contract applied
+    first-arrival commit, the bucket-claim contract applied
     to posting lists, so at-least-once redelivery upstream still grows
     the artifact exactly once per vector.
 
@@ -1952,64 +1662,31 @@ TEXT_DELETE_OUTPUT = StructType([StructField("doc_id", LongType())])
 _DOC_SEEN_STATE = StructType([StructField("one", LongType())])
 
 
-class DocFirstArrivalProcessor(StatefulProcessor):
+def _doc_first_arrival(emit: Callable[[int, pd.Series], list[tuple]]) -> Step:
     """First-arrival commit keyed by ``doc_id`` — the exactly-once seam
     for the TEXT index's streaming maintenance, the
     ``PostingAppendProcessor`` contract applied to documents: the first
-    time a doc id is ever seen, its payload is emitted; redeliveries
-    (same trigger or later) emit nothing. State is ONE ValueState flag
+    time a doc id is ever seen, ``emit(doc_id, first_row)`` rows go out;
+    redeliveries (same trigger or later) emit nothing. State is ONE flag
     per distinct doc forever (``ttl_ms`` bounds the horizon; after
     expiry a re-arrival re-emits and the store-side set/compaction
-    semantics absorb the duplicate).
+    semantics absorb the duplicate)."""
 
-    ``emit='postings'`` tokenizes the doc's text EXACTLY like the
-    engine-wide ``_words`` split (``split(' ')``, empty tokens
-    dropped — the BM25/term_postings contract) and emits the
-    ``positional_postings`` rows ``(term, doc_id, pos)``;
-    ``emit='delete'`` emits the single ``(doc_id,)`` row a
-    ``postings_store_delete`` set append consumes."""
+    def step(state, doc_id, batch):
+        if state[0]:
+            return state, []
+        return (1,), emit(int(doc_id), batch.iloc[0])
 
-    def __init__(self, emit: str, ttl_ms: int | None = None) -> None:
-        assert emit in ("postings", "delete")
-        self._emit = emit
-        self._ttl_ms = ttl_ms
+    return step
 
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._seen = handle.getValueState("seen", _DOC_SEEN_STATE, self._ttl_ms)
 
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        if self._seen.exists():
-            return
-        first = None
-        for pdf in rows:
-            if pdf is not None and len(pdf):
-                first = pdf.iloc[0]
-                break
-        if first is None:
-            return
-        self._seen.update((1,))
-        doc_id = int(key[0])
-        if self._emit == "delete":
-            yield pd.DataFrame({"doc_id": [doc_id]})
-            return
-        text = first["text"]
-        words = [
-            w for w in (text.split(" ") if isinstance(text, str) else [])
-            if w != ""
-        ]
-        if words:
-            yield pd.DataFrame(
-                {
-                    "term": words,
-                    "doc_id": [doc_id] * len(words),
-                    "pos": list(range(1, len(words) + 1)),
-                }
-            )
-
-    def close(self) -> None:
-        pass
+def _positional_postings(doc_id: int, rec: pd.Series) -> list[tuple]:
+    """Tokenize EXACTLY like the engine-wide ``_words`` split
+    (``split(' ')``, empty tokens dropped — the BM25/term_postings
+    contract) into ``positional_postings`` rows ``(term, doc_id, pos)``."""
+    text = rec["text"]
+    words = [w for w in (text.split(" ") if isinstance(text, str) else []) if w != ""]
+    return [(w, doc_id, pos) for pos, w in enumerate(words, start=1)]
 
 
 def streaming_postings_ingest(
@@ -2031,11 +1708,14 @@ def streaming_postings_ingest(
         F.col(id_col).cast("long").alias("doc_id"),
         F.col(text_col).cast("string").alias("text"),
     )
-    return src.groupBy("doc_id").transformWithStateInPandas(
-        DocFirstArrivalProcessor("postings", state_ttl_ms),
-        outputStructType=TEXT_POSTING_OUTPUT,
-        outputMode="append",
-        timeMode=_time_mode(state_ttl_ms),
+    return fold_by_key(
+        src,
+        "doc_id",
+        _DOC_SEEN_STATE,
+        (0,),
+        _doc_first_arrival(_positional_postings),
+        TEXT_POSTING_OUTPUT,
+        state_ttl_ms,
     )
 
 
@@ -2052,11 +1732,14 @@ def streaming_postings_delete(
     delta-sized under redelivery), not a correctness requirement —
     the same division of labor as the ivf tombstone/compaction pair."""
     src = stream.select(F.col(id_col).cast("long").alias("doc_id"))
-    return src.groupBy("doc_id").transformWithStateInPandas(
-        DocFirstArrivalProcessor("delete", state_ttl_ms),
-        outputStructType=TEXT_DELETE_OUTPUT,
-        outputMode="append",
-        timeMode=_time_mode(state_ttl_ms),
+    return fold_by_key(
+        src,
+        "doc_id",
+        _DOC_SEEN_STATE,
+        (0,),
+        _doc_first_arrival(lambda doc_id, _rec: [(doc_id,)]),
+        TEXT_DELETE_OUTPUT,
+        state_ttl_ms,
     )
 
 
@@ -2072,22 +1755,24 @@ RATE_ANOMALY_OUTPUT = StructType(
         # 'late' = events for an already-closed bucket (W11
         # sideOutputLateData pattern: tagged, never silently dropped);
         # 'overflow' = events beyond the max-gap horizon (bounded
-        # worker protection — see RateAnomalyProcessor)
+        # worker protection — see _rate_anomaly_step)
         StructField("channel", StringType()),
     ]
 )
 
-_RATE_CUR_STATE = StructType(
+_RATE_STATE = StructType(
     [
         StructField("bucket", LongType()),
         StructField("cnt", LongType()),
         StructField("rn", LongType()),
+        StructField("ring", ArrayType(LongType())),
     ]
 )
-_RATE_RING_ROW = StructType([StructField("c", LongType())])
 
 
-class RateAnomalyProcessor(StatefulProcessor):
+def _rate_anomaly_step(
+    taps: int, threshold: float, min_count: int, bucket_ms: int, max_gap: int
+) -> Step:
     """Per-key LIVE twin of ``rollups.rate_anomaly``: a bucket's verdict
     is emitted the moment a LATER bucket's first event closes it (the
     monitor fires while the storm is still running, not at batch time).
@@ -2096,13 +1781,13 @@ class RateAnomalyProcessor(StatefulProcessor):
     dyadic EWMA values, computed with the identical 2^-i exact-double
     kernel — match the batch operator row-for-row.
 
-    State per key: the open (bucket, cnt, rn) triple plus a ring of the
-    last ``taps`` CLOSED bucket counts — O(taps) longs forever,
-    volume-independent. Parity precondition: per-key non-decreasing
-    bucket arrival (the in-order contract every batch/streaming twin
-    here replays). Two departures from it are SURFACED, never silent
-    (the W11 ``sideOutputLateData`` pattern — tagged rows on the same
-    stream, split by ``channel``):
+    State per key: the open (bucket, cnt, rn) triple plus a ring array
+    of the last ``taps`` CLOSED bucket counts, most recent first —
+    O(taps) longs forever, volume-independent. Parity precondition:
+    per-key non-decreasing bucket arrival (the in-order contract every
+    batch/streaming twin here replays). Two departures from it are
+    SURFACED, never silent (the W11 ``sideOutputLateData`` pattern —
+    tagged rows on the same stream, split by ``channel``):
 
     - ``channel='late'``: events for an already-closed bucket. One row
       per (key, late bucket) per trigger with ``cnt`` = late-event
@@ -2110,7 +1795,7 @@ class RateAnomalyProcessor(StatefulProcessor):
       already shipped and is immutable). Main-channel rows are
       byte-identical whether or not late events arrive.
     - ``channel='overflow'``: an arrival whose gap from the open
-      bucket exceeds ``max_gap_buckets``. The batch twin distributes
+      bucket exceeds ``max_gap`` buckets. The batch twin distributes
       its dense zero-fill explode across the cluster, but here ONE
       Python worker would synchronously emit gap/bucket_ms rows in a
       single trigger — a far-future/corrupt timestamp must not stall
@@ -2121,7 +1806,7 @@ class RateAnomalyProcessor(StatefulProcessor):
       also guards the FIRST arrival in reverse: a key whose first-ever
       event carries a corrupt far-future timestamp becomes the open
       bucket blind (no earlier state to check against), but as soon as
-      a legitimate event lands more than ``max_gap_buckets`` BELOW an
+      a legitimate event lands more than ``max_gap`` buckets BELOW an
       open bucket that has produced no verdict yet, the anchor is
       recognized as the corrupt one — it is surfaced on the overflow
       channel and the key re-anchors to the legitimate bucket (no
@@ -2129,75 +1814,29 @@ class RateAnomalyProcessor(StatefulProcessor):
       branch).
 
     The key's final open bucket is never emitted (nothing closes it)
-    — the batch twin's last row per key.
-    """
+    — the batch twin's last row per key."""
 
-    def __init__(
-        self,
-        taps: int,
-        threshold: float,
-        min_count: int,
-        bucket_ms: int,
-        max_gap_buckets: int = 10_000,
-    ) -> None:
-        self._taps = int(taps)
-        self._threshold = float(threshold)
-        self._min_count = int(min_count)
-        self._bucket_ms = int(bucket_ms)
-        self._max_gap = int(max_gap_buckets)
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._cur = handle.getValueState("cur", _RATE_CUR_STATE)
-        self._ring = handle.getListState("ring", _RATE_RING_ROW)
-
-    def _verdict(self, key, bucket, cnt, rn, ring):
+    def verdict(key, bucket, cnt, rn, ring):
         ew = 0.0
-        for i, c in enumerate(ring[: self._taps], start=1):
-            ew += float(c) * (2.0 ** -i)
+        for i, c in enumerate(ring[:taps], start=1):
+            ew += float(c) * (2.0**-i)
         score = (float(cnt) / ew) if ew > 0 else None
         anom = bool(
-            rn > self._taps
-            and cnt >= self._min_count
-            and (ew == 0.0 or float(cnt) >= self._threshold * ew)
+            rn > taps
+            and cnt >= min_count
+            and (ew == 0.0 or float(cnt) >= threshold * ew)
         )
-        return {
-            "k": key,
-            "bucket": bucket,
-            "cnt": cnt,
-            "ewma_prev": ew,
-            "score": score,
-            "is_anomaly": anom,
-            "channel": "main",
-        }
+        return (key, bucket, cnt, ew, score, anom, "main")
 
-    @staticmethod
-    def _side(key, bucket, cnt, channel):
+    def side(key, bucket, cnt, channel):
         # late/overflow rows carry the raw event count only; the EWMA
         # kernel never sees them, so its columns are NULL
-        return {
-            "k": key,
-            "bucket": bucket,
-            "cnt": cnt,
-            "ewma_prev": None,
-            "score": None,
-            "is_anomaly": None,
-            "channel": channel,
-        }
+        return (key, bucket, cnt, None, None, None, channel)
 
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        batch = _concat_chunks(rows)
-        if batch is None or not len(batch):
-            return
-        if self._cur.exists():
-            cur_b, cur_c, rn = self._cur.get()
-        else:
-            cur_b, cur_c, rn = None, 0, 0
-        ring = [int(r[0]) for r in self._ring.get()]  # most-recent-first
+    def step(state, key, batch):
+        cur_b, cur_c, rn, ring = state
         out = []
-        counts = batch.groupby("bucket").size().sort_index()
-        for bucket, n in counts.items():
+        for bucket, n in batch.groupby("bucket").size().sort_index().items():
             bucket, n = int(bucket), int(n)
             if cur_b is None:
                 cur_b, cur_c = bucket, n
@@ -2206,10 +1845,7 @@ class RateAnomalyProcessor(StatefulProcessor):
                 cur_c += n
                 continue
             if bucket < cur_b:  # late into a closed bucket: side-output
-                if (
-                    rn == 0
-                    and (cur_b - bucket) // self._bucket_ms > self._max_gap
-                ):
+                if rn == 0 and (cur_b - bucket) // bucket_ms > max_gap:
                     # the open bucket never closed into a verdict and
                     # sits beyond the gap horizon ABOVE this arrival:
                     # the anchor itself is the corrupt far-future
@@ -2223,36 +1859,28 @@ class RateAnomalyProcessor(StatefulProcessor):
                     # shipped verdict is rewritten, and an in-order
                     # stream never takes this branch (batch parity
                     # untouched).
-                    out.append(self._side(key[0], cur_b, cur_c, "overflow"))
+                    out.append(side(key, cur_b, cur_c, "overflow"))
                     cur_b, cur_c = bucket, n
                     continue
-                out.append(self._side(key[0], bucket, n, "late"))
+                out.append(side(key, bucket, n, "late"))
                 continue
-            if (bucket - cur_b) // self._bucket_ms > self._max_gap:
+            if (bucket - cur_b) // bucket_ms > max_gap:
                 # beyond the gap horizon: bounded-output protection —
                 # surface instead of emitting gap/bucket_ms zero rows
-                out.append(self._side(key[0], bucket, n, "overflow"))
+                out.append(side(key, bucket, n, "overflow"))
                 continue
             # close cur, then emit the zero-count gap buckets
             b = cur_b
             while b < bucket:
                 cnt_b = cur_c if b == cur_b else 0
                 rn += 1
-                out.append(self._verdict(key[0], b, cnt_b, rn, ring))
-                ring = [cnt_b] + ring[: self._taps - 1]
-                b += self._bucket_ms
+                out.append(verdict(key, b, cnt_b, rn, ring))
+                ring = [cnt_b] + ring[: taps - 1]
+                b += bucket_ms
             cur_b, cur_c = bucket, n
-        self._cur.update((cur_b, cur_c, rn))
-        self._ring.clear()
-        if ring:
-            self._ring.appendList([(c,) for c in ring])
-        if out:
-            yield pd.DataFrame(
-                out, columns=[f.name for f in RATE_ANOMALY_OUTPUT.fields]
-            )
+        return (cur_b, cur_c, rn, ring), out
 
-    def close(self) -> None:
-        pass
+    return step
 
 
 def streaming_rate_anomaly(
@@ -2266,7 +1894,7 @@ def streaming_rate_anomaly(
     max_gap_buckets: int = 10_000,
 ) -> DataFrame:
     """Streaming EWMA rate-spike monitor — the live twin of
-    ``rollups.rate_anomaly`` (see ``RateAnomalyProcessor``): per-key
+    ``rollups.rate_anomaly`` (see ``_rate_anomaly_step``): per-key
     bucket verdicts emitted as soon as the bucket closes, exact-dyadic
     EWMA parity with the batch operator row-for-row under in-order
     arrival (test-pinned across micro-batch splits). O(taps) state per
@@ -2285,11 +1913,13 @@ def streaming_rate_anomaly(
         F.col(key_col).cast("string").alias("k"),
         (tsm - F.pmod(tsm, F.lit(bucket_ms))).cast("long").alias("bucket"),
     )
-    return src.groupBy("k").transformWithStateInPandas(
-        RateAnomalyProcessor(
-            taps, threshold, min_count, bucket_ms, max_gap_buckets
-        ),
-        outputStructType=RATE_ANOMALY_OUTPUT,
-        outputMode="append",
-        timeMode="none",
+    step = _rate_anomaly_step(
+        int(taps),
+        float(threshold),
+        int(min_count),
+        int(bucket_ms),
+        int(max_gap_buckets),
+    )
+    return fold_by_key(
+        src, "k", _RATE_STATE, (None, 0, 0, []), step, RATE_ANOMALY_OUTPUT
     )

@@ -2,6 +2,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 
@@ -21,3 +22,33 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def drain():
+    """``drain(q, timeout)`` stops a streaming query once its input is
+    processed, then re-raises the query's failure. A processing-time
+    (TTL'd) transformWithState operator asks for another micro-batch on
+    every trigger, so an ``availableNow`` query over one never ends by
+    itself: this polls ``recentProgress`` until a batch with input rows
+    has been followed by a later batch (the fed batch is committed), or
+    the query has ended, and fails on ``timeout`` instead of going on."""
+
+    def _drain(q, timeout: float = 120.0) -> None:
+        deadline = time.monotonic() + timeout
+        try:
+            while q.isActive:
+                progress = q.recentProgress
+                fed = [i for i, p in enumerate(progress) if p["numInputRows"]]
+                if fed and fed[-1] < len(progress) - 1:
+                    break
+                if time.monotonic() > deadline:
+                    raise AssertionError(f"query not drained in {timeout} s")
+                time.sleep(0.2)
+        finally:
+            q.stop()
+        err = q.exception()
+        if err is not None:
+            raise err
+
+    return _drain

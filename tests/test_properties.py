@@ -769,30 +769,30 @@ def test_cdc_chunks_tile_any_document(spark, docs):
 @settings(max_examples=8, deadline=None)
 def test_mg_merge_step_bounds_hold_for_any_stream(items, cap, split):
     """Pure-python check of the exact MG batch step the streaming
-    processor runs: for ANY stream, ANY capacity, ANY batch split —
-    weight ≤ true ≤ weight + err_total, and anything with true count
-    > n/(cap+1) stays tracked. (No Spark job: this pins the algorithm
-    the processor embeds, so hypothesis can afford real coverage.)"""
+    operator runs (``tws.misra_gries_step``): for ANY stream, ANY
+    capacity, ANY batch split — weight ≤ true ≤ weight + err_total, and
+    anything with true count > n/(cap+1) stays tracked. (No Spark job:
+    the step is a pure function, so hypothesis can afford real
+    coverage.)"""
+    import pandas as pd
+
+    from flink_helloworld_spark.streaming.tws import misra_gries_step
+
     true: dict[str, int] = {}
     for it in items:
         true[it] = true.get(it, 0) + 1
 
-    # replay HeavyHittersProcessor.handleInputRows' merge step
-    weights: dict[str, int] = {}
-    err_total = 0
+    state = (0, 0, [])
     sz = (len(items) + split - 1) // split
     for b in range(split):
         batch = items[b * sz : (b + 1) * sz]
         if not batch:
             continue
-        for it in batch:
-            weights[it] = weights.get(it, 0) + 1
-        if len(weights) > cap:
-            ordered = sorted(weights.items(), key=lambda kv: (-kv[1], kv[0]))
-            d = ordered[cap][1]
-            weights = {k: v - d for k, v in ordered if v - d > 0}
-            err_total += d
+        state, _ = misra_gries_step(state, 0, pd.DataFrame({"item": batch}), cap)
+    n_seen, err_total, tracked = state
+    weights = dict(tracked)
 
+    assert n_seen == len(items)
     assert len(weights) <= cap
     for it, w in weights.items():
         assert w <= true[it] <= w + err_total, (it, w, err_total)

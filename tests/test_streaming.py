@@ -373,7 +373,7 @@ def test_console_sink_named_by_label(spark):
 
 
 @pytest.mark.slow
-def test_co_flat_map_state_ttl_expires(spark):
+def test_co_flat_map_state_ttl_expires(spark, drain):
     """T8 state TTL: with a processing-time TTL, idle keys are dropped —
     a fact arriving after expiry must re-buffer (its dimension state was
     cleared) instead of joining against stale state."""
@@ -411,11 +411,7 @@ def test_co_flat_map_state_ttl_expires(spark):
             .outputMode("append").option("checkpointLocation", ck)
             .trigger(availableNow=True).start()
         )
-        # availableNow + checkpoint recovery occasionally lingers after
-        # the final commit; bounded wait + explicit stop
-        q.awaitTermination(45)
-        q.stop()
-        q.awaitTermination(30)
+        drain(q)
         return spark.read.parquet(out_dir).collect()
 
     put(0, ("R", "k1", 0, None, "dim-one"))
@@ -428,6 +424,73 @@ def test_co_flat_map_state_ttl_expires(spark):
     # state expired: the new fact re-buffers (no stale-dimension join) —
     # cumulative sink output is unchanged from run one
     assert [(r.amount, r.dim_name) for r in second] == [(10, "dim-one")]
+
+
+class _DictValueState:
+    """A ValueState on a dict slot, counting writes and clears."""
+
+    def __init__(self) -> None:
+        self.value, self.writes, self.clears = None, 0, 0
+
+    def get(self):
+        return self.value
+
+    def update(self, value) -> None:
+        self.value, self.writes = tuple(value), self.writes + 1
+
+    def clear(self) -> None:
+        self.value, self.clears = None, self.clears + 1
+
+
+class _DictHandle:
+    """The slice of StatefulProcessorHandle the fold kernel uses."""
+
+    def __init__(self) -> None:
+        self.states: dict[str, _DictValueState] = {}
+        self.ttls: dict[str, int | None] = {}
+
+    def getValueState(self, name, schema, ttl_ms=None):
+        self.ttls[name] = ttl_ms
+        return self.states.setdefault(name, _DictValueState())
+
+
+def test_fold_kernel_state_rule_without_jvm():
+    """The keyed-state kernel's write rule, driven through a dict-backed
+    handle: an absent state reads as ``initial``; a state away from
+    ``initial`` is rewritten on every touch, also when unchanged (the
+    TTL refresh); a fold back to ``initial`` clears a stored slot and
+    writes nothing for an unstored one; ``ttl_ms`` reaches the state."""
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    from flink_helloworld_spark.streaming.tws import FoldProcessor
+
+    seen = []
+
+    def step(state, key, batch):
+        seen.append(state)
+        return (state[0] + int(batch["v"].sum()),), [(key, state[0])]
+
+    proc = FoldProcessor(
+        StructType([StructField("n", LongType())]), (0,), step, ["k", "before"], 5_000
+    )
+    handle = _DictHandle()
+    proc.init(handle)
+    assert handle.ttls == {"state": 5_000}
+    slot = handle.states["state"]
+
+    def run(*vs):
+        (out,) = proc.handleInputRows(("a",), iter([pd.DataFrame({"v": vs})]), None)
+        return list(out.itertuples(index=False, name=None))
+
+    assert run(2) == [("a", 0)] and seen[-1] == (0,)
+    assert (slot.value, slot.writes, slot.clears) == ((2,), 1, 0)
+    assert run(0) == [("a", 2)]
+    assert (slot.value, slot.writes, slot.clears) == ((2,), 2, 0)
+    run(-2)
+    assert (slot.value, slot.writes, slot.clears) == (None, 2, 1)
+    run(0)
+    assert seen[-1] == (0,)
+    assert (slot.value, slot.writes, slot.clears) == (None, 2, 1)
 
 
 # the input of test_followed_by_within_stream_expires_unmatchable_as

@@ -1283,7 +1283,7 @@ def test_lsh_gate_bucket_state_resumes_from_checkpoint(spark):
 
 
 @pytest.mark.slow
-def test_verified_gate_state_ttl_bounds_the_dedup_horizon(spark):
+def test_verified_gate_state_ttl_bounds_the_dedup_horizon(spark, drain):
     """`state_ttl_ms` on the VERIFIED embedding gate (ADVICE r7: the
     heaviest-state gate previously had no bounded horizon): an expired
     owner forgets, so a same-vector arrival after the horizon is
@@ -1336,9 +1336,7 @@ def test_verified_gate_state_ttl_bounds_the_dedup_horizon(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        q.stop()
-        q.awaitTermination(30)
+        drain(q)
         return sorted(
             (r.vec_id, r.kept) for r in spark.read.parquet(out_dir).collect()
         )
@@ -1358,7 +1356,7 @@ def test_verified_gate_state_ttl_bounds_the_dedup_horizon(spark):
 
 
 @pytest.mark.slow
-def test_lsh_gate_state_ttl_bounds_the_dedup_horizon(spark):
+def test_lsh_gate_state_ttl_bounds_the_dedup_horizon(spark, drain):
     """`state_ttl_ms` on the LSH gate: an EXPIRED bucket claim forgets
     its first arrival, so the same near-dup text is admitted again after
     the horizon — the state-size/recall dial of an unbounded ingest.
@@ -1393,9 +1391,7 @@ def test_lsh_gate_state_ttl_bounds_the_dedup_horizon(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        q.stop()
-        q.awaitTermination(30)
+        drain(q)
         return sorted(
             (r.doc_id, r.kept) for r in spark.read.parquet(out_dir).collect()
         )
@@ -1414,7 +1410,7 @@ def test_lsh_gate_state_ttl_bounds_the_dedup_horizon(spark):
 
 
 @pytest.mark.slow
-def test_lsh_gate_ttl_expiry_and_reclaim_survive_checkpoint_recovery(spark):
+def test_lsh_gate_ttl_expiry_and_reclaim_survive_checkpoint_recovery(spark, drain):
     """The full TTL'd-claim lifecycle ACROSS restarts (VERDICT r5 item
     5) — the exact path a long-running ingest hits weekly:
 
@@ -1467,9 +1463,7 @@ def test_lsh_gate_ttl_expiry_and_reclaim_survive_checkpoint_recovery(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        q.stop()
-        q.awaitTermination(30)
+        drain(q)
         return sorted(
             (r.doc_id, r.kept) for r in spark.read.parquet(out_dir).collect()
         )
@@ -1488,7 +1482,7 @@ def test_lsh_gate_ttl_expiry_and_reclaim_survive_checkpoint_recovery(spark):
 
 
 @pytest.mark.slow
-def test_banded_gate_ttl_expiry_and_reclaim_survive_checkpoint_recovery(spark):
+def test_banded_gate_ttl_expiry_and_reclaim_survive_checkpoint_recovery(spark, drain):
     """The same TTL'd-claim lifecycle across restarts for the BANDED
     embedding gate: a vector's claims live in ``bands`` independent
     (band, bucket) keys, and the expire → re-admit → re-claim → re-dedup
@@ -1534,9 +1528,7 @@ def test_banded_gate_ttl_expiry_and_reclaim_survive_checkpoint_recovery(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
-        q.stop()
-        q.awaitTermination(30)
+        drain(q)
         return sorted(
             (r.vec_id, r.n_first, r.kept)
             for r in spark.read.parquet(out_dir).collect()
