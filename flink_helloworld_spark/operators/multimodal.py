@@ -1,49 +1,51 @@
 """Multimodal column operators (north-star surface).
 
-Media travel as opaque ``BinaryType`` payload columns + typed metadata
-structs; decode / feature-extract / resize / frame-sample run as
-Arrow-batched ``mapInPandas`` stages (the only place Python belongs: per
-payload CPU-bound work, vectorized per batch, partition-parallel).
+Media travel as opaque ``BinaryType`` payload columns + typed metadata;
+decode / feature-extract / frame-sample run as Arrow-batched
+``mapInPandas`` stages (the only place Python belongs: per payload CPU-
+bound work, vectorized per batch, partition-parallel).
 
-The container has no image/audio libs, so lossy codecs (JPEG etc.)
-remain stubbed — but the netpbm (PPM/PGM/PBM) and BMP families need no
-library at all, and PNG needs only stdlib zlib: ``decode_image_features``
-decodes all three FOR REAL (PNG = chunk walk + CRC verify + inflate +
-full Paeth defilter — a genuinely COMPRESSED format, pure Python over
-Arrow batches). ``attach_ppm_binary`` / ``attach_png_binary`` build
-genuine payloads JVM-side so those modalities are decode-real
-end-to-end; other payloads fall back to the clearly-marked
-deterministic fake, keeping the pipeline total.
+Every ``attach_*_binary`` builder makes GENUINE payloads JVM-side from
+document text, so the DuckDB oracle replays the construction without a
+decoder. They share one payload kit: the hex byte-order helpers
+(``_be_hex`` / ``_le_hex`` / ``_le32``), the repeated-md5 byte source
+(``_md5_hex_stream``), the RIFF/WAVE header (``_wave_base`` +
+``_riff_wave``) and the media-row tail (``_media_rows``).
+
+The decoders need no codec library: netpbm, BMP and PNG (stdlib zlib)
+images, PCM WAV (stdlib ``wave``), G.711 mu-law and IMA-ADPCM audio and
+RIFF/AVI video all decode for real. The RIFF codecs read their chunks
+through one walker (``_riff_chunks``). Each per-payload parser is a pure
+function run by one decode stage (``_decode_stage``): a tuple of
+features, or None for a corrupt payload, which yields typed zeros and
+``decode_ok = false`` instead of poisoning the batch. The container has
+no image/audio libs, so lossy and perceptual codecs (JPEG, mp3/ogg/flac)
+fall back to the clearly-marked deterministic fakes, keeping the
+pipeline total.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
+import io
+import math
+import struct
+import wave
+import zlib
+from collections.abc import Callable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    BinaryType,
     BooleanType,
     DoubleType,
     IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
-)
-
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("media_type", StringType()),
-        StructField("payload", BinaryType()),
-        StructField("size_bytes", IntegerType()),
-        StructField("checksum", StringType()),
-    ]
 )
 
 IMAGE_FEATURES_SCHEMA = StructType(
@@ -57,20 +59,52 @@ IMAGE_FEATURES_SCHEMA = StructType(
 )
 
 
+# --- payload kit: the JVM-side plumbing every attach_* builder shares --------
+
+
+def _be_hex(col: Column, width_chars: int) -> Column:
+    """Big-endian hex of an integer column, zero-padded to width_chars."""
+    return F.lpad(F.hex(col), width_chars, "0")
+
+
+def _le_hex(col: Column, n_bytes: int) -> Column:
+    """Little-endian hex of an integer column over n_bytes bytes."""
+    be = _be_hex(col, 2 * n_bytes)
+    return F.concat(*[F.substring(be, 2 * i + 1, 2) for i in reversed(range(n_bytes))])
+
+
+def _le32(v: int) -> str:
+    """Little-endian hex of a constant uint32."""
+    return struct.pack("<I", v).hex()
+
+
+def _md5_hex_stream(text: Column, n_chars: Column) -> Column:
+    """The first n_chars hex chars of md5(text) repeated: the
+    deterministic byte source of every payload builder (md5 hex is 32
+    chars)."""
+    reps = (F.floor(n_chars / 32) + 1).cast("int")
+    return F.substring(F.call_function("repeat", F.md5(text), reps), F.lit(1), n_chars)
+
+
+def _media_rows(frame: DataFrame, media_type: str, payload: Column) -> DataFrame:
+    """The media row every builder emits: doc_id, the declared
+    media_type, the payload, its byte size and its md5 checksum."""
+    return frame.select(
+        "doc_id",
+        F.lit(media_type).alias("media_type"),
+        payload.alias("payload"),
+        F.length(payload).cast("int").alias("size_bytes"),
+        F.md5(payload).alias("checksum"),
+    )
+
+
 def attach_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """Materialize an opaque binary payload column + typed metadata.
 
     (In production the payload would come from object storage; here the
     document bytes stand in so the column plumbing is end-to-end real.)
     """
-    payload = F.encode(F.col(text_col), "UTF-8")
-    return docs.select(
-        "doc_id",
-        F.lit("image/fake").alias("media_type"),
-        payload.alias("payload"),
-        F.length(payload).alias("size_bytes").cast("int"),
-        F.md5(payload).alias("checksum"),
-    )
+    return _media_rows(docs, "image/fake", F.encode(F.col(text_col), "UTF-8"))
 
 
 def _parse_ppm(payload: bytes) -> tuple[int, int, int] | None:
@@ -128,8 +162,6 @@ def _parse_bmp(payload: bytes) -> tuple[int, int, int] | None:
     """REAL pure-Python BMP (Windows DIB) decoder: validates the BM file
     header and reads width/height/bit-count from a BITMAPINFOHEADER-or-
     later DIB header. Returns (width, height, channels) or None."""
-    import struct
-
     if len(payload) < 54 or payload[0:2] != b"BM":
         return None
     file_size = struct.unpack_from("<I", payload, 2)[0]
@@ -155,22 +187,13 @@ def attach_ppm_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     n = F.length(F.col(text_col))
     w = (n % 8 + 1).cast("int")
     h = (F.floor(n / 8).cast("int") % 8 + 1).cast("int")
-    hex_chars = w * h * F.lit(6)  # w*h*3 raster bytes = 2x that in hex
-    reps = F.floor(hex_chars / 32).cast("int") + 1  # md5 hex is 32 chars
     header = F.concat_ws(
         "", F.lit("P6\n"), w.cast("string"), F.lit(" "), h.cast("string"), F.lit("\n255\n")
     )
-    raster_hex = F.substring(
-        F.call_function("repeat", F.md5(F.col(text_col)), reps), F.lit(1), hex_chars
-    )
+    # w*h*3 raster bytes = 2x that in hex
+    raster_hex = _md5_hex_stream(F.col(text_col), w * h * F.lit(6))
     payload = F.concat(F.encode(header, "UTF-8"), F.unhex(raster_hex))
-    return docs.select(
-        "doc_id",
-        F.lit("image/x-portable-pixmap").alias("media_type"),
-        payload.alias("payload"),
-        F.length(payload).cast("int").alias("size_bytes"),
-        F.md5(payload).alias("checksum"),
-    )
+    return _media_rows(docs, "image/x-portable-pixmap", payload)
 
 
 def _png_defilter(raw: bytes, width: int, height: int, bpp: int) -> bytes | None:
@@ -223,9 +246,6 @@ def _decode_png(payload: bytes) -> tuple[int, int, int, bytes] | None:
     decoded for real with no codec library (zlib is the Python stdlib).
     Returns (width, height, channels, raster) or None if not PNG /
     corrupt."""
-    import struct
-    import zlib
-
     if len(payload) < 45 or payload[0:8] != b"\x89PNG\r\n\x1a\n":
         return None
     pos = 8
@@ -301,14 +321,6 @@ def attach_png_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     is computed once per row — inlined, CollapseProject would re-expand
     the whole raw-stream subtree into every per-byte lambda reference
     (O(bytes²) work; measured ~11 ms/row before staging)."""
-
-    def be_hex(col, width_chars: int):
-        return F.lpad(F.hex(col), width_chars, "0")
-
-    def le16_hex(col):
-        be = be_hex(col, 4)
-        return F.concat(F.substring(be, 3, 2), F.substring(be, 1, 2))
-
     n = F.length(F.col(text_col))
     dims = docs.select(
         "doc_id",
@@ -320,15 +332,9 @@ def attach_png_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         "_w",
         "_h",
-        F.substring(
-            F.call_function(
-                "repeat",
-                F.md5(F.col("_text")),
-                F.floor(F.col("_h") * F.col("_w") * 6 / 32).cast("int") + 1,
-            ),
-            F.lit(1),
-            F.col("_h") * F.col("_w") * 6,
-        ).alias("_raster_hex"),
+        _md5_hex_stream(F.col("_text"), F.col("_h") * F.col("_w") * 6).alias(
+            "_raster_hex"
+        ),
     )
     # raw deflate payload: per scanline, filter byte 00 + 3w raster bytes
     raw = raster.select(
@@ -399,10 +405,10 @@ def attach_png_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "_h",
         F.concat(
             F.lit("780101"),  # zlib header (no preset dict) + final stored block
-            le16_hex(F.col("_raw_len")),
-            le16_hex(F.lit(65535) - F.col("_raw_len")),
+            _le_hex(F.col("_raw_len"), 2),
+            _le_hex(F.lit(65535) - F.col("_raw_len"), 2),
             F.col("_raw_hex"),
-            be_hex(F.col("_s2") * 65536 + F.col("_s1"), 8),
+            _be_hex(F.col("_s2") * 65536 + F.col("_s1"), 8),
         ).alias("_zlib_hex"),
     )
     # chunk bodies staged so crc32 reads a bound column, not a re-inlined
@@ -411,8 +417,8 @@ def attach_png_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
         "doc_id",
         F.concat(
             F.lit("49484452"),  # "IHDR"
-            be_hex(F.col("_w").cast("long"), 8),
-            be_hex(F.col("_h").cast("long"), 8),
+            _be_hex(F.col("_w").cast("long"), 8),
+            _be_hex(F.col("_h").cast("long"), 8),
             F.lit("0802000000"),  # 8-bit, RGB, deflate, adaptive, no interlace
         ).alias("_ihdr_body"),
         F.concat(F.lit("49444154"), F.col("_zlib_hex")).alias("_idat_body"),
@@ -420,9 +426,9 @@ def attach_png_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     def chunk_from_body(body_col):
         return F.concat(
-            be_hex((F.length(body_col) / 2 - 4).cast("long"), 8),
+            _be_hex((F.length(body_col) / 2 - 4).cast("long"), 8),
             body_col,
-            be_hex(F.crc32(F.unhex(body_col)), 8),
+            _be_hex(F.crc32(F.unhex(body_col)), 8),
         )
 
     final = bodies.select(
@@ -436,13 +442,7 @@ def attach_png_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
             )
         ).alias("payload"),
     )
-    return final.select(
-        "doc_id",
-        F.lit("image/png").alias("media_type"),
-        "payload",
-        F.length("payload").cast("int").alias("size_bytes"),
-        F.md5("payload").alias("checksum"),
-    )
+    return _media_rows(final, "image/png", F.col("payload"))
 
 
 def _fake_decode(payload: bytes) -> tuple[int, int, int]:
@@ -522,6 +522,57 @@ def frame_sample(media: DataFrame, every_n: int = 10, n_frames_col: str = "size_
     )
 
 
+# --- decode kit: the Python-side plumbing every RIFF / audio decoder shares --
+
+
+def _decode_stage(
+    media: DataFrame, schema: StructType, parse: Callable[[bytes], tuple | None]
+) -> DataFrame:
+    """Arrow-batched decode stage over (doc_id, payload): ``parse`` maps
+    one payload to the tuple of ``schema``'s feature columns (every field
+    between doc_id and the trailing decode_ok), or to None for a payload
+    it refuses, which yields ``decode_ok = false`` and zeros typed from
+    the schema instead of poisoning the batch. Partition-preserving
+    ``mapInPandas``: no shuffle, no state."""
+    feature_fields = schema.fields[1:-1]
+    names = [f.name for f in feature_fields]
+    zeros = tuple(
+        0.0 if isinstance(f.dataType, DoubleType) else 0 for f in feature_fields
+    )
+
+    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [parse(bytes(p)) for p in pdf["payload"]]
+            out = pd.DataFrame(
+                [zeros if r is None else r for r in rows], columns=names
+            )
+            out.insert(0, "doc_id", pdf["doc_id"].to_numpy())
+            out["decode_ok"] = [r is not None for r in rows]
+            yield out
+
+    return media.select("doc_id", "payload").mapInPandas(decode, schema)
+
+
+def _riff_chunks(buf: bytes, pos: int = 12) -> Iterator[tuple[bytes, bytes, bool]]:
+    """Walk the RIFF chunks of ``buf`` from ``pos`` (12 skips the RIFF
+    header; 4 walks a LIST body past its type): yield (fourcc, body,
+    whole) per chunk and step over the pad byte after an odd-sized body.
+    ``whole`` is false when the body runs past the end of ``buf``; each
+    caller decides whether a cut chunk makes its payload corrupt."""
+    while pos + 8 <= len(buf):
+        (clen,) = struct.unpack_from("<I", buf, pos + 4)
+        body = buf[pos + 8 : pos + 8 + clen]
+        yield buf[pos : pos + 4], body, len(body) == clen
+        pos += 8 + clen + (clen & 1)
+
+
+def _rms_q(sum_sq: int, n: int) -> int:
+    """floor(sqrt(Σv²/n)), 0 for no samples. Every intermediate is exact
+    in float64 for the payloads the builders emit (Σv² < 2^53), so the
+    quantized RMS is engine-portable for the oracle."""
+    return int(math.floor(math.sqrt(sum_sq / n))) if n else 0
+
+
 AUDIO_FEATURES_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),
@@ -537,8 +588,7 @@ AUDIO_FEATURES_SCHEMA = StructType(
 def _fake_audio_decode(payload: bytes) -> tuple[int, int, int]:
     """DETERMINISTIC FAKE audio decoder (no audio libs in container):
     sample rate and quantized RMS derived from the payload md5; duration
-    proportional to byte length. Replace with soundfile/librosa when a
-    real codec exists."""
+    proportional to byte length."""
     h = hashlib.md5(payload).hexdigest()
     sample_rate = (8000, 16000, 22050, 44100)[int(h[6], 16) % 4]
     duration_ms = len(payload) * 10
@@ -546,65 +596,33 @@ def _fake_audio_decode(payload: bytes) -> tuple[int, int, int]:
     return sample_rate, duration_ms, rms_q
 
 
-def _real_audio_decoder_available() -> bool:
-    try:  # pragma: no cover - container has no audio libs
-        import soundfile  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
+def _audio_features(payload: bytes, window_ms: int) -> tuple[int, int, int, int]:
+    # RIFF/WAVE PCM decodes for real; anything else (including a corrupt
+    # RIFF) takes the deterministic fake
+    decoded = _decode_wav(payload)
+    if decoded is None:
+        rate, dur, rms = _fake_audio_decode(payload)
+    else:
+        rate, _nch, _nf, dur, rms = decoded
+    return (dur + window_ms - 1) // window_ms, rate, dur, rms
 
 
 def decode_audio_features(media: DataFrame, window_ms: int = 250) -> DataFrame:
-    """Audio twin of ``decode_image_features``: Arrow-batched
-    ``mapInPandas``, partition-preserving, no shuffle. Emits per-clip
-    stats plus the window count a framing stage would explode to
-    (``ceil(duration / window)`` — the audio analog of frame_sample)."""
-    use_real = _real_audio_decoder_available()
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            feats = []
-            for p in pdf["payload"]:
-                b = bytes(p)
-                if b[:4] == b"RIFF":
-                    # WAV is decode-REAL (stdlib wave, r5): rate/duration/
-                    # RMS from the actual samples; corrupt RIFF falls back
-                    r = _decode_wav(b)
-                    if r is not None:
-                        rate, _nch, _nf, dur, rms = r
-                        feats.append((rate, dur, rms))
-                        continue
-                if use_real:  # pragma: no cover — compressed codecs only
-                    raise NotImplementedError(
-                        "compressed codec path (mp3/ogg/flac): wire "
-                        "soundfile.read(io.BytesIO(payload)) here"
-                    )
-                feats.append(_fake_audio_decode(b))
-            durations = [f[1] for f in feats]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "n_windows": [
-                        (d + window_ms - 1) // window_ms for d in durations
-                    ],
-                    "sample_rate": [f[0] for f in feats],
-                    "duration_ms": durations,
-                    "rms_q": [f[2] for f in feats],
-                    "decode_ok": True,
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        decode, AUDIO_FEATURES_SCHEMA
+    """Audio twin of ``decode_image_features``: per-clip stats plus the
+    window count a framing stage would explode to (``ceil(duration /
+    window)`` — the audio analog of frame_sample). RIFF/WAVE PCM payloads
+    decode for real; every other payload, compressed codecs (mp3/ogg/
+    flac) included, falls back to the deterministic fake, so
+    ``decode_ok`` is always true."""
+    return _decode_stage(
+        media, AUDIO_FEATURES_SCHEMA, partial(_audio_features, window_ms=window_ms)
     )
 
 
 # --- WAV (RIFF PCM): decode-REAL audio, stdlib-pure --------------------------
 # Mirrors the PNG move (attach_png_binary / _decode_png): genuine payloads
 # built JVM-side, parsed by the stdlib `wave` module — audio joins netpbm/
-# BMP/PNG as a decode-real modality; only genuinely COMPRESSED codecs
-# (mp3/ogg/flac) remain behind the library-gated branch.
+# BMP/PNG as a decode-real modality.
 
 WAV_FEATURES_SCHEMA = StructType(
     [
@@ -619,6 +637,38 @@ WAV_FEATURES_SCHEMA = StructType(
 )
 
 _WAV_RATES = (8000, 16000, 22050, 44100)
+
+
+def _wave_base(docs: DataFrame, text_col: str) -> DataFrame:
+    """(doc_id, _text, _rate, _nf), the shape every WAVE builder starts
+    from: sample rate from ``_WAV_RATES`` by ``length(text) % 4`` and
+    ``1 + length(text) % 250`` frames."""
+    n = F.length(F.col(text_col))
+    return docs.select(
+        "doc_id",
+        F.col(text_col).alias("_text"),
+        F.element_at(
+            F.array(*[F.lit(r) for r in _WAV_RATES]), (n % 4 + 1).cast("int")
+        ).alias("_rate"),
+        (n % 250 + 1).cast("int").alias("_nf"),
+    )
+
+
+def _riff_wave(fmt_hex: Column, fmt_len: int, data_hex: Column, data_len: Column) -> Column:
+    """RIFF/WAVE payload bytes from the hex of a fmt chunk body (fmt_len
+    bytes) and of a data chunk body (data_len bytes). The RIFF size
+    counts "WAVE", both chunk headers and both bodies."""
+    return F.unhex(
+        F.concat(
+            F.lit("52494646"),  # "RIFF"
+            _le_hex(F.lit(4 + 8 + fmt_len + 8) + data_len, 4),
+            F.lit("57415645666D7420" + _le32(fmt_len)),  # "WAVE" "fmt " + LE32
+            fmt_hex,
+            F.lit("64617461"),  # "data"
+            _le_hex(data_len, 4),
+            data_hex,
+        )
+    )
 
 
 def attach_wav_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -636,41 +686,11 @@ def attach_wav_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     big-endian from the hex stream; the payload stores each as the
     little-endian byte pair WAV requires (swap via one regexp_replace
     pass over the 4-hex-char sample tiles)."""
-
-    def be_hex(col, width_chars: int):
-        return F.lpad(F.hex(col), width_chars, "0")
-
-    def le32_hex(col):
-        be = be_hex(col, 8)
-        return F.concat(
-            F.substring(be, 7, 2),
-            F.substring(be, 5, 2),
-            F.substring(be, 3, 2),
-            F.substring(be, 1, 2),
-        )
-
-    n = F.length(F.col(text_col))
-    base = docs.select(
-        "doc_id",
-        F.col(text_col).alias("_text"),
-        F.element_at(
-            F.array(*[F.lit(r) for r in _WAV_RATES]), (n % 4 + 1).cast("int")
-        ).alias("_rate"),
-        (n % 250 + 1).cast("int").alias("_nf"),
-    )
-    stream = base.select(
+    stream = _wave_base(docs, text_col).select(
         "doc_id",
         "_rate",
         "_nf",
-        F.substring(
-            F.call_function(
-                "repeat",
-                F.md5(F.col("_text")),
-                (F.floor(F.col("_nf") * 4 / 32) + 1).cast("int"),
-            ),
-            F.lit(1),
-            F.col("_nf") * 4,
-        ).alias("_stream"),
+        _md5_hex_stream(F.col("_text"), F.col("_nf") * 4).alias("_stream"),
     )
     # one regex pass swaps every sample's hex byte pair ((c1c2)(c3c4) →
     # (c3c4)(c1c2)); the stream is exactly _nf·4 hex chars, so the
@@ -686,42 +706,26 @@ def attach_wav_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
             "_data_hex"
         ),
     )
+    fmt = F.concat(
+        F.lit("01000100"),  # PCM, mono
+        _le_hex(F.col("_rate"), 4),
+        _le_hex(F.col("_rate") * 2, 4),  # byte rate (mono int16)
+        F.lit("02001000"),  # block align 2, 16 bits/sample
+    )
     final = data.select(
         "doc_id",
-        F.unhex(
-            F.concat(
-                F.lit("52494646"),  # "RIFF"
-                le32_hex(F.lit(36) + F.col("_nf") * 2),
-                F.lit("57415645666D742010000000"),  # "WAVEfmt " + LE32(16)
-                F.lit("01000100"),  # PCM, mono
-                le32_hex(F.col("_rate")),
-                le32_hex(F.col("_rate") * 2),  # byte rate (mono int16)
-                F.lit("02001000"),  # block align 2, 16 bits/sample
-                F.lit("64617461"),  # "data"
-                le32_hex(F.col("_nf") * 2),
-                F.col("_data_hex"),
-            )
-        ).alias("payload"),
+        _riff_wave(fmt, 16, F.col("_data_hex"), F.col("_nf") * 2).alias("payload"),
     )
-    return final.select(
-        "doc_id",
-        F.lit("audio/wav").alias("media_type"),
-        "payload",
-        F.length("payload").cast("int").alias("size_bytes"),
-        F.md5("payload").alias("checksum"),
-    )
+    return _media_rows(final, "audio/wav", F.col("payload"))
 
 
-def _decode_wav(payload: bytes) -> tuple[int, int, int, int, int] | None:
-    """Parse a RIFF/WAVE PCM payload with the stdlib ``wave`` module and
-    compute (rate, channels, frames, duration_ms, rms_q) from the ACTUAL
-    samples. rms_q = floor(sqrt(mean(v²))) over int16 values — every
-    intermediate is exact in float64 (Σv² < 2^53), so the quantized RMS
-    is engine-portable for the oracle."""
-    import io
-    import math
-    import wave
-
+def _read_wav(payload: bytes) -> tuple[int, int, np.ndarray] | None:
+    """The one stdlib-``wave`` reader: (rate, channels, int64 samples
+    interleaved over channels) of a 16-bit RIFF/WAVE PCM payload, or None
+    for a corrupt one — never an exception that poisons the batch.
+    Samples come back as an int64 NumPy array (exact — int16 values
+    widened), so the kernels consume them without a per-sample Python
+    list round-trip."""
     try:
         with wave.open(io.BytesIO(payload), "rb") as wf:
             rate = wf.getframerate()
@@ -729,52 +733,39 @@ def _decode_wav(payload: bytes) -> tuple[int, int, int, int, int] | None:
             sampwidth = wf.getsampwidth()
             nf = wf.getnframes()
             frames = wf.readframes(nf)
-    except (wave.Error, EOFError):
+    except (wave.Error, EOFError, RuntimeError):
+        # RuntimeError: wave's chunk reader seeking past the end of a
+        # chunk whose declared size overruns the payload
         return None
     if sampwidth != 2 or nch < 1:
         return None
-    if len(frames) % 2 or len(frames) != nf * nch * 2:
-        # data chunk cut mid-frame (wave.open accepts it; unpack would
-        # raise struct.error OUTSIDE the except above and poison the
-        # whole Arrow batch) — corrupt, same contract as a bad header
+    if len(frames) != nf * nch * 2:
+        # data chunk cut mid-frame (wave.open accepts it; unpacking would
+        # raise outside the except above) — corrupt, same contract as a
+        # bad header
         return None
-    # vectorized Σv² (guide §4.2): int64 dot product is exact (each term
-    # < 2^31, payloads are ≤ 250 frames, far under int64), replacing a
-    # per-sample Python loop; the float steps (mean, sqrt, floor) are
-    # unchanged, so rms_q is bit-identical to the loop form
-    vals = np.frombuffer(frames, dtype="<i2").astype(np.int64)
+    return rate, nch, np.frombuffer(frames, dtype="<i2").astype(np.int64)
+
+
+def _decode_wav(payload: bytes) -> tuple[int, int, int, int, int] | None:
+    """Parse a RIFF/WAVE PCM payload with the stdlib ``wave`` module and
+    compute (rate, channels, frames, duration_ms, rms_q) from the ACTUAL
+    samples. rms_q = floor(sqrt(mean(v²))) over int16 values."""
+    read = _read_wav(payload)
+    if read is None:
+        return None
+    rate, nch, vals = read
+    nf = len(vals) // nch
     duration_ms = nf * 1000 // rate if rate else 0
-    if len(vals):
-        sum_sq = int(np.dot(vals, vals))
-        rms_q = int(math.floor(math.sqrt(sum_sq / len(vals))))
-    else:
-        rms_q = 0
-    return rate, nch, nf, duration_ms, rms_q
+    # vectorized Σv²: the int64 dot product is exact (each term < 2^31,
+    # payloads are ≤ 250 frames, far under int64)
+    return rate, nch, nf, duration_ms, _rms_q(int(np.dot(vals, vals)), len(vals))
 
 
 def decode_wav_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched REAL WAV decode stage: partition-preserving
-    ``mapInPandas`` over (doc_id, payload); non-WAV / corrupt payloads
+    """Arrow-batched REAL WAV decode stage: non-WAV / corrupt payloads
     yield ``decode_ok = false`` zeros instead of poisoning the batch."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [_decode_wav(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": [r[0] if r else 0 for r in rows],
-                    "n_channels": [r[1] if r else 0 for r in rows],
-                    "n_frames": [r[2] if r else 0 for r in rows],
-                    "duration_ms": [r[3] if r else 0 for r in rows],
-                    "rms_q": [r[4] if r else 0 for r in rows],
-                    "decode_ok": [r is not None for r in rows],
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        decode, WAV_FEATURES_SCHEMA
-    )
+    return _decode_stage(media, WAV_FEATURES_SCHEMA, _decode_wav)
 
 
 # --- WAV autocorrelation pitch: real DSP over decoded samples ----------------
@@ -800,30 +791,32 @@ WAV_PITCH_SCHEMA = StructType(
 _MAX_LAG = 32
 
 
-def _wav_samples(payload: bytes):
-    """Decode a RIFF/WAVE PCM payload to (rate, int64 sample ndarray)
-    with the stdlib ``wave`` module; same corrupt-payload contract as
-    ``_decode_wav`` (None, never an exception that poisons the batch).
-    Samples come back as an int64 NumPy array (exact — int16 values
-    widened) so the pitch kernel consumes them without a per-sample
-    Python list round-trip."""
-    import io
-    import wave
+def _wav_samples(payload: bytes) -> tuple[int, np.ndarray] | None:
+    """(rate, int64 sample ndarray) of a MONO RIFF/WAVE PCM payload, or
+    None — same corrupt-payload contract as ``_decode_wav``."""
+    read = _read_wav(payload)
+    if read is None or read[1] != 1:
+        return None
+    return read[0], read[2]
 
-    try:
-        with wave.open(io.BytesIO(payload), "rb") as wf:
-            rate = wf.getframerate()
-            nch = wf.getnchannels()
-            sampwidth = wf.getsampwidth()
-            nf = wf.getnframes()
-            frames = wf.readframes(nf)
-    except (wave.Error, EOFError):
+
+def _wav_pitch(payload: bytes, max_lag: int) -> tuple[int, int, int, float, int] | None:
+    samples = _wav_samples(payload)
+    if samples is None:
         return None
-    if sampwidth != 2 or nch != 1:
-        return None
-    if len(frames) % 2 or len(frames) != nf * 2:
-        return None
-    return rate, np.frombuffer(frames, dtype="<i2").astype(np.int64)
+    rate, v = samples
+    n = len(v)
+    best_lag = ac_peak = zc = 0
+    if n >= 2:
+        n_lags = min(max_lag, n - 1)
+        acs = [int(np.dot(v[:-L], v[L:])) for L in range(1, n_lags + 1)]
+        best_lag = 1 + max(range(n_lags), key=lambda i: (acs[i], -i))
+        ac_peak = acs[best_lag - 1]
+        zc = int(np.sum((v[:-1] < 0) != (v[1:] < 0)))
+    # half-away rounding (the engine/oracle tie rule; Python's round() is
+    # banker's) — see operators/_numeric.py
+    pitch_hz = math.floor(rate / best_lag * 1e6 + 0.5) / 1e6 if best_lag else 0.0
+    return rate, best_lag, ac_peak, pitch_hz, zc
 
 
 def wav_autocorr_pitch(media: DataFrame, max_lag: int = _MAX_LAG) -> DataFrame:
@@ -839,60 +832,32 @@ def wav_autocorr_pitch(media: DataFrame, max_lag: int = _MAX_LAG) -> DataFrame:
     The autocorrelation is exact integer math end-to-end, so the value
     hash is engine-portable without any rounding contract.
     """
-    import math
+    return _decode_stage(media, WAV_PITCH_SCHEMA, partial(_wav_pitch, max_lag=max_lag))
 
-    import numpy as np
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out: dict[str, list] = {
-                "doc_id": [],
-                "sample_rate": [],
-                "best_lag": [],
-                "ac_peak": [],
-                "pitch_hz": [],
-                "zero_crossings": [],
-                "decode_ok": [],
-            }
-            for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                r = _wav_samples(bytes(p))
-                out["doc_id"].append(doc_id)
-                if r is None:
-                    out["sample_rate"].append(0)
-                    out["best_lag"].append(0)
-                    out["ac_peak"].append(0)
-                    out["pitch_hz"].append(0.0)
-                    out["zero_crossings"].append(0)
-                    out["decode_ok"].append(False)
-                    continue
-                rate, v = r
-                n = len(v)
-                best_lag, ac_peak = 0, 0
-                if n >= 2:
-                    n_lags = min(max_lag, n - 1)
-                    acs = [int(np.dot(v[:-L], v[L:])) for L in range(1, n_lags + 1)]
-                    best_lag = 1 + max(range(n_lags), key=lambda i: (acs[i], -i))
-                    ac_peak = acs[best_lag - 1]
-                    zc = int(np.sum((v[:-1] < 0) != (v[1:] < 0)))
-                else:
-                    zc = 0
-                out["sample_rate"].append(rate)
-                out["best_lag"].append(best_lag)
-                out["ac_peak"].append(ac_peak)
-                # half-away rounding (the engine/oracle tie rule; Python's
-                # round() is banker's) — see operators/_numeric.py
-                out["pitch_hz"].append(
-                    math.floor(rate / best_lag * 1e6 + 0.5) / 1e6
-                    if best_lag
-                    else 0.0
-                )
-                out["zero_crossings"].append(zc)
-                out["decode_ok"].append(True)
-            yield pd.DataFrame(out)
-
-    return media.select("doc_id", "payload").mapInPandas(
-        extract, WAV_PITCH_SCHEMA
-    )
+def _wave_fmt_data(payload: bytes, tag: int, bits: int) -> tuple[int, bytes, bytes] | None:
+    """Manual RIFF/WAVE walk for the codecs the stdlib ``wave`` module
+    refuses: (rate, fmt body, data body) of a mono payload in format
+    ``tag`` at ``bits`` per sample, or None (bad magic, another format,
+    a missing chunk or a truncated data chunk)."""
+    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+        return None
+    fmt = data = None
+    for cid, body, whole in _riff_chunks(payload):
+        if cid == b"fmt ":
+            if len(body) < 16:
+                return None
+            ftag, nch, _rate, _br, _ba, fbits = struct.unpack_from("<HHIIHH", body)
+            if (ftag, nch, fbits) != (tag, 1, bits):
+                return None
+            fmt = body
+        elif cid == b"data":
+            if not whole:
+                return None
+            data = body
+    if fmt is None or data is None:
+        return None
+    return struct.unpack_from("<I", fmt, 4)[0], fmt, data
 
 
 # --- G.711 mu-law WAV: decode-REAL *compressed* audio ------------------------
@@ -900,8 +865,7 @@ def wav_autocorr_pitch(media: DataFrame, max_lag: int = _MAX_LAG) -> DataFrame:
 # genuine COMPRESSED codec — 8-bit logarithmically-companded samples
 # expanding to 14-bit linear PCM — decoded here by the published G.711
 # expansion formula in pure Python (the stdlib `wave` module refuses
-# non-PCM, so the RIFF walk is manual, like the PNG chunk walk). With
-# this, only PERCEPTUAL codecs (mp3/ogg/flac) remain library-gated.
+# non-PCM, so the RIFF walk is manual, like the PNG chunk walk).
 
 MULAW_FEATURES_SCHEMA = StructType(
     [
@@ -941,129 +905,44 @@ def attach_mulaw_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     construction-replay contract as ``attach_wav_binary``: rate from the
     4-entry table by ``length(text) % 4``, ``1 + length(text) % 250``
     one-byte frames straight off the repeated md5 hex stream."""
-
-    def be_hex(col, width_chars: int):
-        return F.lpad(F.hex(col), width_chars, "0")
-
-    def le32_hex(col):
-        be = be_hex(col, 8)
-        return F.concat(
-            F.substring(be, 7, 2),
-            F.substring(be, 5, 2),
-            F.substring(be, 3, 2),
-            F.substring(be, 1, 2),
-        )
-
-    n = F.length(F.col(text_col))
-    base = docs.select(
-        "doc_id",
-        F.col(text_col).alias("_text"),
-        F.element_at(
-            F.array(*[F.lit(r) for r in _WAV_RATES]), (n % 4 + 1).cast("int")
-        ).alias("_rate"),
-        (n % 250 + 1).cast("int").alias("_nf"),
-    )
-    stream = base.select(
+    stream = _wave_base(docs, text_col).select(
         "doc_id",
         "_rate",
         "_nf",
-        F.substring(
-            F.call_function(
-                "repeat",
-                F.md5(F.col("_text")),
-                (F.floor(F.col("_nf") * 2 / 32) + 1).cast("int"),
-            ),
-            F.lit(1),
-            F.col("_nf") * 2,
-        ).alias("_data_hex"),
+        _md5_hex_stream(F.col("_text"), F.col("_nf") * 2).alias("_data_hex"),
+    )
+    fmt = F.concat(
+        F.lit("07000100"),  # format 7 (mu-law), mono
+        _le_hex(F.col("_rate"), 4),
+        _le_hex(F.col("_rate"), 4),  # byte rate (1 byte/frame)
+        F.lit("01000800"),  # block align 1, 8 bits/sample
     )
     final = stream.select(
         "doc_id",
-        F.unhex(
-            F.concat(
-                F.lit("52494646"),  # "RIFF"
-                le32_hex(F.lit(36) + F.col("_nf")),
-                F.lit("57415645666D742010000000"),  # "WAVEfmt " + LE32(16)
-                F.lit("07000100"),  # format 7 (mu-law), mono
-                le32_hex(F.col("_rate")),
-                le32_hex(F.col("_rate")),  # byte rate (1 byte/frame)
-                F.lit("01000800"),  # block align 1, 8 bits/sample
-                F.lit("64617461"),  # "data"
-                le32_hex(F.col("_nf")),
-                F.col("_data_hex"),
-            )
-        ).alias("payload"),
+        _riff_wave(fmt, 16, F.col("_data_hex"), F.col("_nf")).alias("payload"),
     )
-    return final.select(
-        "doc_id",
-        F.lit("audio/basic").alias("media_type"),
-        "payload",
-        F.length("payload").cast("int").alias("size_bytes"),
-        F.md5("payload").alias("checksum"),
-    )
+    return _media_rows(final, "audio/basic", F.col("payload"))
 
 
 def _decode_mulaw(payload: bytes) -> tuple[int, int, int, int] | None:
     """Manual RIFF walk (the stdlib ``wave`` module refuses format 7) +
     G.711 expansion: returns (rate, n_frames, duration_ms, rms_q over
     the EXPANDED linear samples) or None for corrupt payloads."""
-    import math
-    import struct
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+    chunks = _wave_fmt_data(payload, 7, 8)
+    if chunks is None:
         return None
-    pos, rate, data = 12, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (clen,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + clen]
-        if cid == b"fmt ":
-            if len(body) < 16:
-                return None
-            fmt, nch, rate, _br, _ba, bits = struct.unpack("<HHIIHH", body[:16])
-            if fmt != 7 or nch != 1 or bits != 8:
-                return None
-        elif cid == b"data":
-            if len(body) != clen:
-                return None  # data chunk truncated
-            data = body
-        pos += 8 + clen + (clen & 1)
-    if rate is None or data is None:
-        return None
+    rate, _fmt, data = chunks
     nf = len(data)
     duration_ms = nf * 1000 // rate if rate else 0
-    if nf:
-        # exact: table holds v² ≤ 32124² as int64, ≤ 250 terms per payload
-        sum_sq = int(
-            np.take(_MULAW_SQ, np.frombuffer(data, dtype=np.uint8)).sum()
-        )
-        rms_q = int(math.floor(math.sqrt(sum_sq / nf)))
-    else:
-        rms_q = 0
-    return rate, nf, duration_ms, rms_q
+    # exact: table holds v² ≤ 32124² as int64, ≤ 250 terms per payload
+    sum_sq = int(np.take(_MULAW_SQ, np.frombuffer(data, dtype=np.uint8)).sum())
+    return rate, nf, duration_ms, _rms_q(sum_sq, nf)
 
 
 def decode_mulaw_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched REAL mu-law decode stage: partition-preserving
-    ``mapInPandas``; corrupt payloads yield ``decode_ok = false``."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [_decode_mulaw(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": [r[0] if r else 0 for r in rows],
-                    "n_frames": [r[1] if r else 0 for r in rows],
-                    "duration_ms": [r[2] if r else 0 for r in rows],
-                    "rms_q": [r[3] if r else 0 for r in rows],
-                    "decode_ok": [r is not None for r in rows],
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        decode, MULAW_FEATURES_SCHEMA
-    )
+    """Arrow-batched REAL mu-law decode stage; corrupt payloads yield
+    ``decode_ok = false``."""
+    return _decode_stage(media, MULAW_FEATURES_SCHEMA, _decode_mulaw)
 
 
 # --- IMA ADPCM (format 0x11): decode-REAL *differential* compression -------
@@ -1073,8 +952,7 @@ def decode_mulaw_features(media: DataFrame) -> DataFrame:
 # without the (predictor, step-index) state carried from all previous
 # samples. Both tables are the published IMA/DVI spec (the same ones in
 # CPython's audioop.c); the nibble core is pinned bit-exact against
-# audioop.adpcm2lin in tests. Only PERCEPTUAL transform codecs
-# (mp3/ogg/flac) remain library-gated.
+# audioop.adpcm2lin in tests.
 
 ADPCM_STEPS = (
     7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31, 34, 37,
@@ -1122,85 +1000,36 @@ def attach_adpcm_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     first per the IMA-WAV layout (= swap adjacent hex chars), behind a
     spec block header (initial predictor 0, step index 0) and a 20-byte
     fmt chunk carrying samplesPerBlock."""
-
-    def be_hex(col, width_chars: int):
-        return F.lpad(F.hex(col), width_chars, "0")
-
-    def le32_hex(col):
-        be = be_hex(col, 8)
-        return F.concat(
-            F.substring(be, 7, 2),
-            F.substring(be, 5, 2),
-            F.substring(be, 3, 2),
-            F.substring(be, 1, 2),
-        )
-
-    def le16_hex(col):
-        be = be_hex(col, 4)
-        return F.concat(F.substring(be, 3, 2), F.substring(be, 1, 2))
-
-    n = F.length(F.col(text_col))
-    base = docs.select(
-        "doc_id",
-        F.col(text_col).alias("_text"),
-        F.element_at(
-            F.array(*[F.lit(r) for r in _WAV_RATES]), (n % 4 + 1).cast("int")
-        ).alias("_rate"),
-        (n % 250 + 1).cast("int").alias("_nf"),
-    )
     nbytes = F.ceil(F.col("_nf") / 2).cast("int")
-    stream = base.select(
+    stream = _wave_base(docs, text_col).select(
         "doc_id",
         "_rate",
         "_nf",
         nbytes.alias("_nb"),
         # nf hex chars = nf 4-bit codes, zero-padded to a whole byte
-        F.rpad(
-            F.substring(
-                F.call_function(
-                    "repeat",
-                    F.md5(F.col("_text")),
-                    (F.floor(F.col("_nf") / 32) + 1).cast("int"),
-                ),
-                F.lit(1),
-                F.col("_nf"),
-            ),
-            nbytes * 2,
-            "0",
-        ).alias("_nib_hex"),
+        F.rpad(_md5_hex_stream(F.col("_text"), F.col("_nf")), nbytes * 2, "0").alias(
+            "_nib_hex"
+        ),
     )
     # IMA-WAV packs the FIRST sample into the LOW nibble: byte j's hex
     # repr is (code 2j+1, code 2j) — i.e. swap each adjacent char pair
     packed = F.regexp_replace(F.col("_nib_hex"), "(.)(.)", "$2$1")
-    data_len = F.lit(4) + F.col("_nb")  # block header + packed codes
+    fmt = F.concat(
+        F.lit("11000100"),  # format 0x11 (IMA ADPCM), mono
+        _le_hex(F.col("_rate"), 4),
+        _le_hex(F.col("_rate"), 4),  # nominal byte rate (unchecked)
+        _le_hex(F.lit(4) + F.col("_nb"), 2),  # block align = 1 block
+        F.lit("0400"),  # 4 bits/sample
+        F.lit("0200"),  # cbSize = 2
+        _le_hex(F.col("_nf"), 2),  # samplesPerBlock
+    )
+    # data: block header (pred=0, idx=0, rsvd) + packed codes
+    data = F.concat(F.lit("00000000"), packed)
     final = stream.select(
         "doc_id",
-        F.unhex(
-            F.concat(
-                F.lit("52494646"),  # "RIFF"
-                le32_hex(F.lit(44) + F.col("_nb")),  # "WAVE"+fmt(28)+data(12+nb)
-                F.lit("57415645666D742014000000"),  # "WAVEfmt " + LE32(20)
-                F.lit("11000100"),  # format 0x11 (IMA ADPCM), mono
-                le32_hex(F.col("_rate")),
-                le32_hex(F.col("_rate")),  # nominal byte rate (unchecked)
-                le16_hex(F.lit(4) + F.col("_nb")),  # block align = 1 block
-                F.lit("0400"),  # 4 bits/sample
-                F.lit("0200"),  # cbSize = 2
-                le16_hex(F.col("_nf")),  # samplesPerBlock
-                F.lit("64617461"),  # "data"
-                le32_hex(data_len),
-                F.lit("00000000"),  # block header: pred=0, idx=0, rsvd
-                packed,
-            )
-        ).alias("payload"),
+        _riff_wave(fmt, 20, data, F.lit(4) + F.col("_nb")).alias("payload"),
     )
-    return final.select(
-        "doc_id",
-        F.lit("audio/adpcm").alias("media_type"),
-        "payload",
-        F.length("payload").cast("int").alias("size_bytes"),
-        F.md5("payload").alias("checksum"),
-    )
+    return _media_rows(final, "audio/adpcm", F.col("payload"))
 
 
 def _decode_adpcm(payload: bytes) -> tuple[int, int, int, int] | None:
@@ -1208,79 +1037,40 @@ def _decode_adpcm(payload: bytes) -> tuple[int, int, int, int] | None:
     reconstruction above: returns (rate, n_samples, duration_ms, rms_q
     over the RECONSTRUCTED int16 samples) or None for corrupt
     payloads."""
-    import math
-    import struct
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
+    chunks = _wave_fmt_data(payload, 0x11, 4)
+    if chunks is None:
         return None
-    pos, rate, spb, data = 12, None, None, None
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (clen,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + clen]
-        if cid == b"fmt ":
-            if len(body) < 16:
-                return None
-            fmt, nch, rate, _br, _ba, bits = struct.unpack("<HHIIHH", body[:16])
-            if fmt != 0x11 or nch != 1 or bits != 4:
-                return None
-            if len(body) >= 20:
-                (_cb, spb) = struct.unpack("<HH", body[16:20])
-        elif cid == b"data":
-            if len(body) != clen:
-                return None  # data chunk truncated
-            data = body
-        pos += 8 + clen + (clen & 1)
-    if rate is None or data is None or len(data) < 4:
+    rate, fmt, data = chunks
+    if len(data) < 4:
         return None
-    pred0, idx0, _rsvd = struct.unpack("<hBB", data[:4])
+    pred0, idx0, _rsvd = struct.unpack_from("<hBB", data)
     if not 0 <= idx0 <= 88:
         return None
-    codes = data[4:]
     nibbles = []
-    for b in codes:
+    for b in data[4:]:
         nibbles.append(b & 0xF)  # first sample: LOW nibble
         nibbles.append(b >> 4)
-    n_samples = min(spb, len(nibbles)) if spb is not None else len(nibbles)
+    n_samples = len(nibbles)
+    if len(fmt) >= 20:  # cbSize + samplesPerBlock extension
+        n_samples = min(struct.unpack_from("<H", fmt, 18)[0], n_samples)
     samples = adpcm_decode_nibbles(nibbles[:n_samples], pred0, idx0)
     duration_ms = n_samples * 1000 // rate if rate else 0
-    if samples:
-        rms_q = int(math.floor(math.sqrt(sum(v * v for v in samples) / len(samples))))
-    else:
-        rms_q = 0
-    return rate, n_samples, duration_ms, rms_q
+    return rate, n_samples, duration_ms, _rms_q(sum(v * v for v in samples), n_samples)
 
 
 def decode_adpcm_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched REAL IMA-ADPCM decode stage: partition-preserving
-    ``mapInPandas``; corrupt payloads yield ``decode_ok = false``."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [_decode_adpcm(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "sample_rate": [r[0] if r else 0 for r in rows],
-                    "n_frames": [r[1] if r else 0 for r in rows],
-                    "duration_ms": [r[2] if r else 0 for r in rows],
-                    "rms_q": [r[3] if r else 0 for r in rows],
-                    "decode_ok": [r is not None for r in rows],
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        decode, MULAW_FEATURES_SCHEMA
-    )
+    """Arrow-batched REAL IMA-ADPCM decode stage; corrupt payloads yield
+    ``decode_ok = false``."""
+    return _decode_stage(media, MULAW_FEATURES_SCHEMA, _decode_adpcm)
 
 
 # --- AVI (RIFF container): decode-REAL video -------------------------------
 # Video joins the decode-real families the same way audio did: genuine
 # RIFF/AVI payloads built JVM-side — full hdrl (avih + strl/strh/strf)
 # and movi structure per the public AVI spec, uncompressed 24-bit DIB
-# frames — walked by a pure-Python RIFF parser. Only PERCEPTUAL video
-# codecs (h264 etc.) remain library-gated; the container format itself
-# is decode-real end-to-end.
+# frames — walked by a pure-Python RIFF parser. Perceptual video codecs
+# (h264 etc.) have no decoder here; the container format itself is
+# decode-real end-to-end.
 
 AVI_FEATURES_SCHEMA = StructType(
     [
@@ -1305,22 +1095,6 @@ def attach_avi_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     4-entry usec table. The full header tree (avih + strl with
     strh/strf) is emitted per the spec so any AVI reader accepts the
     file — same construction-replay oracle contract as WAV/mu-law."""
-
-    def be_hex(col, width_chars: int):
-        return F.lpad(F.hex(col), width_chars, "0")
-
-    def le32_hex(col):
-        be = be_hex(col, 8)
-        return F.concat(
-            F.substring(be, 7, 2),
-            F.substring(be, 5, 2),
-            F.substring(be, 3, 2),
-            F.substring(be, 1, 2),
-        )
-
-    def le32_const(v: int) -> str:
-        return bytes([v & 255, (v >> 8) & 255, (v >> 16) & 255, (v >> 24) & 255]).hex()
-
     n = F.length(F.col(text_col))
     base = docs.select(
         "doc_id",
@@ -1332,18 +1106,9 @@ def attach_avi_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.array(*[F.lit(u) for u in _AVI_USEC]), (n % 4 + 1).cast("int")
         ).alias("_usec"),
     ).withColumn("_fsize", (F.col("_w") * F.col("_h") * 3).cast("int"))
-    hex_chars = F.col("_nf") * F.col("_fsize") * 2
     stream = base.withColumn(
         "_stream",
-        F.substring(
-            F.call_function(
-                "repeat",
-                F.md5(F.col("_text")),
-                (F.floor(hex_chars / 32) + 1).cast("int"),
-            ),
-            F.lit(1),
-            hex_chars,
-        ),
+        _md5_hex_stream(F.col("_text"), F.col("_nf") * F.col("_fsize") * 2),
     )
     # movi body: per frame '00db' + LE32(fsize) + frame bytes
     movi_frames = F.array_join(
@@ -1351,7 +1116,7 @@ def attach_avi_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
             F.sequence(F.lit(1), F.col("_nf")),
             lambda i: F.concat(
                 F.lit("30306462"),  # '00db'
-                le32_hex(F.col("_fsize")),
+                _le_hex(F.col("_fsize"), 4),
                 F.substring(
                     F.col("_stream"),
                     (i - 1) * F.col("_fsize") * 2 + 1,
@@ -1361,67 +1126,63 @@ def attach_avi_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
         ),
         "",
     )
-    z = le32_const(0)
+    z = _le32(0)
     # avih: usec, maxbps, padding, flags, totalframes, initial, streams=1,
     # sugbuf=fsize, w, h, 4 reserved
     avih = F.concat(
         F.lit("61766968"),  # 'avih'
-        F.lit(le32_const(56)),
-        le32_hex(F.col("_usec")),
+        F.lit(_le32(56)),
+        _le_hex(F.col("_usec"), 4),
         F.lit(z + z + z),
-        le32_hex(F.col("_nf")),
+        _le_hex(F.col("_nf"), 4),
         F.lit(z),
-        F.lit(le32_const(1)),
-        le32_hex(F.col("_fsize")),
-        le32_hex(F.col("_w")),
-        le32_hex(F.col("_h")),
+        F.lit(_le32(1)),
+        _le_hex(F.col("_fsize"), 4),
+        _le_hex(F.col("_w"), 4),
+        _le_hex(F.col("_h"), 4),
         F.lit(z * 4),
     )
     # strh: 'vids' 'DIB ' flags prio/lang initial scale=usec rate=1e6
     # start length=nf sugbuf=fsize quality=0 samplesize=0 rcFrame(w,h LE16)
-    def le16_hex(col):
-        be = be_hex(col, 4)
-        return F.concat(F.substring(be, 3, 2), F.substring(be, 1, 2))
-
     strh = F.concat(
         F.lit("73747268"),  # 'strh'
-        F.lit(le32_const(56)),
+        F.lit(_le32(56)),
         F.lit("76696473"),  # 'vids'
         F.lit("44494220"),  # 'DIB '
         F.lit(z + z + z),  # flags, prio+lang, initialframes
-        le32_hex(F.col("_usec")),  # dwScale
-        F.lit(le32_const(1_000_000)),  # dwRate
+        _le_hex(F.col("_usec"), 4),  # dwScale
+        F.lit(_le32(1_000_000)),  # dwRate
         F.lit(z),  # dwStart
-        le32_hex(F.col("_nf")),  # dwLength
-        le32_hex(F.col("_fsize")),  # dwSuggestedBufferSize
+        _le_hex(F.col("_nf"), 4),  # dwLength
+        _le_hex(F.col("_fsize"), 4),  # dwSuggestedBufferSize
         F.lit(z + z),  # quality, samplesize
         F.lit("00000000"),  # rcFrame left/top
-        le16_hex(F.col("_w")),
-        le16_hex(F.col("_h")),
+        _le_hex(F.col("_w"), 2),
+        _le_hex(F.col("_h"), 2),
     )
     # strf: BITMAPINFOHEADER(40): size w h planes=1 bits=24 comp=0
     # sizeimage=fsize xppm yppm clrused clrimp
     strf = F.concat(
         F.lit("73747266"),  # 'strf'
-        F.lit(le32_const(40)),
-        F.lit(le32_const(40)),
-        le32_hex(F.col("_w")),
-        le32_hex(F.col("_h")),
+        F.lit(_le32(40)),
+        F.lit(_le32(40)),
+        _le_hex(F.col("_w"), 4),
+        _le_hex(F.col("_h"), 4),
         F.lit("0100" + "1800"),  # planes=1, bits=24 (LE16 pair)
         F.lit(z),  # compression BI_RGB
-        le32_hex(F.col("_fsize")),
+        _le_hex(F.col("_fsize"), 4),
         F.lit(z * 4),
     )
     strl = F.concat(
         F.lit("4C495354"),  # 'LIST'
-        F.lit(le32_const(4 + 64 + 48)),  # 'strl' + strh(8+56) + strf(8+40)
+        F.lit(_le32(4 + 64 + 48)),  # 'strl' + strh(8+56) + strf(8+40)
         F.lit("7374726C"),  # 'strl'
         strh,
         strf,
     )
     hdrl = F.concat(
         F.lit("4C495354"),
-        F.lit(le32_const(4 + 64 + 8 + 116)),  # 'hdrl' + avih(8+56) + strl LIST(8+116)
+        F.lit(_le32(4 + 64 + 8 + 116)),  # 'hdrl' + avih(8+56) + strl LIST(8+116)
         F.lit("6864726C"),  # 'hdrl'
         avih,
         strl,
@@ -1429,7 +1190,7 @@ def attach_avi_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     movi_size = F.lit(4) + F.col("_nf") * (F.lit(8) + F.col("_fsize"))
     movi = F.concat(
         F.lit("4C495354"),
-        le32_hex(movi_size),
+        _le_hex(movi_size, 4),
         F.lit("6D6F7669"),  # 'movi'
         movi_frames,
     )
@@ -1437,102 +1198,66 @@ def attach_avi_binary(docs: DataFrame, text_col: str = "text") -> DataFrame:
     payload = F.unhex(
         F.concat(
             F.lit("52494646"),  # 'RIFF'
-            le32_hex(riff_size),
+            _le_hex(riff_size, 4),
             F.lit("41564920"),  # 'AVI '
             hdrl,
             movi,
         )
     )
-    return stream.select(
-        "doc_id",
-        F.lit("video/x-msvideo").alias("media_type"),
-        payload.alias("payload"),
-        F.length(payload).cast("int").alias("size_bytes"),
-        F.md5(payload).alias("checksum"),
-    )
+    return _media_rows(stream, "video/x-msvideo", payload)
+
+
+def _avi_frames(payload: bytes) -> tuple[tuple[int, ...], list[bytes]] | None:
+    """The validated RIFF/AVI walk: (avih's 14 fields, movi frame bodies)
+    or None for a corrupt container (bad magic, truncated chunk, missing
+    hdrl/movi, or a frame count disagreeing with avih)."""
+    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
+        return None
+    (riff_size,) = struct.unpack_from("<I", payload, 4)
+    if riff_size + 8 > len(payload):
+        return None
+    avih = None
+    frames = []
+    for cid, body, whole in _riff_chunks(payload):
+        if not whole:
+            return None
+        if cid != b"LIST" or len(body) < 4:
+            continue
+        if body[:4] == b"hdrl":
+            # avih must be the first child chunk
+            if len(body) < 12 or body[4:8] != b"avih":
+                return None
+            (alen,) = struct.unpack_from("<I", body, 8)
+            if alen < 56 or len(body) < 12 + 56:
+                return None
+            avih = struct.unpack_from("<14I", body, 12)
+        elif body[:4] == b"movi":
+            for fid, fbody, fwhole in _riff_chunks(body, 4):
+                if not fwhole:
+                    return None
+                if fid in (b"00db", b"00dc"):
+                    frames.append(fbody)
+    # avih[4] is dwTotalFrames
+    if avih is None or not frames or len(frames) != avih[4]:
+        return None
+    return avih, frames
 
 
 def _decode_avi(payload: bytes) -> tuple[int, int, int, int, int] | None:
-    """Pure-Python RIFF/AVI walk: validate the RIFF('AVI ') signature,
-    read avih out of the hdrl LIST, then iterate the movi LIST's
-    '00db'/'00dc' frame chunks summing the raw frame bytes. Returns
+    """Pure-Python RIFF/AVI decode over the validated walk: returns
     (width, height, n_frames_found, usec_per_frame, sum_bytes) or None
-    for corrupt containers (bad magic, truncated chunk, missing hdrl/
-    movi, or frame count disagreeing with avih)."""
-    import struct
-
-    if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
+    for corrupt containers."""
+    walked = _avi_frames(payload)
+    if walked is None:
         return None
-    (riff_size,) = struct.unpack("<I", payload[4:8])
-    if riff_size + 8 > len(payload):
-        return None
-    pos = 12
-    avih = None
-    frames = []
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        (clen,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-        body = payload[pos + 8 : pos + 8 + clen]
-        if len(body) != clen:
-            return None
-        if cid == b"LIST" and len(body) >= 4:
-            kind = body[:4]
-            if kind == b"hdrl":
-                # avih must be the first child chunk
-                if len(body) < 12 or body[4:8] != b"avih":
-                    return None
-                (alen,) = struct.unpack("<I", body[8:12])
-                if alen < 56 or len(body) < 12 + 56:
-                    return None
-                a = struct.unpack("<14I", body[12 : 12 + 56])
-                avih = {
-                    "usec": a[0],
-                    "total_frames": a[4],
-                    "width": a[8],
-                    "height": a[9],
-                }
-            elif kind == b"movi":
-                q = 4
-                while q + 8 <= len(body):
-                    fid = body[q : q + 4]
-                    (flen,) = struct.unpack("<I", body[q + 4 : q + 8])
-                    fbody = body[q + 8 : q + 8 + flen]
-                    if len(fbody) != flen:
-                        return None
-                    if fid in (b"00db", b"00dc"):
-                        frames.append(fbody)
-                    q += 8 + flen + (flen & 1)
-        pos += 8 + clen + (clen & 1)
-    if avih is None or not frames or len(frames) != avih["total_frames"]:
-        return None
-    sum_bytes = 0
-    for f in frames:
-        sum_bytes += sum(f)
-    return (avih["width"], avih["height"], len(frames), avih["usec"], sum_bytes)
+    avih, frames = walked
+    return avih[8], avih[9], len(frames), avih[0], sum(sum(f) for f in frames)
 
 
 def decode_avi_features(media: DataFrame) -> DataFrame:
-    """Arrow-batched REAL AVI decode stage: partition-preserving
-    ``mapInPandas``; corrupt payloads yield ``decode_ok = false``."""
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [_decode_avi(bytes(p)) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": [r[0] if r else 0 for r in rows],
-                    "height": [r[1] if r else 0 for r in rows],
-                    "n_frames": [r[2] if r else 0 for r in rows],
-                    "usec_per_frame": [r[3] if r else 0 for r in rows],
-                    "sum_bytes": [r[4] if r else 0 for r in rows],
-                    "decode_ok": [r is not None for r in rows],
-                }
-            )
-
-    return media.select("doc_id", "payload").mapInPandas(
-        decode, AVI_FEATURES_SCHEMA
-    )
+    """Arrow-batched REAL AVI decode stage; corrupt payloads yield
+    ``decode_ok = false``."""
+    return _decode_stage(media, AVI_FEATURES_SCHEMA, _decode_avi)
 
 
 AVI_FRAME_SCHEMA = StructType(
@@ -1547,51 +1272,27 @@ AVI_FRAME_SCHEMA = StructType(
 
 def sample_avi_frames(media: DataFrame, every: int = 2) -> DataFrame:
     """REAL frame sampling over the RIFF/AVI container (the decode-real
-    upgrade of ``sample_frames``' byte-stride model): walk the movi
-    chunks, keep every ``every``-th frame, emit per-frame size and
-    byte-sum stats — one output row per sampled frame, the 1→N shape a
-    vision-preprocessing stage feeds from. Corrupt payloads contribute
-    no rows (the total-pipeline contract is decode_ok-gated upstream).
+    upgrade of ``frame_sample``'s byte-stride model): keep every
+    ``every``-th frame of the validated walk ``decode_avi_features``
+    reads, emit per-frame size and byte-sum stats — one output row per
+    sampled frame, the 1→N shape a vision-preprocessing stage feeds
+    from. Corrupt payloads, the ones ``decode_avi_features`` flags,
+    contribute no rows.
 
     Partition-preserving ``mapInPandas``; cost is row-linear in payload
     bytes, no shuffle."""
-    import struct
-
-    def walk(payload: bytes):
-        if len(payload) < 12 or payload[:4] != b"RIFF" or payload[8:12] != b"AVI ":
-            return
-        pos = 12
-        idx = 0
-        while pos + 8 <= len(payload):
-            cid = payload[pos : pos + 4]
-            (clen,) = struct.unpack("<I", payload[pos + 4 : pos + 8])
-            body = payload[pos + 8 : pos + 8 + clen]
-            if len(body) != clen:
-                return
-            if cid == b"LIST" and body[:4] == b"movi":
-                q = 4
-                while q + 8 <= len(body):
-                    fid = body[q : q + 4]
-                    (flen,) = struct.unpack("<I", body[q + 4 : q + 8])
-                    fbody = body[q + 8 : q + 8 + flen]
-                    if len(fbody) != flen:
-                        return
-                    if fid in (b"00db", b"00dc"):
-                        if idx % every == 0:
-                            yield idx, flen, sum(fbody)
-                        idx += 1
-                    q += 8 + flen + (flen & 1)
-            pos += 8 + clen + (clen & 1)
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out = {"doc_id": [], "frame_idx": [], "frame_bytes": [], "frame_sum": []}
             for doc_id, p in zip(pdf["doc_id"], pdf["payload"]):
-                for idx, flen, fsum in walk(bytes(p)):
+                walked = _avi_frames(bytes(p))
+                frames = [] if walked is None else walked[1]
+                for idx in range(0, len(frames), every):
                     out["doc_id"].append(doc_id)
                     out["frame_idx"].append(idx)
-                    out["frame_bytes"].append(flen)
-                    out["frame_sum"].append(fsum)
+                    out["frame_bytes"].append(len(frames[idx]))
+                    out["frame_sum"].append(sum(frames[idx]))
             yield pd.DataFrame(out, columns=list(AVI_FRAME_SCHEMA.names))
 
     return media.select("doc_id", "payload").mapInPandas(

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_helloworld_spark.operators import dedup as D
@@ -873,6 +874,66 @@ def test_audio_decode_deterministic_windows(spark):
         assert 0 <= r.rms_q < 1000 and r.decode_ok
     again = {r.doc_id: r.rms_q for r in MM.decode_audio_features(media).collect()}
     assert again == {k: v.rms_q for k, v in out.items()}
+
+
+def test_audio_decode_ignores_an_importable_soundfile(spark, monkeypatch):
+    # non-RIFF payloads take the deterministic fake whatever audio
+    # libraries the driver can import
+    import sys
+    import types
+
+    monkeypatch.setitem(sys.modules, "soundfile", types.ModuleType("soundfile"))
+    docs = _docs(spark, ["short clip", "a somewhat longer audio document body"])
+    out = MM.decode_audio_features(MM.attach_binary(docs)).collect()
+    assert len(out) == 2 and all(r.decode_ok for r in out)
+
+
+# checksum of every payload builder on a fixed 3-text input: pins header
+# fields no decoder reads (WAV byte rate, ADPCM block align, AVI strh/strf)
+_PAYLOAD_CHECKSUMS = {
+    "attach_binary": [
+        "187ef4436122d1cc2f40dc2b92f0eba0",
+        "30f3c93e46436deb58ba70816a8ec124",
+        "65dda5a93ac0ceb837ea52ce021b2fb3",
+    ],
+    "attach_ppm_binary": [
+        "4f8c7f6c207d8f0c938dd2582eafd912",
+        "7a820e3ed3fe2b5a699d69858e18f105",
+        "1b70976de362976ccc2876a8a3f654fe",
+    ],
+    "attach_png_binary": [
+        "e830a333f3085ae966145ebbeabb04f7",
+        "d1162624fde433fd1c385a0e44aa237d",
+        "254c5defae4d7a34632c737006508eed",
+    ],
+    "attach_wav_binary": [
+        "c435a1a6cf1e0f4ce020f848abfd6b6f",
+        "4cbf75f501763f5274498b8cc318cf6b",
+        "74da255e6ec439456504a06f6f8c8252",
+    ],
+    "attach_mulaw_binary": [
+        "a13c02f44a477a653e2784f75dde8636",
+        "8010c39caa4d5a15b11f77e748f97d8b",
+        "dff2a924de53a8ed493562ba735fe3e6",
+    ],
+    "attach_adpcm_binary": [
+        "50847823b8bb63e9fd17bc8dbe14fd93",
+        "19af3fcbdfc0f20197493bbad97a563d",
+        "ded6c2ab074bd4a29cbd716a88804c3c",
+    ],
+    "attach_avi_binary": [
+        "b151346ccdf13230bf86a0c1db6a366e",
+        "bbe4b92c4d98550c82c9d505b69367ff",
+        "c3d69c2ceb89e1e47e5e5d0872ebf06d",
+    ],
+}
+
+
+@pytest.mark.parametrize("builder", sorted(_PAYLOAD_CHECKSUMS))
+def test_payload_builder_checksums_are_pinned(spark, builder):
+    docs = _docs(spark, ["ab", "the quick brown fox", "some longer words in here now"])
+    rows = sorted(getattr(MM, builder)(docs).collect(), key=lambda r: r.doc_id)
+    assert [r.checksum for r in rows] == _PAYLOAD_CHECKSUMS[builder]
 
 
 def test_ivfpq_topk_recall_and_determinism(spark, sf_dir):
@@ -1800,14 +1861,16 @@ def test_wav_decode_truncated_payload_flags_corrupt_not_crash(spark):
         wf.setframerate(8000)
         wf.writeframes(b"\x01\x02\x03\x04\x05\x06\x07\x08")
     good = buf.getvalue()
-    cases = [good, good[:-1], good[:-3], b"RIFFgarbage", b""]
+    # the last case declares a chunk that runs past the end of the payload
+    overrun = good[:12] + b"junk" + (1000).to_bytes(4, "little") + b"xx"
+    cases = [good, good[:-1], good[:-3], b"RIFFgarbage", b"", overrun]
     media = spark.createDataFrame(
         [(i, p) for i, p in enumerate(cases)], "doc_id long, payload binary"
     )
     out = {r.doc_id: r for r in MM.decode_wav_features(media).collect()}
     assert out[0].decode_ok and out[0].n_frames == 4
     assert out[0].sample_rate == 8000
-    for i in (1, 2, 3, 4):
+    for i in range(1, len(cases)):
         assert not out[i].decode_ok, f"case {i} must flag corrupt"
         assert out[i].rms_q == 0
 
@@ -2515,6 +2578,17 @@ def test_avi_frame_sampling_matches_container_walk(spark):
             if f % 2 == 0
         ]
         assert sorted(got[i]) == expect
+    # avih total-frames disagreeing with movi: the container is corrupt
+    # (as decode_avi_features flags it), so it contributes no frames
+    import struct
+
+    bad = []
+    for row in media.collect():
+        p = bytearray(row.payload)
+        p[32 + 16 : 32 + 20] = struct.pack("<I", 99)
+        bad.append((row.doc_id, p))
+    bad_media = spark.createDataFrame(bad, "doc_id long, payload binary")
+    assert sample_avi_frames(bad_media, every=2).collect() == []
 
 
 def test_corpus_manifest_covers_exactly_the_pretrain_survivors(spark):
