@@ -17,8 +17,12 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from collections.abc import Sequence
+
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from flink_helloworld_spark.functions import md5_prefix_long
 
 # Intra-plan persist registry (the shingle table feeds four plan branches
 # in minhash_dedup_pairs); re-exported here for back-compat with callers
@@ -69,6 +73,18 @@ def shingles_from_words(ws: Column, n: int = 3) -> Column:
     )
 
 
+def _shingle_sets(words: DataFrame, shingle_n: int) -> DataFrame:
+    """(…, ws) → (…, sh): every row with at least ``shingle_n`` words,
+    its word array replaced by its distinct shingle set. The emptiness
+    filter runs on the materialized word split (a cheap size check) —
+    filtering on the shingle column would duplicate the whole shingling
+    expression into the pushed-down predicate."""
+    rest = [c for c in words.columns if c != "ws"]
+    return words.where(F.size("ws") >= shingle_n).select(
+        *rest, shingles_from_words(F.col("ws"), shingle_n).alias("sh")
+    )
+
+
 # --- exact dedup ------------------------------------------------------------
 
 
@@ -95,9 +111,7 @@ MINHASH_PARAMS: list[tuple[int, int]] = [
 def shingle_base_hash(shingle: Column) -> Column:
     """60-bit md5-derived integer reduced mod p — ONE md5 per shingle;
     every permutation is cheap arithmetic on top of it."""
-    return (
-        F.conv(F.substring(F.md5(shingle), 1, 15), 16, 10).cast("long") % MINHASH_P
-    )
+    return md5_prefix_long(shingle) % MINHASH_P
 
 
 def minhash_signature_from_hashes(hm: Column, num_hashes: int = 12) -> Column:
@@ -105,7 +119,16 @@ def minhash_signature_from_hashes(hm: Column, num_hashes: int = 12) -> Column:
 
     Permutation i is the affine map (a_i·h + b_i) mod p; with h < p and
     a_i < p the product stays under 2^62 — exact in any 64-bit engine.
+    Raises ``ValueError`` when ``num_hashes`` exceeds the permutations in
+    ``MINHASH_PARAMS``: a shorter signature would silently skew every
+    estimate and index past the end of every band.
     """
+    if num_hashes > len(MINHASH_PARAMS):
+        raise ValueError(
+            f"num_hashes={num_hashes} exceeds the {len(MINHASH_PARAMS)} "
+            "MinHash permutations in MINHASH_PARAMS"
+        )
+
     def perm(a: int, b: int):
         # closure factory: the transform lambda must be single-arg
         # (extra params would be bound to the array index by Spark)
@@ -135,33 +158,36 @@ def lsh_band_keys(sig: Column, bands: int, rows: int) -> list[Column]:
 
 def shingle_table(docs: DataFrame, text_col: str = "text", shingle_n: int = 3) -> DataFrame:
     """(doc_id, sh) — each doc's distinct shingle set, computed once and
-    shared by signature, banding, and Jaccard verification.
-
-    The word split is materialized as its own column first and the
-    emptiness filter runs on IT (cheap size check) — filtering on the
-    shingle column would duplicate the whole shingling expression into
-    the pushed-down predicate."""
-    words = docs.select("doc_id", _words(F.col(text_col)).alias("ws"))
-    return words.where(F.size("ws") >= shingle_n).select(
-        "doc_id", shingles_from_words(F.col("ws"), shingle_n).alias("sh")
+    shared by signature, banding, and Jaccard verification."""
+    return _shingle_sets(
+        docs.select("doc_id", _words(F.col(text_col)).alias("ws")), shingle_n
     )
 
 
-def _buckets_from_shingles(
-    sh_df: DataFrame, num_hashes: int, bands: int
+def _signatures(
+    sh_df: DataFrame, num_hashes: int, carry: Sequence[str] = ()
 ) -> DataFrame:
-    rows = num_hashes // bands
-    # materialize the md5 base hashes as their own projection: the 12
-    # permutation minima all reference `hm`, and CollapseProject keeps a
-    # multiply-used non-cheap alias as a separate step — one md5 pass per
-    # shingle instead of 12
+    """(doc_id, sh, carry…) → (doc_id, sig, carry…). The md5 base hashes
+    are their own projection: the permutation minima all reference
+    `hm`, and CollapseProject keeps a multiply-used non-cheap alias as a
+    separate step — one md5 pass per shingle, not one per permutation."""
     hm_df = sh_df.select(
-        "doc_id", F.transform(F.col("sh"), shingle_base_hash).alias("hm")
+        "doc_id", F.transform(F.col("sh"), shingle_base_hash).alias("hm"), *carry
     )
-    sig = minhash_signature_from_hashes(F.col("hm"), num_hashes)
-    with_sig = hm_df.select("doc_id", sig.alias("sig"))
-    keys = lsh_band_keys(F.col("sig"), bands, rows)
-    return with_sig.select(
+    return hm_df.select(
+        "doc_id",
+        minhash_signature_from_hashes(F.col("hm"), num_hashes).alias("sig"),
+        *carry,
+    )
+
+
+def _band_rows(
+    sig_df: DataFrame, num_hashes: int, bands: int, carry: Sequence[str] = ()
+) -> DataFrame:
+    """(doc_id, sig, carry…) → one (doc_id, band_id, band_key, carry…)
+    row per band."""
+    keys = lsh_band_keys(F.col("sig"), bands, num_hashes // bands)
+    return sig_df.select(
         "doc_id",
         F.explode(
             F.array(
@@ -171,7 +197,16 @@ def _buckets_from_shingles(
                 ]
             )
         ).alias("bk"),
-    ).select("doc_id", F.col("bk.band_id").alias("band_id"), F.col("bk.band_key").alias("band_key"))
+        *carry,
+    ).select("doc_id", "bk.band_id", "bk.band_key", *carry)
+
+
+def _buckets_from_shingles(
+    sh_df: DataFrame, num_hashes: int, bands: int, carry: Sequence[str] = ()
+) -> DataFrame:
+    """The ONE signature → band-row kernel, batch and streaming
+    (`streaming/tws.py: streaming_lsh_dedup` passes its ``carry_cols``)."""
+    return _band_rows(_signatures(sh_df, num_hashes, carry), num_hashes, bands, carry)
 
 
 def minhash_lsh_buckets(
@@ -188,12 +223,52 @@ def minhash_lsh_buckets(
     )
 
 
+def _bucket_pairs(buckets: DataFrame, carry: Sequence[str] = ()) -> DataFrame:
+    """The LSH candidates: distinct (doc_a, doc_b) with doc_a < doc_b
+    sharing at least one band bucket — a self-join on the uniform md5
+    bucket key, never N². Each ``carry`` column comes along as
+    ``<col>_a`` / ``<col>_b``."""
+    return (
+        buckets.alias("x")
+        .join(
+            buckets.alias("y"),
+            (F.col("x.band_id") == F.col("y.band_id"))
+            & (F.col("x.band_key") == F.col("y.band_key"))
+            & (F.col("x.doc_id") < F.col("y.doc_id")),
+        )
+        .select(
+            F.col("x.doc_id").alias("doc_a"),
+            F.col("y.doc_id").alias("doc_b"),
+            *[
+                F.col(f"{s}.{c}").alias(f"{c}_{t}")
+                for s, t in (("x", "a"), ("y", "b"))
+                for c in carry
+            ],
+        )
+        .distinct()
+    )
+
+
 def jaccard(a: Column, b: Column) -> Column:
     """Exact Jaccard similarity of two distinct-element arrays."""
     inter = F.size(F.array_intersect(a, b))
     union = F.size(a) + F.size(b) - inter
     # nullif: two empty sets → NULL (not ANSI divide-by-zero)
     return inter.cast("double") / F.nullif(union.cast("double"), F.lit(0.0))
+
+
+def _verified(
+    cand: DataFrame, sh_a: DataFrame, sh_b: DataFrame | None = None
+) -> DataFrame:
+    """Candidate pairs (doc_a, doc_b, …) plus the exact ``jaccard`` of
+    their shingle sets: doc_a's set from ``sh_a``, doc_b's from ``sh_b``
+    (the same table by default). Touches candidate pairs only."""
+    sh_b = sh_a if sh_b is None else sh_b
+    return (
+        cand.join(sh_a.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sh_b.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
+        .select(*cand.columns, jaccard(F.col("sa.sh"), F.col("sb.sh")).alias("jaccard"))
+    )
 
 
 def minhash_dedup_pairs(
@@ -213,28 +288,8 @@ def minhash_dedup_pairs(
     sides, and recomputing the shingling 4× would dominate runtime.
     """
     sh = share(shingle_table(docs, text_col, shingle_n))
-    buckets = _buckets_from_shingles(sh, num_hashes, bands)
-    cand = (
-        buckets.alias("x")
-        .join(
-            buckets.alias("y"),
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    return (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sh.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            jaccard(F.col("sa.sh"), F.col("sb.sh")).alias("jaccard"),
-        )
-        .withColumn("is_dup", F.col("jaccard") >= threshold)
-    )
+    cand = _bucket_pairs(_buckets_from_shingles(sh, num_hashes, bands))
+    return _verified(cand, sh).withColumn("is_dup", F.col("jaccard") >= threshold)
 
 
 def minhash_estimate_audit(
@@ -256,95 +311,28 @@ def minhash_estimate_audit(
     only (same bucket join as `minhash_dedup_pairs` — never N²).
     """
     sh = share(shingle_table(docs, text_col, shingle_n))
-    hm_df = sh.select(
-        "doc_id", F.transform(F.col("sh"), shingle_base_hash).alias("hm")
-    )
-    sig_df = share(
-        hm_df.select(
-            "doc_id",
-            minhash_signature_from_hashes(F.col("hm"), num_hashes).alias("sig"),
-        )
-    )
-    rows = num_hashes // bands
-    keys = lsh_band_keys(F.col("sig"), bands, rows)
-    buckets = sig_df.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band_id"), k.alias("band_key"))
-                    for b, k in enumerate(keys)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", F.col("bk.band_id").alias("band_id"), F.col("bk.band_key").alias("band_key"))
-    cand = (
-        buckets.alias("x")
-        .join(
-            buckets.alias("y"),
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    sig_df = share(_signatures(sh, num_hashes))
+    cand = _bucket_pairs(_band_rows(sig_df, num_hashes, bands))
     est = (
         F.size(
             F.filter(
-                F.zip_with(F.col("sa.sig"), F.col("sb.sig"), lambda p, q: p == q),
+                F.zip_with(F.col("ga.sig"), F.col("gb.sig"), lambda p, q: p == q),
                 lambda eq: eq,
             )
         ).cast("double")
         / F.lit(float(num_hashes))
     )
-    return (
-        cand.join(sig_df.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sig_df.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .join(sh.alias("ha"), F.col("doc_a") == F.col("ha.doc_id"))
-        .join(sh.alias("hb"), F.col("doc_b") == F.col("hb.doc_id"))
-        .select(
-            "doc_a",
-            "doc_b",
-            F.round(est, 9).alias("est_jaccard"),
-            jaccard(F.col("ha.sh"), F.col("hb.sh")).alias("jaccard"),
-        )
-        .withColumn("abs_err", F.round(F.abs(F.col("est_jaccard") - F.col("jaccard")), 9))
+    estimated = (
+        cand.join(sig_df.alias("ga"), F.col("doc_a") == F.col("ga.doc_id"))
+        .join(sig_df.alias("gb"), F.col("doc_b") == F.col("gb.doc_id"))
+        .select("doc_a", "doc_b", F.round(est, 9).alias("est_jaccard"))
+    )
+    return _verified(estimated, sh).withColumn(
+        "abs_err", F.round(F.abs(F.col("est_jaccard") - F.col("jaccard")), 9)
     )
 
 
-def _cc_labels(pairs: DataFrame, cc: str) -> DataFrame:
-    """Connected-components dispatch for the cluster-consuming operators
-    (VERDICT r6 item 4): both algorithms share the output contract
-    (doc_id, cluster_id = component min, cluster_size), so consumers —
-    and their oracles — are label-identical under either.
-
-    - ``minlabel`` (default): O(diameter) min-label propagation
-      (``duplicate_clusters``) — 2-3 rounds on real near-dup graphs,
-      whose components are shallow rewrites of one page.
-    - ``twostar``: alternating large-star/small-star contraction
-      (``duplicate_clusters_twostar``) — O(log n) rounds, the
-      adversarial-scale path for freak long chains (boilerplate rings,
-      templated mirrors) a 100 TB crawl can contain.
-    - ``auto``: the measured-diameter guard (VERDICT r7 item 7) —
-      min-label with a bounded round probe, two-star iff the probe
-      exhausts (``duplicate_clusters_auto``). The production default
-      for graphs of unknown shape.
-    """
-    if cc == "twostar":
-        return duplicate_clusters_twostar(pairs)
-    if cc == "minlabel":
-        return duplicate_clusters(pairs)
-    if cc == "auto":
-        return duplicate_clusters_auto(pairs)
-    raise ValueError(
-        f"cc must be 'minlabel', 'twostar' or 'auto', got {cc!r}"
-    )
-
-
-def soft_dedup_weights(
-    docs: DataFrame, pairs: DataFrame, cc: str = "minlabel"
-) -> DataFrame:
+def soft_dedup_weights(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """Soft deduplication — reweight instead of remove (the SlimPajama /
     soft-dedup recipe surface): every document gets sampling weight
     1 / |its near-dup cluster|, so duplicated CONTENT contributes the
@@ -360,10 +348,11 @@ def soft_dedup_weights(
     Scale shape: the CC label table is proportional to DUPLICATED docs
     only; the full corpus is touched by one left join on doc_id —
     text never moves. The weight feeds ``weighted_reservoir`` /
-    ``mixture_sample`` directly. ``cc`` picks the closure algorithm
-    (see ``_cc_labels``); labels — and therefore weights — are
-    identical under either (test-pinned on the 41-node chain)."""
-    labels = _cc_labels(pairs, cc)
+    ``mixture_sample`` directly. The closure is
+    ``duplicate_clusters_auto`` (min-label, two-star once a long chain
+    shows), so a 41-node chain gets its weights instead of an error
+    (test-pinned)."""
+    labels = duplicate_clusters_auto(pairs)
     size = F.coalesce("cluster_size", F.lit(1)).cast("int")
     return (
         docs.select("doc_id")
@@ -378,7 +367,7 @@ def soft_dedup_weights(
 
 
 def leakage_safe_split(
-    docs: DataFrame, pairs: DataFrame, train_pct: int = 80, cc: str = "minlabel"
+    docs: DataFrame, pairs: DataFrame, train_pct: int = 80
 ) -> DataFrame:
     """Leakage-safe train/holdout split: the unit of assignment is the
     near-dup CLUSTER, not the document — a near-copy of a training doc
@@ -392,20 +381,11 @@ def leakage_safe_split(
     cluster share the split by construction (test-pinned).
 
     Scale shape: same as ``soft_dedup_weights`` — one doc_id-keyed left
-    join against the duplicated-docs-sized label table, with the same
-    ``cc`` closure dispatch (labels identical under either)."""
-    labels = _cc_labels(pairs, cc).select("doc_id", "cluster_id")
+    join against the duplicated-docs-sized label table, on the same
+    ``duplicate_clusters_auto`` closure."""
+    labels = duplicate_clusters_auto(pairs).select("doc_id", "cluster_id")
     cl = F.coalesce("cluster_id", F.col("doc_id"))
-    h = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("split:"), cl.cast("string"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("long")
-        % 100
-    )
+    h = md5_prefix_long(cl.cast("string"), "split:") % 100
     return (
         docs.select("doc_id")
         .join(labels, "doc_id", "left")
@@ -584,8 +564,6 @@ def near_dedup_front(
     front's state. One window per domain; the LSH stage is the pair-free
     two-agg shape of `lsh_first_arrival`.
     """
-    from pyspark.sql import Window
-
     gated = docs.where(gopher_core_gate(F.col(text_col)))
     verdicts = lsh_first_arrival(
         gated, text_col, num_hashes, bands, shingle_n
@@ -676,8 +654,6 @@ def pretrain_prep_plan(
     broadcast, so the corpus text itself never shuffles for the
     decontamination probe.
     """
-    from pyspark.sql import Window
-
     from flink_helloworld_spark.operators.sampling import pack_sequences
     from flink_helloworld_spark.operators.text import quality_metric_cols
 
@@ -691,31 +667,16 @@ def pretrain_prep_plan(
         .select("doc_id", "ws")
     )
     # minhash_dedup_pairs' banding/verify shape, fed from the cached word
-    # arrays instead of re-shingling raw text (dedup.py:192 contract)
-    sh = share(
-        surv.where(F.size("ws") >= shingle_n).select(
-            "doc_id", shingles_from_words(F.col("ws"), shingle_n).alias("sh")
-        )
-    )
-    buckets = _buckets_from_shingles(sh, num_hashes, bands)
-    cand = (
-        buckets.alias("x")
-        .join(
-            buckets.alias("y"),
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    # arrays through shingle_table's `_shingle_sets` step instead of
+    # re-splitting raw text
+    sh = share(_shingle_sets(surv, shingle_n))
+    cand = _bucket_pairs(_buckets_from_shingles(sh, num_hashes, bands))
     # no .distinct() on the drop set: it feeds a LEFT ANTI join, where
     # duplicate right-side keys are absorbed by the build-side hash table
     # — a distinct here would be a whole extra shuffle for nothing
     dropped = (
-        cand.join(sh.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sh.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .where(jaccard(F.col("sa.sh"), F.col("sb.sh")) >= jaccard_threshold)
+        _verified(cand, sh)
+        .where(F.col("jaccard") >= jaccard_threshold)
         .select(F.col("doc_b").alias("doc_id"))
     )
     corpus = surv.join(dropped, "doc_id", "left_anti").where(
@@ -822,17 +783,13 @@ def _collapse_shingle_sets(
     tables are ``share``d — every downstream branch reads the cache, so
     the corpus-wide shingling (the linear term that dominates at 10×)
     runs once per plan."""
-    from pyspark.sql import Window
-
     cols = [F.col("doc_id")]
     if block_col is not None:
         cols.append(F.col(block_col).alias("blk"))
     base = share(
-        docs.select(*cols, _words(F.col(text_col)).alias("ws"))
-        .where(F.size("ws") >= shingle_n)
-        .withColumn("sh", shingles_from_words(F.col("ws"), shingle_n))
-        .drop("ws")
-        .withColumn("_seth", F.md5(F.concat_ws("\x1f", "sh")))
+        _shingle_sets(
+            docs.select(*cols, _words(F.col(text_col)).alias("ws")), shingle_n
+        ).withColumn("_seth", F.md5(F.concat_ws("\x1f", "sh")))
     )
     keys = (["blk"] if block_col is not None else []) + ["_seth"]
     members = base.select(*keys, "doc_id")
@@ -850,56 +807,64 @@ def _collapse_shingle_sets(
     return members, reps, keys
 
 
-def _expand_cross_pairs(
-    set_pairs: DataFrame, members: DataFrame, keys: list[str]
+def _member_pairs(
+    set_pairs: DataFrame,
+    members: DataFrame,
+    keys: list[str],
+    values: dict[str, Column],
+    gate: DataFrame | None = None,
 ) -> DataFrame:
-    """Join set-LEVEL matched pairs back to member documents: set_pairs
-    carries the group keys suffixed _a/_b (``_blk`` for the block key)
-    plus its value columns; the result carries (_ida, _idb) per member
-    pair with the value columns untouched. Output-proportional work —
-    the joins run on the tiny matched-pair table, never the corpus."""
+    """The set-pair → member-pair tail of every set-collapsing pair
+    operator: (doc_a < doc_b, values…) for every member pair.
+
+    Cross-group pairs: set_pairs carries the group keys suffixed _a/_b
+    (``_blk`` for the block key) plus its value columns; joining it back
+    to the members on the group key gives (_ida, _idb) per member pair,
+    and ``values`` (name → expression over set_pairs' columns, _ida and
+    _idb) are the emitted values. Output-proportional work — the joins
+    run on the tiny matched-pair table, never the corpus.
+
+    Within-group pairs match by IDENTITY (jaccard 1.0, mutual
+    containment), so every value is 1.0 with no candidate re-check.
+    ``gate`` optionally restricts them to groups (same key columns) that
+    satisfied the operator's candidate rule, so capped variants stay
+    faithful to their per-document contract."""
     blk_keys = ["_blk"] if "blk" in keys else []
     blk_cols = [F.col("blk").alias("_blk")] if blk_keys else []
     a_side = members.select(
-        *blk_cols,
-        F.col("_seth").alias("_seth_a"),
-        F.col("doc_id").alias("_ida"),
+        *blk_cols, F.col("_seth").alias("_seth_a"), F.col("doc_id").alias("_ida")
     )
     b_side = members.select(
-        *blk_cols,
-        F.col("_seth").alias("_seth_b"),
-        F.col("doc_id").alias("_idb"),
+        *blk_cols, F.col("_seth").alias("_seth_b"), F.col("doc_id").alias("_idb")
     )
-    return set_pairs.join(a_side, blk_keys + ["_seth_a"]).join(
-        b_side, blk_keys + ["_seth_b"]
+    cross = (
+        set_pairs.join(a_side, blk_keys + ["_seth_a"])
+        .join(b_side, blk_keys + ["_seth_b"])
+        .select(
+            F.least("_ida", "_idb").alias("doc_a"),
+            F.greatest("_ida", "_idb").alias("doc_b"),
+            *[v.alias(k) for k, v in values.items()],
+        )
     )
-
-
-def _within_group_pairs(
-    members: DataFrame, keys: list[str], gate: DataFrame | None = None
-) -> DataFrame:
-    """All ordered (doc_a < doc_b) member pairs within each
-    identical-set group — these match by IDENTITY (jaccard 1.0, mutual
-    containment), no candidate re-check. ``gate`` optionally restricts
-    to groups (same key columns) that satisfied the operator's candidate
-    rule, so capped variants stay faithful to their per-document
-    contract."""
     cond = (F.col("m1._seth") == F.col("m2._seth")) & (
         F.col("m1.doc_id") < F.col("m2.doc_id")
     )
     if "blk" in keys:
         cond = (F.col("m1.blk") == F.col("m2.blk")) & cond
-    pairs = members.alias("m1").join(members.alias("m2"), cond)
+    within = members.alias("m1").join(members.alias("m2"), cond)
     if gate is not None:
         gcond = F.col("m1._seth") == F.col("_g_seth")
         gsel = [F.col("_seth").alias("_g_seth")]
         if "blk" in keys:
             gcond = (F.col("m1.blk") == F.col("_g_blk")) & gcond
             gsel.insert(0, F.col("blk").alias("_g_blk"))
-        pairs = pairs.join(gate.select(*gsel), gcond)
-    return pairs.select(
-        F.col("m1.doc_id").alias("doc_a"), F.col("m2.doc_id").alias("doc_b")
+        within = within.join(gate.select(*gsel), gcond)
+    within = within.select(
+        F.col("m1.doc_id").alias("doc_a"),
+        F.col("m2.doc_id").alias("doc_b"),
+        *[F.lit(1.0).alias(k) for k in values],
     )
+    return cross.unionByName(within)
 
 
 def ngram_jaccard_pairs(
@@ -970,17 +935,9 @@ def ngram_jaccard_pairs(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    cross = _expand_cross_pairs(set_pairs, members, keys).select(
-        F.least("_ida", "_idb").alias("doc_a"),
-        F.greatest("_ida", "_idb").alias("doc_b"),
-        "jaccard",
-    )
     # identical non-empty sets always share every shingle: jaccard 1.0,
     # no candidate condition to re-check
-    within = _within_group_pairs(members, keys).withColumn(
-        "jaccard", F.lit(1.0)
-    )
-    return cross.unionByName(within)
+    return _member_pairs(set_pairs, members, keys, {"jaccard": F.col("jaccard")})
 
 
 def ngram_jaccard_pairs_capped(
@@ -1027,8 +984,6 @@ def ngram_jaccard_pairs_capped(
        emitted only when the group's set has ≥1 rare shingle, same as
        the per-document candidate rule) — output-proportional work.
     """
-    from pyspark.sql import Window
-
     members, reps, keys = _collapse_shingle_sets(
         docs, text_col, shingle_n, block_col=block_col, with_m=True
     )
@@ -1120,17 +1075,12 @@ def ngram_jaccard_pairs_capped(
         )
         .where(F.col("jaccard") >= threshold)
     )
-    cross = _expand_cross_pairs(set_pairs, members, keys).select(
-        F.least("_ida", "_idb").alias("doc_a"),
-        F.greatest("_ida", "_idb").alias("doc_b"),
-        "jaccard",
-    )
     # identity matches, gated on the per-document candidate rule: the
     # group's set must hold >= 1 rare shingle
-    within = _within_group_pairs(
-        members, keys, gate=stats.where(F.col("_nr") > 0)
-    ).withColumn("jaccard", F.lit(1.0))
-    return cross.unionByName(within)
+    return _member_pairs(
+        set_pairs, members, keys, {"jaccard": F.col("jaccard")},
+        gate=stats.where(F.col("_nr") > 0),
+    )
 
 
 # --- duplicate clustering (connected components) ----------------------------
@@ -1152,16 +1102,19 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
     driver-loop shape as plans.iterate_fixpoint, with localCheckpoint
     truncating lineage per round. Near-dup components are shallow (a
     cluster of k rewrites of one page has diameter ~1-2), so this
-    converges in 2-3 rounds; for adversarial long-chain graphs switch to
+    converges in 2-3 rounds; adversarial long-chain graphs need
     alternating large-star/small-star (Kiveris et al., "Connected
     Components in MapReduce"), which contracts paths logarithmically with
-    the same per-round join shape (``duplicate_clusters_twostar``, or
-    ``cc="twostar"`` on the consumers). Each round is one shuffle on node
-    id; nothing is collected to the driver except the 1-row convergence
-    count. If ``max_iters`` is exhausted before the fixpoint this RAISES
-    (same contract as two-star): an unconverged label table silently
-    under-merges clusters — wrong sizes, wrong survivors — which round
-    7's 41-node-chain consumer test caught against the old behavior.
+    the same per-round join shape (``duplicate_clusters_twostar``).
+    ``duplicate_clusters_auto`` picks between the two from a bounded
+    min-label probe, and it is the closure the cluster consumers
+    (``soft_dedup_weights``, ``leakage_safe_split``, ``cluster_prune``)
+    run. Each round is one shuffle on node id; nothing is collected to
+    the driver except the 1-row convergence count. If ``max_iters`` is
+    exhausted before the fixpoint this RAISES (same contract as
+    two-star): an unconverged label table silently under-merges
+    clusters — wrong sizes, wrong survivors — which round 7's
+    41-node-chain consumer test caught against the old behavior.
     """
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
@@ -1206,11 +1159,9 @@ def duplicate_clusters(pairs: DataFrame, max_iters: int = 25) -> DataFrame:
             f"min-label propagation did not converge in {max_iters} rounds "
             "— an unconverged label table silently under-merges clusters; "
             "raise max_iters, or use the O(log n) two-star closure "
-            "(duplicate_clusters_twostar / cc='twostar') for long-chain "
-            "graphs"
+            "(duplicate_clusters_twostar, or duplicate_clusters_auto) for "
+            "long-chain graphs"
         )
-    from pyspark.sql import Window
-
     # size via window on the label key (one shuffle) — a size TABLE would
     # be one row per cluster, far too big to broadcast at corpus scale
     w = Window.partitionBy("label")
@@ -1303,8 +1254,6 @@ def incremental_dedup(
     within-batch rank is a window over the same hash key, so the whole
     op is two hash-partitioned passes over hashes, not documents.
     """
-    from pyspark.sql import Window
-
     ex = existing.select(F.md5(text_col).alias("h")).distinct().withColumn(
         "_in_corpus", F.lit(True)
     )
@@ -1355,35 +1304,23 @@ def incremental_near_dedup(
     sh_in = share(shingle_table(incoming, text_col, shingle_n))
     b_ex = _buckets_from_shingles(sh_ex, num_hashes, bands)
     b_in = _buckets_from_shingles(sh_in, num_hashes, bands)
+    # corpus candidates: (doc_a = incoming, doc_b = corpus), any order
     cand_c = (
         b_in.alias("i")
         .join(b_ex.alias("e"), ["band_id", "band_key"])
-        .select(F.col("i.doc_id").alias("inc_id"), F.col("e.doc_id").alias("ex_id"))
+        .select(F.col("i.doc_id").alias("doc_a"), F.col("e.doc_id").alias("doc_b"))
         .distinct()
     )
     dup_c = (
-        cand_c.join(sh_in.alias("si"), F.col("inc_id") == F.col("si.doc_id"))
-        .join(sh_ex.alias("se"), F.col("ex_id") == F.col("se.doc_id"))
-        .where(jaccard(F.col("si.sh"), F.col("se.sh")) >= threshold)
-        .select(F.col("inc_id").alias("doc_id"))
+        _verified(cand_c, sh_in, sh_ex)
+        .where(F.col("jaccard") >= threshold)
+        .select(F.col("doc_a").alias("doc_id"))
         .distinct()
         .withColumn("_dup_corpus", F.lit(True))
     )
-    cand_b = (
-        b_in.alias("x")
-        .join(
-            b_in.alias("y"),
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
-        .distinct()
-    )
     dup_b = (
-        cand_b.join(sh_in.alias("sa"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sh_in.alias("sb"), F.col("doc_b") == F.col("sb.doc_id"))
-        .where(jaccard(F.col("sa.sh"), F.col("sb.sh")) >= threshold)
+        _verified(_bucket_pairs(b_in), sh_in)
+        .where(F.col("jaccard") >= threshold)
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
         .withColumn("_dup_batch", F.lit(True))
@@ -1436,8 +1373,6 @@ def containment_pairs(
       collapses in any real pipeline. Every bucket at tested scales
       survives the cap (max observed membership 21 at sf0.1 vs 64).
     """
-    from pyspark.sql import Window
-
     members, reps, keys = _collapse_shingle_sets(
         docs, text_col, shingle_n, with_m=True
     )
@@ -1453,33 +1388,19 @@ def containment_pairs(
             .where(F.col("_wm") <= max_bucket)
             .drop("_wm")
         )
-    cand = (
-        buckets.alias("x")
-        .join(
-            buckets.alias("y"),
-            (F.col("x.band_id") == F.col("y.band_id"))
-            & (F.col("x.band_key") == F.col("y.band_key"))
-            & (F.col("x.doc_id") < F.col("y.doc_id")),
-        )
-        .select(
-            F.col("x.doc_id").alias("rep_a"),
-            F.col("x._seth").alias("_seth_a"),
-            F.col("y.doc_id").alias("rep_b"),
-            F.col("y._seth").alias("_seth_b"),
-        )
-        .distinct()
-    )
+    # candidates are representative pairs (doc_a/doc_b = rep ids)
+    cand = _bucket_pairs(buckets, carry=["_seth"])
     # materialize the intersection size as its own projection: it feeds
     # both containment ratios, and CollapseProject would otherwise inline
     # the O(|A|+|B|) array_intersect into each use (computed twice)
     set_pairs = (
         cand.join(
-            reps.select(F.col("rep").alias("rep_a"), F.col("sh").alias("_sh_a")),
-            "rep_a",
+            reps.select(F.col("rep").alias("doc_a"), F.col("sh").alias("_sh_a")),
+            "doc_a",
         )
         .join(
-            reps.select(F.col("rep").alias("rep_b"), F.col("sh").alias("_sh_b")),
-            "rep_b",
+            reps.select(F.col("rep").alias("doc_b"), F.col("sh").alias("_sh_b")),
+            "doc_b",
         )
         .select(
             "_seth_a",
@@ -1498,27 +1419,58 @@ def containment_pairs(
         )
         .where((F.col("_cab") >= threshold) | (F.col("_cba") >= threshold))
     )
-    cross = _expand_cross_pairs(set_pairs, members, keys).select(
-        F.least("_ida", "_idb").alias("doc_a"),
-        F.greatest("_ida", "_idb").alias("doc_b"),
-        # asymmetric values follow the id order of the emitted pair
-        F.when(F.col("_ida") < F.col("_idb"), F.col("_cab"))
-        .otherwise(F.col("_cba"))
-        .alias("containment_a_in_b"),
-        F.when(F.col("_ida") < F.col("_idb"), F.col("_cba"))
-        .otherwise(F.col("_cab"))
-        .alias("containment_b_in_a"),
-    )
-    # identical sets: 1.0/1.0 containment; candidate rule = the group's
+    # asymmetric values follow the id order of the emitted pair;
+    # identical sets: 1.0/1.0 containment, candidate rule = the group's
     # buckets survived the cap (any one band suffices)
-    within = (
-        _within_group_pairs(
-            members, keys, gate=buckets.select("_seth").distinct()
-        )
-        .withColumn("containment_a_in_b", F.lit(1.0))
-        .withColumn("containment_b_in_a", F.lit(1.0))
+    a_first = F.col("_ida") < F.col("_idb")
+    return _member_pairs(
+        set_pairs,
+        members,
+        keys,
+        {
+            "containment_a_in_b": F.when(a_first, F.col("_cab")).otherwise(F.col("_cba")),
+            "containment_b_in_a": F.when(a_first, F.col("_cba")).otherwise(F.col("_cab")),
+        },
+        gate=buckets.select("_seth").distinct(),
     )
-    return cross.unionByName(within)
+
+
+def _span_windows(docs: DataFrame, w: int, text_col: str) -> DataFrame:
+    """(doc_id, pos, span_hash): every stride-1 ``w``-word window of
+    every doc with at least ``w`` words, hashed with md5 — the one
+    window walker of the span family."""
+    base = docs.select("doc_id", _words(F.col(text_col)).alias("_ws")).where(
+        F.size("_ws") >= w
+    )
+    return base.select(
+        "doc_id",
+        F.posexplode(
+            F.transform(
+                F.sequence(F.lit(0), F.size("_ws") - w),
+                lambda i: F.md5(F.array_join(F.slice(F.col("_ws"), i + 1, w), " ")),
+            )
+        ).alias("pos", "span_hash"),
+    )
+
+
+def _span_islands(hits: DataFrame, w: int) -> DataFrame:
+    """Gaps-and-islands merge of flagged windows (doc_id, pos) into
+    maximal runs (doc_id, span_start, span_end), end exclusive: a window
+    opens a new island when it starts past the running max of earlier
+    window ends. Pure integer arithmetic; partitioned by doc_id, so the
+    state is one document's flagged windows."""
+    w_doc = Window.partitionBy("doc_id").orderBy("pos")
+    prev_end = F.max(F.col("pos") + w).over(
+        w_doc.rowsBetween(Window.unboundedPreceding, -1)
+    )
+    isl = hits.withColumn(
+        "_brk",
+        F.when(F.col("pos") > F.coalesce(prev_end, F.lit(-1)), 1).otherwise(0),
+    ).withColumn("_island", F.sum("_brk").over(w_doc))
+    return isl.groupBy("doc_id", "_island").agg(
+        F.min("pos").cast("int").alias("span_start"),
+        (F.max("pos") + w).cast("int").alias("span_end"),
+    )
 
 
 def repeated_spans(
@@ -1541,20 +1493,9 @@ def repeated_spans(
     semi-join docs against flagged (doc, pos) windows and cut those byte
     ranges; the detection pass here is the expensive, distributed half.
     """
-    base = docs.select("doc_id", _words(F.col(text_col)).alias("_ws")).where(
-        F.size("_ws") >= w
-    )
-    spans = base.select(
-        "doc_id",
-        F.explode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("_ws") - w),
-                lambda i: F.md5(F.array_join(F.slice(F.col("_ws"), i + 1, w), " ")),
-            )
-        ).alias("span_hash"),
-    )
     return (
-        spans.groupBy("span_hash")
+        _span_windows(docs, w, text_col)
+        .groupBy("span_hash")
         .agg(
             F.count(F.lit(1)).alias("n_occ"),
             F.countDistinct("doc_id").alias("n_docs"),
@@ -1583,19 +1524,7 @@ def repeated_span_coverage(
     shuffle; the island pass partitions by doc_id, so state is bounded
     by a single document's flagged windows.
     """
-    from pyspark.sql import Window
-
-    words = docs.select("doc_id", _words(F.col(text_col)).alias("_ws"))
-    base = words.where(F.size("_ws") >= w)
-    spans = base.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("_ws") - w),
-                lambda i: F.md5(F.array_join(F.slice(F.col("_ws"), i + 1, w), " ")),
-            )
-        ).alias("pos", "span_hash"),
-    )
+    spans = _span_windows(docs, w, text_col)
     flagged = (
         spans.groupBy("span_hash")
         .agg(F.count(F.lit(1)).alias("_n"))
@@ -1603,22 +1532,15 @@ def repeated_span_coverage(
         .select("span_hash")
     )
     hits = spans.join(flagged, on="span_hash").select("doc_id", "pos")
-    w_doc = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = F.max(F.col("pos") + w).over(
-        w_doc.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    isl = hits.withColumn(
-        "_brk",
-        F.when(F.col("pos") > F.coalesce(prev_end, F.lit(-1)), 1).otherwise(0),
-    ).withColumn("_island", F.sum("_brk").over(w_doc))
     cov = (
-        isl.groupBy("doc_id", "_island")
-        .agg((F.max("pos") + w - F.min("pos")).alias("_len"))
+        _span_islands(hits, w)
         .groupBy("doc_id")
-        .agg(F.sum("_len").alias("covered_tokens"))
+        .agg(F.sum(F.col("span_end") - F.col("span_start")).alias("covered_tokens"))
     )
     return (
-        words.select("doc_id", F.size("_ws").cast("bigint").alias("n_tokens"))
+        docs.select(
+            "doc_id", F.size(_words(F.col(text_col))).cast("bigint").alias("n_tokens")
+        )
         .join(cov, on="doc_id", how="left")
         .select(
             "doc_id",
@@ -1666,20 +1588,7 @@ def max_spans(
     bounded by one document's flagged windows. Document text never
     shuffles.
     """
-    from pyspark.sql import Window
-
-    base = docs.select("doc_id", _words(F.col(text_col)).alias("_ws")).where(
-        F.size("_ws") >= w
-    )
-    occ = base.select(
-        "doc_id",
-        F.posexplode(
-            F.transform(
-                F.sequence(F.lit(0), F.size("_ws") - w),
-                lambda i: F.md5(F.array_join(F.slice(F.col("_ws"), i + 1, w), " ")),
-            )
-        ).alias("pos", "span_hash"),
-    )
+    occ = _span_windows(docs, w, text_col)
     # ONE span_hash shuffle serves both the >=min_count flag and the
     # exemplar rank (corpus-wide first occurrence of each window)
     wh = Window.partitionBy("span_hash")
@@ -1692,26 +1601,11 @@ def max_spans(
     ).where(F.col("_n") >= min_count)
     if keep_first:
         marked = marked.where(F.col("_rn") > 1)
-    w_doc = Window.partitionBy("doc_id").orderBy("pos")
-    prev_end = F.max(F.col("pos") + w).over(
-        w_doc.rowsBetween(Window.unboundedPreceding, -1)
-    )
-    isl = marked.withColumn(
-        "_brk",
-        F.when(F.col("pos") > F.coalesce(prev_end, F.lit(-1)), 1).otherwise(0),
-    ).withColumn("_island", F.sum("_brk").over(w_doc))
-    return (
-        isl.groupBy("doc_id", "_island")
-        .agg(
-            F.min("pos").cast("int").alias("span_start"),
-            (F.max("pos") + w).cast("int").alias("span_end"),
-        )
-        .select(
-            "doc_id",
-            "span_start",
-            "span_end",
-            (F.col("span_end") - F.col("span_start")).alias("span_tokens"),
-        )
+    return _span_islands(marked, w).select(
+        "doc_id",
+        "span_start",
+        "span_end",
+        (F.col("span_end") - F.col("span_start")).alias("span_tokens"),
     )
 
 
@@ -1776,9 +1670,7 @@ def max_span_scrub(
 # --- corpus rewrite: keep one doc per near-dup cluster ---------------------
 
 
-def cluster_prune(
-    docs: DataFrame, pairs: DataFrame, cc: str = "minlabel"
-) -> DataFrame:
+def cluster_prune(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     """The corpus REWRITE that near-dup detection exists for: given the
     verified duplicate pairs, keep exactly one document per duplicate
     cluster (the minimum doc_id — the same canonical-survivor rule as
@@ -1792,12 +1684,13 @@ def cluster_prune(
     subset, not the corpus — the full corpus is touched only by one
     left anti/left join pair on doc_id (hash-partitioned, no text
     movement beyond the survivor projection). The transitive closure
-    itself reuses ``duplicate_clusters`` (per-round shuffles on node
-    id, driver sees only 1-row convergence counts); ``cc="twostar"``
-    swaps in the O(log n) large-star/small-star closure for adversarial
-    chain topologies — survivors identical under either (test-pinned).
+    is ``duplicate_clusters_auto``: min-label propagation (per-round
+    shuffles on node id, driver sees only 1-row convergence counts),
+    switching to the O(log n) large-star/small-star closure when its
+    round probe shows a long chain — the 41-node chain keeps only its
+    minimum (test-pinned).
     """
-    clusters = _cc_labels(pairs, cc)
+    clusters = duplicate_clusters_auto(pairs)
     losers = clusters.where(F.col("doc_id") != F.col("cluster_id")).select(
         "doc_id"
     )
@@ -1886,8 +1779,6 @@ def duplicate_clusters_twostar(pairs: DataFrame, max_iters: int = 64) -> DataFra
     invalid multi-membership rows an unconverged edge set would yield —
     the members derivation below is only correct at the fixpoint.
     """
-    from flink_helloworld_spark.functions import md5_prefix_long
-
     def _checksum(edges: DataFrame) -> tuple:
         row = edges.agg(
             F.count(F.lit(1)).alias("n"),
@@ -1951,8 +1842,6 @@ def duplicate_clusters_twostar(pairs: DataFrame, max_iters: int = 64) -> DataFra
             "— refusing to emit an unconverged (structurally invalid) "
             "edge set; raise max_iters"
         )
-    from pyspark.sql import Window
-
     members = e.select(
         F.col("u").alias("doc_id"), F.col("v").alias("cluster_id")
     ).unionByName(
@@ -1999,7 +1888,7 @@ def boilerplate_scrub(
     bounded by a single document's segment count. Nothing touches the
     driver. Reference anchor: the removal policy half of
     StateTest-style cleanup pipelines; semantics source for the span
-    family is dedup.py:1019 (repeated_spans).
+    family is ``repeated_spans``.
     """
     base = docs.select("doc_id", _words(F.col(text_col)).alias("_ws"))
     n_seg = F.ceil(F.size("_ws") / F.lit(w)).cast("int")
@@ -2121,8 +2010,6 @@ def sorted_neighborhood_pairs(
 
     Output: (doc_a, doc_b, hamming), doc_a < doc_b, distinct.
     """
-    from pyspark.sql import Window as W
-
     sh = simhash(docs, text_col)
     half = F.lit(1 << 16)
     all_pairs = None
@@ -2138,7 +2025,7 @@ def sorted_neighborhood_pairs(
             "simhash",
             key.alias("k"),
         ).withColumn("blk", F.floor(F.col("k") / F.lit(1 << 24)).cast("int"))
-        w = W.partitionBy("blk").orderBy("k", "doc_id")
+        w = Window.partitionBy("blk").orderBy("k", "doc_id")
         for off in range(1, window):
             keyed = keyed.withColumn(
                 f"n{off}_id", F.lead("doc_id", off).over(w)
@@ -2193,8 +2080,7 @@ def cdc_chunks(
     def _is_boundary(i):
         win = F.array_join(F.slice(ws, i - (w - 2), w), " ")
         return (
-            F.conv(F.substring(F.md5(win), 1, 15), 16, 10).cast("long")
-            % F.lit(int(mod))
+            md5_prefix_long(win) % F.lit(int(mod))
             == 0
         )
 

@@ -17,12 +17,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from flink_helloworld_spark.functions import md5_prefix_long
+
 BUCKETS = 10_000
 
 
 def _hash_bucket(col: Column, salt: str) -> Column:
-    h = F.conv(F.substring(F.md5(F.concat(F.lit(salt), col.cast("string"))), 1, 15), 16, 10)
-    return F.pmod(h.cast("long"), F.lit(BUCKETS))
+    return F.pmod(md5_prefix_long(col.cast("string"), salt), F.lit(BUCKETS))
 
 
 def deterministic_sample(
@@ -318,13 +319,7 @@ def reservoir_key(id_col: str, weight_col: str, salt: str = "wres") -> Column:
     bit-identical final reservoir): key = round(-ln(u)/w, 9) with
     u = (md5-60bit + 0.5) / 2^60 — computed as a Spark column so every
     consumer scores with the exact same doubles."""
-    h = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string"))), 1, 15
-        ),
-        16,
-        10,
-    ).cast("double")
+    h = md5_prefix_long(F.col(id_col).cast("string"), salt).cast("double")
     u = (h + F.lit(0.5)) / F.lit(float(16**15))
     return F.round(-F.log(u) / F.col(weight_col).cast("double"), 9)
 
@@ -744,7 +739,6 @@ def _epoch_materialize_tok(
     away' / §2.4 — one fewer scan, one fewer shuffle; r11)."""
     from pyspark.sql import Window
 
-    from flink_helloworld_spark.functions import md5_prefix_long
     from flink_helloworld_spark.operators.text import _words
 
     plan = mixture_reallocate(

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from flink_helloworld_spark.functions import md5_prefix_long
+
 from .text import _words, unigram_logppl
 
 # Hashed-n-gram feature space for DSIR. Fixed size => the fitted model
@@ -41,8 +43,7 @@ _SALT = "dsir"
 def _bucket_expr(w):
     """md5-hashed feature bucket in [0, N_BUCKETS): first 15 hex chars
     (60 bits, fits a nonneg BIGINT in every engine) mod N_BUCKETS."""
-    h = F.conv(F.substring(F.md5(F.concat(F.lit(_SALT), w)), 1, 15), 16, 10)
-    return F.pmod(h.cast("long"), F.lit(N_BUCKETS))
+    return F.pmod(md5_prefix_long(w, _SALT), F.lit(N_BUCKETS))
 
 
 def dsir_weights(
@@ -141,11 +142,7 @@ def dsir_select(
     md5 hex chars — u ∈ (0,1) strictly, so both logs are finite.
     """
     w = dsir_weights(docs, target_source, text_col, alpha)
-    h = F.conv(
-        F.substring(F.md5(F.concat(F.lit(salt), F.col("doc_id").cast("string"))), 1, 15),
-        16,
-        10,
-    ).cast("double")
+    h = md5_prefix_long(F.col("doc_id").cast("string"), salt).cast("double")
     u = (h + F.lit(0.5)) / F.lit(float(16**15))
     keyed = w.withColumn(
         "gumbel_key", F.round(F.col("logw") - F.log(-F.log(u)), 6)

@@ -253,16 +253,8 @@ def cosine_topk_exact_sharded(
     v_q = queries_df.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("vec")
     )
-    qs = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("xshard:"), F.col("id"))), 1, 15), 16, 10)
-        .cast("long")
-        % q_shards
-    ).cast("int")
-    cs = (
-        F.conv(F.substring(F.md5(F.concat(F.lit("yshard:"), F.col("id"))), 1, 15), 16, 10)
-        .cast("long")
-        % c_shards
-    ).cast("int")
+    qs = (md5_prefix_long(F.col("id"), "xshard:") % q_shards).cast("int")
+    cs = (md5_prefix_long(F.col("id"), "yshard:") % c_shards).cast("int")
     q_rep = v_q.select(
         "id",
         "vec",

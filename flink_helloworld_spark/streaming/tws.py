@@ -870,10 +870,8 @@ def streaming_lsh_dedup(
     (`minhash_dedup_pairs`) stays batch.
     """
     from flink_helloworld_spark.operators.dedup import (
-        lsh_band_keys,
-        minhash_signature_from_hashes,
-        shingle_base_hash,
-        shingles_from_words,
+        _buckets_from_shingles,
+        _shingle_sets,
     )
     from flink_helloworld_spark.operators.text import _words
 
@@ -882,7 +880,6 @@ def streaming_lsh_dedup(
     claim_out = StructType(list(_LSH_CLAIM_OUT.fields) + carry_fields)
     verdict_out = StructType(list(LSH_VERDICT_OUTPUT.fields) + carry_fields)
 
-    rows_per = num_hashes // bands
     docs = stream.select(
         F.col(id_col).cast("long").alias("doc_id"),
         _words(F.col(text_col)).alias("ws"),
@@ -895,35 +892,8 @@ def streaming_lsh_dedup(
         F.lit(True).alias("kept"),
         *carry,
     )
-    hm = docs.where(F.size("ws") >= shingle_n).select(
-        "doc_id",
-        F.transform(
-            shingles_from_words(F.col("ws"), shingle_n), shingle_base_hash
-        ).alias("hm"),
-        *carry,
-    )
-    sig = hm.select(
-        "doc_id",
-        minhash_signature_from_hashes(F.col("hm"), num_hashes).alias("sig"),
-        *carry,
-    )
-    keys = lsh_band_keys(F.col("sig"), bands, rows_per)
-    buckets = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).cast("int").alias("band_id"), k.alias("band_key"))
-                    for b, k in enumerate(keys)
-                ]
-            )
-        ).alias("bk"),
-        *carry,
-    ).select(
-        "doc_id",
-        F.col("bk.band_id").alias("band_id"),
-        F.col("bk.band_key").alias("band_key"),
-        *carry,
+    buckets = _buckets_from_shingles(
+        _shingle_sets(docs, shingle_n), num_hashes, bands, carry
     )
     claims = _claim(buckets, ["band_id", "band_key"], claim_out, state_ttl_ms)
     return _verdicts(claims, bands, verdict_out).unionByName(short)

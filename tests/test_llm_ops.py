@@ -35,6 +35,29 @@ def test_minhash_near_dup_detected(spark):
     assert len(pairs) == 1 and pairs[0].jaccard > 0.8
 
 
+def test_num_hashes_beyond_minhash_params_raises_at_build(spark, tmp_path):
+    """A signature holds at most len(MINHASH_PARAMS) permutations. Past
+    that, the audit divided a truncated signature's matches by the asked
+    count (63/65 on near-identical docs) and 96 hashes failed inside a
+    task; the batch audit and the streaming gate now refuse at build
+    time, and the full 64 still runs."""
+    from flink_helloworld_spark.streaming.tws import streaming_lsh_dedup
+
+    base = " ".join(f"w{i}" for i in range(60))
+    docs = _docs(spark, [base, base.replace("w59", "x59")])
+    k = len(D.MINHASH_PARAMS)
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        str(tmp_path)
+    )
+    for n in (k + 1, 96):
+        with pytest.raises(ValueError, match="num_hashes"):
+            D.minhash_estimate_audit(docs, num_hashes=n, bands=32)
+        with pytest.raises(ValueError, match="num_hashes"):
+            streaming_lsh_dedup(stream, num_hashes=n, bands=32)
+    (row,) = D.minhash_estimate_audit(docs, num_hashes=k, bands=32).collect()
+    assert abs(row.est_jaccard - row.jaccard) < 0.1
+
+
 def test_simhash_similar_docs_close(spark):
     base = "one two three four five six seven eight nine ten " * 5
     docs = _docs(spark, [base, base + "eleven", "zz yy xx ww vv uu tt ss rr qq " * 5])

@@ -396,7 +396,7 @@ def test_twostar_raises_rather_than_emitting_unconverged_state(spark):
 
 @pytest.mark.slow
 def test_auto_cc_dispatches_by_measured_diameter(spark):
-    """VERDICT r7 item 7: cc='auto' must (a) resolve a shallow graph
+    """VERDICT r7 item 7: the auto closure must (a) resolve a shallow graph
     via min-label WITHOUT ever invoking two-star (the common-case
     cost), and (b) fall back to two-star when the probe cap exhausts
     on a long chain — with labels identical to an uncapped min-label
@@ -440,26 +440,26 @@ def test_auto_cc_dispatches_by_measured_diameter(spark):
     }
     assert auto == ref
     assert (100, 100, 41) in auto
-    # the consumers accept the new mode
+    # the consumers run this closure
     docs = spark.createDataFrame(
         [(i, f"doc {i}") for i in range(100, 141)], "doc_id long, text string"
     )
-    pruned = D.cluster_prune(docs, chain, cc="auto").collect()
+    pruned = D.cluster_prune(docs, chain).collect()
     assert {r.doc_id for r in pruned} == {100}
     assert pruned[0].dups_removed == 40
 
 
 @pytest.mark.slow
-def test_cluster_consumers_label_identical_under_twostar(spark):
+def test_cluster_consumers_label_identical_under_twostar(spark, monkeypatch):
     """VERDICT r6 item 4: the three cluster-consuming operators
-    (soft_dedup_weights, leakage_safe_split, cluster_prune) must produce
-    row-identical output under cc='twostar' and cc='minlabel' on a
-    chain + triangle + singleton mix, and the 41-node adversarial chain
-    must flow through all three consumers via cc='twostar' while
-    cc='minlabel' REFUSES to emit an unconverged label table at its
-    default round budget (the silent-under-merge bug this test caught)."""
-    import pytest
-
+    (soft_dedup_weights, leakage_safe_split, cluster_prune) run
+    ``duplicate_clusters_auto`` and must produce row-identical output
+    when two-star is forced in its place, on a chain + triangle +
+    singleton mix. The 41-node adversarial chain, past min-label's
+    default round budget, flows through all three consumers: min-label
+    alone still REFUSES to emit an unconverged label table there (the
+    silent-under-merge bug this test caught), and the consumers get the
+    two-star answer instead of that error."""
     from flink_helloworld_spark.operators import dedup as D
 
     # chain within min-label's default budget + a triangle
@@ -470,19 +470,16 @@ def test_cluster_consumers_label_identical_under_twostar(spark):
     docs = spark.createDataFrame(
         [(i, f"text {i}") for i in node_ids], "doc_id long, text string"
     )
-    consumers = (
-        lambda ps, ds, cc: D.soft_dedup_weights(ds, ps, cc=cc),
-        lambda ps, ds, cc: D.leakage_safe_split(ds, ps, cc=cc),
-        lambda ps, ds, cc: D.cluster_prune(ds, ps, cc=cc),
-    )
-    for op in consumers:
-        a = sorted(map(tuple, op(pairs, docs, "minlabel").collect()))
-        b = sorted(map(tuple, op(pairs, docs, "twostar").collect()))
-        assert a == b
+    consumers = (D.soft_dedup_weights, D.leakage_safe_split, D.cluster_prune)
+    auto = [sorted(map(tuple, op(docs, pairs).collect())) for op in consumers]
+    monkeypatch.setattr(D, "duplicate_clusters_auto", D.duplicate_clusters_twostar)
+    forced = [sorted(map(tuple, op(docs, pairs).collect())) for op in consumers]
+    monkeypatch.undo()
+    assert auto == forced
 
     # the 41-node adversarial chain: diameter > min-label's default
-    # budget — minlabel raises instead of silently under-merging;
-    # twostar converges in O(log n) rounds through every consumer
+    # budget — min-label raises instead of silently under-merging, and
+    # every consumer converges through the two-star fallback
     long_chain = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 140)], "doc_a long, doc_b long"
     )
@@ -490,24 +487,22 @@ def test_cluster_consumers_label_identical_under_twostar(spark):
         [(i, f"t {i}") for i in range(100, 141)] + [(500, "solo")],
         "doc_id long, text string",
     )
-    for op in consumers:
-        with pytest.raises(RuntimeError, match="did not converge"):
-            op(long_chain, ldocs, "minlabel").collect()
-        rows = op(long_chain, ldocs, "twostar").collect()
-        assert len(rows) > 0
-    surv = {
-        r.doc_id
-        for r in D.cluster_prune(ldocs, long_chain, cc="twostar").collect()
-    }
+    with pytest.raises(RuntimeError, match="did not converge"):
+        D.duplicate_clusters(long_chain)
+    surv = {r.doc_id for r in D.cluster_prune(ldocs, long_chain).collect()}
     assert surv == {100, 500}
     w = {
         r.doc_id: (r.cluster_id, r.cluster_size)
-        for r in D.soft_dedup_weights(ldocs, long_chain, cc="twostar").collect()
+        for r in D.soft_dedup_weights(ldocs, long_chain).collect()
     }
     assert all(w[i] == (100, 41) for i in range(100, 141))
-
-    with pytest.raises(ValueError, match="minlabel"):
-        D.soft_dedup_weights(docs, pairs, cc="bogus")
+    assert w[500] == (500, 1)
+    split = {
+        r.doc_id: (r.cluster_id, r.split)
+        for r in D.leakage_safe_split(ldocs, long_chain).collect()
+    }
+    assert len({split[i] for i in range(100, 141)}) == 1
+    assert split[100][0] == 100 and split[500][0] == 500
 
 
 def test_cluster_balanced_sample_quota_and_determinism(spark):
