@@ -8,7 +8,7 @@ the reference stream-processing repo (NobodyzHome/flink-helloworld, a Flink
   (Catalyst handles optimization; we declare logical plans only).
 - Structured Streaming for the unbounded-stream surface (watermarks,
   event-time windows, keyed-state operators via
-  ``transformWithStateInPandas``).
+  ``transformWithState``).
 - LLM-data-pipeline operators (dedup, similarity search, multimodal
   columns, text analysis) designed for 100 TB scale: keyed state only,
   broadcastable dims, no driver-side collection.

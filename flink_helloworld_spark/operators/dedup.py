@@ -1377,9 +1377,10 @@ def containment_pairs(
         docs, text_col, shingle_n, with_m=True
     )
     buckets = _buckets_from_shingles(
-        reps.select(F.col("rep").alias("doc_id"), "sh"), num_hashes, bands
-    ).join(
-        reps.select(F.col("rep").alias("doc_id"), "_seth", "_m"), "doc_id"
+        reps.select(F.col("rep").alias("doc_id"), "sh", "_seth", "_m"),
+        num_hashes,
+        bands,
+        carry=["_seth", "_m"],
     )
     if max_bucket is not None:
         w_b = Window.partitionBy("band_id", "band_key")

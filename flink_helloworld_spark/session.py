@@ -36,7 +36,7 @@ def build_session(
 ) -> SparkSession:
     """Create (or reuse) a SparkSession with the engine's scale defaults."""
     # must run pre-JVM so $PYTHONPATH reaches the Python workers:
-    # transformWithStateInPandas needs google.protobuf inside the worker,
+    # transformWithState needs google.protobuf inside the worker,
     # and every worker, from any cwd, forks from the engine's
     # _worker_daemon
     from flink_helloworld_spark._vendor import ensure_protobuf, prepend_pythonpath

@@ -1,10 +1,10 @@
 """Custom stateful streaming operators (SURVEY.md §4 "needs custom work").
 
-Keyed state runs on ``transformWithStateInPandas`` (``tws.py``): typed
-Value/List/Map state, processing-time TTL, timers, and operators that
-chain across re-keys in one query — Spark's counterpart of Flink's
-keyed-state and timer API. Arrow-batched, partition-parallel, state in
-the RocksDB store. It is the only keyed-state API: every single-state
+Keyed state runs on ``transformWithState`` (``tws.py``, its Row form):
+typed Value/List/Map state, processing-time TTL, timers, and operators
+that chain across re-keys in one query — Spark's counterpart of Flink's
+keyed-state and timer API. Partition-parallel, state in the RocksDB
+store. It is the only keyed-state API: every single-state
 keyed operator — the per-record folds (rolling sum, count windows,
 late-row side output, CEP, domain cap), the joins, gates, sketches and
 manifests — is a step function on the one kernel,

@@ -1,10 +1,6 @@
-"""Shared helpers for Arrow-batched stateful operators."""
+"""Partition sizing for the keyed stateful streaming operators."""
 
 from __future__ import annotations
-
-from collections.abc import Iterator
-
-import pandas as pd
 
 # measured c_row/c_fixed for the TWS gates on the 32-thread reference
 # node (SCALE_NOTES r6/r7): the hand-found optima — 8 partitions at
@@ -68,16 +64,3 @@ def apply_stateful_partitions(
     spark.conf.set("spark.sql.shuffle.partitions", str(n))
     return n
 
-
-def concat_chunks(batches: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
-    """Merge a per-key Arrow chunk iterator into ONE frame so callers
-    sort the whole micro-batch once. transformWithState hands a key's
-    rows as multiple pdfs whenever they exceed
-    ``spark.sql.execution.arrow.maxRecordsPerBatch`` (default 10k);
-    sorting each chunk independently would leave cross-chunk order
-    partitioning-dependent — exactly what the seq/ts columns exist to
-    prevent. Returns None for an empty iterator."""
-    chunks = [pdf for pdf in batches if len(pdf)]
-    if not chunks:
-        return None
-    return chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)

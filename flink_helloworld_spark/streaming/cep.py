@@ -85,7 +85,7 @@ def followed_by_within_stream(
             pending.append((eid, tsm, None, None))
         return (pending,), out
 
-    # fixed internal names: the processor never sees a caller's "_"-led name
+    # fixed internal names for the step, whatever the caller's columns are
     src = df.select(
         F.col(key).alias("key"),
         F.col(id_col).cast("long").alias("id"),

@@ -1,16 +1,18 @@
-"""Keyed stateful streaming operators on ``transformWithStateInPandas``.
+"""Keyed stateful streaming operators on ``transformWithState``.
 
-Spark 4's ``transformWithStateInPandas`` gives typed state handles
+Spark 4's ``transformWithState`` gives typed state handles
 (ValueState / ListState / MapState — the vocabulary of the reference's
 Flink keyed state, StateTest.java), per-state TTL and timers, and its
 operators chain: stateful operators with different grouping keys run in
 ONE streaming query, with a plain shuffle at each re-key seam, like
 Flink's keyBy between operators. It is the engine's one keyed-state
-API, and every single-state keyed operator — here and in ``stateful``,
+API, used in its Row form (Spark 4.1): a key's rows arrive as ``Row``
+objects and leave as ``Row`` objects, with no pandas frame per key.
+Every single-state keyed operator — here and in ``stateful``,
 ``event_windows`` and ``cep`` — is a step function on one kernel,
 ``FoldProcessor`` (``fold_by_key``): one typed ValueState tuple per key
 (list-shaped state is an array field of it), read once per key and
-micro-batch, folded by ``step(state, key, batch)`` and written back
+micro-batch, folded by ``step(state, key, rows)`` and written back
 under one rule. Per-record folds go through the ``each_record``
 adapter. Two processors stay hand-written because they need a state
 primitive the kernel does not have: ``SessionFlushProcessor`` arms
@@ -27,11 +29,11 @@ from __future__ import annotations
 
 import functools
 import json
+from collections import Counter
 from collections.abc import Callable, Iterator
 from typing import Any
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessor,
@@ -50,7 +52,6 @@ from pyspark.sql.types import (
 )
 
 from flink_helloworld_spark.functions import md5_prefix_long
-from flink_helloworld_spark.streaming._util import concat_chunks as _concat_chunks
 from flink_helloworld_spark.streaming.coflatmap import _dec, _enc
 
 
@@ -63,23 +64,23 @@ def _time_mode(ttl_ms: int | None) -> str:
     return "none" if ttl_ms is None else "processingTime"
 
 
-Step = Callable[[tuple, Any, pd.DataFrame], tuple[tuple, Any]]
-RecordStep = Callable[[tuple, Any, dict], tuple[tuple, list[tuple]]]
+Step = Callable[[tuple, Any, list[Row]], tuple[tuple, list]]
+RecordStep = Callable[[tuple, Any, Row], tuple[tuple, list[tuple]]]
 
 
 class FoldProcessor(StatefulProcessor):
-    """The one keyed-state kernel. Each key's micro-batch rows, merged
-    across Arrow chunks into one frame, pass through
-    ``step(state, key, batch) -> (state, out)`` once; ``key`` is the
-    first grouping value and ``out`` is a row list (tuples or dicts) or
-    a frame, emitted in ``columns`` order. The state tuple (typed by
-    ``state_schema``, with arrays for list-shaped state) lives in one
-    ValueState between batches, read once per key and batch. An absent
-    (or TTL-expired) state reads as ``initial``; a state away from
-    ``initial`` is written back on every touch, which refreshes its
-    ``ttl_ms``, and a key that folds back to ``initial`` has its stored
-    slot cleared rather than rewritten: state is O(keys away from the
-    start), e.g. CEP keys with open patterns."""
+    """The one keyed-state kernel. All of a key's micro-batch rows pass
+    through ``step(state, key, rows) -> (state, out)`` once, as one list
+    of ``Row``; ``key`` is the first grouping value and ``out`` is a
+    list of tuples in ``columns`` order, emitted as ``Row``. The state
+    tuple (typed by ``state_schema``, with arrays for list-shaped state)
+    lives in one ValueState between batches, read once per key and
+    batch. An absent (or TTL-expired)
+    state reads as ``initial``. A key that folds back to ``initial`` has
+    its stored slot cleared rather than rewritten: state is O(keys away
+    from the start), e.g. CEP keys with open patterns. Any other state
+    is written back when it changed; with ``ttl_ms`` set it is written
+    on every touch, since the write is what refreshes the TTL."""
 
     def __init__(
         self,
@@ -97,35 +98,42 @@ class FoldProcessor(StatefulProcessor):
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self._state = handle.getValueState("state", self._schema, self._ttl_ms)
+        self._row = Row(*self._columns)
 
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
+    def handleInputRows(self, key, rows: Iterator[Row], timerValues) -> Iterator[Row]:
         stored = self._state.get()
         state = self._initial if stored is None else stored
-        out: Any = []
-        batch = _concat_chunks(rows)
-        if batch is not None:
+        out: list = []
+        batch = list(rows)
+        if batch:
             state, out = self._step(state, key[0], batch)
-        if state != self._initial:
+        if state == self._initial:
+            if stored is not None:
+                self._state.clear()
+        elif self._ttl_ms is not None or state != stored:
             self._state.update(state)
-        elif stored is not None:
-            self._state.clear()
-        yield pd.DataFrame(out, columns=self._columns)
+        for r in out:
+            yield self._row(*r)
 
     def close(self) -> None:
         pass
 
 
+def nulls_last(*cols: str) -> Callable[[Row], tuple]:
+    """Sort key over ``cols`` that puts a null after every value, as a
+    pandas ``sort_values`` did, instead of failing the comparison."""
+    return lambda r: tuple((r[c] is None, r[c]) for c in cols)
+
+
 def each_record(order: str | list[str], step: RecordStep) -> Step:
-    """Adapt a per-record fold to the kernel: one sort of the key's whole
-    batch by ``order`` (per-chunk sorts would make the fold order
-    partitioning-dependent), then ``step(state, key, rec) -> (state,
-    rows)`` one record at a time."""
+    """Adapt a per-record fold to the kernel: one stable sort of the
+    key's whole batch by ``order`` (nulls last), then
+    ``step(state, key, rec) -> (state, rows)`` one record at a time."""
+    by = nulls_last(*([order] if isinstance(order, str) else order))
 
     def batch_step(state, key, batch):
         out: list[tuple] = []
-        for rec in batch.sort_values(order).to_dict("records"):
+        for rec in sorted(batch, key=by):
             state, emitted = step(state, key, rec)
             out.extend(emitted)
         return state, out
@@ -144,11 +152,9 @@ def fold_by_key(
     output_mode: str = "append",
 ) -> DataFrame:
     """Group ``src`` by ``key`` and run ``step`` over each key's batch on
-    ``FoldProcessor``; ``ttl_ms`` expires idle keys in processing time.
-    No column reaching the processor may start with "_": the
-    worker-side serializer renames such columns positionally."""
+    ``FoldProcessor``; ``ttl_ms`` expires idle keys in processing time."""
     keys = [key] if isinstance(key, str) else key
-    return src.groupBy(*keys).transformWithStateInPandas(
+    return src.groupBy(*keys).transformWithState(
         FoldProcessor(state_schema, initial, step, out_schema.fieldNames(), ttl_ms),
         outputStructType=out_schema,
         outputMode=output_mode,
@@ -229,10 +235,11 @@ def _chain_step(
     through the typed ``coflatmap`` codec (timestamps/decimals
     round-trip across micro-batches)."""
     n = len(dim_cols)
+    out_cols = [key, *fact_cols, *(c for cols in dim_cols for c in cols)]
 
     def step(state, _k, batch):
         stages = _dec(json.loads(state[0]))
-        out_rows: list[dict] = []
+        out_rows: list[tuple] = []
 
         def cascade(rec: dict, i: int) -> None:
             while i < n:
@@ -245,13 +252,11 @@ def _chain_step(
                     return
                 rec = {**rec, **dim}
                 i += 1
-            out_rows.append(rec)
+            out_rows.append(tuple(rec[c] for c in out_cols))
 
-        # NB: the TWS serializer materializes rows via itertuples, which
-        # renames columns that start with "_" to positional names — so the
-        # plumbing columns travel as chain_seq/chain_side, and a seq_col
-        # carried through as a fact column is read back from chain_seq
-        for rec in batch.sort_values("chain_seq").to_dict("records"):
+        # a seq_col carried through as a fact column is read back from
+        # the chain_seq plumbing column
+        for rec in sorted(batch, key=nulls_last("chain_seq")):
             side = rec["chain_side"]
             if side == "F":
                 cascade(
@@ -304,9 +309,7 @@ def chain_stateful_join(
         ]
     )
     # seq_col may double as a carried fact column (stage outputs feeding a
-    # later re-keyed stage keep their seq) — don't select it twice. The
-    # plumbing columns avoid leading underscores: the worker-side
-    # serializer (itertuples) renames such columns positionally.
+    # later re-keyed stage keep their seq) — don't select it twice.
     fact_sel = [c for c in fact_cols if c != seq_col]
     tagged = facts.select(
         key,
@@ -395,6 +398,8 @@ SESSION_FLUSH_OUTPUT = StructType(
     ]
 )
 
+_SESSION_ROW = Row(*SESSION_FLUSH_OUTPUT.fieldNames())
+
 _SESSION_STATE = StructType(
     [
         StructField("start_ms", LongType()),
@@ -424,69 +429,41 @@ class SessionFlushProcessor(StatefulProcessor):
         self._handle = handle
         self._sess = handle.getValueState("sess", _SESSION_STATE)
 
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        if self._sess.exists():
-            start, end, total, cnt, timer_ms = self._sess.get()
-        else:
-            start, end, total, cnt, timer_ms = None, None, 0.0, 0, None
-        out: list[dict] = []
-        batch = _concat_chunks(rows)
-        if batch is not None:
-            for rec in batch.sort_values("ts_ms").to_dict("records"):
-                t = int(rec["ts_ms"])
-                if end is not None and t - end >= self._gap_ms:
-                    # gap reached by a LATER event arriving before the
-                    # watermark hit old_end+gap: close the old session
-                    # inline — the timer path only covers keys that go
-                    # silent. ">=" matches BOTH the timer boundary (the
-                    # timer at end+gap fires once the watermark reaches
-                    # it) and Spark's batch session windows (an event at
-                    # exactly prev+gap is adjacent, not overlapping), so
-                    # the session-split rule is identical whichever path
-                    # closes it — micro-batch packing can only affect
-                    # late-classification, never session boundaries
-                    out.append(
-                        {
-                            "k": key[0],
-                            "session_start_ms": start,
-                            "session_end_ms": end,
-                            "total": total,
-                            "cnt": cnt,
-                        }
-                    )
-                    start, end, total, cnt = None, None, 0.0, 0
-                start = t if start is None else min(start, t)
-                end = t if end is None else max(end, t)
-                total = round(total + float(rec["v"]), 9)
-                cnt += 1
+    def handleInputRows(self, key, rows: Iterator[Row], timerValues) -> Iterator[Row]:
+        stored = self._sess.get()
+        start, end, total, cnt, timer_ms = stored or (None, None, 0.0, 0, None)
+        for rec in sorted(rows, key=nulls_last("ts_ms")):
+            t = rec["ts_ms"]
+            if end is not None and t - end >= self._gap_ms:
+                # gap reached by a LATER event arriving before the
+                # watermark hit old_end+gap: close the old session
+                # inline — the timer path only covers keys that go
+                # silent. ">=" matches BOTH the timer boundary (the
+                # timer at end+gap fires once the watermark reaches
+                # it) and Spark's batch session windows (an event at
+                # exactly prev+gap is adjacent, not overlapping), so
+                # the session-split rule is identical whichever path
+                # closes it — micro-batch packing can only affect
+                # late-classification, never session boundaries
+                yield _SESSION_ROW(key[0], start, end, total, cnt)
+                start, end, total, cnt = None, None, 0.0, 0
+            start = t if start is None else min(start, t)
+            end = t if end is None else max(end, t)
+            total = round(total + rec["v"], 9)
+            cnt += 1
         if timer_ms is not None:
             self._handle.deleteTimer(timer_ms)  # re-arm: one timer per key
         timer_ms = end + self._gap_ms
         self._handle.registerTimer(timer_ms)
         self._sess.update((start, end, total, cnt, timer_ms))
-        if out:
-            yield pd.DataFrame(
-                out, columns=[f.name for f in SESSION_FLUSH_OUTPUT.fields]
-            )
 
-    def handleExpiredTimer(
-        self, key, timerValues, expiredTimerInfo
-    ) -> Iterator[pd.DataFrame]:
-        if not self._sess.exists():
+    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo) -> Iterator[Row]:
+        stored = self._sess.get()
+        if stored is None:
             return
-        start, end, total, cnt, _timer = self._sess.get()
+        start, end, total, cnt, _timer = stored
         self._sess.clear()
-        yield pd.DataFrame(
-            {
-                "k": [key[0]],
-                "session_start_ms": [start],
-                "session_end_ms": [end],
-                "total": [total],
-                "cnt": [cnt],
-            }
-        )
+        yield _SESSION_ROW(key[0], start, end, total, cnt)
 
     def close(self) -> None:
         pass
@@ -510,7 +487,7 @@ def session_flush_tws(
         F.col(val_col).cast("double").alias("v"),
         F.col(ts_col).alias("ts"),
     )
-    return src.groupBy("k").transformWithStateInPandas(
+    return src.groupBy("k").transformWithState(
         SessionFlushProcessor(gap_ms),
         outputStructType=SESSION_FLUSH_OUTPUT,
         outputMode="append",
@@ -614,13 +591,9 @@ def _reservoir_step(k: int) -> Step:
 
     def step(state, source, batch):
         n = state[0] + len(batch)
-        cur = [tuple(r) for r in state[1]] + list(
-            zip(
-                map(float, batch["res_key"]),
-                map(int, batch["doc_id"]),
-                map(int, batch["weight"]),
-            )
-        )
+        cur = [tuple(r) for r in state[1]] + [
+            (r["res_key"], r["doc_id"], r["weight"]) for r in batch
+        ]
         # k smallest (key, doc_id) survive — same total order as the
         # batch rank window
         cur = sorted(cur, key=lambda t: (t[0], t[1]))[:k]
@@ -699,8 +672,8 @@ def _first_content(state, _h, batch):
     on doc_id, so replay is deterministic."""
     if state[0]:
         return state, []
-    rec = batch.sort_values("doc_id").iloc[0]
-    return (1,), [tuple(int(rec[c]) for c in _DEDUP_PASS.fieldNames())]
+    rec = min(batch, key=nulls_last("doc_id"))
+    return (1,), [tuple(rec[c] for c in _DEDUP_PASS.fieldNames())]
 
 
 def _manifest_step(state, shard_id, batch):
@@ -711,17 +684,17 @@ def _manifest_step(state, shard_id, batch):
     (shard_id, doc_id, tok, fp)."""
     n, tok, lo, hi, fp = state
     # the batch aggregate's null rules: count(*) counts every row,
-    # sum/min/max/bit_xor skip nulls (pandas renders a null in these
-    # long columns as NaN)
+    # sum/min/max/bit_xor skip nulls
     n += len(batch)
-    tok += int(batch["tok"].dropna().sum())
-    ids = batch["doc_id"].dropna()
-    if len(ids):
-        bmin, bmax = int(ids.min()), int(ids.max())
-        lo = bmin if lo is None else min(lo, bmin)
-        hi = bmax if hi is None else max(hi, bmax)
-    for h in batch["fp"].dropna():
-        fp ^= int(h)
+    for r in batch:
+        t, d, h = r["tok"], r["doc_id"], r["fp"]
+        if t is not None:
+            tok += t
+        if d is not None:
+            lo = d if lo is None else min(lo, d)
+            hi = d if hi is None else max(hi, d)
+        if h is not None:
+            fp ^= h
     return (n, tok, lo, hi, fp), [(shard_id, n, tok, lo, hi, fp)]
 
 
@@ -788,26 +761,35 @@ LSH_VERDICT_OUTPUT = StructType(
 )
 
 
-def _claim_step(state, _bucket, batch):
+def _claim_step(carry: list[str]) -> Step:
     """Per-LSH-bucket first-claim state: ONE long per bucket ever touched
     (the earliest claimant), independent of how many docs hash there.
-    Emits (doc_id, is_first[, carry...]) per arrival. In-order contract:
+    Emits (doc_id, is_first, *carry) per arrival. In-order contract:
     with doc_id monotone in arrival order (the batch twin's rule), the
     running min equals the true first arrival; the min() form also keeps
     replayed / reordered batches convergent to the batch
     `dedup.lsh_first_arrival` verdict. Under a TTL an expired claim
     forgets its first arrival, so a later near-dup is admitted again —
     the state-size/recall dial an unbounded 100 TB ingest turns."""
-    ids = batch["doc_id"].astype("int64")
-    m = int(ids.min())
-    first = m if state[0] is None else min(state[0], m)
-    return (first,), batch.assign(doc_id=ids, is_first=ids == first)
+
+    def step(state, _bucket, batch):
+        m = min(r["doc_id"] for r in batch)
+        first = m if state[0] is None else min(state[0], m)
+        return (first,), [
+            (r["doc_id"], r["doc_id"] == first, *(r[c] for c in carry))
+            for r in batch
+        ]
+
+    return step
 
 
 def _claim(
     src: DataFrame, keys: list[str], out: StructType, ttl_ms: int | None
 ) -> DataFrame:
-    return fold_by_key(src, keys, _LSH_CLAIM_STATE, (None,), _claim_step, out, ttl_ms)
+    carry = out.fieldNames()[len(_LSH_CLAIM_OUT.fields):]
+    return fold_by_key(
+        src, keys, _LSH_CLAIM_STATE, (None,), _claim_step(carry), out, ttl_ms
+    )
 
 
 def _verdict_step(bands: int, carry: list[str]) -> Step:
@@ -820,11 +802,11 @@ def _verdict_step(bands: int, carry: list[str]) -> Step:
 
     def step(state, doc_id, batch):
         n_seen = state[0] + len(batch)
-        n_first = state[1] + int(batch["is_first"].sum())
+        n_first = state[1] + sum(r["is_first"] for r in batch)
         if n_seen < bands:
             return (n_seen, n_first), []
-        row = (int(doc_id), n_seen, n_first, n_seen == n_first)
-        return (0, 0), [row + tuple(batch[c].iloc[0] for c in carry)]
+        row = (doc_id, n_seen, n_first, n_seen == n_first)
+        return (0, 0), [row + tuple(batch[0][c] for c in carry)]
 
     return step
 
@@ -1074,11 +1056,11 @@ def _verified_claim_step(
         return bytes(codes.astype(np.uint8))
 
     def step(state, _bucket, batch):
-        batch = batch.sort_values("doc_id", kind="mergesort")
-        ids = batch["doc_id"].to_numpy(dtype="int64")
+        batch = sorted(batch, key=nulls_last("doc_id"))
+        ids = np.array([r["doc_id"] for r in batch], dtype=np.int64)
         # tolerate null / ragged embeddings instead of crashing the
         # whole streaming query: invalid rows are unverifiable
-        vecs = list(batch["vec"])
+        vecs = [r["vec"] for r in batch]
         valid = np.array([v is not None and len(v) == dims for v in vecs])
         mat = np.zeros((len(vecs), dims), dtype=np.float64)
         for i, v in enumerate(vecs):
@@ -1110,7 +1092,7 @@ def _verified_claim_step(
                 cos = mat @ owner_vec / denom
             cos = np.floor(np.abs(cos) * 10**6 + 0.5) / 10**6 * np.sign(cos)
             verified = (ids != owner_id) & valid & (denom > 0) & (cos >= threshold)
-        return (owner_id, stored), pd.DataFrame({"doc_id": ids, "is_first": ~verified})
+        return (owner_id, stored), list(zip(ids.tolist(), (~verified).tolist()))
 
     return step
 
@@ -1311,8 +1293,8 @@ def misra_gries_step(state, bucket, batch, capacity: int):
     volume."""
     n_seen, err_total, items = state
     weights = dict(items)
-    for item, cnt in batch["item"].value_counts().items():
-        weights[item] = weights.get(item, 0) + int(cnt)
+    for item, cnt in Counter(r["item"] for r in batch).items():
+        weights[item] = weights.get(item, 0) + cnt
     if len(weights) > capacity:
         # (cap+1)-th largest weight is the decrement (ties on weight
         # broken by item so the step is deterministic)
@@ -1322,7 +1304,7 @@ def misra_gries_step(state, bucket, batch, capacity: int):
         err_total += d
     items = sorted(weights.items())
     n_seen += len(batch)
-    out = [(int(bucket), item, w, err_total, n_seen) for item, w in items]
+    out = [(bucket, item, w, err_total, n_seen) for item, w in items]
     return (n_seen, err_total, items), out
 
 
@@ -1341,8 +1323,8 @@ def streaming_heavy_hitters(
     instead of a second pass.
     """
     # null items carry no count (COUNT semantics, same as the KMV twin's
-    # isNotNull gate) — letting them through would inflate n_seen while
-    # value_counts() drops NaN, breaking the exact-under-capacity contract
+    # isNotNull gate) — letting them through would count a null item,
+    # which the batch estimate never does
     src = stream.where(F.col(item_col).isNotNull()).select(
         F.pmod(F.xxhash64(F.col(item_col)), F.lit(int(n_buckets)))
         .cast("int")
@@ -1391,7 +1373,7 @@ def _kmv_step(k: int) -> Step:
 
     def step(state, key, batch):
         n_seen = state[0] + len(batch)
-        cur = sorted(set(state[1]) | set(map(int, batch["h"])))[:k]
+        cur = sorted(set(state[1]).union(r["h"] for r in batch))[:k]
         kth, n_kept = cur[-1], len(cur)
         if n_kept < k:
             est = float(n_kept)
@@ -1462,21 +1444,13 @@ class PostingAppendProcessor(StatefulProcessor):
             "members", _IVF_MEMBER_KEY, _IVF_MEMBER_VAL, self._ttl_ms
         )
 
-    def handleInputRows(
-        self, key, rows: Iterator[pd.DataFrame], timerValues
-    ) -> Iterator[pd.DataFrame]:
-        cols = [f.name for f in IVF_POSTING_OUTPUT.fields]
-        for pdf in rows:
-            if pdf is None or not len(pdf):
-                continue
-            keep = []
-            for i, mid in enumerate(pdf["member_id"]):
-                mk = (int(mid),)
-                if not self._seen.containsKey(mk):
-                    self._seen.updateValue(mk, (1,))
-                    keep.append(i)
-            if keep:
-                yield pdf.iloc[keep][cols]
+    def handleInputRows(self, key, rows: Iterator[Row], timerValues) -> Iterator[Row]:
+        # the input rows are posting rows already: emit them as they came
+        for r in rows:
+            mk = (r["member_id"],)
+            if not self._seen.containsKey(mk):
+                self._seen.updateValue(mk, (1,))
+                yield r
 
     def close(self) -> None:
         pass
@@ -1550,7 +1524,7 @@ def streaming_ivf_ingest(
     routed = src.mapInPandas(
         route, "centroid_id long, member_id long, mvec array<double>"
     )
-    return routed.groupBy("centroid_id").transformWithStateInPandas(
+    return routed.groupBy("centroid_id").transformWithState(
         PostingAppendProcessor(state_ttl_ms),
         outputStructType=IVF_POSTING_OUTPUT,
         outputMode="append",
@@ -1613,7 +1587,7 @@ def streaming_ivf_delete(
         F.col("member_id").cast("long").alias("member_id"),
         F.lit(None).cast(mvec_t).alias("mvec"),
     )
-    return tomb.groupBy("centroid_id").transformWithStateInPandas(
+    return tomb.groupBy("centroid_id").transformWithState(
         PostingAppendProcessor(state_ttl_ms),
         outputStructType=IVF_POSTING_OUTPUT,
         outputMode="append",
@@ -1632,7 +1606,7 @@ TEXT_DELETE_OUTPUT = StructType([StructField("doc_id", LongType())])
 _DOC_SEEN_STATE = StructType([StructField("one", LongType())])
 
 
-def _doc_first_arrival(emit: Callable[[int, pd.Series], list[tuple]]) -> Step:
+def _doc_first_arrival(emit: Callable[[int, Row], list[tuple]]) -> Step:
     """First-arrival commit keyed by ``doc_id`` — the exactly-once seam
     for the TEXT index's streaming maintenance, the
     ``PostingAppendProcessor`` contract applied to documents: the first
@@ -1645,12 +1619,12 @@ def _doc_first_arrival(emit: Callable[[int, pd.Series], list[tuple]]) -> Step:
     def step(state, doc_id, batch):
         if state[0]:
             return state, []
-        return (1,), emit(int(doc_id), batch.iloc[0])
+        return (1,), emit(doc_id, batch[0])
 
     return step
 
 
-def _positional_postings(doc_id: int, rec: pd.Series) -> list[tuple]:
+def _positional_postings(doc_id: int, rec: Row) -> list[tuple]:
     """Tokenize EXACTLY like the engine-wide ``_words`` split
     (``split(' ')``, empty tokens dropped — the BM25/term_postings
     contract) into ``positional_postings`` rows ``(term, doc_id, pos)``."""
@@ -1806,8 +1780,9 @@ def _rate_anomaly_step(
     def step(state, key, batch):
         cur_b, cur_c, rn, ring = state
         out = []
-        for bucket, n in batch.groupby("bucket").size().sort_index().items():
-            bucket, n = int(bucket), int(n)
+        counts = Counter(r["bucket"] for r in batch)
+        counts.pop(None, None)  # a null event time has no bucket
+        for bucket, n in sorted(counts.items()):
             if cur_b is None:
                 cur_b, cur_c = bucket, n
                 continue

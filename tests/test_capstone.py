@@ -475,7 +475,7 @@ def test_streaming_capstone_single_query_across_rekey(spark):
     """The COMPLETE 4-stage reference capstone (StateTest.java:639-872)
     as literally ONE streaming query: the order-id keyed stateful join
     chains into the waybill-code keyed stateful chain via
-    transformWithStateInPandas (streaming/tws.py) — two different-key
+    transformWithState (streaming/tws.py) — two different-key
     stateful operators, one query, no durable hop at the re-key seam."""
     import shutil
 

@@ -293,14 +293,21 @@ def test_training_order_is_deterministic_permutation_any_corpus(spark, docs):
     ),
     q=st.sampled_from([1.0 / 3.0, 0.5, 2.0 / 3.0, 0.9]),
 )
+@example(vals=[0.000244, 0.000244], q=2.0 / 3.0)
 @_settings
 def test_exact_percentile_matches_duckdb_quantile_cont(spark, vals, q):
-    """The ppl_buckets / selection_prep oracles assume Spark's exact
-    `percentile` and DuckDB's `quantile_cont` interpolate IDENTICALLY
-    (both: lower + (higher-lower)·frac at position (n-1)·q over the
-    sorted values). Pin that for arbitrary doubles and the quantiles the
-    engine actually uses — if either engine changed its rule, every
-    bucket-cut oracle would silently start hash-drifting."""
+    """The ppl_buckets / selection_prep oracles compare Spark's exact
+    `percentile` with DuckDB's `quantile_cont`. Both take the low and
+    high sorted values around position (n-1)·q, with d its fraction,
+    but their rules differ: Spark returns the low value when the two
+    are equal and lo·(1-d) + hi·d otherwise; DuckDB always computes
+    lo·(1-d) + hi·d, which can land one ulp off a tied value. Each
+    engine is pinned to an exact model of its own rule, and the two must
+    agree exactly wherever the low and high values differ or q = 0.5 —
+    if either engine changed its rule, every bucket-cut oracle would
+    silently start hash-drifting."""
+    import math
+
     import duckdb
 
     # 6dp-rounded inputs, as the engine feeds percentile 6dp scores
@@ -311,7 +318,15 @@ def test_exact_percentile_matches_duckdb_quantile_cont(spark, vals, q):
         "SELECT quantile_cont(x, ?) FROM (SELECT unnest(?::DOUBLE[]) AS x)",
         params=[q, vals],
     ).fetchone()[0]
-    assert got == want or abs(got - want) == 0.0
+    s = sorted(vals)
+    pos = (len(s) - 1) * q
+    lo, hi = s[math.floor(pos)], s[math.ceil(pos)]
+    d = pos - math.floor(pos)
+    interpolated = lo * (1 - d) + hi * d
+    assert got == (lo if lo == hi else interpolated)
+    assert want == interpolated
+    if lo != hi or q == 0.5:
+        assert got == want
 
 
 @st.composite
@@ -774,8 +789,6 @@ def test_mg_merge_step_bounds_hold_for_any_stream(items, cap, split):
     anything with true count > n/(cap+1) stays tracked. (No Spark job:
     the step is a pure function, so hypothesis can afford real
     coverage.)"""
-    import pandas as pd
-
     from flink_helloworld_spark.streaming.tws import misra_gries_step
 
     true: dict[str, int] = {}
@@ -788,7 +801,8 @@ def test_mg_merge_step_bounds_hold_for_any_stream(items, cap, split):
         batch = items[b * sz : (b + 1) * sz]
         if not batch:
             continue
-        state, _ = misra_gries_step(state, 0, pd.DataFrame({"item": batch}), cap)
+        rows = [{"item": it} for it in batch]
+        state, _ = misra_gries_step(state, 0, rows, cap)
     n_seen, err_total, tracked = state
     weights = dict(tracked)
 

@@ -1,5 +1,5 @@
 """Scale-path operators: salting, bucketed co-located joins, and the
-transformWithStateInPandas upgrade path."""
+transformWithState upgrade path."""
 
 from __future__ import annotations
 
@@ -142,7 +142,7 @@ def test_as_of_join_inner_drops_unmatched(spark):
 
 
 def test_transform_with_state_rolling_sum(spark):
-    """The transformWithStateInPandas rolling sum emits one running total
+    """The transformWithState rolling sum emits one running total
     per input row, in seq order, across one-row micro-batches."""
     # the transformWithState worker needs protobuf at runtime
     pytest.importorskip("google.protobuf")

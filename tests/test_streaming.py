@@ -456,10 +456,13 @@ class _DictHandle:
 
 def test_fold_kernel_state_rule_without_jvm():
     """The keyed-state kernel's write rule, driven through a dict-backed
-    handle: an absent state reads as ``initial``; a state away from
-    ``initial`` is rewritten on every touch, also when unchanged (the
-    TTL refresh); a fold back to ``initial`` clears a stored slot and
-    writes nothing for an unstored one; ``ttl_ms`` reaches the state."""
+    handle with rows in and rows out: an absent state reads as
+    ``initial``; a state away from ``initial`` is written when it
+    changes, and with a TTL also on every unchanged touch (the TTL
+    refresh), without one not; a fold back to ``initial`` clears a
+    stored slot and writes nothing for an unstored one; ``ttl_ms``
+    reaches the state."""
+    from pyspark.sql import Row
     from pyspark.sql.types import LongType, StructField, StructType
 
     from flink_helloworld_spark.streaming.tws import FoldProcessor
@@ -468,29 +471,33 @@ def test_fold_kernel_state_rule_without_jvm():
 
     def step(state, key, batch):
         seen.append(state)
-        return (state[0] + int(batch["v"].sum()),), [(key, state[0])]
+        return (state[0] + sum(r["v"] for r in batch),), [(key, state[0])]
 
-    proc = FoldProcessor(
-        StructType([StructField("n", LongType())]), (0,), step, ["k", "before"], 5_000
-    )
-    handle = _DictHandle()
-    proc.init(handle)
-    assert handle.ttls == {"state": 5_000}
-    slot = handle.states["state"]
+    for ttl_ms, refresh in ((5_000, 1), (None, 0)):
+        proc = FoldProcessor(
+            StructType([StructField("n", LongType())]), (0,), step, ["k", "before"], ttl_ms
+        )
+        handle = _DictHandle()
+        proc.init(handle)
+        assert handle.ttls == {"state": ttl_ms}
+        slot = handle.states["state"]
 
-    def run(*vs):
-        (out,) = proc.handleInputRows(("a",), iter([pd.DataFrame({"v": vs})]), None)
-        return list(out.itertuples(index=False, name=None))
+        def run(*vs):
+            rows = iter([Row(v=v) for v in vs])
+            # the serializer reads each emitted Row by field name
+            return [r.asDict() for r in proc.handleInputRows(("a",), rows, None)]
 
-    assert run(2) == [("a", 0)] and seen[-1] == (0,)
-    assert (slot.value, slot.writes, slot.clears) == ((2,), 1, 0)
-    assert run(0) == [("a", 2)]
-    assert (slot.value, slot.writes, slot.clears) == ((2,), 2, 0)
-    run(-2)
-    assert (slot.value, slot.writes, slot.clears) == (None, 2, 1)
-    run(0)
-    assert seen[-1] == (0,)
-    assert (slot.value, slot.writes, slot.clears) == (None, 2, 1)
+        assert run(2) == [{"k": "a", "before": 0}] and seen[-1] == (0,)
+        assert (slot.value, slot.writes, slot.clears) == ((2,), 1, 0)
+        assert run(0) == [{"k": "a", "before": 2}]
+        assert (slot.value, slot.writes, slot.clears) == ((2,), 1 + refresh, 0)
+        assert run(3) == [{"k": "a", "before": 2}]
+        assert (slot.value, slot.writes, slot.clears) == ((5,), 2 + refresh, 0)
+        run(-5)
+        assert (slot.value, slot.writes, slot.clears) == (None, 2 + refresh, 1)
+        run(0)
+        assert seen[-1] == (0,)
+        assert (slot.value, slot.writes, slot.clears) == (None, 2 + refresh, 1)
 
 
 # the input of test_followed_by_within_stream_expires_unmatchable_as
@@ -718,6 +725,59 @@ def test_streaming_domain_cap_first_arrived_kept(spark):
     assert [rows[i].kept for i in (1, 2, 4, 6)] == [True, True, False, False]
     assert [rows[i].domain_rank for i in (3, 5)] == [1, 2]
     assert rows[3].kept and rows[5].kept
+
+
+def test_keyed_state_null_ordering_key_sorts_last_and_null_value_fails(spark, tmp_path):
+    """A null ordering key does not fail a per-record fold: the domain
+    cap ranks a null-``seq`` doc after every sequenced doc of its batch.
+    A null in a rolling sum's value column fails the query with a
+    ``TypeError`` in the worker (the running total is a Python float,
+    so there is no NaN to carry on)."""
+    from pyspark.errors import StreamingQueryException
+
+    from flink_helloworld_spark._vendor import ensure_protobuf
+
+    if not ensure_protobuf():
+        pytest.skip("protobuf unavailable")
+    from flink_helloworld_spark.streaming.tws import streaming_domain_cap
+
+    cap_dir, sum_dir = str(tmp_path / "cap"), str(tmp_path / "sum")
+    write_batch_files(
+        [[{"doc_id": 1, "source": "a", "seq": None},
+          {"doc_id": 2, "source": "a", "seq": 5},
+          {"doc_id": 3, "source": "a", "seq": 1}]],
+        cap_dir,
+        dtypes={"seq": "Int64"},
+    )
+    stream = spark.readStream.schema("doc_id long, source string, seq long").parquet(cap_dir)
+    rows = run_available_now(streaming_domain_cap(stream, cap=2), "null_seq_cap")
+    assert sorted((r.doc_id, r.domain_rank, r.kept) for r in rows) == [
+        (1, 3, False), (2, 2, True), (3, 1, True)
+    ]
+
+    write_batch_files(
+        [[{"k": "a", "seq": 0, "v": 1.0}, {"k": "a", "seq": 1, "v": None}]], sum_dir
+    )
+    stream = spark.readStream.schema("k string, seq long, v double").parquet(sum_dir)
+    with pytest.raises(StreamingQueryException, match="TypeError"):
+        run_available_now(rolling_sum_stream(stream, "k", "v", "seq"), "null_value_sum")
+
+
+def test_lsh_gate_plans_two_row_transform_with_state_operators(spark, tmp_path):
+    """The streaming LSH gate's analyzed plan holds its two chained
+    keyed-state operators, both on the Row form of transformWithState
+    (Spark 4.1 plans both forms as one ``TransformWithStateInPySpark``
+    node and names the form in it: ``python_row`` or ``pandas``), and no
+    pandas one. The query is built, never started."""
+    from flink_helloworld_spark.streaming.tws import streaming_lsh_dedup
+
+    raw = spark.readStream.schema("doc_id long, text string").parquet(str(tmp_path))
+    plan = streaming_lsh_dedup(raw)._jdf.queryExecution().analyzed().toString()
+    nodes = [ln for ln in plan.splitlines() if "TransformWithState" in ln]
+    assert len(nodes) == 2, plan
+    assert all("TransformWithStateInPySpark " in ln for ln in nodes), plan
+    assert all(", python_row," in ln for ln in nodes), plan
+    assert "pandas" not in plan and "TransformWithStateInPandas" not in plan
 
 
 def test_streaming_lsh_dedup_matches_batch(spark):

@@ -8,12 +8,10 @@ TWS operator (streaming_kmv_distinct, single stateful stage) over 8
 tiny triggers under config variants, and a stateless control with the
 identical source/sink but no stateful operator.
 
-Direct evidence for the worker-launch term: the Spark 4 TWS runner
-prints "Starting Streaming TransformWithStateInPandas Python worker"
-once per WORKER LAUNCH — counting those lines against (partitions x
-triggers) shows whether TWS workers are reused across triggers at all
-(plain pandas-UDF workers are reused when spark.python.worker.reuse
-is true, the default).
+Worker launches: Spark 4.1's transformWithState driver worker (the
+pre-init one, the same for the Row and the pandas form) prints
+"Starting Streaming TransformWithStateInPandas Python worker" when it
+starts; the count of those lines is reported per variant.
 
 Each variant runs in its own subprocess (spark.python.worker.reuse and
 the state-store provider are executor-env/static confs). Output: one
@@ -30,7 +28,7 @@ workers from ``flink_helloworld_spark._worker_daemon``, which skips that
 re-read, so re-run this tool before reading its split as state-store
 cost.
 
-Usage: python tools/profile_tws_floor.py [variant ...]
+Usage: [TWSFLOOR_KEYS=n] python tools/profile_tws_floor.py [variant ...]
 """
 
 from __future__ import annotations
@@ -46,12 +44,13 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 N_FILES = 8
-ROWS_PER_FILE = 40
 PARTITIONS = 4
 # TWSFLOOR_KEYS splits the state_update term: if the per-trigger cost
-# scales with distinct keys, the unit is per-key protobuf round-trips;
-# if flat, it is fixed per-partition TWS machinery
+# scales with distinct keys, the unit is per-key work (state round
+# trips, the Python step); if flat, it is fixed per-partition TWS
+# machinery. A trigger holds at least one row per key.
 N_KEYS = int(os.environ.get("TWSFLOOR_KEYS", "4"))
+ROWS_PER_FILE = max(40, N_KEYS)
 
 VARIANTS = {
     # RocksDB + changelog checkpointing = the engine session default
