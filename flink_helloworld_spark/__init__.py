@@ -18,7 +18,7 @@ Package layout:
     schemas     fixed StructType registry (reference domain/*.java POJOs)
     sources     batch table loaders + streaming generators/Kafka wrappers
     operators   batch/relational operator library (SURVEY.md §2 inventory)
-    streaming   custom stateful operators (co_flat_map, count windows, ...)
+    streaming   custom stateful operators (chain join, count windows, ...)
     functions   shared column-expression helpers (hashing, minhash, text)
     plans       explain/inspection helpers
 """

@@ -12,7 +12,8 @@ Batch expression (final-state parity): the same four key boundaries, as
 union + merge + three joins. The merged CEM side is small relative to
 the 5× route-link fan-out, so it broadcasts; the only shuffle of the
 fan-out stream is the final assembly join. Streaming expression: the
-same stages over ``co_flat_map_join`` (tests/test_capstone.py).
+same stages over ``streaming.tws.chain_stateful_join``, one stateful
+operator per key boundary (``tws.capstone_single_query``).
 """
 
 from __future__ import annotations

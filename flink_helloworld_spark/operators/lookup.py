@@ -13,8 +13,9 @@ refreshed dim table).
 
 For dimensions that CHANGE while the job runs (the Redis EXPIRE/refresh
 pattern), the broadcast is the wrong tool — that's the stateful
-co-flat-map join with a state TTL (``lookup_enrich_changing``), where the
-dim stream updates per-key state and TTL expires idle keys exactly like
+buffer-until-dimension join with a state TTL
+(``streaming.tws.chain_stateful_join(state_ttl_ms=…)``), where the dim
+stream updates per-key state and the TTL expires idle keys exactly like
 Redis EXPIRE (StateTest state TTL / T8).
 
 100 TB discipline: the broadcast side must be the SMALL side (dimension
@@ -59,29 +60,3 @@ def lookup_multi_get(dim: DataFrame, key_col: str, keys: list) -> DataFrame:
     pushed down to the dim scan, no join at all."""
     return dim.where(F.col(key_col).isin(keys))
 
-
-def lookup_enrich_changing(
-    fact_stream: DataFrame,
-    dim_stream: DataFrame,
-    key: str,
-    fact_cols: list[str],
-    dim_cols: list[str],
-    seq_col: str = "_seq",
-    ttl_ms: int | None = None,
-) -> DataFrame:
-    """Slowly-changing dimension lookup: dim rows update per-key state,
-    facts probe it, idle keys expire after ``ttl_ms`` (Redis EXPIRE).
-    Delegates to the stateful co-flat-map join — facts arriving before
-    their dim buffer until it shows up, exactly the reference's
-    buffer-until-dim semantics."""
-    from flink_helloworld_spark.streaming.coflatmap import co_flat_map_join
-
-    return co_flat_map_join(
-        fact_stream,
-        dim_stream,
-        key,
-        fact_cols,
-        dim_cols,
-        seq_col,
-        state_ttl_ms=ttl_ms,
-    )

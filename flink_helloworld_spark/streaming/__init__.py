@@ -6,8 +6,9 @@ that chain across re-keys in one query — Spark's counterpart of Flink's
 keyed-state and timer API. Partition-parallel, state in the RocksDB
 store. It is the only keyed-state API: every single-state
 keyed operator — the per-record folds (rolling sum, count windows,
-late-row side output, CEP, domain cap), the joins, gates, sketches and
-manifests — is a step function on the one kernel,
+late-row side output, CEP, domain cap), the buffer-until-dimension
+chain join (the reference's connect + CoFlatMap, ``tws.chain_stateful_join``),
+the gates, sketches and manifests — is a step function on the one kernel,
 ``tws.FoldProcessor``. The session flush (event-time timers) and the
 IVF posting append (MapState membership) stay hand-written processors.
 """

@@ -28,7 +28,6 @@ provider, so every session it builds runs these operators.
 from __future__ import annotations
 
 import functools
-import json
 from collections import Counter
 from collections.abc import Callable, Iterator
 from typing import Any
@@ -52,7 +51,6 @@ from pyspark.sql.types import (
 )
 
 from flink_helloworld_spark.functions import md5_prefix_long
-from flink_helloworld_spark.streaming.coflatmap import _dec, _enc
 
 
 def _time_mode(ttl_ms: int | None) -> str:
@@ -80,7 +78,15 @@ class FoldProcessor(StatefulProcessor):
     its stored slot cleared rather than rewritten: state is O(keys away
     from the start), e.g. CEP keys with open patterns. Any other state
     is written back when it changed; with ``ttl_ms`` set it is written
-    on every touch, since the write is what refreshes the TTL."""
+    on every touch, since the write is what refreshes the TTL.
+
+    State reads back as ``Row``, also inside struct and array fields. A
+    step that stores nested state back must rebuild it as plain tuples
+    (``_chain_step`` does): pyspark 4.1.2's state writer
+    (``_serialize_to_bytes``) rebuilds every nested tuple as
+    ``type(v)(<generator>)``, so a nested ``Row`` becomes a
+    ``Row(<generator>)`` that fails to pickle. The kernel itself does
+    not normalise, so steps with flat state pay no extra pass."""
 
     def __init__(
         self,
@@ -215,11 +221,7 @@ def rolling_sum_stream(
 # --------------------------------------------------------------------------
 
 
-_CHAIN_STATE = StructType([StructField("stages_json", StringType())])
-
-
 def _chain_step(
-    key: str,
     fact_cols: list[str],
     dim_cols: list[list[str]],
     seq_col: str,
@@ -231,28 +233,28 @@ def _chain_step(
     immediately if the dim is known, else buffers (oldest evicted at
     ``max_buffer``). A record emits once it has passed EVERY stage.
 
-    State: one JSON string per key, ``[{dim, buf}, ...]`` per stage,
-    through the typed ``coflatmap`` codec (timestamps/decimals
-    round-trip across micro-batches)."""
+    State: one ``(dim, buf)`` pair per stage. A record is a tuple in
+    output-column order, cut after the dims it has joined so far, so
+    joining stage i appends stage i's dim tuple and a record past the
+    last stage is the output row."""
     n = len(dim_cols)
-    out_cols = [key, *fact_cols, *(c for cols in dim_cols for c in cols)]
 
-    def step(state, _k, batch):
-        stages = _dec(json.loads(state[0]))
+    def step(state, k, batch):
+        # nested state reads back as Row; the state writer needs plain
+        # tuples (FoldProcessor)
+        dims = [None if dim is None else tuple(dim) for dim, _ in state]
+        bufs = [[tuple(r) for r in buf] for _, buf in state]
         out_rows: list[tuple] = []
 
-        def cascade(rec: dict, i: int) -> None:
+        def cascade(rec: tuple, i: int) -> None:
             while i < n:
-                dim = stages[i]["dim"]
-                if dim is None:
-                    # (buf + [rec])[-cap:] holds the cap for every value,
-                    # including max_buffer=1 where buf[-0:] would be the
-                    # whole list
-                    stages[i]["buf"] = (stages[i]["buf"] + [rec])[-max_buffer:]
+                if dims[i] is None:
+                    bufs[i].append(rec)
+                    del bufs[i][:-max_buffer]
                     return
-                rec = {**rec, **dim}
+                rec += dims[i]
                 i += 1
-            out_rows.append(tuple(rec[c] for c in out_cols))
+            out_rows.append(rec)
 
         # a seq_col carried through as a fact column is read back from
         # the chain_seq plumbing column
@@ -260,22 +262,16 @@ def _chain_step(
             side = rec["chain_side"]
             if side == "F":
                 cascade(
-                    {
-                        key: rec[key],
-                        **{
-                            c: (rec["chain_seq"] if c == seq_col else rec[c])
-                            for c in fact_cols
-                        },
-                    },
+                    (k, *(rec["chain_seq" if c == seq_col else c] for c in fact_cols)),
                     0,
                 )
             else:
                 i = int(side[1:])
-                stages[i]["dim"] = {c: rec[c] for c in dim_cols[i]}
-                flushed, stages[i]["buf"] = stages[i]["buf"], []
+                dims[i] = tuple(rec[c] for c in dim_cols[i])
+                flushed, bufs[i] = bufs[i], []
                 for r in flushed:
                     cascade(r, i)
-        return (json.dumps(_enc(stages)),), out_rows
+        return tuple(zip(dims, bufs)), out_rows
 
     return step
 
@@ -290,13 +286,27 @@ def chain_stateful_join(
     state_ttl_ms: int | None = None,
 ) -> DataFrame:
     """N chained buffer-until-dim joins, all keyed by ``key``, in ONE
-    stateful operator (``_chain_step`` on ``fold_by_key``). Output = key + fact_cols
-    + each stage's dim cols, one row per fully-joined fact. ``seq_col``
-    (monotonic per key) restores arrival order inside a micro-batch, so
-    emission is deterministic; ``state_ttl_ms`` clears idle keys after a
-    processing-time TTL (reference state TTL, StateTest.java:904-932).
-    The result is itself a stream, so a stage keyed differently can
-    consume it in the same query (``capstone_single_query``)."""
+    stateful operator (``_chain_step`` on ``fold_by_key``): the
+    reference's connect + two-sided ``keyBy`` + ``RichCoFlatMapFunction``
+    (SURVEY.md §2.5 J3, HelloWorldFlinkTest.java:291-327,
+    StateTest.java:250-303,700-762, func/flat/FlatMapTest.java:22-96).
+    Spark has no two-input stateful operator, so the fact stream and
+    each dimension stream ``(dim_df, dim_cols)`` are tag-unioned and
+    grouped by ``key``. Per key and stage, a dimension row overwrites
+    the stage's dimension; a fact joins at once if it is known, else
+    buffers (oldest dropped past ``max_buffer``) and flushes the moment
+    it arrives. Output = key + fact_cols + each stage's dim cols, one
+    row per fully-joined fact. ``seq_col`` (monotonic per key) restores
+    arrival order inside a micro-batch, so emission is deterministic;
+    ``state_ttl_ms`` clears idle keys after a processing-time TTL
+    (reference state TTL, StateTest.java:904-932) — the Redis EXPIRE of
+    a changing-dimension lookup. The result is itself a stream, so a
+    stage keyed differently can consume it in the same query
+    (``capstone_single_query``).
+
+    State per key: field ``s<i>`` per stage, typed
+    ``struct<dim: struct<stage i dim cols>, buf: array<struct<key,
+    fact cols, dim cols of stages < i>>>``."""
     n = len(dims)
     dim_cols = [cols for _, cols in dims]
     out_fields = (
@@ -308,6 +318,16 @@ def chain_stateful_join(
             for c in dim_cols[i]
         ]
     )
+    stages, w = [], 1 + len(fact_cols)
+    for i, cols in enumerate(dim_cols):
+        stage = StructType(
+            [
+                StructField("dim", StructType(out_fields[w : w + len(cols)])),
+                StructField("buf", ArrayType(StructType(out_fields[:w]))),
+            ]
+        )
+        stages.append(StructField(f"s{i}", stage))
+        w += len(cols)
     # seq_col may double as a carried fact column (stage outputs feeding a
     # later re-keyed stage keep their seq) — don't select it twice.
     fact_sel = [c for c in fact_cols if c != seq_col]
@@ -327,13 +347,12 @@ def chain_stateful_join(
             ),
             allowMissingColumns=True,
         )
-    empty = (json.dumps(_enc([{"dim": None, "buf": []} for _ in range(n)])),)
     return fold_by_key(
         tagged,
         key,
-        _CHAIN_STATE,
-        empty,
-        _chain_step(key, fact_cols, dim_cols, seq_col, max_buffer),
+        StructType(stages),
+        ((None, []),) * n,
+        _chain_step(fact_cols, dim_cols, seq_col, max_buffer),
         StructType(out_fields),
         ttl_ms=state_ttl_ms,
     )

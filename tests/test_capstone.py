@@ -1,4 +1,4 @@
-"""Capstone pipeline: batch parity + streaming co_flat_map staging +
+"""Capstone pipeline: batch parity + streaming chain-join staging +
 idempotent keyed sink."""
 
 from __future__ import annotations
@@ -11,9 +11,9 @@ from pyspark.sql import functions as F
 
 from flink_helloworld_spark.operators import capstone as C
 from flink_helloworld_spark.sources import generators as G
-from flink_helloworld_spark.streaming.coflatmap import co_flat_map_join
 from flink_helloworld_spark.streaming.replay import run_available_now
 from flink_helloworld_spark.streaming.sinks import KeyedUpsertSink
+from flink_helloworld_spark.streaming.tws import chain_stateful_join
 
 
 def test_generators_are_deterministic(spark):
@@ -52,7 +52,7 @@ def test_capstone_plan_broadcasts_dims(spark):
 
 def test_streaming_capstone_stage(spark):
     """Route-link facts joined with merged-CEM dimension through the
-    stateful co_flat_map stage — facts arriving before their dimension
+    stateful chain-join stage — facts arriving before their dimension
     buffer and flush (reference StateTest.java:700-762)."""
     n = 20
     import pandas as pd
@@ -91,8 +91,9 @@ def test_streaming_capstone_stage(spark):
     right = raw.where(F.col("side") == "R").select(
         "waybill_code", "_seq", "site_name", "busi_name"
     )
-    joined = co_flat_map_join(
-        left, right, "waybill_code", ["package_code"], ["site_name", "busi_name"], "_seq"
+    joined = chain_stateful_join(
+        left, [(right, ["site_name", "busi_name"])], "waybill_code", ["package_code"],
+        "_seq",
     )
     rows = run_available_now(joined, "capstone_stream")
     assert len(rows) == n * 5  # every package row enriched exactly once
@@ -308,10 +309,11 @@ def test_streaming_capstone_full_topology_minimum_queries(spark):
             " create_time timestamp"
         ).option("maxFilesPerTrigger", "1").parquet(in1)
     )
-    s1 = co_flat_map_join(
+    s1 = chain_stateful_join(
         raw1.where(F.col("side") == "L").select("order_id", "_seq", "waybill_code"),
-        raw1.where(F.col("side") == "R").select("order_id", "_seq", "create_time"),
-        "order_id", ["waybill_code"], ["create_time"], "_seq",
+        [(raw1.where(F.col("side") == "R").select("order_id", "_seq", "create_time"),
+          ["create_time"])],
+        "order_id", ["waybill_code"], "_seq",
     )
     q1 = (
         s1.writeStream.format("parquet")
@@ -430,10 +432,11 @@ def test_streaming_capstone_two_stages_via_parquet_hop(spark):
             "side string, _seq long, waybill_code string, package_code string, site_name string"
         ).option("maxFilesPerTrigger", "1").parquet(in1)
     )
-    s1 = co_flat_map_join(
+    s1 = chain_stateful_join(
         raw1.where(F.col("side") == "L").select("waybill_code", "_seq", "package_code"),
-        raw1.where(F.col("side") == "R").select("waybill_code", "_seq", "site_name"),
-        "waybill_code", ["package_code"], ["site_name"], "_seq",
+        [(raw1.where(F.col("side") == "R").select("waybill_code", "_seq", "site_name"),
+          ["site_name"])],
+        "waybill_code", ["package_code"], "_seq",
     )
     q1 = (
         s1.writeStream.format("parquet")
@@ -459,12 +462,13 @@ def test_streaming_capstone_two_stages_via_parquet_hop(spark):
             " site_name string, order_code string"
         ).option("maxFilesPerTrigger", "1").parquet(in2)
     )
-    s2 = co_flat_map_join(
+    s2 = chain_stateful_join(
         raw2.where(F.col("side") == "L").select(
             "waybill_code", "_seq", "package_code", "site_name"
         ),
-        raw2.where(F.col("side") == "R").select("waybill_code", "_seq", "order_code"),
-        "waybill_code", ["package_code", "site_name"], ["order_code"], "_seq",
+        [(raw2.where(F.col("side") == "R").select("waybill_code", "_seq", "order_code"),
+          ["order_code"])],
+        "waybill_code", ["package_code", "site_name"], "_seq",
     )
     rows = run_available_now(s2, "cap2_final")
     assert len(rows) == n * 5

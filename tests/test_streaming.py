@@ -18,7 +18,6 @@ from pyspark.sql import functions as F
 
 from flink_helloworld_spark.streaming import event_windows as EW
 from flink_helloworld_spark.streaming import stateful as ST
-from flink_helloworld_spark.streaming.coflatmap import co_flat_map_join
 from flink_helloworld_spark.streaming.replay import (
     Step,
     read_script_stream,
@@ -26,7 +25,7 @@ from flink_helloworld_spark.streaming.replay import (
     write_batch_files,
     write_script,
 )
-from flink_helloworld_spark.streaming.tws import rolling_sum_stream
+from flink_helloworld_spark.streaming.tws import chain_stateful_join, rolling_sum_stream
 
 # EventTimeTest.java:187-210 — tumbling 3 s, no allowed lateness
 LATE_SCRIPT = [
@@ -175,7 +174,7 @@ def test_co_flat_map_join_buffers_until_dim_arrives(spark):
     )
     left = raw.where(F.col("side") == "L").select("key", "_seq", "amount")
     right = raw.where(F.col("side") == "R").select("key", "_seq", "dim_name")
-    joined = co_flat_map_join(left, right, "key", ["amount"], ["dim_name"], "_seq")
+    joined = chain_stateful_join(left, [(right, ["dim_name"])], "key", ["amount"], "_seq")
     rows = run_available_now(joined, "cfm_join")
     got = sorted((r.amount, r.dim_name) for r in rows)
     assert got == [(10, "dim-one"), (20, "dim-one"), (30, "dim-one")]
@@ -217,99 +216,102 @@ def test_lookup_enrich_stream_static(spark, sf_dir):
     assert rows[2] is None  # miss → null, fact retained
 
 
-def test_state_codec_round_trips_types():
-    """ADVICE r1: dim and buffer share one type-aware codec — typed values
-    must come back as their original types, not strings. Round-trips go
-    through JSON text, as the chain-join state does."""
+def test_co_flat_map_join_typed_columns_cross_batches(spark):
+    """Typed fact and dimension columns survive the chain-join state across
+    micro-batch boundaries and still match the output schema: timestamp
+    (the documented WaybillM pickup_date case), decimal(12,2), date and
+    binary, and nulls of each. Batch 0's facts wait in the state buffer;
+    batch 1's dimension is stored in state and flushes them; batch 2's
+    fact joins the dimension read back from state."""
     import datetime
-    import json
+    import os
+    import time as _time
     from decimal import Decimal
 
-    import numpy as np
-    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from flink_helloworld_spark.streaming.coflatmap import _dec, _enc
-
-    def round_trip(v):
-        return _dec(json.loads(json.dumps(_enc(v))))
-
-    rec = {
-        "ts": pd.Timestamp("2024-03-01 12:30:45.123456"),
-        "date": datetime.date(2024, 3, 1),
-        "dec": Decimal("12.34"),
-        "blob": b"\x00\x01\xff",
-        "arr": [1, pd.Timestamp("2024-01-01")],
-        "m": {"fee": Decimal("0.5")},
-        "s": "plain",
-        "i": np.int64(7),
-        "f": 1.5,
-        "none": None,
-        "nat": pd.NaT,
-    }
-    out = round_trip(rec)
-    assert out["ts"] == rec["ts"] and isinstance(out["ts"], pd.Timestamp)
-    assert out["date"] == rec["date"] and isinstance(out["date"], datetime.date)
-    assert out["dec"] == rec["dec"] and isinstance(out["dec"], Decimal)
-    assert out["blob"] == rec["blob"] and isinstance(out["blob"], bytes)
-    assert out["arr"] == [1, pd.Timestamp("2024-01-01")]
-    assert out["m"] == {"fee": Decimal("0.5")}
-    assert out["s"] == "plain" and out["i"] == 7 and out["f"] == 1.5
-    assert out["none"] is None and out["nat"] is None  # NaT → null
-    assert round_trip(None) is None
-    assert round_trip([rec])[0]["dec"] == Decimal("12.34")
-
-
-def test_co_flat_map_join_typed_columns_cross_batches(spark):
-    """ADVICE r1 regression: a timestamp DIMENSION column (the documented
-    WaybillM pickup_date case) and a timestamp FACT column must survive the
-    state round-trip across micro-batch boundaries and still satisfy the
-    Arrow out_schema."""
     workdir = tempfile.mkdtemp(prefix="cfm-typed-")
-    import pandas as pd
-    import os, shutil, time as _time
-
-    shutil.rmtree(workdir, ignore_errors=True)
-    os.makedirs(workdir)
-    ts_fact = pd.Timestamp("2024-05-01 10:00:00")
-    ts_dim = pd.Timestamp("2024-05-02 08:30:00")
+    fact_types = [
+        ("amount", pa.int64()),
+        ("fact_ts", pa.timestamp("us")),
+        ("fee", pa.decimal128(12, 2)),
+        ("fact_day", pa.date32()),
+        ("fact_blob", pa.binary()),
+    ]
+    dim_types = [
+        ("pickup_date", pa.timestamp("us")),
+        ("rate", pa.decimal128(12, 2)),
+        ("dim_day", pa.date32()),
+        ("dim_blob", pa.binary()),
+    ]
+    schema = pa.schema(
+        [("side", pa.string()), ("key", pa.string()), ("_seq", pa.int64())]
+        + fact_types
+        + dim_types
+    )
+    ts_fact = datetime.datetime(2024, 5, 1, 10, 0)
+    fact0 = (
+        10,
+        ts_fact,
+        Decimal("1234567890.12"),
+        datetime.date(2024, 5, 1),
+        b"\x00\x01",
+    )
+    fact2 = (
+        30,
+        ts_fact + datetime.timedelta(hours=1),
+        Decimal("-0.05"),
+        datetime.date(1999, 12, 31),
+        b"\xff",
+    )
+    dim = (
+        datetime.datetime(2024, 5, 2, 8, 30),
+        Decimal("99.99"),
+        datetime.date(2024, 5, 2),
+        b"\x00dim\xff",
+    )
+    fact_nulls = (20, None, None, None, None)
+    no_fact, no_dim = (None,) * len(fact_types), (None,) * len(dim_types)
     files = [
-        # batch 0: fact BEFORE dim → typed fact buffers in state
-        [{"side": "L", "key": "k1", "_seq": 0, "amount": 10, "fact_ts": ts_fact,
-          "pickup_date": pd.NaT}],
-        # batch 1: dim arrives (timestamp column) → flush; dim stored typed
-        [{"side": "R", "key": "k1", "_seq": 1, "amount": None, "fact_ts": pd.NaT,
-          "pickup_date": ts_dim}],
-        # batch 2: fact joins against the dim DECODED from state
-        [{"side": "L", "key": "k1", "_seq": 2, "amount": 30,
-          "fact_ts": ts_fact + pd.Timedelta(hours=1), "pickup_date": pd.NaT}],
+        [("L", 0, fact0, no_dim), ("L", 1, fact_nulls, no_dim)],
+        [("R", 2, no_fact, dim)],
+        [("L", 3, fact2, no_dim)],
     ]
     t0 = _time.time() - 60
-    for i, rows in enumerate(files):
+    for i, batch in enumerate(files):
         p = os.path.join(workdir, f"f{i:03d}.parquet")
-        pdf = pd.DataFrame(rows)
-        for c in ("fact_ts", "pickup_date"):  # micros, not pandas nanos
-            pdf[c] = pdf[c].astype("datetime64[us]")
-        pdf.to_parquet(p, index=False)
+        rows = [
+            dict(zip(schema.names, (side, "k1", seq, *f, *d)))
+            for side, seq, f, d in batch
+        ]
+        pq.write_table(pa.Table.from_pylist(rows, schema=schema), p)
         os.utime(p, (t0 + i, t0 + i))
     raw = (
         spark.readStream.schema(
-            "side string, key string, _seq long, amount long,"
-            " fact_ts timestamp, pickup_date timestamp"
+            "side string, key string, _seq long, amount long, fact_ts timestamp,"
+            " fee decimal(12,2), fact_day date, fact_blob binary,"
+            " pickup_date timestamp, rate decimal(12,2), dim_day date,"
+            " dim_blob binary"
         )
         .option("maxFilesPerTrigger", "1")
         .parquet(workdir)
     )
-    left = raw.where(F.col("side") == "L").select("key", "_seq", "amount", "fact_ts")
-    right = raw.where(F.col("side") == "R").select("key", "_seq", "pickup_date")
-    joined = co_flat_map_join(
-        left, right, "key", ["amount", "fact_ts"], ["pickup_date"], "_seq"
-    )
-    rows = run_available_now(joined, "cfm_typed")
-    got = sorted((r.amount, r.fact_ts, r.pickup_date) for r in rows)
-    assert got == [
-        (10, ts_fact.to_pydatetime(), ts_dim.to_pydatetime()),
-        (30, (ts_fact + pd.Timedelta(hours=1)).to_pydatetime(), ts_dim.to_pydatetime()),
+    fact_cols = [c for c, _ in fact_types]
+    dim_cols = [c for c, _ in dim_types]
+    left = raw.where(F.col("side") == "L").select("key", "_seq", *fact_cols)
+    right = raw.where(F.col("side") == "R").select("key", "_seq", *dim_cols)
+    joined = chain_stateful_join(left, [(right, dim_cols)], "key", fact_cols, "_seq")
+    assert [f.dataType.simpleString() for f in joined.schema.fields] == [
+        "string", "bigint", "timestamp", "decimal(12,2)", "date", "binary",
+        "timestamp", "decimal(12,2)", "date", "binary",
     ]
+    rows = run_available_now(joined, "cfm_typed")
+    got = sorted(
+        tuple(bytes(v) if isinstance(v, bytearray) else v for v in r[1:])
+        for r in rows
+    )
+    assert got == [(*fact0, *dim), (*fact_nulls, *dim), (*fact2, *dim)]
 
 
 def test_stream_stream_window_join(spark):
@@ -402,8 +404,8 @@ def test_co_flat_map_state_ttl_expires(spark, drain):
         )
         left = raw.where(F.col("side") == "L").select("key", "_seq", "amount")
         right = raw.where(F.col("side") == "R").select("key", "_seq", "dim_name")
-        joined = co_flat_map_join(
-            left, right, "key", ["amount"], ["dim_name"], "_seq",
+        joined = chain_stateful_join(
+            left, [(right, ["dim_name"])], "key", ["amount"], "_seq",
             state_ttl_ms=500,
         )
         q = (

@@ -26,14 +26,13 @@ from pyspark.sql import functions as F
 
 from flink_helloworld_spark.streaming import event_windows as EW
 from flink_helloworld_spark.streaming import stateful as ST
-from flink_helloworld_spark.streaming.coflatmap import co_flat_map_join
 from flink_helloworld_spark.streaming.replay import (
     Step,
     read_script_stream,
     run_available_now,
     write_script,
 )
-from flink_helloworld_spark.streaming.tws import rolling_sum_stream
+from flink_helloworld_spark.streaming.tws import chain_stateful_join, rolling_sum_stream
 
 WINDOW_MS = 3000
 
@@ -45,7 +44,7 @@ from flink_helloworld_spark.streaming.replay import (  # noqa: E402
 
 def test_coflatmap_join_matches_model_on_60_random_scripts(spark):
     """60 independent random fact/dim scripts (one per key) replayed in
-    ONE co_flat_map_join query: the streaming result must equal the
+    ONE chain_stateful_join query: the streaming result must equal the
     sequential buffer-until-dim model for every script — dims overwrite,
     facts join immediately when a dim is known, buffered facts flush
     with the dim that arrives, facts with no dim ever are never emitted.
@@ -104,7 +103,7 @@ def test_coflatmap_join_matches_model_on_60_random_scripts(spark):
     )
     left = raw.where(F.col("side") == "L").select("key", "_seq", "amount")
     right = raw.where(F.col("side") == "R").select("key", "_seq", "dim_name")
-    joined = co_flat_map_join(left, right, "key", ["amount"], ["dim_name"], "_seq")
+    joined = chain_stateful_join(left, [(right, ["dim_name"])], "key", ["amount"], "_seq")
     rows = run_available_now(joined, "cfm_prop")
     got = sorted((r.key, r.amount, r.dim_name) for r in rows)
     assert got == sorted(expect)
